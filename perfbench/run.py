@@ -351,7 +351,7 @@ def _lake_metrics(work, timed, lake_dir, s0, db0, artifact) -> dict:
 def _layer_unit(name: str) -> str:
     if name.endswith("_s"):
         return "s"
-    if name.endswith("bytes") or name.endswith("bytes_sent"):
+    if "bytes" in name:
         return "bytes"
     return "count"
 
