@@ -3,11 +3,11 @@
 Query results are compared to the registry's DuckDB ``oracle`` SQL run on
 the same parquet files: same column names, same row count, and the same
 rows up to float tolerance, in any order. An op whose result hash is
-recorded for the scale factor in ``recorded_hashes.json`` is compared to
-that hash instead; this covers ops without an oracle and ops whose oracle
-is too slow to run in every benchmark run (c04's takes over three minutes
-at sf0.1 on 4 cores). A hash is recorded only after its result matched
-the oracle.
+recorded for the scale factor in ``recorded_hashes.json`` (``results``) is
+compared to that hash instead; this covers ops without an oracle and ops
+whose oracle is too slow to run in every benchmark run (c04's takes over
+three minutes at sf0.1 on 4 cores). A hash is recorded only after its
+result matched the oracle.
 
 The lake stream is replayed statement by statement in DuckDB. Every read
 is compared to the replay's answer at the same point of the stream (for
@@ -123,7 +123,7 @@ class QueryChecker:
     def __init__(self, specs, sf_dir: str, sf: float):
         self.specs, self.sf_dir = specs, sf_dir
         with open(RECORDED) as f:
-            self.recorded = json.load(f).get(str(sf), {})
+            self.recorded = json.load(f)["results"].get(str(sf), {})
         self.seen: dict = {}  # (name, exact hash) -> (cols, rows)
 
     def record(self, name: str, cols, rows) -> tuple:

@@ -1,10 +1,14 @@
-"""Deterministic TPC-H-ish tables for the benchmark.
+"""The package's test data tables, regenerated.
 
 Writes the ten tables ``ducktales_spark.data.TABLES`` names, one parquet
-file each, with the schemas and value ranges of the package's test data
-(region .. lineitem, an ``events`` stream, ``documents`` for the text and
-dedup operators, ``embeddings`` for the vector operators). Row counts scale
-with ``sf`` like TPC-H: sf0.1 has 150k orders and 600k lineitems.
+file each: the TPC-H-ish star schema, the ``events`` stream, ``documents``
+for the text and dedup operators and ``embeddings`` for the vector
+operators. They are the tables the repository's tests and ``bench.py``
+read (``$SPARK_GRAFT_SF_DIR``, seed 42), value for value: every column of
+every table at sf0.001, sf0.01 and sf0.1 equals the original, and the
+``tables`` section of ``recorded_hashes.json`` holds each original table's
+``table_sha1``, which the tests compare the output to. Row counts scale with
+``sf`` like TPC-H: sf0.1 has 150k orders and 600k lineitems.
 
 The tables depend only on ``sf``: every seed of the benchmark reads the same
 data, so per-seed differences come from the op stream alone, and the
@@ -14,27 +18,28 @@ recorded result hashes of ops without a DuckDB oracle stay valid.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import os
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 DATA_SEED = 42
 VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window"
+    "the a spark query table join group filter window data order customer "
+    "part line fast slow big small hash sort merge scan agg stream batch "
+    "vector key value row column"
 ).split()
-LANGS = ["en", "es", "zh", "de", "fr"]
-LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+LANGS = ["en", "en", "en", "de", "fr", "es", "zh"]  # 3/7 English
+SEGMENTS = ["BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE"]
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
-P_ADJ = ["blue", "old", "small", "new", "large", "hot", "cold", "red"]
-P_NOUN = ["widget", "gizmo", "ring", "gear", "bolt", "plate", "rod", "anvil"]
-P_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
+EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
+P_ADJ = ["red", "blue", "small", "large", "hot", "cold", "old", "new"]
+P_NOUN = ["anvil", "widget", "gizmo", "bolt", "gear", "plate", "rod", "ring"]
+P_TYPES = ["STANDARD", "SMALL", "MEDIUM", "LARGE", "ECONOMY", "PROMO"]
 
 
 def _days(rng, n, start: dt.date, end: dt.date) -> pa.Array:
@@ -48,8 +53,8 @@ def _money(rng, n, lo, hi):
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
-def _choice(rng, values, n, p=None):
-    return pa.array(np.asarray(values, dtype=object)[rng.choice(len(values), n, p=p)])
+def _choice(rng, values, n):
+    return pa.array(np.asarray(values, dtype=object)[rng.choice(len(values), n)])
 
 
 def tables(sf: float) -> dict:
@@ -110,7 +115,7 @@ def tables(sf: float) -> dict:
         {
             "o_orderkey": pa.array(np.arange(n_ord), i64),
             "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), i64),
-            "o_orderstatus": _choice(rng, ["F", "O", "P"], n_ord),
+            "o_orderstatus": _choice(rng, ["O", "F", "P"], n_ord),
             "o_totalprice": _money(rng, n_ord, 1000.0, 500000.0),
             "o_orderdate": _days(rng, n_ord, dt.date(1995, 1, 1), dt.date(2001, 8, 1)),
             "o_orderpriority": _choice(rng, PRIORITIES, n_ord),
@@ -124,37 +129,37 @@ def tables(sf: float) -> dict:
             "l_linenumber": pa.array(rng.integers(1, 8, n_line), i32),
             "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
             "l_extendedprice": _money(rng, n_line, 900.0, 105000.0),
-            "l_discount": rng.integers(0, 11, n_line) / 100.0,
-            "l_tax": rng.integers(0, 9, n_line) / 100.0,
-            "l_returnflag": _choice(rng, ["A", "N", "R"], n_line),
-            "l_linestatus": _choice(rng, ["F", "O"], n_line),
+            "l_discount": np.round(rng.uniform(0, 0.10, n_line), 2),
+            "l_tax": np.round(rng.uniform(0, 0.08, n_line), 2),
+            "l_returnflag": _choice(rng, ["R", "A", "N"], n_line),
+            "l_linestatus": _choice(rng, ["O", "F"], n_line),
             "l_shipdate": _days(rng, n_line, dt.date(1995, 1, 2), dt.date(2001, 11, 4)),
         }
     )
-    t0 = np.datetime64("2024-01-01T00:00:00", "us")
-    offs = np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, n_ev))
+    t0 = np.datetime64("2024-01-01T00:00:00", "ns")
+    offs = (np.sort(rng.uniform(0, 30 * 86_400, n_ev)) * 1e9).astype("timedelta64[ns]")
     out["events"] = pa.table(
         {
             "event_id": pa.array(np.arange(n_ev), i64),
-            "ts": pa.array(t0 + offs.astype("timedelta64[us]"), pa.timestamp("us")),
+            "ts": pa.array((t0 + offs).astype("datetime64[us]"), pa.timestamp("us")),
             "user_id": pa.array(rng.integers(0, n_user, n_ev), i64),
             "event_type": _choice(rng, EVENT_TYPES, n_ev),
-            "value": np.round(np.abs(rng.normal(0.0, 100.0, n_ev)), 2),
+            "value": np.round(rng.exponential(50.0, n_ev), 2),
             "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
         }
     )
-    texts = []
-    for i in range(n_doc):
-        if i % 20 == 19:  # 5% near-duplicates of an earlier document
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            words = rng.integers(0, len(VOCAB), int(rng.integers(10, 101)))
-            texts.append(" ".join(VOCAB[w] for w in words))
+    words = np.asarray(VOCAB, dtype=object)
+    texts = [" ".join(words[rng.integers(0, len(VOCAB), rng.integers(10, 100))])
+             for _ in range(n_doc)]
+    # 5% near-duplicates: a document replaced by another one plus " dup"
+    n_dup = n_doc // 20
+    for d, s in zip(rng.choice(n_doc, n_dup, replace=False), rng.integers(0, n_doc, n_dup)):
+        texts[d] = texts[s] + " dup"
     out["documents"] = pa.table(
         {
             "doc_id": pa.array(np.arange(n_doc), i64),
             "text": texts,
-            "lang": _choice(rng, LANGS, n_doc, LANG_P),
+            "lang": _choice(rng, LANGS, n_doc),
             "source": [f"src{i % 20}" for i in range(n_doc)],
             "n_chars": pa.array([len(t) for t in texts], i64),
         }
@@ -169,6 +174,25 @@ def tables(sf: float) -> dict:
         }
     )
     return out
+
+
+def table_sha1(tbl: pa.Table) -> str:
+    """Hash of a table's column names and values, independent of how the
+    parquet file that holds it was written."""
+    h = hashlib.sha1()
+    for name in tbl.column_names:
+        col = tbl[name].combine_chunks()
+        h.update(name.encode())
+        if pa.types.is_list(col.type):
+            h.update(pc.list_value_length(col).to_numpy().tobytes())
+            col = pc.list_flatten(col)
+        if pa.types.is_string(col.type):
+            h.update("\n".join(col.to_pylist()).encode())
+        else:
+            if pa.types.is_timestamp(col.type):
+                col = col.cast(pa.int64())
+            h.update(col.to_numpy().tobytes())
+    return h.hexdigest()
 
 
 def write(sf: float, out_dir: str) -> str:

@@ -32,6 +32,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("analytic", "pipeline", "lake-rw")
 TAIL_BEYOND = 10  # samples the tail percentile must leave above it
+# the run's scratch directory at the repository root, which the run's own
+# reads and writes stay inside; "<prefix><pid>-<random>"
+SCRATCH_PREFIX = ".perfbench-"
 # reported by every workload and bounded in BENCHMARK.json
 E2E_UNITS = {
     "setup_s": "s",
@@ -60,7 +63,6 @@ def parse(argv):
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--sf", type=float, default=0.1, help="scale factor (default 0.1)")
-    p.add_argument("--spans-out", help="also write every span of a traced run to this JSON file")
     p.add_argument("--plant-wrong", action="store_true",
                    help="corrupt the first timed result, to test the checks")
     return p.parse_args(argv)
@@ -68,24 +70,22 @@ def parse(argv):
 
 def tail(values: list) -> tuple:
     """(value, percentile): the highest percentile with at least
-    TAIL_BEYOND samples above it, or the maximum when there are too few
-    samples for that percentile to lie above the median."""
+    TAIL_BEYOND samples above it, but never below the (upper) median, which
+    is what it falls back to when there are too few samples."""
     xs = sorted(values)
     n = len(xs)
-    if n <= 2 * TAIL_BEYOND:
-        return xs[-1], 100.0
-    return xs[n - TAIL_BEYOND - 1], round(100.0 * (n - TAIL_BEYOND) / n, 2)
+    i = max(n - TAIL_BEYOND - 1, n // 2)
+    return xs[i], round(100.0 * (i + 1) / n, 2)
 
 
 def main(argv=None) -> int:
     args = parse(argv)
-    if args.spans_out:
-        args.spans_out = os.path.abspath(args.spans_out)
     if not os.path.isfile(os.path.join(ROOT, "ducktales_spark", "__init__.py")):
         print(f"perfbench: no ducktales_spark package in {ROOT}", file=sys.stderr)
         return 2
     t_main = time.perf_counter()
-    scratch = tempfile.mkdtemp(prefix=".perfbench-", dir=ROOT)
+    _sweep_scratch()
+    scratch = tempfile.mkdtemp(prefix=f"{SCRATCH_PREFIX}{os.getpid()}-", dir=ROOT)
     tmp = os.path.join(scratch, "tmp")
     os.makedirs(tmp)
     # everything the run writes lands under scratch, which is removed below
@@ -266,14 +266,28 @@ def run(args, spark, sf_dir, scratch, artifact, boot_s, t_main, gen_s) -> dict:
             "tracer_s_per_op": tracer.overhead_s / attempted,
             "share_of_busy": tracer.overhead_s / busy,
         }
-        if args.spans_out:
-            with open(args.spans_out, "w") as f:
-                json.dump(tracer.dump(), f)
+        artifact["span_log"] = tracer.dump()
         metrics = {k: {"value": v, "unit": _layer_unit(k)}
                    for k, v in reported_layer_metrics(layer).items()}
     else:
         metrics = {k: {"value": e2e[k], "unit": u} for k, u in E2E_UNITS.items()}
     return {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
+
+
+def _sweep_scratch() -> None:
+    """Remove the scratch directories of runs that were killed before they
+    could remove their own (the directory name carries the run's pid)."""
+    for name in os.listdir(ROOT):
+        if not name.startswith(SCRATCH_PREFIX):
+            continue
+        try:
+            os.kill(int(name[len(SCRATCH_PREFIX):].split("-")[0]), 0)
+        except ValueError:
+            continue
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(ROOT, name), ignore_errors=True)
+        except PermissionError:
+            pass  # a live process of another user
 
 
 def _execute(work, op: dict) -> None:

@@ -6,6 +6,7 @@
 import functools
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -14,6 +15,8 @@ import pytest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
+import check  # noqa: E402
+import datagen  # noqa: E402
 import run  # noqa: E402
 import workloads  # noqa: E402
 
@@ -87,6 +90,23 @@ def test_traced_run_reports_layers_spans_and_overhead():
     assert analytic["per_layer"]["op.d03_minhash_lsh.exec_s"] > 0
     assert analytic["per_layer"]["python.run_s"] > 0  # e01's mapInPandas kernel
     assert analytic["per_layer"]["catalog.stage_s"] == 0
+
+
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_generated_tables_are_the_test_data_tables(sf):
+    with open(check.RECORDED) as f:
+        want = json.load(f)["tables"][sf]
+    got = {name: datagen.table_sha1(t) for name, t in datagen.tables(float(sf)).items()}
+    assert got == want
+
+
+def test_tail_leaves_ten_samples_above_it_but_never_falls_below_the_median():
+    assert run.tail(list(range(54))) == (43, 81.48)
+    prev = 0
+    for n in range(1, 100):
+        v, _ = run.tail(list(range(n)))
+        assert v >= statistics.median(range(n)) and v - prev in (0, 1)
+        prev = v
 
 
 def test_benchmark_json_matches_the_command():

@@ -45,7 +45,7 @@ PIPELINE_OPS = [
 
 # Seconds one cycle takes on the reference host (4 cores, sf0.1); the
 # window runs as many whole cycles as fit in --seconds at that pace.
-NOMINAL_CYCLE_S = {"analytic": 5.0, "pipeline": 12.0, "lake-rw": 8.0}
+NOMINAL_CYCLE_S = {"analytic": 6.5, "pipeline": 12.0, "lake-rw": 8.5}
 
 # lake-rw: one cycle, in order: 19 writes (12 inlined one-row inserts, 2
 # insert-selects, 2 updates, 2 deletes, 1 merge) with a read after every
