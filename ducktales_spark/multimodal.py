@@ -33,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ducktales_spark.session import shuffle_partitions
+
 # meta is a typed struct so it stays queryable/prunable without decoding data
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, data binary, "
@@ -363,9 +365,7 @@ def synth_media(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # r15 measured the per-branch m02 kernel at 32 tasks 0.668 s vs 8 tasks
     # 0.342 s at sf0.1, identical rows. A cluster deployment sizes the knob
     # up and gets its wide-row balancing unchanged.
-    n_part = int(
-        ids_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = shuffle_partitions(ids_df.sparkSession)
     return (
         ids_df.select(id_col)
         .repartition(n_part, id_col)  # balance wide rows across tasks

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ducktales_spark.data import plan_memo, table
 from ducktales_spark.registry import register
+from ducktales_spark.session import shuffle_partitions
 
 # --- deterministic minhash family -----------------------------------------
 _P = 2147483647  # 2^31 - 1 (Mersenne prime); a*h+b stays well inside int64
@@ -91,7 +92,7 @@ def shingle_table(
     # per input volume; a cluster job sets it per cluster). defaultParallelism
     # is the core count, which over-partitions small inputs into scheduling
     # overhead.
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(docs.sparkSession)
     # The up-front doc_id repartition is the cheapest exchange in the whole
     # pipeline even at scale: raw text is ~1.5 KB/doc vs ~3.2 KB/doc of
     # exploded shingle hashes, and the (doc_id, h) dedup + groupBy(doc_id)
@@ -140,7 +141,7 @@ def shingle_hash_table(
 
     ``distinct=False`` skips the per-doc (doc_id, h) dedup — for consumers
     that dedup downstream anyway (benchmark_ngrams' global distinct)."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(docs.sparkSession)
     toks = (
         docs.repartition(n_part, F.col(id_col))
         .select(
@@ -285,7 +286,7 @@ def minhash_bands(
     corpus.benchmark_bands, streaming dedup's per-batch bands); callers that
     need a custom shingle table keep using the two-step composition."""
     spark = docs.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(spark)
     return spark.sql(
         _minhash_bands_sql(n_part, id_col, text_col), docs=docs
     )
@@ -557,7 +558,7 @@ def d02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     * the two denominator probes broadcast ONE shared cnt plan (identical
       subtrees -> the broadcast builds once; measured 1.7 -> 1.1 s)."""
     d = table(spark, sf_dir, "documents")
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(spark)
     return spark.sql(
         f"""
     WITH src AS (
@@ -867,7 +868,7 @@ def unified_sketch_pairs(
     build-latency numbers). Same shuffle sizing rule as shingle_table:
     spark.sql.shuffle.partitions is THE deployment-sized parallelism knob."""
     spark = docs.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(spark)
     return spark.sql(
         _unified_sketch_sql(n_part, id_col, text_col, max_hamming), docs=docs
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ducktales_spark.data import plan_memo, table
 from ducktales_spark.registry import register
+from ducktales_spark.session import shuffle_partitions
 
 _N_QUERIES = 5
 _TOP_K = 10
@@ -316,9 +317,7 @@ def assign_buckets_distributed(
     replication; r16 interleaved min-of-7, parity true: sf0.1
     0.307 -> 0.274 s, sf1 identical — both resolve to 32 there)."""
     spark = v.sparkSession
-    P = n_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    P = n_partitions or shuffle_partitions(spark)
     vp = v.withColumn("__p", F.pmod(F.col("vec_id"), F.lit(P)).cast("int"))
     # internal names on the centroid side: the two cogroup inputs may share
     # lineage (e.g. centroids filtered from the vector set itself), and
@@ -371,9 +370,7 @@ def route_coarse(
     ``n_partitions`` defaults to spark.sql.shuffle.partitions (see
     assign_buckets_distributed — same knob, same r16 measurement)."""
     spark = v.sparkSession
-    P = n_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    P = n_partitions or shuffle_partitions(spark)
     vp = v.withColumn("__p", F.pmod(F.col("vec_id"), F.lit(P)).cast("int"))
     cp = coarse.select(
         F.col("vec_id").alias("__cid"), F.col("e").alias("__ce")

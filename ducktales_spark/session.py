@@ -48,3 +48,14 @@ def get_spark(app_name: str = "ducktales-spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a count. Some deployments set it
+    to ``auto`` (the platform picks per stage), which has no count to
+    size a repartition with: fall back to ``defaultParallelism``, the
+    cluster's task slots."""
+    v = spark.conf.get("spark.sql.shuffle.partitions")
+    if v.strip().lower() == "auto":
+        return spark.sparkContext.defaultParallelism
+    return int(v)

@@ -738,6 +738,102 @@ def test_insert_rows_driver_fast_path(lake, spark):
     assert info["file_count"] >= 1 and info["row_count"] == 53
 
 
+def test_insert_rows_rounds_decimals_to_scale(lake, spark):
+    """insert_rows rounds a DECIMAL value HALF_UP to the column's scale,
+    as Spark does for ``INSERT ... VALUES``, on the PK path and on the
+    inlined fast path; the inlined rows stay readable through a read and
+    a CHECKPOINT. A value wider than the precision is refused before
+    anything is stored."""
+    from decimal import Decimal
+
+    _inventory(lake, [
+        {"id": 1, "product": "a", "quantity": 1, "price": 9.999},
+        {"id": 2, "product": "b", "quantity": 1, "price": Decimal("-1.005")},
+    ])
+    got = {r.id: r.price for r in lake.read("inventory").collect()}
+    assert got == {1: Decimal("10.00"), 2: Decimal("-1.01")}
+
+    lake.sql("CREATE TABLE p (id INT, price DECIMAL(10,2))")
+    lake.sql("INSERT INTO p VALUES (0, 9.999)")
+    with lake.transaction() as tx:
+        tx.insert_rows("p", [(1, 9.999), (2, 0.005), (3, 7)])
+    info = {i["table_name"]: i for i in lake.table_info()}["p"]
+    assert info["file_count"] == 0 and info["inlined_rows"] == 4
+    want = [
+        (0, Decimal("10.00")), (1, Decimal("10.00")),
+        (2, Decimal("0.01")), (3, Decimal("7.00")),
+    ]
+    assert sorted(tuple(r) for r in lake.read("p").collect()) == want
+    lake.sql("CHECKPOINT p")
+    assert sorted(tuple(r) for r in lake.read("p").collect()) == want
+
+    with pytest.raises(LakeError, match="price"):
+        with lake.transaction() as tx:
+            tx.insert_rows("p", [{"id": 4, "price": 123456789.5}])
+    assert lake.read("p").count() == 4
+
+
+def test_unrounded_inlined_decimal_stays_readable(lake, spark):
+    """A DECIMAL value inlined with more places than its column's scale
+    (as insert_rows stored it before it rounded) reads back rounded
+    HALF_UP, and CHECKPOINT flushes it."""
+    from decimal import Decimal
+
+    from ducktales_spark.lake.catalog import InlinedEntry
+    from ducktales_spark.lake.schema import row_to_json
+
+    lake.sql("CREATE TABLE p (id INT, price DECIMAL(10,2))")
+    with lake.transaction() as tx:
+        st = tx._state("p")
+        st.inlined.append(InlinedEntry(
+            None, st.schema_version,
+            row_to_json({"id": 1, "price": Decimal("9.999")}, st.schema),
+            True,
+        ))
+        st.changes.add("tables_inserted_into")
+        st.coarse_write = True
+    assert [tuple(r) for r in lake.read("p").collect()] == [
+        (1, Decimal("10.00"))
+    ]
+    lake.sql("CHECKPOINT p")
+    info = {i["table_name"]: i for i in lake.table_info()}["p"]
+    assert info["file_count"] == 1 and info["inlined_rows"] == 0
+    assert [tuple(r) for r in lake.read("p").collect()] == [
+        (1, Decimal("10.00"))
+    ]
+
+
+def test_inlined_timestamps_round_trip_off_utc(lake, spark, monkeypatch):
+    """A naive datetime is local time to Spark's Python side: collect()
+    returns one and createDataFrame(list) reads one that way. Inlined
+    timestamps keep that reading when neither the process nor the
+    session time zone is UTC, on the read path and through the
+    CHECKPOINT flush."""
+    import datetime as dt
+    import time
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5, 6)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        lake.sql("CREATE TABLE e (id INT, ts TIMESTAMP)")
+        with lake.transaction() as tx:
+            tx.insert_rows("e", [(1, ts), (2, None)])
+        assert sorted(tuple(r) for r in lake.read("e").collect()) == [
+            (1, ts), (2, None),
+        ]
+        lake.sql("CHECKPOINT e")
+        assert sorted(tuple(r) for r in lake.read("e").collect()) == [
+            (1, ts), (2, None),
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_create_or_replace_table(lake, spark):
     """ADVICE r1 (high): DROP+CREATE of one table inside a single txn (the
     CREATE OR REPLACE TABLE path) must close the old lake_table row at

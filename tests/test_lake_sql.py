@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from ducktales_spark.lake import LakeCatalog
+from ducktales_spark.lake import ConstraintViolation, LakeCatalog
 from ducktales_spark.lake.sql import LakeSQLError
 
 
@@ -4062,3 +4062,65 @@ def test_vector_index_call_qualified_routing(lake, spark, tmp_path):
         lake.sql("CALL probe_vector_index(nope.idx, (SELECT 1), k => 1)")
     lake.sql("DETACH att")
     lake.sql("DETACH ro")
+
+
+def test_insert_values_casts_in_one_projection(lake):
+    """INSERT ... VALUES casts each value to its target column type in one
+    projection over the VALUES relation; the cases that projection keeps."""
+    lake.sql(
+        "CREATE TABLE t (id INTEGER NOT NULL, v DOUBLE, "
+        "s VARCHAR DEFAULT 'd')"
+    )
+    # an explicit column list, in any order; absent columns take DEFAULT
+    lake.sql("INSERT INTO t (v, id) VALUES (1.5, 1)")
+    # fewer values than columns fill positionally from the left
+    lake.sql("INSERT INTO t VALUES (2, 2.5)")
+    # a bare 2.0 is DECIMAL(2,1) to Spark: it must land as a DOUBLE
+    lake.sql("INSERT INTO t VALUES (3, 2.0, 'x')")
+    rows = {r["id"]: r for r in lake.read("t").collect()}
+    assert rows[1]["v"] == 1.5 and rows[1]["s"] == "d"
+    assert rows[2]["v"] == 2.5 and rows[2]["s"] == "d"
+    assert rows[3]["v"] == 2.0 and isinstance(rows[3]["v"], float)
+    assert dict(lake.read("t").dtypes)["v"] == "double"
+    # a row wider than the table or than its column list is an error
+    with pytest.raises(LakeSQLError, match="3 columns"):
+        lake.sql("INSERT INTO t VALUES (4, 1.0, 'y', 9)")
+    with pytest.raises(LakeSQLError, match="1 columns"):
+        lake.sql("INSERT INTO t (id) VALUES (4, 1.0)")
+    # NULL into a NOT NULL column
+    with pytest.raises(ConstraintViolation):
+        lake.sql("INSERT INTO t VALUES (NULL, 1.0, 'n')")
+    assert lake.count("t") == 3
+
+    # a column name that needs backticks in the projection
+    lake.sql("CREATE TABLE w AS SELECT 1 AS `my col`, 'a' AS `select`")
+    lake.sql("INSERT INTO w VALUES (2, 'b')")
+    assert sorted(tuple(r) for r in lake.read("w").collect()) == [
+        (1, "a"), (2, "b"),
+    ]
+
+    # INSERT OR REPLACE keeps the cast too
+    lake.sql("CREATE TABLE kv (k INTEGER PRIMARY KEY, v DOUBLE)")
+    lake.sql("INSERT INTO kv VALUES (1, 1.0)")
+    lake.sql("INSERT OR REPLACE INTO kv VALUES (1, 2.0), (2, 3.5)")
+    assert {r["k"]: r["v"] for r in lake.read("kv").collect()} == {
+        1: 2.0, 2: 3.5,
+    }
+
+
+def test_checkpoint_after_alter_column_type_reads_back_equal(lake):
+    """Rows inlined under INT, then ALTER COLUMN TYPE DOUBLE: CHECKPOINT
+    flushes them through the read path's coercion, so the table reads the
+    same before and after the flush."""
+    lake.sql("CREATE TABLE w (id INTEGER, x INTEGER)")
+    lake.sql("INSERT INTO w VALUES (1, 10), (2, NULL), (3, -7)")
+    lake.sql("ALTER TABLE w ALTER COLUMN x TYPE DOUBLE")
+    before = sorted(tuple(r) for r in lake.read("w").collect())
+    assert before == [(1, 10.0), (2, None), (3, -7.0)]
+    lake.sql("CHECKPOINT w")
+    after = sorted(tuple(r) for r in lake.read("w").collect())
+    assert after == before
+    assert all(isinstance(x, float) for _, x in after if x is not None)
+    assert dict(lake.read("w").dtypes)["x"] == "double"
+    info = {t["table_name"]: t for t in lake.table_info()}["w"]
+    assert info["inlined_rows"] == 0 and info["file_count"] == 1

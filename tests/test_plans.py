@@ -570,3 +570,68 @@ def test_python_boundary_inputs_minimal_repo_wide(spark, sf_dir):
                 f"{sorted(extra)} (allowed: {sorted(allowed)})"
             )
     assert seen >= 10, f"sweep matched only {seen} Python nodes — regex rot?"
+
+
+def test_lake_driver_rows_build_local_relations(spark, tmp_path, monkeypatch):
+    """Rows the lake holds on the driver reach the JVM as a LocalRelation,
+    never as a Python-RDD scan (ExistingRDD), whose every action boots a
+    Python worker: the CHECKPOINT flush, the insert_rows DataFrame
+    fallback, the SQL status frame and snapshots_df."""
+    from ducktales_spark.lake import LakeCatalog
+    from ducktales_spark.lake.catalog import Transaction
+
+    written = []
+    real_write = Transaction._write_staged
+
+    def spy(self, st, df, cluster=True):
+        written.append(plan_str(df))
+        return real_write(self, st, df, cluster)
+
+    monkeypatch.setattr(Transaction, "_write_staged", spy)
+    lake = LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=4)
+    lake.sql("CREATE TABLE t (k INT, v VARCHAR, d DOUBLE)")
+    status = lake.sql("INSERT INTO t VALUES (1, 'a', 2.0), (2, NULL, NULL)")
+    assert written == []  # inlined: no file yet
+    lake.sql("CHECKPOINT t")
+    assert len(written) == 1
+    lake.sql("CREATE TABLE p (k INT PRIMARY KEY, v VARCHAR)")
+    with lake.transaction() as tx:
+        tx.insert_rows("p", [(1, "x")])  # a PK table takes the fallback
+    assert len(written) == 2
+    frames = {
+        "flush_inlined": written[0],
+        "insert_rows": written[1],
+        "status": plan_str(status),
+        "snapshots_df": plan_str(lake.snapshots_df()),
+    }
+    for name, s in frames.items():
+        assert "ExistingRDD" not in s, (name, s)
+        assert "LocalTableScan" in s, (name, s)
+    assert sorted(lake.read("t").collect()) == [(1, "a", 2.0), (2, None, None)]
+    assert lake.read("p").collect() == [(1, "x")]
+
+
+def test_clustered_write_runs_arrow_kernel_once(spark, tmp_path):
+    """A clustered write range-samples its input before writing it, so an
+    input plan with a Python kernel is checkpointed first instead of
+    running the kernel twice. The check walks plan node classes:
+    mapInArrow's node is named MapInArrow, which a test for "Python" or
+    "InPandas" in the plan text misses."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from ducktales_spark.lake import LakeCatalog
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def kernel(batches):
+        calls.add(1)
+        yield from batches
+
+    lake = LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=4)
+    lake.create_table(
+        "c", StructType([StructField("k", LongType())]), partition_by=["k"]
+    )
+    src = spark.range(0, 1000, 1, 2).withColumnRenamed("id", "k")
+    lake.insert("c", src.mapInArrow(kernel, "k long"))
+    assert calls.value == 2  # once per input partition
+    assert lake.count("c") == 1000
