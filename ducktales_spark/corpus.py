@@ -175,8 +175,9 @@ def decontaminate(
     * ``clean`` — the input rows with contaminated documents removed.
 
     Plan shape (both modes): the corpus side costs ONE doc_id exchange
-    (exact: shingle_table's; fuzzy: the minhash signature groupBy, whose
-    hash distribution the band explode and hit-count groupBy both reuse);
+    (exact: shingle_hash_table's; fuzzy: minhash_bands' signature groupBy,
+    whose hash distribution the band explode and hit-count groupBy both
+    reuse);
     the benchmark side is broadcast while its plan-stat bytes fit under
     ``max_broadcast_bytes`` (eval suites are small by definition) and
     joins un-hinted above it — Catalyst falls back to a shuffled hash

@@ -360,7 +360,7 @@ def synth_media(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
 
     # spark.sql.shuffle.partitions is THE deployment-sized parallelism knob
-    # (same rule as dedup.shingle_table) — defaultParallelism (the core
+    # (same rule as dedup.shingle_hash_table) — defaultParallelism (the core
     # count) over-partitions small inputs into Python-worker dispatch floor:
     # r15 measured the per-branch m02 kernel at 32 tasks 0.668 s vs 8 tasks
     # 0.342 s at sf0.1, identical rows. A cluster deployment sizes the knob

@@ -13,8 +13,12 @@ training-data-pipeline components).
                        engines share) + banded LSH bucketing; only
                        same-bucket pairs are compared. This is the 100 TB
                        path: candidate generation is a groupBy on
-                       (band_id, band_key).
-* SimHash            — 64-bit sign-sum sketch + 16-bit band LSH, hamming
+                       (band_id, band_key). One builder, ``minhash_bands``,
+                       serves candidate pairs, fuzzy decontamination and
+                       the streaming dedup sink.
+* SimHash            — only inside d03 (``unified_sketch_pairs``): a 64-bit
+                       majority-bit sketch folded into the same aggregate
+                       pass as the minhash, 16-bit band LSH, hamming
                        verification.
 
 All signature math is built-in JVM expressions (codegen); Python never
@@ -49,78 +53,6 @@ _HASH_AB = [(_rng.randrange(1, _P), _rng.randrange(0, _P)) for _ in range(_NUM_H
 _MAX_SHINGLE_DF = 100
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (JVM higher-order fns).
-
-    NOTE: if ``text`` is an un-materialized expression, the tokenization is
-    inlined into every element_at call below and re-evaluated per shingle.
-    Prefer ``shingle_table`` (materializes the word array first) on hot paths.
-    """
-    ws = F.split(F.trim(text), r"\s+")
-    k = F.size(ws) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(ws, i + j) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(F.when(k >= 1, grams).otherwise(F.array()))
-
-
-def shingle_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    distinct: bool = True,
-) -> DataFrame:
-    """(doc_id, s) exploded word n-gram shingles.
-
-    Whole-stage-codegen formulation: tokenize once into a materialized word
-    array, explode the position range, then build each shingle as a plain
-    ``concat_ws(element_at...)`` projection. A ``transform(sequence, lambda)``
-    version of the same thing runs ~4x slower because Catalyst evaluates
-    higher-order-function lambdas interpreted, outside codegen.
-    Repartitions first so a single-split parquet input doesn't serialize the
-    compute on one core.
-
-    ``distinct=False`` skips per-doc dedup — correct for consumers that are
-    multiset-invariant (minhash MIN aggregation) and saves a shuffle.
-    """
-    # Respect the session's shuffle sizing (spark.sql.shuffle.partitions is
-    # THE deployment-sized parallelism knob — bench.tune_for_input sets it
-    # per input volume; a cluster job sets it per cluster). defaultParallelism
-    # is the core count, which over-partitions small inputs into scheduling
-    # overhead.
-    n_part = shuffle_partitions(docs.sparkSession)
-    # The up-front doc_id repartition is the cheapest exchange in the whole
-    # pipeline even at scale: raw text is ~1.5 KB/doc vs ~3.2 KB/doc of
-    # exploded shingle hashes, and the (doc_id, h) dedup + groupBy(doc_id)
-    # downstream both RIDE this one exchange (HashPartitioning(doc_id)
-    # satisfies their clustering) — skipping it would cost two bigger
-    # exchanges instead. Locally it also un-serializes one-row-group
-    # parquet scans.
-    toks = (
-        docs.repartition(n_part, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("ws"),
-        )
-        .filter(F.size("ws") >= n)
-    )
-    pos = toks.select(
-        "doc_id", "ws",
-        F.explode(F.sequence(F.lit(1), F.size("ws") - (n - 1))).alias("p"),
-    )
-    sh = pos.select(
-        "doc_id",
-        F.concat_ws(
-            " ", *[F.element_at("ws", F.col("p") + j) for j in range(n)]
-        ).alias("s"),
-    )
-    return sh.dropDuplicates(["doc_id", "s"]) if distinct else sh
-
-
 def shingle_hash_table(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -141,6 +73,13 @@ def shingle_hash_table(
 
     ``distinct=False`` skips the per-doc (doc_id, h) dedup — for consumers
     that dedup downstream anyway (benchmark_ngrams' global distinct)."""
+    # Respect the session's shuffle sizing (spark.sql.shuffle.partitions is
+    # THE deployment-sized parallelism knob); defaultParallelism is the core
+    # count, which over-partitions small inputs into scheduling overhead.
+    # The up-front doc_id repartition is the cheapest exchange of the
+    # pipeline even at scale (raw text is smaller than its exploded
+    # shingles), and the (doc_id, h) dedup plus any downstream groupBy on
+    # doc_id ride it; locally it also un-serializes one-row-group scans.
     n_part = shuffle_partitions(docs.sparkSession)
     toks = (
         docs.repartition(n_part, F.col(id_col))
@@ -164,72 +103,23 @@ def shingle_hash_table(
     return sh.dropDuplicates(["doc_id", "h"]) if distinct else sh
 
 
-def hashed_shingles(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, h64) — 60-bit hash per word-3-gram shingle occurrence
-    (multiset: no per-doc dedup). The shared upstream of every sketch:
-    minhash folds it with MIN aggregates (multiset-invariant), simhash
-    dedups (doc_id, h64) first. d03 builds ONE of these and feeds both
-    sketches — one scan + shingle explode instead of two.
-
-    The hash is the first 15 hex digits of md5 as a BIGINT — chosen over
-    xxhash64 because BOTH engines compute it identically (DuckDB:
-    ``('0x' || substr(md5(s),1,15))::BIGINT``), which makes the whole
-    deterministic sketch pipeline expressible as driver-checkable oracle
-    SQL. Still uniform, still 8 bytes in the shuffle."""
-    return shingle_table(docs, id_col, text_col, distinct=False).select(
-        "doc_id",
-        F.expr(
-            "cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint)"
-        ).alias("h64"),
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, sig array<int>): deterministic 32-permutation minhash.
-
-    Relational minhash: explode shingles, one 64-bit hash per shingle, then a
-    single groupBy(doc) with 32 codegen'd MIN aggregates (one per affine
-    hash). This stays inside whole-stage codegen, unlike an array-fold
-    which Catalyst evaluates interpreted. MIN over a multiset equals MIN
-    over the set, so the shingle dedup shuffle is skipped entirely
-    (distinct=False); the groupBy(doc_id) reuses the shingle table's hash
-    distribution — one shuffle total. Docs with fewer than 3 words have no
-    shingles and produce NO row (callers treat them as sketch-less)."""
-    base = (
-        shingles
-        if shingles is not None
-        else hashed_shingles(docs, id_col, text_col)
-    )
-    h = base.select("doc_id", F.pmod(F.col("h64"), F.lit(_P)).alias("h"))
-    mins = h.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_P))).alias(f"m{i}")
-            for i, (a, b) in enumerate(_HASH_AB)
-        ]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(_NUM_HASHES)]).alias("sig")
-    )
-
-
 def _minhash_bands_sql(n_part: int, id_col: str, text_col: str) -> str:
-    """``minhash_band_table(minhash_signatures(docs))`` as ONE SQL string
-    (template slot {docs}) — the same logical plan built in a single
-    spark.sql round trip instead of ~300 py4j Column calls (32 affine-MIN
-    aggregates + 8 band structs + the shingle explode). Same precedent as
-    d02/d03's SQL builds: the parsed tree is identical operator for
-    operator (repartition hint = the DataFrame repartition; the h64->h
-    pre-projection is inlined into each aggregate, which Catalyst's
-    subexpression elimination collapses right back), so this is pure
-    build-latency work — r16 measured the DataFrame-API build at ~0.7 s
-    of the c05/c07 pipeline_ops_build numbers, ~0.2 s as SQL."""
+    """The minhash band table as ONE SQL string (template slot {docs}).
+
+    Relational minhash: explode the word-3-gram shingles, one 60-bit md5
+    hash per shingle (the hash the DuckDB oracles compute too), then a
+    single groupBy(doc) with 32 codegen'd affine MIN aggregates. MIN over a
+    multiset equals MIN over the set, so no shingle dedup shuffle is
+    needed, and the groupBy rides the up-front doc_id repartition: one
+    shuffle total. Docs with fewer than 3 words have no shingles and
+    produce NO row (callers treat them as sketch-less). band_key is the
+    exact dash-joined band tuple (injective: zero false candidates), and
+    the signature rides through the band explode so band-join consumers
+    get both signatures straight from the join.
+
+    Built in one spark.sql round trip instead of ~300 py4j Column calls:
+    r16 measured the DataFrame-API build of the same plan at ~0.7 s of the
+    c05/c07 pipeline_ops_build numbers, ~0.2 s as SQL."""
     mins = ",\n        ".join(
         f"min(pmod({a}L * pmod(h64, {_P}) + {b}L, {_P})) AS m{i}"
         for i, (a, b) in enumerate(_HASH_AB)
@@ -280,42 +170,15 @@ def minhash_bands(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, sig, band_id, band_key) exploded LSH bands straight from the
-    raw documents — semantically ``minhash_band_table(minhash_signatures(
-    docs))``, built as one spark.sql call (see _minhash_bands_sql). The hot
-    entry point for the fuzzy-decontamination builders (corpus._fuzzy_counts,
-    corpus.benchmark_bands, streaming dedup's per-batch bands); callers that
-    need a custom shingle table keep using the two-step composition."""
+    raw documents, built as one spark.sql call (see _minhash_bands_sql).
+    The one minhash builder: candidate pairs (minhash_candidate_pairs),
+    the fuzzy-decontamination builders (corpus._fuzzy_counts,
+    corpus.benchmark_bands) and streaming dedup's per-batch bands."""
     spark = docs.sparkSession
     n_part = shuffle_partitions(spark)
     return spark.sql(
         _minhash_bands_sql(n_part, id_col, text_col), docs=docs
     )
-
-
-def minhash_band_table(sig: DataFrame) -> DataFrame:
-    """(doc_id, sig) -> (doc_id, sig, band_id, band_key) exploded LSH bands.
-
-    The signature rides through the explode so band-join consumers get both
-    signatures directly from the join — no signature re-join. band_key is
-    the exact dash-joined band tuple (injective: zero false candidates)."""
-    n_bands = _NUM_HASHES // _BAND_ROWS
-    return sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.concat_ws(
-                            "-", *[F.col("sig")[i * _BAND_ROWS + j] for j in range(_BAND_ROWS)]
-                        ).alias("band_key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_key")
 
 
 def est_jaccard(sig_a: Column, sig_b: Column) -> Column:
@@ -326,37 +189,22 @@ def est_jaccard(sig_a: Column, sig_b: Column) -> Column:
 
 
 def minhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """LSH-banded candidate pairs with estimated jaccard.
 
     docs(id, text) -> (doc_a, doc_b, est_jaccard). Scale path: the only
-    shuffles are the band groupBy-join (key = band hash, cardinality =
-    #docs * #bands) and the signature re-join on doc id.
+    shuffles are the shingle repartition under the signature groupBy and
+    the band self-join (key = band hash, cardinality = #docs * #bands);
+    both signatures ride the bands, so there is no signature re-join.
     """
-    # The signature table feeds both sides of the band self-join as the SAME
+    # The band table feeds both sides of the self-join as the SAME
     # canonical subtree — the exchange is computed once and reused, so no
     # persist (a cache here is a materialization barrier locally and
     # unbounded executor storage at scale).
-    sig = minhash_signatures(docs, id_col, text_col, shingles=shingles)
-    return _minhash_pairs_from_sig(sig)
-
-
-def _minhash_pairs_from_sig(sig: DataFrame) -> DataFrame:
-    """(doc_id, sig array) -> LSH-banded candidate pairs with est_jaccard."""
-    bands = minhash_band_table(sig)
-
+    bands = minhash_bands(docs, id_col, text_col)
     a = bands.alias("a")
     b = bands.hint("shuffle_hash").alias("b")  # unordered equi-join: no sorts
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda v: v,
-        )
-    ) / F.lit(float(_NUM_HASHES))
     # A pair colliding in k bands would appear k times; instead of a
     # distinct() shuffle, keep only the FIRST matching band (standard LSH
     # dedup: emit iff no earlier band also matches). The check is a bounded
@@ -380,84 +228,10 @@ def _minhash_pairs_from_sig(sig: DataFrame) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.round(est, 6).alias("est_jaccard"),
+            F.round(est_jaccard(F.col("a.sig"), F.col("b.sig")), 6).alias(
+                "est_jaccard"
+            ),
         )
-    )
-
-
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = 3, shingles: DataFrame | None = None
-) -> DataFrame:
-    """64-bit SimHash per document + 16-bit-band LSH candidate pairs with
-    hamming distance <= max_hamming.
-
-    Features are word 3-gram shingles (unigram words barely discriminate on
-    small vocabularies). Relational simhash: explode shingle hashes, then one
-    groupBy(doc) with 64 conditional-SUM aggregates (bit i: +1 if set else
-    -1). All codegen; distinct shingle semantics via an (int64, int64) dedup,
-    and the groupBy reuses the shingle table's doc_id partitioning. Banding
-    makes pair generation a groupBy join like minhash.
-    """
-    base = shingles if shingles is not None else hashed_shingles(docs)
-    h = base.withColumnRenamed("h64", "h").dropDuplicates(["doc_id", "h"])
-    sums = h.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(64)
-        ]
-    )
-    return _simhash_pairs_from_sums(sums, max_hamming)
-
-
-def _simhash_pairs_from_sums(sums: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """(doc_id, b0..b63 sign-sums) -> banded candidate pairs with hamming."""
-    bits = F.array(*[(F.col(f"b{i}") > 0).cast("int") for i in range(64)])
-    sigs = sums.select("doc_id", bits.alias("bits")).withColumn(
-        "bands",
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band_id"),
-                    F.concat_ws("", F.slice(F.col("bits"), i * 16 + 1, 16)).alias(
-                        "band_key"
-                    ),
-                )
-                for i in range(4)
-            ]
-        ),
-    )
-    # both self-join sides are the same canonical subtree -> AQE exchange
-    # reuse; no persist needed
-    bands = (
-        sigs.select("doc_id", F.col("bits"), F.explode("bands").alias("band"))
-        .select("doc_id", "bits", "band.band_id", "band.band_key")
-    )
-    a = bands.alias("a")
-    b = bands.hint("shuffle_hash").alias("b")  # unordered equi-join: no sorts
-    hamming = F.size(
-        F.filter(
-            F.zip_with(F.col("a.bits"), F.col("b.bits"), lambda x, y: x != y),
-            lambda v: v,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -865,7 +639,7 @@ def unified_sketch_pairs(
     Built as a SINGLE ``spark.sql`` call with the input frame as a template
     arg — one py4j round trip for the whole ~100-aggregate pipeline (see
     _unified_sketch_sql for the plan-identity argument and the measured
-    build-latency numbers). Same shuffle sizing rule as shingle_table:
+    build-latency numbers). Same shuffle sizing rule as shingle_hash_table:
     spark.sql.shuffle.partitions is THE deployment-sized parallelism knob."""
     spark = docs.sparkSession
     n_part = shuffle_partitions(spark)

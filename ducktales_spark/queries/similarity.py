@@ -60,6 +60,37 @@ def _np(pdf_col) -> np.ndarray:
     return np.array(pdf_col.tolist(), dtype=np.float64)
 
 
+def cosine9(E: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """The one cosine kernel: |E| x |C| float64 cosines rounded to 9 dp.
+    Every emitted cos_sim and every rank decision reads these values, so
+    the DuckDB oracles' dot/(|a||b|) evaluation order can't flip a result
+    on a last-ulp difference."""
+    return np.round(
+        (E @ C.T)
+        / (np.linalg.norm(E, axis=1)[:, None]
+           * np.linalg.norm(C, axis=1)[None, :]),
+        9,
+    )
+
+
+def rank_by_cosine(
+    E: np.ndarray, ids: np.ndarray, C: np.ndarray, width: Optional[int] = None
+) -> tuple:
+    """Rank the rows of C (keyed by ``ids``) for each row of E by cosine9,
+    best first, ties to the lowest id — the oracles' ``ORDER BY cos DESC,
+    id``. C is put in ascending-id order first, so the tie rule holds
+    whatever order its rows arrived in. Returns (ids, cosines): vectors of
+    each row's winner (argmax) when ``width`` is None, else |E| x width
+    matrices of its top ``width`` (fewer columns when C is smaller)."""
+    order = np.argsort(ids, kind="stable")
+    ids, S = ids[order], cosine9(E, C[order])
+    if width is None:
+        top = np.argmax(S, axis=1)
+        return ids[top], S[np.arange(len(S)), top]
+    top = np.argsort(-S, axis=1, kind="stable")[:, :width]
+    return ids[top], np.take_along_axis(S, top, axis=1)
+
+
 def n_centroids_for(v: DataFrame, n: Optional[int] = None) -> int:
     """IVF nlist heuristic: C = max(floor, sqrt(N)). Pass ``n`` when the
     caller has it from table stats (data.stats_num_rows / catalog row
@@ -98,24 +129,20 @@ def cosine_scores(
     batch to its per-query top-k before emitting (exact under the _topk
     window ordering — see _local_topk)."""
     sc = candidates.sparkSession.sparkContext
-    bc = sc.broadcast((query_ids, Q, np.linalg.norm(Q, axis=1)))
+    bc = sc.broadcast((query_ids, Q))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Qm, Qn = bc.value
+        qids, Qm = bc.value
         nq = len(qids)
         for pdf in batches:
             if not len(pdf):
                 continue
-            E = _np(pdf["e"])
             vids = pdf["vec_id"].to_numpy()
-            S = (E @ Qm.T) / (
-                np.linalg.norm(E, axis=1)[:, None] * Qn[None, :]
-            )
             out = pd.DataFrame(
                 {
                     "query_id": np.tile(qids, len(vids)),
                     "neighbor_id": np.repeat(vids, nq),
-                    "cos_sim": np.round(S, 9).ravel(),
+                    "cos_sim": cosine9(_np(pdf["e"]), Qm).ravel(),
                 }
             )
             if drop_self:
@@ -259,24 +286,16 @@ def assign_buckets(
     if n_centroids is None:
         n_centroids = n_centroids_for(v)
     cpdf = centroids if centroids is not None else _centroids(v, n_centroids)
-    cids = cpdf["vec_id"].to_numpy()
-    C = _np(cpdf["e"])
     bc = v.sparkSession.sparkContext.broadcast(
-        (cids, C, np.linalg.norm(C, axis=1))
+        (cpdf["vec_id"].to_numpy(), _np(cpdf["e"]))
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, Cm, Cn = bc.value
+        cids, Cm = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            E = _np(pdf["e"])
-            S = (E @ Cm.T) / (np.linalg.norm(E, axis=1)[:, None] * Cn[None, :])
-            # round to 9 dp BEFORE the argmax (like every emitted cos_sim):
-            # assignment then depends only on the rounded value, so the
-            # DuckDB oracle's dot/(|a||b|) evaluation order can't flip a
-            # bucket on a last-ulp difference. first max -> lowest cid.
-            best = cids[np.argmax(np.round(S, 9), axis=1)]
+            best, _ = rank_by_cosine(_np(pdf["e"]), cids, Cm)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -333,13 +352,9 @@ def assign_buckets_distributed(
                  "e": pd.Series(dtype="object"),
                  "centroid_id": pd.Series(dtype="int64")}
             )
-        cpdf = cpdf.sort_values("__cid", kind="stable")  # ties -> lowest id
-        cids = cpdf["__cid"].to_numpy()
-        Cm = _np(cpdf["__ce"])
-        Cn = np.linalg.norm(Cm, axis=1)
-        E = _np(vpdf["e"])
-        S = (E @ Cm.T) / (np.linalg.norm(E, axis=1)[:, None] * Cn[None, :])
-        best = cids[np.argmax(np.round(S, 9), axis=1)]
+        best, _ = rank_by_cosine(
+            _np(vpdf["e"]), cpdf["__cid"].to_numpy(), _np(cpdf["__ce"])
+        )
         return pd.DataFrame(
             {"vec_id": vpdf["vec_id"].to_numpy(), "e": vpdf["e"],
              "centroid_id": best}
@@ -383,20 +398,17 @@ def route_coarse(
                  "e": pd.Series(dtype="object"),
                  "coarse_id": pd.Series(dtype="int64")}
             )
-        cpdf = cpdf.sort_values("__cid", kind="stable")  # ties -> lowest id
-        cids = cpdf["__cid"].to_numpy()
-        Cm = _np(cpdf["__ce"])
-        Cn = np.linalg.norm(Cm, axis=1)
-        E = _np(vpdf["e"])
-        S = (E @ Cm.T) / (np.linalg.norm(E, axis=1)[:, None] * Cn[None, :])
-        R = min(route_width, len(cids))
-        top = np.argsort(-np.round(S, 9), axis=1, kind="stable")[:, :R]
+        top, _ = rank_by_cosine(
+            _np(vpdf["e"]), cpdf["__cid"].to_numpy(), _np(cpdf["__ce"]),
+            route_width,
+        )
+        R = top.shape[1]
         n = len(vpdf)
         return pd.DataFrame(
             {
                 "vec_id": np.repeat(vpdf["vec_id"].to_numpy(), R),
                 "e": vpdf["e"].iloc[np.repeat(np.arange(n), R)].to_numpy(),
-                "coarse_id": cids[top].ravel(),
+                "coarse_id": top.ravel(),
             }
         )
 
@@ -462,20 +474,14 @@ def assign_buckets_two_level(
                  "centroid_id": pd.Series(dtype="int64"),
                  "__cos": pd.Series(dtype="float64")}
             )
-        cpdf = cpdf.sort_values("__cid", kind="stable")  # ties -> lowest id
-        cids = cpdf["__cid"].to_numpy()
-        Cm = _np(cpdf["__ce"])
-        Cn = np.linalg.norm(Cm, axis=1)
-        E = _np(vpdf["e"])
-        S = np.round(
-            (E @ Cm.T) / (np.linalg.norm(E, axis=1)[:, None] * Cn[None, :]), 9
+        best, cos = rank_by_cosine(
+            _np(vpdf["e"]), cpdf["__cid"].to_numpy(), _np(cpdf["__ce"])
         )
-        best = np.argmax(S, axis=1)
         return pd.DataFrame(
             {
                 "vec_id": vpdf["vec_id"].to_numpy(),
-                "centroid_id": cids[best],
-                "__cos": S[np.arange(len(vpdf)), best],
+                "centroid_id": best,
+                "__cos": cos,
             }
         )
 
@@ -515,17 +521,15 @@ _N_PROBE = 4  # buckets probed per query (IVF nprobe)
 
 
 def probe_lookup(qpdf: pd.DataFrame, cpdf: pd.DataFrame, nprobe: int) -> dict:
-    """{centroid_id: (query_ids, Q matrix, Q norms)} for the nprobe nearest
-    centroids of each query (driver-side: |Q| x C is small). Rounded + stable
-    sort: probe choice depends only on the 9-dp cosine, ties to the lowest
-    centroid id — exactly the e02 oracle's `ORDER BY cos DESC, cid`."""
-    Q, Cm = _np(qpdf["e"]), _np(cpdf["e"])
-    cids = cpdf["vec_id"].to_numpy()
-    S = (Q @ Cm.T) / (
-        np.linalg.norm(Q, axis=1)[:, None] * np.linalg.norm(Cm, axis=1)[None, :]
+    """{centroid_id: (query_ids, Q matrix)} for the nprobe nearest
+    centroids of each query (driver-side: |Q| x C is small), ranked by
+    rank_by_cosine: probe choice depends only on the 9-dp cosine, ties to
+    the lowest centroid id whatever the row order of ``cpdf`` — exactly the
+    e02 oracle's `ORDER BY cos DESC, cid`."""
+    Q = _np(qpdf["e"])
+    probes, _ = rank_by_cosine(
+        Q, cpdf["vec_id"].to_numpy(), _np(cpdf["e"]), nprobe
     )
-    nprobe = min(nprobe, len(cids))
-    probes = cids[np.argsort(-np.round(S, 9), axis=1, kind="stable")[:, :nprobe]]
     lookup: dict = {}
     for qi in range(len(qpdf)):
         qid = int(qpdf["vec_id"].iloc[qi])
@@ -535,7 +539,6 @@ def probe_lookup(qpdf: pd.DataFrame, cpdf: pd.DataFrame, nprobe: int) -> dict:
         cid: (
             np.array([q for q, _ in qs], dtype=np.int64),
             np.stack([e for _, e in qs]),
-            np.linalg.norm(np.stack([e for _, e in qs]), axis=1),
         )
         for cid, qs in lookup.items()
     }
@@ -557,17 +560,13 @@ def probe_assigned(
             for cid, grp in pdf.groupby("centroid_id"):
                 if cid not in lk:
                     continue
-                qids, Qm, Qn = lk[cid]
-                E = _np(grp["e"])
+                qids, Qm = lk[cid]
                 vids = grp["vec_id"].to_numpy()
-                S = (E @ Qm.T) / (
-                    np.linalg.norm(E, axis=1)[:, None] * Qn[None, :]
-                )
                 out = pd.DataFrame(
                     {
                         "query_id": np.tile(qids, len(vids)),
                         "neighbor_id": np.repeat(vids, len(qids)),
-                        "cos_sim": np.round(S, 9).ravel(),
+                        "cos_sim": cosine9(_np(grp["e"]), Qm).ravel(),
                     }
                 )
                 out = out[out["query_id"] != out["neighbor_id"]]

@@ -42,9 +42,7 @@ collect + the probe_lookup kernel) only when the catalog's metadata row
 count proves the centroid read is <= ``_COARSE_THRESHOLD`` rows — a
 bounded <= 4096 x dim matrix (~2-32 MB), the r16 fast path that removes
 two Python-boundary jobs per probe batch; larger centroid reads keep the
-distributed ranking. The one remaining unconditional driver-side centroid
-frame is the explicit pandas FACE ``kmeans_refine`` keeps for callers
-that already hold one.
+distributed ranking.
 """
 
 from __future__ import annotations
@@ -81,18 +79,20 @@ def kmeans_refine_df(
     cent_df: DataFrame,
     iterations: int = 5,
 ) -> DataFrame:
-    """Spherical-k-means refinement, DataFrame to DataFrame — the
-    driver-free form of kmeans_refine: assignment runs the distributed
-    cogroup kernel, bucket means are computed relationally (posexplode ->
+    """Spherical-k-means refinement of an IVF centroid set (Lloyd's
+    iterations under the cosine assignment the index probes with),
+    DataFrame to DataFrame: assignment runs the distributed cogroup kernel,
+    bucket means are computed relationally (posexplode ->
     groupBy(centroid, position) -> avg -> re-assembled array), and the
     refreshed set is a JOIN of the previous centroids with their new
     means (empty buckets keep their previous centroid via coalesce —
     standard Lloyd's fallback). No C x dim object ever materializes on
-    the driver, so refinement now shares the build path's scale bound.
+    the driver, so refinement shares the build path's scale bound.
 
-    Centroid ids stay stable across iterations. Plans grow one join per
-    iteration; localCheckpoint truncates the lineage each round (the same
-    trick graph.py's star rounds use)."""
+    Centroid ids stay stable across iterations, so a refined set drops
+    into build_vector_index unchanged. Plans grow one join per iteration;
+    localCheckpoint truncates the lineage each round (the same trick
+    graph.py's star rounds use)."""
     for _ in range(iterations):
         assigned = assign_buckets_distributed(vectors, cent_df)
         means = (
@@ -116,45 +116,6 @@ def kmeans_refine_df(
             .localCheckpoint()
         )
     return cent_df
-
-
-def kmeans_refine(
-    vectors: DataFrame,
-    centroids: pd.DataFrame,
-    iterations: int = 5,
-) -> pd.DataFrame:
-    """Spherical-k-means refinement of an IVF centroid set (Lloyd's
-    iterations under the cosine assignment the index probes with).
-
-    Each iteration is ONE distributed pass: assign every vector to its
-    nearest current centroid (broadcast centroids, Arrow-batched matmul —
-    the same kernel the probe path uses), then average the members of each
-    bucket. The mean is computed relationally — posexplode the vector,
-    groupBy (centroid, position), avg — so no vector set is ever collected;
-    only the C x dim mean matrix comes back to the driver. Buckets that go
-    empty keep their previous centroid (standard Lloyd's fallback).
-
-    Centroid ids stay 0..C-1-stable across iterations, so a refined set
-    drops into build_vector_index unchanged.
-
-    This is the pandas-frame FACE of ``kmeans_refine_df`` for callers that
-    already hold a driver-side centroid frame (probe-parity tests): it
-    delegates to the distributed implementation and re-collects the (small)
-    refined set, preserving the input row order."""
-    spark = vectors.sparkSession
-    cpdf = centroids.reset_index(drop=True)
-    dim = len(cpdf["e"].iloc[0])
-    cent_df = spark.createDataFrame(
-        [(int(r.vec_id), [float(x) for x in r.e]) for r in cpdf.itertuples()],
-        "vec_id bigint, e array<double>",
-    )
-    out = kmeans_refine_df(vectors, cent_df, iterations).toPandas()
-    pos = {int(v): i for i, v in enumerate(cpdf["vec_id"])}
-    out = out.sort_values(
-        "vec_id", key=lambda s: s.map(pos), kind="stable"
-    ).reset_index(drop=True)
-    assert all(len(e) == dim for e in out["e"])
-    return out
 
 
 # Fine-centroid count above which the centroid SET itself is sharded under
@@ -182,7 +143,7 @@ def build_vector_index(
     """Materialize the IVF index for ``vectors`` (vec_id, e) as lake tables
     ``name`` + ``name__centroids``. Returns the centroid count.
     ``refine_iterations`` > 0 runs that many spherical-k-means passes
-    (kmeans_refine) over the seed centroids before assignment — better
+    (kmeans_refine_df) over the seed centroids before assignment — better
     bucket balance and probe recall for the same probe cost.
 
     When C > ``coarse_threshold`` the build goes TWO-LEVEL: the first
@@ -661,7 +622,7 @@ def probe_vector_index(
                 return []
             return [
                 (int(q), int(cid))
-                for cid, (qarr, _, _) in probe_lookup(
+                for cid, (qarr, _) in probe_lookup(
                     queries, cpdf, k
                 ).items()
                 for q in qarr
@@ -707,14 +668,10 @@ def probe_vector_index(
     by_cid: dict = {}
     for q, cid in pairs:
         by_cid.setdefault(cid, []).append(q)
-    lookup = {}
-    for cid, qs in sorted(by_cid.items()):
-        Qm = np.stack([Q[qrow[q]] for q in qs])
-        lookup[cid] = (
-            np.array(qs, dtype=np.int64),
-            Qm,
-            np.linalg.norm(Qm, axis=1),
-        )
+    lookup = {
+        cid: (np.array(qs, dtype=np.int64), np.stack([Q[qrow[q]] for q in qs]))
+        for cid, qs in sorted(by_cid.items())
+    }
     buckets = ", ".join(str(c) for c in sorted(lookup))
     candidates = _read_index_rows(
         lake, name, version=version, where=f"centroid_id IN ({buckets})"

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ducktales_spark.queries.dedup import (
     minhash_candidate_pairs,
-    shingle_table,
+    shingle_hash_table,
 )
 
 _WORDS = [f"w{i}" for i in range(500)]
@@ -59,13 +59,12 @@ def test_minhash_estimate_tracks_true_jaccard(spark, planted):
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
         for r in minhash_candidate_pairs(docs).collect()
     }
-    sh = shingle_table(docs)
-    sets = {
-        r["doc_id"]: set(r["ss"])
-        for r in sh.groupBy("doc_id")
-        .agg(F.collect_set("s").alias("ss"))
-        .collect()
-    }
+    sets = {}
+    for r in docs.collect():
+        ws = r["text"].split()
+        sets[r["doc_id"]] = {
+            " ".join(ws[i : i + 3]) for i in range(len(ws) - 2)
+        }
     for (a, b), e in est.items():
         sa, sb = sets[a], sets[b]
         true_j = len(sa & sb) / len(sa | sb)
@@ -100,18 +99,22 @@ def test_unified_sketch_recall(spark, planted):
         assert sh.get((i, 900 + i)) == 0.0, (i, sh.get((i, 900 + i)))
 
 
-def test_shingle_table_matches_naive(spark):
+def test_shingle_hash_table_matches_naive(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "x y"), (3, "  p  q r s  ")],
         "doc_id bigint, text string",
     )
     got = {
-        (r["doc_id"], r["s"]) for r in shingle_table(docs).collect()
+        (r["doc_id"], r["h"]) for r in shingle_hash_table(docs).collect()
     }
-    assert got == {
+    expected = [
         (1, "a b c"), (1, "b c d"), (1, "c d e"),
         (3, "p q r"), (3, "q r s"),
-    }  # doc 2 is shorter than n=3 -> no shingles
+    ]  # doc 2 is shorter than n=3 -> no shingles
+    hashes = spark.range(1).select(
+        *[F.xxhash64(*map(F.lit, s.split())) for _, s in expected]
+    ).first()
+    assert got == {(d, h) for (d, _), h in zip(expected, hashes)}
 
 
 def test_d03_oracle_parity_edge_corpora(spark):

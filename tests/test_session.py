@@ -50,7 +50,6 @@ def test_operators_size_shuffles_under_auto(spark, sf_dir, monkeypatch):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id bigint, e array<double>"
     )
     frames = {
-        "shingle_table": dedup.shingle_table(docs),
         "shingle_hash_table": dedup.shingle_hash_table(docs),
         "minhash_bands": dedup.minhash_bands(docs),
         "unified_sketch_pairs": dedup.unified_sketch_pairs(docs),

@@ -345,11 +345,11 @@ def test_streaming_dedup_ingest(spark, tmp_path):
     got = sorted(r.doc_id for r in lake.read("docs").collect())
     # doc 9 keeps iff its estimated jaccard vs doc 2 is < 0.5 — compute the
     # ground truth with the same deterministic sketch
-    from ducktales_spark.queries.dedup import minhash_signatures
+    from ducktales_spark.queries.dedup import minhash_bands
 
     sigs = {
         r.doc_id: r.sig
-        for r in minhash_signatures(
+        for r in minhash_bands(
             spark.createDataFrame(
                 [(2, _LONG_B), (9, batches[1][4][1])], schema
             )

@@ -355,26 +355,26 @@ def test_compact_after_remove_keeps_probe_parity(spark, tmp_path, vectors):
 
 
 def _mean_best_cos(vpdf, cpdf):
-    import numpy as np
+    from ducktales_spark.queries.similarity import _np, cosine9
 
-    E = np.array(vpdf["e"].tolist(), dtype=np.float64)
-    C = np.array(cpdf["e"].tolist(), dtype=np.float64)
-    S = (E @ C.T) / (
-        np.linalg.norm(E, axis=1)[:, None] * np.linalg.norm(C, axis=1)[None, :]
-    )
-    return float(np.max(np.round(S, 9), axis=1).mean())
+    return float(cosine9(_np(vpdf["e"]), _np(cpdf["e"])).max(axis=1).mean())
 
 
 def test_kmeans_refine_improves_quantization(spark, vectors):
     """Lloyd iterations under the probe's own cosine assignment must not
     worsen — and on arbitrary seeds should improve — the mean best-centroid
     cosine (the quantization quality that probe recall depends on)."""
-    from ducktales_spark.vector_index import kmeans_refine
+    from ducktales_spark.vector_index import kmeans_refine_df
     from ducktales_spark.queries.similarity import n_centroids_for
 
     C = n_centroids_for(vectors)
-    seed = vectors.filter(F.col("vec_id") < C).orderBy("vec_id").toPandas()
-    refined = kmeans_refine(vectors, seed, iterations=3)
+    seed_df = vectors.filter(F.col("vec_id") < C).select("vec_id", "e")
+    seed = seed_df.orderBy("vec_id").toPandas()
+    refined = (
+        kmeans_refine_df(vectors, seed_df, iterations=3)
+        .orderBy("vec_id")
+        .toPandas()
+    )
     assert len(refined) == C
     assert list(refined["vec_id"]) == list(seed["vec_id"])  # stable ids
     vpdf = vectors.toPandas()
@@ -382,6 +382,43 @@ def test_kmeans_refine_improves_quantization(spark, vectors):
     q_ref = _mean_best_cos(vpdf, refined)
     assert q_ref >= q_seed - 1e-9, (q_seed, q_ref)
     assert q_ref > q_seed, "refinement should move arbitrary seed centroids"
+
+
+def test_probe_breaks_cosine_ties_to_lowest_centroid_id(
+    spark, tmp_path, monkeypatch
+):
+    """Two centroids with the same vector tie on every query's cosine. The
+    probe must pick the lower vec_id — the e02 oracle's `ORDER BY cos DESC,
+    cid` — on the driver-rank path even when the centroid read lists the
+    higher id first, and on the distributed ranking path too."""
+    import ducktales_spark.vector_index as vi
+
+    lake = LakeCatalog(str(tmp_path / "lake"), spark)
+    lake.ctas(
+        "idx__centroids",
+        spark.createDataFrame(
+            [(7, [1.0, 0.0]), (3, [1.0, 0.0])], "vec_id bigint, e array<double>"
+        ).coalesce(1),
+    )
+    lake.ctas(
+        "idx",
+        spark.createDataFrame(
+            [(30, [1.0, 0.1], 3), (70, [1.0, 0.2], 7)],
+            "vec_id bigint, e array<double>, centroid_id bigint",
+        ).coalesce(1),
+        partition_by=("centroid_id",),
+    )
+    read_order = [r.vec_id for r in lake.read("idx__centroids").collect()]
+    assert read_order == [7, 3]  # the higher id comes first
+    queries = pd.DataFrame({"vec_id": [100], "e": [[1.0, 0.05]]})
+
+    def probed():
+        out = vi.probe_vector_index(lake, "idx", queries, k=5, nprobe=1)
+        return [r.neighbor_id for r in out.collect()]
+
+    assert probed() == [30]  # driver rank: 2 centroids <= the threshold
+    monkeypatch.setattr(vi, "_COARSE_THRESHOLD", 0)
+    assert probed() == [30]  # distributed rank
 
 
 def test_probe_empty_query_set(spark, tmp_path, vectors):
