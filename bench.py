@@ -122,7 +122,7 @@ def main() -> None:
     loads["twin_pass1"] = _load1()
     twin = duckdb_twin(specs, sf_dir)
     spark = get_spark("ducktales-bench")
-    tune_for_input(spark, sf_dir)
+    floor_binding = tune_for_input(spark, sf_dir)
 
     # Steady-state warmup: a long-lived cluster has the JVM JIT'd, the Janino
     # codegen class cache populated, the Python worker pool + Arrow path live,
@@ -296,10 +296,7 @@ def main() -> None:
                 # low-core comparison at an SF with >= 2x cores of work —
                 # sf1 via tools/replicate_sf.py — to see real scaling).
                 "cpus": spark.sparkContext.defaultParallelism,
-                "partition_floor_binding": (
-                    int(spark.conf.get("spark.sql.shuffle.partitions"))
-                    < spark.sparkContext.defaultParallelism
-                ),
+                "partition_floor_binding": floor_binding,
                 "loadavg": loadavg,
                 "loadavg_passes": loads,
                 "pass_totals": pass_totals,
@@ -372,14 +369,15 @@ def spark_pass(spark, specs, sf_dir: str, timings: dict) -> None:
             timings[name] = dt if prev is None else min(prev, dt)
 
 
-def tune_for_input(spark, sf_dir: str) -> None:
+def tune_for_input(spark, sf_dir: str) -> bool:
     """Size shuffle parallelism and scan splits to the input volume — the
     per-deployment sizing pass any real cluster job does (a 40 MB input has
     no business launching 32-task stages; a multi-TB one would raise these,
     not lower them). Rule: one shuffle partition per ~4 MB of raw input,
     clamped to [8, defaultParallelism]; scan splits sized so the largest
     table still produces at least defaultParallelism tasks (floor 16 MB,
-    cap 128 MB = Spark's default)."""
+    cap 128 MB = Spark's default). Returns whether the floor binds: true
+    when it raised the count above min(cores, input-sized count)."""
     total = 0
     largest = 0
     for f in os.listdir(sf_dir):
@@ -396,7 +394,8 @@ def tune_for_input(spark, sf_dir: str) -> None:
     # 0.11 s; no query measured slower. Large inputs still clamp to all
     # cores (sf10 stays at 32), where per-partition bytes — not task
     # count — is the binding constraint.
-    parts = max(8, min(cores, total // (12 << 20) or 1))
+    sized = min(cores, total // (12 << 20) or 1)
+    parts = max(8, sized)
     # two scan waves per core, not one: with a single wave only the LARGEST
     # table fills the cluster — every smaller fact table scans at a
     # fraction of the cores (orders at sf10: 6 tasks on 32 cores). Measured
@@ -434,6 +433,7 @@ def tune_for_input(spark, sf_dir: str) -> None:
     # actually prune row groups (sparse nullable columns) should leave it
     # on.
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    return parts > sized
 
 
 def duckdb_twin(specs, sf_dir: str) -> dict:

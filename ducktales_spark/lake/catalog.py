@@ -771,7 +771,7 @@ class LakeCatalog:
         which is consumed as part of the match."""
         import re as _re
 
-        from .sql import SQLExecutor
+        from .lexer import sub_code
 
         def _rewrite(m: "_re.Match") -> str:
             tname, kind, val = m.group(1), m.group(2).upper(), m.group(3)
@@ -792,15 +792,7 @@ class LakeCatalog:
             r"\s*=>\s*([^)]+)\)",
             _re.I,
         )
-        out, i = [], 0
-        while True:
-            m = SQLExecutor._search_nonliteral(pat, query, i)
-            if m is None:
-                out.append(query[i:])
-                return "".join(out)
-            out.append(query[i: m.start()])
-            out.append(_rewrite(m))
-            i = m.end()
+        return sub_code(pat, _rewrite, query)
 
     def export_to(self, other: "LakeCatalog") -> None:
         """Catalog migration (D15, demos/05_catalog_portability/demo.py:199-280):
@@ -1332,14 +1324,14 @@ class Transaction:
         identifiers naming source columns; function names and literals
         excluded by the scanner) — the guard set for expression keys,
         exactly like _predicate_cols guards a filtered MV's WHERE."""
-        from .rollup import scan_sql_identifiers
+        from .lexer import column_refs
 
         names = {f.name for f in self._state(src_name).schema.fields}
         lower = {n.lower(): n for n in names}
         return {
-            lower[nm.lower()]
-            for _s, _e, nm in scan_sql_identifiers(text)
-            if nm.lower() in lower
+            lower[r.name.lower()]
+            for r in column_refs(text)
+            if r.name.lower() in lower
         }
 
     def _predicate_cols(self, src_name: str, row: dict) -> set:
@@ -1516,7 +1508,8 @@ class Transaction:
             "distinct_cols": ("distinct_",),
             "var_cols": ("sumsq_",),
         }
-        from .rollup import scan_sql_identifiers
+        from .lexer import column_refs
+        from .rollup import rewrite_sql_identifiers
 
         for mv, row, cols in self._dependent_rollups(src_name):
             ke = json.loads(row.get("key_exprs") or "{}")
@@ -1524,13 +1517,13 @@ class Transaction:
             # a predicate-only (or expr-key-only) reference to the old name
             # is invisible in it — scan the stored TEXTS for `old` directly
             in_where = bool(row.get("where_sql")) and any(
-                nm.lower() == old.lower()
-                for _s, _e, nm in scan_sql_identifiers(row["where_sql"])
+                r.name.lower() == old.lower()
+                for r in column_refs(row["where_sql"])
             )
             in_key_expr = any(
-                nm.lower() == old.lower()
+                r.name.lower() == old.lower()
                 for e in ke.values()
-                for _s, _e2, nm in scan_sql_identifiers(e)
+                for r in column_refs(e)
             )
             if old not in cols and not in_where and not in_key_expr:
                 continue
@@ -1543,8 +1536,6 @@ class Transaction:
                     )
                     renames += [(f"{p}{old}", f"{p}{new}") for p in prefs]
             if in_key_expr:
-                from .rollup import rewrite_sql_identifiers
-
                 row["key_exprs"] = json.dumps({
                     a: rewrite_sql_identifiers(e, {old: new})
                     for a, e in ke.items()
@@ -1552,8 +1543,6 @@ class Transaction:
             if row.get("time_col") == old:
                 row["time_col"] = new  # bucket expr re-derives from meta
             if row.get("where_sql"):
-                from .rollup import rewrite_sql_identifiers
-
                 row["where_sql"] = rewrite_sql_identifiers(
                     row["where_sql"], {old: new}
                 )
@@ -1562,8 +1551,6 @@ class Transaction:
                 # changed with the source rename: follow the stored pairs
                 # plus the derived read-face names (avg_<c> rides sum_<c>,
                 # approx_distinct_<c> rides hll_<c>)
-                from .rollup import rewrite_sql_identifiers
-
                 face_map = dict(renames)
                 if (f"sum_{old}", f"sum_{new}") in renames:
                     face_map[f"avg_{old}"] = f"avg_{new}"

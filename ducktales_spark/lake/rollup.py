@@ -31,6 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from .catalog import local_df
+from .lexer import bq, column_refs, map_code
 
 
 def _bucket_expr(time_col, bucket_s: int):
@@ -171,109 +172,24 @@ def _key_group_cols(keys, key_exprs):
     ]
 
 
-def scan_sql_identifiers(text: str, with_qualifiers: bool = False):
-    """Yield column-like identifier spans in one SQL expression:
-    quote-aware (string literals skipped, '' escapes handled), and an
-    identifier immediately followed by ``(`` is a FUNCTION name, not a
-    column reference. The SINGLE scanner shared by predicate-column
-    discovery, rename follow-through (rewriting a stored predicate), and
-    the MERGE expression rewriter — one place to fix quoting/keyword
-    handling.
-
-    ``with_qualifiers=False`` (default): yields ``(start, end, name)``
-    for BARE identifiers only — a dotted pair like ``a.b`` yields both
-    parts separately (callers matching plain column names are unaffected:
-    qualifiers aren't column names).
-    ``with_qualifiers=True``: yields ``(start, end, name, qualifier)``
-    where a dotted reference ``q.c`` arrives as ONE span with
-    qualifier='q' and bare identifiers carry qualifier=None."""
-    import re as _re
-
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        m = _re.match(r"[A-Za-z_][A-Za-z0-9_]*", text[i:])
-        if not m:
-            i += 1
-            continue
-        j = i + m.end()
-        if with_qualifiers:
-            mq = _re.match(r"\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)", text[j:])
-            if mq:
-                yield (i, j + mq.end(), mq.group(1), m.group(0))
-                i = j + mq.end()
-                continue
-        k = j
-        while k < n and text[k].isspace():
-            k += 1
-        if not (k < n and text[k] == "("):
-            if with_qualifiers:
-                yield (i, j, m.group(0), None)
-            else:
-                yield (i, j, m.group(0))
-        i = j
-
-
-def map_sql_nonliteral(text: str, fn, literal_fn=None) -> str:
-    """Apply ``fn`` to the segments of ``text`` OUTSIDE single-quoted
-    string literals (''-escape aware), copying literals verbatim (or
-    through ``literal_fn``) — the ONE literal-walk shared by the HAVING
-    aggregate rewriter, SQL-text normalization, and literal stripping,
-    using the same quoting rules as :func:`scan_sql_identifiers` (a
-    future quoting fix lands in all of them)."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        if text[i] == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            lit = text[i : j + 1]
-            out.append(lit if literal_fn is None else literal_fn(lit))
-            i = j + 1
-        else:
-            j = text.find("'", i)
-            seg = text[i:] if j < 0 else text[i:j]
-            out.append(fn(seg))
-            i = n if j < 0 else j
-    return "".join(out)
-
-
 def strip_sql_literals(text: str) -> str:
     """Replace every string literal with an empty ``''`` so substring /
-    identifier scans can never match literal CONTENT — the shared
-    replacement for ad-hoc literal-stripping regexes."""
-    return map_sql_nonliteral(
-        text, lambda s: s, literal_fn=lambda _s: "''"
-    )
+    identifier scans can never match literal CONTENT."""
+    return map_code(text, lambda s: s, literal_fn=lambda _s: "''")
 
 
 def rewrite_sql_identifiers(text: str, mapping: dict) -> str:
-    """Replace bare identifiers per ``mapping`` (case-insensitive keys),
-    leaving literals and function names alone."""
+    """Replace column references per ``mapping`` (case-insensitive keys),
+    leaving literals, function names and qualifiers alone; a backticked
+    reference stays backticked."""
     low = {k.lower(): v for k, v in mapping.items()}
     out, prev = [], 0
-    for s, e, name in scan_sql_identifiers(text):
-        rep = low.get(name.lower())
+    for r in column_refs(text):
+        rep = low.get(r.name.lower())
         if rep is not None:
-            out.append(text[prev:s])
-            out.append(rep)
-            prev = e
+            quoted = text[r.end - 1] == "`"
+            out += [text[prev:r.name_start], bq(rep) if quoted else rep]
+            prev = r.end
     out.append(text[prev:])
     return "".join(out)
 

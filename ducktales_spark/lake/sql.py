@@ -65,22 +65,45 @@ same statement coverage so a reference user can port scripts verbatim:
 * anything else -> read query via Catalyst, with the ``AT (VERSION|TIMESTAMP
   =>)`` time-travel rewrite (README.md:216-220)
 
-Statement heads are dispatched with regexes; every *query body* (SELECT in
-CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is handed to Spark
-SQL — we never re-implement expression parsing, so the full Catalyst surface
-is available inside each statement. Inside an open transaction, reads see
-read-your-writes (touched tables bind to the transaction's staged state).
+Statement text is read with one lexer (:mod:`~ducktales_spark.lake.lexer`)
+that follows Spark's lexical rules: ``'…'`` and ``"…"`` are string literals
+with backslash and doubled-quote escapes, ``R'…'`` is raw, a backticked name
+is an identifier, ``--`` and nesting ``/* */`` are comments. Clause
+boundaries (top-level commas, WHERE, WHEN, THEN, AND) are found among its
+tokens, so a keyword, comma or semicolon inside a literal, identifier or
+comment is never one. A statement's head is classified once (``_head``);
+the per-verb syntax after it is matched with regexes. Every *query body*
+(SELECT in CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is handed
+to Spark SQL — we never re-implement expression parsing, so the full
+Catalyst surface is available inside each statement. Inside an open
+transaction, reads see read-your-writes (touched tables bind to the
+transaction's staged state).
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
-
+from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame
 
 from .catalog import local_df
+from .lexer import (
+    assignment,
+    bq,
+    column_refs,
+    items,
+    map_code,
+    match_paren,
+    search_code,
+    split_top,
+    statements,
+    strip,
+    sub_code,
+    top_words,
+    unwrap_parens,
+)
 from .rollup import strip_sql_literals
 from .schema import Field, TableSchema
 
@@ -94,22 +117,59 @@ class LakeSQLError(Exception):
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 
-def _bq(name: str) -> str:
-    """``name`` as a backticked Spark SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-# The qualified-write verb grammar, shared by the dispatch that routes
-# `<verb> <cat>.<tbl>` into attached catalogs and the USE-READ_ONLY
-# bypass that lets writes aimed at OTHER catalogs delegate — one
-# alternation so the two can never drift (MERGE and CHECKPOINT dispatch
-# separately but join the bypass pattern below).
-_QWRITE_VERBS = (
-    r"INSERT(?:\s+OR\s+(?:REPLACE|IGNORE))?\s+INTO|UPDATE"
-    r"|DELETE\s+FROM|TRUNCATE(?:\s+TABLE)?"
+# The verbs whose statements may stage or commit a change: execute()
+# snapshots an open transaction's staging around them, and a USE'd
+# READ_ONLY catalog refuses them unless they target another catalog.
+_WRITE_VERBS = frozenset(
+    "INSERT UPDATE DELETE TRUNCATE MERGE CREATE DROP ALTER IMPORT "
+    "CHECKPOINT CALL REFRESH COPY".split()
+)
+# the verb phrases that name a target table, optionally catalog-qualified
+_TARGET = re.compile(
+    r"(INSERT(?:\s+OR\s+(?:REPLACE|IGNORE))?\s+INTO|UPDATE|DELETE\s+FROM"
+    r"|TRUNCATE(?:\s+TABLE)?"
     r"|CREATE\s+(?:OR\s+REPLACE\s+)?TABLE(?:\s+IF\s+NOT\s+EXISTS)?"
     r"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?|ALTER\s+TABLE"
+    r"|MERGE(?:\s+WITH\s+SCHEMA\s+EVOLUTION)?\s+INTO|CHECKPOINT)"
+    rf"\s+({_IDENT})(?:\s*\.\s*({_IDENT}))?\b",
+    re.I,
 )
+_CALL_CATALOG = re.compile(rf"\bcatalog\s*=>\s*'({_IDENT})'", re.I)
+
+
+class _Head(NamedTuple):
+    verb: str  # the first word, upper case
+    writes: bool
+    phrase: Optional[str]  # the target-naming verb phrase, as written
+    cat: Optional[str]  # the catalog the statement writes into, if named
+    table: Optional[str]
+    rest: str  # the text after the target
+
+
+def _head(q: str) -> _Head:
+    """What a (comment-stripped) statement's head says: its verb, whether
+    it writes, and its target. A CALL names its catalog in its first
+    argument (``compact(dev.t)``) or as ``catalog => 'dev'``; only
+    ``COPY <table> FROM`` of the COPY forms writes, and
+    ``probe_vector_index`` is the one CALL that only reads."""
+    verb = re.match(r"\w*", q).group().upper()
+    writes = verb in _WRITE_VERBS
+    m = _TARGET.match(q)
+    phrase = cat = table = None
+    rest = ""
+    if m:
+        phrase, rest = m.group(1), q[m.end():]
+        cat, table = m.group(2, 3) if m.group(3) else (None, m.group(2))
+    elif verb == "CALL":
+        writes = not re.match(r"CALL\s+probe_vector_index\b", q, re.I)
+        mc = re.match(
+            rf"CALL\s+{_IDENT}\s*\(\s*'?({_IDENT})\s*\.", q, re.I
+        ) or search_code(_CALL_CATALOG, q)
+        cat = mc.group(1) if mc else None
+    elif verb == "COPY":
+        writes = bool(re.match(rf"COPY\s+{_IDENT}\s+FROM\b", q, re.I))
+    return _Head(verb, writes, phrase, cat, table, rest)
+
 
 # reference (DuckDB) type -> Spark DDL type string (SURVEY.md §1.2)
 _TYPE_MAP = {
@@ -146,46 +206,6 @@ def _map_type(t: str) -> str:
     return t  # assume already a Spark DDL type (array<float> etc.)
 
 
-def _strip(sql: str) -> str:
-    """Remove comments + trailing semicolons, collapse leading space.
-    Quote-aware: ``--`` or ``/*`` INSIDE a string literal is data, not a
-    comment (``SELECT 'a--b'`` must survive intact)."""
-    out = []
-    i, n = 0, len(sql)
-    in_str = False
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == "'":
-                # '' is an escaped quote inside the literal
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append("'")
-                    i += 1
-                else:
-                    in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "-" and sql.startswith("--", i):
-            j = sql.find("\n", i)
-            i = n if j == -1 else j  # keep the newline as separator
-            out.append(" ")
-            continue
-        if ch == "/" and sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = n if j == -1 else j + 2
-            out.append(" ")
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out).strip().rstrip(";").strip()
-
-
 def _norm_sql_expr(t: str) -> str:
     """Normalize one SQL expression for TEXTUAL identity comparison:
     lowercase + collapse whitespace OUTSIDE string literals, literals
@@ -193,136 +213,7 @@ def _norm_sql_expr(t: str) -> str:
     ``concat(r, 'eu')`` (the matching is textual, like Postgres matching
     a GROUP BY item to a select expression by equivalence; semantically
     different literals must be a mismatch)."""
-    from .rollup import map_sql_nonliteral
-
-    return map_sql_nonliteral(
-        t, lambda s: re.sub(r"\s+", " ", s).lower()
-    ).strip()
-
-
-def _split_top(s: str) -> list:
-    """Split on top-level commas (outside parens, braces, and quotes —
-    braces carry read_csv/COPY ``columns {'a': 'INT', ...}`` structs)."""
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch in "({":
-                depth += 1
-            elif ch in ")}":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
-def _top_keyword_positions(s: str, kw: str):
-    """Start indices of top-level (outside parens and string literals)
-    occurrences of the WORD ``kw``, case-insensitive."""
-    depth, in_str = 0, False
-    k = len(kw)
-    out = []
-    for i, ch in enumerate(s):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and s[i : i + k].upper() == kw.upper():
-                before = s[i - 1] if i else ""
-                after = s[i + k : i + k + 1]
-                if not (before.isalnum() or before == "_") and not (
-                    after.isalnum() or after == "_"
-                ):
-                    out.append(i)
-    return out
-
-
-def _split_keyword(s: str, kw: str) -> list:
-    """Split on top-level occurrences of the word ``kw`` (the keyword is
-    consumed); leading segment included if non-empty."""
-    pos = _top_keyword_positions(s, kw)
-    if not pos:
-        return [s.strip()] if s.strip() else []
-    out = []
-    prev = 0
-    for p in pos:
-        seg = s[prev:p].strip()
-        if seg or prev:
-            out.append(seg)
-        prev = p + len(kw)
-    out.append(s[prev:].strip())
-    return out
-
-
-def _merge_when_positions(s: str) -> list:
-    """Top-level positions of MERGE clause heads: ``WHEN`` immediately
-    followed by ``[NOT] MATCHED``. A bare top-level WHEN (a CASE
-    expression inside an un-parenthesized SET expression) is NOT a clause
-    boundary."""
-    return [
-        p
-        for p in _top_keyword_positions(s, "WHEN")
-        if re.match(r"WHEN\s+(NOT\s+)?MATCHED\b", s[p:], re.I)
-    ]
-
-
-def _unwrap_parens(s: str) -> str:
-    """Strip redundant OUTER parens (quote-aware): ``(t.id = s.id)`` ->
-    ``t.id = s.id``; ``(a) = (b)`` is left alone (the first paren closes
-    early)."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth, in_str, closes_early = 0, False, False
-        for ch in s[:-1]:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        closes_early = True
-                        break
-        if closes_early:
-            break
-        s = s[1:-1].strip()
-    return s
-
-
-def _split_last_where(s: str):
-    """Split ``s`` at the LAST top-level WHERE (outside parens and string
-    literals). Returns (head, predicate_or_None). A first-match split breaks
-    ``SET a = (SELECT ... WHERE ...) WHERE id = 2`` and literals containing
-    the word."""
-    depth, in_str = 0, False
-    last = None
-    for i, ch in enumerate(s):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and s[i : i + 5].upper() == "WHERE":
-                before_ok = i == 0 or s[i - 1].isspace()
-                after = s[i + 5 : i + 6]
-                if before_ok and (after == "" or after.isspace()):
-                    last = i
-    if last is None:
-        return s, None
-    return s[:last].rstrip(), s[last + 5 :].strip()
+    return map_code(t, lambda s: re.sub(r"\s+", " ", s).lower()).strip()
 
 
 class SQLExecutor:
@@ -380,29 +271,24 @@ class SQLExecutor:
         partial effects of a failed statement (e.g. schema evolution a
         failed MERGE WITH SCHEMA EVOLUTION had staged). Snapshot/restore
         is pure driver-side metadata — no Spark job."""
+        q = strip(sql)
+        head = _head(q)
         tx = self._tx
-        if tx is None or re.match(
-            # txn verbs manage the txn themselves; read-only statements
-            # cannot mutate staging, so they skip the snapshot — a
-            # SELECT-heavy interactive txn must not pay O(loaded file
-            # entries) deepcopy per read
-            r"^(BEGIN|COMMIT|ROLLBACK|SELECT|WITH|SHOW|DESCRIBE|DESC"
-            r"|EXPLAIN|SUMMARIZE)\b",
-            _strip(sql),
-            re.I,
-        ):
-            return self._execute_stmt(sql, version)
+        # txn verbs manage the txn themselves and read-only statements
+        # cannot mutate staging, so they skip the snapshot — a SELECT-heavy
+        # interactive txn must not pay O(loaded file entries) deepcopy per
+        # read
+        if tx is None or not head.writes:
+            return self._execute_stmt(sql, q, head, version)
         snap = tx._snapshot_staging()
         try:
-            return self._execute_stmt(sql, version)
+            return self._execute_stmt(sql, q, head, version)
         except BaseException:
             if self._tx is tx:  # txn still open: undo this statement only
                 tx._restore_staging(snap)
             raise
 
-    def _execute_stmt(self, sql: str, version=None) -> DataFrame:
-        q = _strip(sql)
-
+    def _execute_stmt(self, sql: str, q: str, head: _Head, version=None):
         # `USE <attached>` in effect: every statement except the
         # catalog-management verbs delegates wholesale to the default
         # catalog's sub-executor — unqualified names, DML/DDL, and
@@ -419,83 +305,33 @@ class SQLExecutor:
             if self._use not in self._attached:  # DETACH'd underneath
                 self._use = None
             else:
-                if self._use in self._att_readonly and (
-                    re.match(
-                        # CALL is a write verb EXCEPT probe_vector_index,
-                        # the one pure-read procedure — it delegates like
-                        # SUMMARIZE/DESCRIBE instead of being refused
-                        r"^(INSERT|UPDATE|DELETE|TRUNCATE|MERGE|CREATE"
-                        r"|DROP|ALTER|IMPORT|CHECKPOINT"
-                        r"|CALL(?!\s+probe_vector_index\b)|REFRESH)\b",
-                        q,
-                        re.I,
-                    )
-                    or re.match(
-                        rf"^COPY\s+{_IDENT}\s+FROM\b", q, re.I
-                    )
-                ):
-                    # a QUALIFIED write naming a DIFFERENT catalog is not
-                    # a write into the read-only default — let it
+                if self._use in self._att_readonly and head.writes:
+                    # a write whose target names a DIFFERENT catalog is
+                    # not a write into the read-only default — let it
                     # delegate; the delegate's own dispatch enforces the
-                    # actual target's read-only flag. Self-qualified
-                    # (and unqualifiable verbs like IMPORT/REFRESH/CALL)
-                    # stay refused here.
-                    mq = re.match(
-                        rf"^(?:{_QWRITE_VERBS}"
-                        rf"|MERGE(?:\s+WITH\s+SCHEMA\s+EVOLUTION)?\s+INTO"
-                        rf"|CHECKPOINT)\s+({_IDENT})\s*\.",
-                        q,
-                        re.I,
-                    )
-                    if mq is None:
-                        # dotless whole-catalog CHECKPOINT of a SIBLING
-                        # attachment also delegates — but only when the
-                        # name is not a table in the read-only default
-                        # (the delegate resolves that tie to the table)
-                        mc = re.match(
-                            rf"^CHECKPOINT\s+({_IDENT})$", q, re.I
+                    # actual target's read-only flag. Self-qualified (and
+                    # unqualifiable verbs like IMPORT/REFRESH) stay
+                    # refused here. A dotless CHECKPOINT of a SIBLING
+                    # attachment (or of 'main', the writable bound
+                    # catalog) delegates too, unless the name is a table
+                    # in the read-only default (the delegate resolves that
+                    # tie to the table).
+                    cat = head.cat
+                    if (
+                        cat is None
+                        and head.verb == "CHECKPOINT"
+                        and head.table is not None
+                        and not head.rest
+                        and (
+                            head.table.lower() in self._attached
+                            or head.table.lower() == "main"
                         )
-                        # 'main' (the bound catalog) is reserved and never
-                        # in the attach list, but the bound catalog is
-                        # writable — CHECKPOINT main must delegate exactly
-                        # like CHECKPOINT main.t / INSERT INTO main.t do
-                        # (r13 ADVICE: it was refused here)
-                        if (
-                            mc is not None
-                            and (
-                                mc.group(1).lower() in self._attached
-                                or mc.group(1).lower() == "main"
-                            )
-                            and not self._att_executor(
-                                self._use
-                            )._table_exists(mc.group(1))
-                        ):
-                            mq = mc
-                    if mq is None:
-                        # a CALL whose target is qualified away from the
-                        # read-only default (CALL compact(dev.t) / CALL
-                        # expire_snapshots(catalog => 'dev')) delegates
-                        # too — the delegate's CALL routing enforces the
-                        # actual target's read-only flag
-                        mcall = re.match(
-                            rf"^CALL\s+{_IDENT}\s*\(\s*'?({_IDENT})\s*\.",
-                            q,
-                            re.I,
-                        )
-                        if mcall is None and re.match(
-                            r"^CALL\b", q, re.I
-                        ):
-                            # catalog => 'x' routing exists only on CALL
-                            # verbs; scanning other statements would let a
-                            # write whose STRING LITERALS contain that
-                            # token sequence delegate instead of being
-                            # refused here (r14 ADVICE)
-                            mcall = re.search(
-                                rf"\bcatalog\s*=>\s*'({_IDENT})'", q, re.I
-                            )
-                        if mcall is not None:
-                            mq = mcall
-                    if mq is None or mq.group(1).lower() == self._use:
+                        and not self._att_executor(
+                            self._use
+                        )._table_exists(head.table)
+                    ):
+                        cat = head.table
+                    if cat is None or cat.lower() == self._use:
                         raise LakeSQLError(
                             f"catalog {self._use!r} is attached READ_ONLY"
                         )
@@ -567,7 +403,7 @@ class SQLExecutor:
         )
         if m:
             read_only, data_path = False, None
-            for item in _split_top(m.group(3)) if m.group(3) else []:
+            for item in items(m.group(3)) if m.group(3) else []:
                 mm = re.fullmatch(r"READ_ONLY", item, re.I)
                 if mm:
                     read_only = True
@@ -613,14 +449,8 @@ class SQLExecutor:
         )
         if m:
             return self._import_database(m.group(1).replace("''", "'"))
-        m = re.match(
-            rf"^({_QWRITE_VERBS})\s+"
-            rf"({_IDENT})\s*\.\s*({_IDENT})\b(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            qcat = m.group(2).lower()
+        if head.phrase and head.cat and head.verb != "CHECKPOINT":
+            qcat = head.cat.lower()
             target_c = self._attached.get(qcat)
             if target_c is self.c or (target_c is None and qcat == "main"):
                 # the qualifier names THIS executor's own catalog —
@@ -629,11 +459,16 @@ class SQLExecutor:
                 # USE. Strip it: the unqualified statement has the exact
                 # semantics, including open-transaction staging.
                 return self.execute(
-                    f"{m.group(1)} {m.group(3)}{m.group(4)}", version
+                    f"{head.phrase} {head.table}{head.rest}", version
+                )
+            if target_c is not None and head.verb == "MERGE":
+                return self._attached_merge(
+                    head.cat, head.table, head.rest,
+                    evolve="EVOLUTION" in head.phrase.upper(),
                 )
             if target_c is not None:
                 return self._attached_write(
-                    m.group(1), m.group(2), m.group(3), m.group(4)
+                    head.phrase, head.cat, head.table, head.rest
                 )
 
         m = re.match(
@@ -882,7 +717,7 @@ class SQLExecutor:
                 return self._att_executor(cat)._describe(name)
             return self._describe(name)
         if re.match(r"^PRAGMA\s+show_tables$", q, re.I):
-            return self._execute_stmt("SHOW TABLES")
+            return self.execute("SHOW TABLES")
         m = re.match(
             rf"^CHECKPOINT(?:\s+({_IDENT})(?:\s*\.\s*({_IDENT}))?)?$",
             q,
@@ -1008,9 +843,9 @@ class SQLExecutor:
                 types = {f.name: f.type for f in schema.fields}
                 df = df.selectExpr(
                     *[
-                        f"CAST({_bq(v)} AS {types[c]}) AS {_bq(c)}"
+                        f"CAST({bq(v)} AS {types[c]}) AS {bq(c)}"
                         if c in types
-                        else f"{_bq(v)} AS {_bq(c)}"
+                        else f"{bq(v)} AS {bq(c)}"
                         for v, c in zip(vals, names)
                     ]
                 )
@@ -1056,16 +891,20 @@ class SQLExecutor:
             name, rest = m.groups()
             # split at the LAST top-level WHERE: a first-match split breaks
             # SET expressions containing subqueries or 'where' in a literal
-            setlist, where = _split_last_where(rest)
+            setlist, where = rest, None
+            wpos = top_words(rest, "WHERE")
+            if wpos:
+                setlist = rest[: wpos[-1]].rstrip()
+                where = rest[wpos[-1] + len("WHERE"):].strip()
             # bind table views so scalar subqueries in SET/WHERE resolve
             # (against pre-statement state, DuckDB UPDATE semantics)
             self._bind_tables()
             sets = {}
-            for part in _split_top(setlist):
-                mm = re.match(rf"^({_IDENT})\s*=\s*(.+)$", part, re.S)
-                if not mm:
+            for part in items(setlist):
+                a = assignment(part)
+                if a is None or a[0] is not None:
                     raise LakeSQLError(f"bad SET clause: {part!r}")
-                sets[mm.group(1)] = mm.group(2).strip()
+                sets[a[1]] = a[2]
             n = [0]
 
             def op(tx):
@@ -1106,22 +945,9 @@ class SQLExecutor:
             r"^MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\b", q, re.I
         )
         if m:
-            evolve, rest = bool(m.group(1)), q[m.end():]
-            mm = re.match(
-                rf"^\s+({_IDENT})\s*\.\s*({_IDENT})\b(.*)$", rest, re.S
+            return self._merge_stmt(
+                "MERGE INTO" + q[m.end():], evolve=bool(m.group(1))
             )
-            if mm:
-                qcat = mm.group(1).lower()
-                target_c = self._attached.get(qcat)
-                if target_c is self.c or (
-                    target_c is None and qcat == "main"
-                ):
-                    rest = " " + mm.group(2) + mm.group(3)
-                elif target_c is not None:
-                    return self._attached_merge(
-                        mm.group(1), mm.group(2), mm.group(3), evolve
-                    )
-            return self._merge_stmt("MERGE INTO" + rest, evolve=evolve)
 
         m = re.match(rf"^CALL\s+({_IDENT})\s*\((.*)\)$", q, re.I | re.S)
         if m:
@@ -1206,19 +1032,8 @@ class SQLExecutor:
         src_name, tail) with exactly one of the first two set."""
         rest = rest.lstrip()
         if rest.startswith("("):
-            depth, in_str, end = 0, False, None
-            for i, ch in enumerate(rest):
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            end = i
-                            break
-            if end is None:
+            end = match_paren(rest, 0)
+            if end < 0:
                 raise LakeSQLError("unbalanced parens in MERGE USING")
             return rest[1:end], None, rest[end + 1 :]
         mm = re.match(rf"^({_IDENT}(?:\s*\.\s*{_IDENT})?)", rest)
@@ -1272,7 +1087,13 @@ class SQLExecutor:
         if not mm:
             raise LakeSQLError("MERGE requires an ON condition")
         rest = rest[mm.end() :]
-        wpos = _merge_when_positions(rest)
+        # clause heads: a top-level WHEN followed by [NOT] MATCHED (a bare
+        # WHEN belongs to a CASE in an un-parenthesized SET expression)
+        wpos = [
+            p
+            for p in top_words(rest, "WHEN")
+            if re.match(r"WHEN\s+(NOT\s+)?MATCHED\b", rest[p:], re.I)
+        ]
         if not wpos:
             raise LakeSQLError("MERGE requires at least one WHEN clause")
         on_txt = rest[: wpos[0]]
@@ -1285,7 +1106,7 @@ class SQLExecutor:
         if mseq:
             seq_qual, seq_name = mseq.group(1), mseq.group(2)
             on_txt = on_txt[: mseq.start()]
-        cond = _unwrap_parens(on_txt.strip())
+        cond = unwrap_parens(on_txt.strip())
         clauses_text = rest[wpos[0] :]
 
         # source DataFrame binds pre-statement state (read-your-writes
@@ -1329,11 +1150,11 @@ class SQLExecutor:
             raise LakeSQLError(f"unknown column {col!r} in MERGE ON")
 
         pairs = []  # (target_key, source_key)
-        for conj in _split_keyword(cond, "AND"):
+        for conj in split_top(cond, "AND"):
             mm = re.match(
                 rf"^(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*=\s*"
                 rf"(?:({_IDENT})\s*\.\s*)?({_IDENT})$",
-                _unwrap_parens(conj),
+                unwrap_parens(conj),
             )
             if not mm:
                 raise LakeSQLError(
@@ -1441,25 +1262,20 @@ class SQLExecutor:
                     )
                 return sets
             sets = {}
-            for part in _split_top(body):
-                ms = re.match(
-                    rf"^(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*=\s*(.+)$",
-                    part,
-                    re.S,
-                )
-                if not ms:
+            for part in items(body):
+                a = assignment(part)
+                if a is None:
                     raise LakeSQLError(f"bad SET clause: {part!r}")
-                if ms.group(1) and ms.group(1).lower() != t_al:
+                qual, col, expr = a
+                if qual and qual.lower() != t_al:
                     raise LakeSQLError(
                         f"SET may only assign target columns: {part!r}"
                     )
-                cl = ms.group(2).lower()
+                cl = col.lower()
                 if cl not in t_cols:
-                    raise LakeSQLError(
-                        f"unknown target column {ms.group(2)!r}"
-                    )
+                    raise LakeSQLError(f"unknown target column {col!r}")
                 sets[t_cols[cl]] = self._rewrite_merge_expr(
-                    ms.group(3).strip(), t_al, s_al, src_map,
+                    expr, t_al, s_al, src_map,
                     set(t_cols), insert_ctx=False, key_cols=on_lower,
                     by_source_ctx=by_source,
                 )
@@ -1477,7 +1293,7 @@ class SQLExecutor:
                     "(cols) VALUES (exprs)"
                 )
             cols = [c.strip() for c in ms.group(1).split(",")]
-            exprs = _split_top(ms.group(2))
+            exprs = items(ms.group(2))
             if len(cols) != len(exprs):
                 raise LakeSQLError(
                     f"INSERT column list has {len(cols)} names, "
@@ -1497,7 +1313,7 @@ class SQLExecutor:
             return sets
 
         matched_cls, not_matched_cls, by_source_cls = [], [], []
-        cpos = _merge_when_positions(clauses_text)
+        cpos = [p - wpos[0] for p in wpos]
         clauses = [
             clauses_text[p + len("WHEN") : q].strip()
             for p, q in zip(cpos, cpos[1:] + [len(clauses_text)])
@@ -1531,7 +1347,7 @@ class SQLExecutor:
             # the first balanced candidate
             tpos = [
                 p
-                for p in _top_keyword_positions(rest2, "THEN")
+                for p in top_words(rest2, "THEN")
                 if re.match(
                     r"THEN\s+(UPDATE|DELETE|INSERT)\b", rest2[p:], re.I
                 )
@@ -1545,8 +1361,8 @@ class SQLExecutor:
                 (
                     q
                     for q in tpos
-                    if len(_top_keyword_positions(rest2[:q], "CASE"))
-                    == len(_top_keyword_positions(rest2[:q], "END"))
+                    if len(top_words(rest2[:q], "CASE"))
+                    == len(top_words(rest2[:q], "END"))
                 ),
                 tpos[-1],
             )
@@ -1685,7 +1501,7 @@ class SQLExecutor:
         """Rewrite alias-qualified references in one MERGE SET/VALUES
         expression to the engine contract (target plain, source
         ``__s_<col>``), over the shared quote-aware identifier scanner
-        (rollup.scan_sql_identifiers — function names pass through).
+        (lexer.column_refs — function names pass through).
         An unqualified name present on BOTH sides is an ambiguity error
         (standard-engine behavior — a ported statement must never silently
         compute from the wrong side), EXCEPT the merge key columns, whose
@@ -1696,12 +1512,8 @@ class SQLExecutor:
         (``by_source_ctx``) no SOURCE row is in scope: source references
         (qualified or bare) are a clean parse-time error and unqualified
         names resolve to the target without ambiguity."""
-        from .rollup import scan_sql_identifiers
-
         out, prev = [], 0
-        for start, end, name, qual in scan_sql_identifiers(
-            expr, with_qualifiers=True
-        ):
+        for start, _, end, name, qual in column_refs(expr):
             ql, cl = (qual or "").lower(), name.lower()
             rep = None
             if qual is not None and ql == t_al:
@@ -1748,8 +1560,8 @@ class SQLExecutor:
                         "source) — qualify it with an alias"
                     )
             if rep is not None:
-                out.append(expr[prev:start])
-                out.append(rep)
+                quoted = expr[end - 1] == "`"
+                out += [expr[prev:start], bq(rep) if quoted else rep]
                 prev = end
         out.append(expr[prev:])
         return "".join(out)
@@ -1761,7 +1573,7 @@ class SQLExecutor:
         every other statement (shared by the CALL verbs and COPY)."""
         t = tok.strip()
         if t.startswith("("):
-            return self._query(_unwrap_parens(t))
+            return self._query(unwrap_parens(t))
         if re.fullmatch(_IDENT, t):
             return self._query(f"SELECT * FROM {t}")
         raise LakeSQLError(
@@ -1844,7 +1656,7 @@ class SQLExecutor:
         with BEGIN/ROLLBACK; csv header auto-detection as in
         :meth:`_external_df`."""
         fmt, header, delim, quote, columns = None, None, ",", '"', None
-        for item in _split_top(opts_text) if opts_text else []:
+        for item in items(opts_text) if opts_text else []:
             mm = re.match(r"^([A-Za-z_]+)\s*(.*)$", item.strip(), re.S)
             if not mm:
                 raise LakeSQLError(f"bad COPY option {item!r}")
@@ -1908,7 +1720,7 @@ class SQLExecutor:
         df = self._rows_arg(srctok, "COPY source")
         fmt, header, delim, overwrite = None, None, ",", False
         partition_by = []
-        for item in _split_top(opts_text) if opts_text else []:
+        for item in items(opts_text) if opts_text else []:
             mm = re.match(
                 r"^([A-Za-z_]+)\s*(.*)$", item.strip(), re.S
             )
@@ -1921,7 +1733,7 @@ class SQLExecutor:
                 # native distributed layout for downstream pruning
                 partition_by = [
                     c.strip().strip("'\"")
-                    for c in _split_top(_unwrap_parens(v.strip()))
+                    for c in items(unwrap_parens(v.strip()))
                 ]
                 missing = [c for c in partition_by if c not in df.columns]
                 if missing:
@@ -2065,7 +1877,7 @@ class SQLExecutor:
             f, f
         )
         pos, named = [], {}
-        for a in _split_top(argstext) if argstext.strip() else []:
+        for a in items(argstext):
             mm = re.match(rf"^({_IDENT})\s*=>\s*(.+)$", a.strip(), re.S)
             if mm:
                 named[mm.group(1).lower()] = mm.group(2).strip()
@@ -2431,12 +2243,12 @@ class SQLExecutor:
         )
         if not m:
             raise bad_shape
-        items, src, tail = m.group(1), m.group(2), m.group(3)
+        sel, src, tail = m.group(1), m.group(2), m.group(3)
         where, gb, having = None, None, None
         tail = tail.strip()
         if tail:
             gidx = None
-            for p in _top_keyword_positions(tail, "GROUP"):
+            for p in top_words(tail, "GROUP"):
                 if re.match(r"GROUP\s+BY\b", tail[p:], re.I):
                     gidx = p
                     break
@@ -2445,13 +2257,13 @@ class SQLExecutor:
                 gb = re.sub(
                     r"^GROUP\s+BY\s+", "", tail[gidx:], flags=re.I | re.S
                 ).strip()
-                hpos = _top_keyword_positions(gb, "HAVING")
+                hpos = top_words(gb, "HAVING")
                 if hpos:
                     having = gb[hpos[0] + len("HAVING"):].strip()
                     gb = gb[: hpos[0]].strip()
             elif head:
                 # HAVING with no GROUP BY (global-aggregate MV)
-                hpos = _top_keyword_positions(head, "HAVING")
+                hpos = top_words(head, "HAVING")
                 if hpos:
                     having = head[hpos[0] + len("HAVING"):].strip()
                     head = head[: hpos[0]].strip()
@@ -2484,7 +2296,7 @@ class SQLExecutor:
                 )
 
         parsed = []  # per select item: ("key", name) | ("bucket",) | ("agg",)
-        for item in _split_top(items):
+        for item in items(sel):
             item = item.strip()
             if re.fullmatch(_IDENT, item):
                 if item.lower() in {k.lower() for k in keys}:
@@ -2639,7 +2451,7 @@ class SQLExecutor:
         # GROUP BY must cover exactly the keys (+ the bucket, if present);
         # items may be named, aliased, the full time_bucket expr, or ordinal
         covered_keys, covered_bucket = set(), False
-        for tok in _split_top(gb) if gb else []:
+        for tok in items(gb) if gb else []:
             t = re.sub(r"\s+", " ", tok.strip())
             tl = t.lower()
             if t.isdigit():
@@ -2822,9 +2634,7 @@ class SQLExecutor:
 
         # literal-aware substitution: copy string literals verbatim,
         # rewrite only the SQL text between them
-        from .rollup import map_sql_nonliteral
-
-        rewritten = map_sql_nonliteral(
+        rewritten = map_code(
             text, lambda seg: self._MV_HAVING_AGG.sub(canon, seg)
         )
         # any aggregate CALL still standing is one the face cannot serve
@@ -3144,40 +2954,6 @@ class SQLExecutor:
             fh.write("\n".join(load_lines) + "\n")
         return self._status("EXPORT DATABASE", len(tables))
 
-    @staticmethod
-    def _split_script(text: str):
-        """Split an export script into statements on ``;`` OUTSIDE string
-        literals (``''`` is the escape). A view definition containing a
-        semicolon in a literal — or spanning multiple lines — survives
-        intact, which a plain ``split(';\\n')`` would break."""
-        stmts, cur, in_str = [], [], False
-        i, n = 0, len(text)
-        while i < n:
-            ch = text[i]
-            if in_str:
-                cur.append(ch)
-                if ch == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        cur.append("'")
-                        i += 1
-                    else:
-                        in_str = False
-            elif ch == "'":
-                in_str = True
-                cur.append(ch)
-            elif ch == ";":
-                s = "".join(cur).strip()
-                if s:
-                    stmts.append(s)
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
-        s = "".join(cur).strip()
-        if s:
-            stmts.append(s)
-        return stmts
-
     def _import_database(self, path: str) -> DataFrame:
         """``IMPORT DATABASE '<dir>'`` — executes the exported
         ``schema.sql`` then ``load.sql`` (quote-aware statement split,
@@ -3199,7 +2975,7 @@ class SQLExecutor:
                     f"IMPORT DATABASE: missing {script} under {path!r}"
                 )
             with open(p) as fh:
-                for stmt in self._split_script(fh.read()):
+                for stmt in statements(fh.read()):
                     m = re.match(
                         r"CREATE\s+TABLE\s+([A-Za-z_][A-Za-z0-9_]*)",
                         stmt,
@@ -3404,8 +3180,6 @@ class SQLExecutor:
           drifting semantics (DuckDB applies DISTINCT after QUALIFY, which
           the injection cannot reproduce).
         """
-        from .rollup import map_sql_nonliteral
-
         def _sugar(seg: str) -> str:
             seg = self._FN_ALIAS_RE.sub(
                 lambda m: self._FN_ALIASES[m.group(1).lower()] + "(", seg
@@ -3423,8 +3197,8 @@ class SQLExecutor:
                 r"(\*\s*)EXCLUDE\s*\(", r"\1EXCEPT (", seg, flags=re.I
             )
 
-        q = map_sql_nonliteral(q, _sugar)
-        pos = _top_keyword_positions(q, "QUALIFY")
+        q = map_code(q, _sugar)
+        pos = top_words(q, "QUALIFY")
         if not pos:
             return q
         if len(pos) > 1:
@@ -3441,13 +3215,13 @@ class SQLExecutor:
             )
         tail_at = len(rest)
         for kw in ("ORDER", "LIMIT", "OFFSET"):
-            kp = _top_keyword_positions(rest, kw)
+            kp = top_words(rest, kw)
             if kp:
                 tail_at = min(tail_at, kp[0])
         pred, tail = rest[:tail_at].strip(), rest[tail_at:]
         if not pred:
             raise LakeSQLError("QUALIFY requires a predicate")
-        from_pos = _top_keyword_positions(head, "FROM")
+        from_pos = top_words(head, "FROM")
         if not from_pos:
             raise LakeSQLError("QUALIFY requires a FROM clause")
         f0 = from_pos[0]
@@ -3458,10 +3232,10 @@ class SQLExecutor:
         # ``QUALIFY row_number() OVER (ORDER BY total)`` with ``sum(v) AS
         # total`` must become ``... ORDER BY (sum(v))``. Chained aliases
         # resolve by iterating to a fixpoint (bounded).
-        sel_pos = _top_keyword_positions(head, "SELECT")
+        sel_pos = top_words(head, "SELECT")
         aliases = {}
         if sel_pos:  # CTE bodies are parenthesized -> main SELECT only
-            for item in _split_top(head[sel_pos[-1] + len("SELECT"):f0]):
+            for item in items(head[sel_pos[-1] + len("SELECT"):f0]):
                 m = re.search(rf"\s+AS\s+({_IDENT})\s*$", item, re.I)
                 if m:
                     aliases[m.group(1).lower()] = item[: m.start()].strip()
@@ -3478,7 +3252,7 @@ class SQLExecutor:
                 pat = re.compile(
                     rf"(?<![\w.`]){re.escape(name)}\b(?!\s*\()", re.I
                 )
-                pred = map_sql_nonliteral(
+                pred = map_code(
                     pred,
                     lambda seg, p=pat, e=expr: p.sub(
                         lambda m: "(" + e + ")", seg
@@ -3834,31 +3608,19 @@ class SQLExecutor:
         def _rw(m: "re.Match") -> str:
             return _bind(m.group(1), m.group(2)) or m.group(0)
 
-        from .rollup import map_sql_nonliteral
-
         # pass 1: qualified AT clauses. The match must START outside a
         # string literal (a literal containing '<att>.<t> AT (...)' is
-        # data, not a clause — _search_nonliteral guards that), but the
-        # AT payload itself may HOLD a literal (TIMESTAMP => '...'),
-        # which the nonliteral segmentation of pass 2 would split
-        # mid-clause — hence the manual scan instead of map_sql_nonliteral
+        # data, not a clause), but the AT payload itself may HOLD a
+        # literal (TIMESTAMP => '...'), which pass 2's per-run mapping
+        # would split mid-clause
         at_pat = re.compile(
             rf"\b({_IDENT})\s*\.\s*({_IDENT})\s+AT\s*"
             rf"\(\s*(VERSION|TIMESTAMP)\s*=>\s*([^)]+)\)",
             re.I,
         )
-        out, i = [], 0
-        while True:
-            m = self._search_nonliteral(at_pat, q, i)
-            if m is None:
-                out.append(q[i:])
-                break
-            out.append(q[i: m.start()])
-            out.append(_rw_at(m))
-            i = m.end()
-        q = "".join(out)
+        q = sub_code(at_pat, _rw_at, q)
         # pass 2, literal-aware: plain qualified reads
-        return map_sql_nonliteral(
+        return map_code(
             q,
             lambda seg: re.sub(
                 rf"\b({_IDENT})\s*\.\s*({_IDENT})\b", _rw, seg
@@ -3890,81 +3652,22 @@ class SQLExecutor:
         registered views are session-temporary and dropped after the
         statement's plan is analyzed (see _query)."""
         out, i = [], 0
-        while True:
-            m = self._search_nonliteral(self._FILE_FN, q, i)
-            if m is None:
-                out.append(q[i:])
-                return "".join(out)
-            close = self._match_paren(q, m.end() - 1)
+        while (m := search_code(self._FILE_FN, q, i)) is not None:
+            close = match_paren(q, m.end() - 1)
+            if close < 0:
+                raise LakeSQLError("unbalanced parentheses in read_* call")
             view = self._bind_file_fn(
                 m.group(1).lower(), q[m.end(): close]
             )
-            out.append(q[i: m.start()])
-            out.append(view)
+            out += [q[i: m.start()], view]
             i = close + 1
-
-    @staticmethod
-    def _search_nonliteral(pat, q: str, start: int):
-        """First match of ``pat`` at or after ``start`` that is NOT inside
-        a single-quoted SQL string literal ('' escape aware)."""
-        spans = []
-        i, n = 0, len(q)
-        while i < n:
-            if q[i] == "'":
-                j = i + 1
-                while j < n:
-                    if q[j] == "'":
-                        if j + 1 < n and q[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                spans.append((i, j))
-                i = j + 1
-            else:
-                i += 1
-        pos = start
-        while True:
-            m = pat.search(q, pos)
-            if m is None or not any(a <= m.start() <= b for a, b in spans):
-                return m
-            # resume just past the rejected match's START, not its end: a
-            # greedy in-literal match can swallow text beyond the literal
-            # that contains a REAL match (e.g. "'t AT (VERSION => ' || c,
-            # u AT (VERSION => 1)")
-            pos = m.start() + 1
-
-    @staticmethod
-    def _match_paren(q: str, popen: int) -> int:
-        """Index of the ')' matching the '(' at ``popen``, skipping
-        string literals."""
-        depth, i, n = 0, popen, len(q)
-        while i < n:
-            ch = q[i]
-            if ch == "'":
-                j = i + 1
-                while j < n:
-                    if q[j] == "'":
-                        if j + 1 < n and q[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                i = j + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-            i += 1
-        raise LakeSQLError("unbalanced parentheses in read_* call")
+        out.append(q[i:])
+        return "".join(out)
 
     def _bind_file_fn(self, fn: str, argstext: str) -> str:
         """Parse one read_parquet/read_csv argument list, bind the file
         DataFrame as a temp view, and return the view name."""
-        args = _split_top(argstext) if argstext.strip() else []
+        args = items(argstext)
         if not args or not re.fullmatch(
             r"'(?:[^']|'')*'", args[0].strip(), re.S
         ):
@@ -4016,7 +3719,7 @@ class SQLExecutor:
             )
         out = {}
         body = t[1:-1].strip()
-        for pair in _split_top(body) if body else []:
+        for pair in items(body) if body else []:
             mm = re.match(
                 r"^'((?:[^']|'')*)'\s*:\s*'((?:[^']|'')*)'$", pair.strip()
             )
@@ -4058,15 +3761,7 @@ class SQLExecutor:
             rf"\b({_IDENT})\s+AT\s*\(\s*(VERSION|TIMESTAMP)\s*=>\s*([^)]+)\)",
             re.I,
         )
-        out, i = [], 0
-        while True:
-            m = self._search_nonliteral(pat, q, i)
-            if m is None:
-                out.append(q[i:])
-                return "".join(out)
-            out.append(q[i: m.start()])
-            out.append(_rw(m))
-            i = m.end()
+        return sub_code(pat, _rw, q)
 
     def _bind_tables(self, version=None) -> None:
         """Register every table as a temp view for Catalyst resolution —
@@ -4097,6 +3792,9 @@ class SQLExecutor:
         materialized from the catalog DB (driver-side metadata, no scan)."""
         spark = self.c.spark
 
+        def _call(fn: str) -> "re.Pattern":
+            return re.compile(rf"\b{fn}\s*\(([^)]*)\)", re.I)
+
         def _cat_for(dbarg: str):
             """The db argument of the reference's metadata functions
             (``ducklake_snapshots('lake')``): an ATTACH'd alias resolves
@@ -4112,9 +3810,7 @@ class SQLExecutor:
             cat.snapshots_df().createOrReplaceTempView(view)
             return view
 
-        q = re.sub(
-            r"\bducklake_snapshots\s*\(([^)]*)\)", _snaps, q, flags=re.I
-        )
+        q = sub_code(_call("ducklake_snapshots"), _snaps, q)
 
         def _tinfo(m: "re.Match") -> str:
             cat, key = _cat_for(m.group(1))
@@ -4137,9 +3833,7 @@ class SQLExecutor:
             ).createOrReplaceTempView(view)
             return view
 
-        q = re.sub(
-            r"\bducklake_table_info\s*\(([^)]*)\)", _tinfo, q, flags=re.I
-        )
+        q = sub_code(_call("ducklake_table_info"), _tinfo, q)
 
         def _changes(m: "re.Match") -> str:
             args = [a.strip().strip("'\"") for a in m.group(1).split(",")]
@@ -4149,9 +3843,7 @@ class SQLExecutor:
             cat.table_changes(tname, v1, v2).createOrReplaceTempView(view)
             return view
 
-        q = re.sub(
-            r"\bducklake_table_changes\s*\(([^)]*)\)", _changes, q, flags=re.I
-        )
+        q = sub_code(_call("ducklake_table_changes"), _changes, q)
 
         def _file_stats(m: "re.Match") -> str:
             # per-file pruning stats, min/max flattened to JSON strings so
@@ -4188,9 +3880,7 @@ class SQLExecutor:
             ).createOrReplaceTempView(view)
             return view
 
-        q = re.sub(
-            r"\bducklake_file_stats\s*\(([^)]*)\)", _file_stats, q, flags=re.I
-        )
+        q = sub_code(_call("ducklake_file_stats"), _file_stats, q)
         return q
 
     def _describe(self, name: str) -> DataFrame:
@@ -4272,7 +3962,7 @@ class SQLExecutor:
 
     def _parse_coldefs(self, cols: str) -> TableSchema:
         fields, pk = [], []
-        for i, part in enumerate(_split_top(cols)):
+        for i, part in enumerate(items(cols)):
             mm = re.match(
                 r"^PRIMARY\s+KEY\s*\(([^)]*)\)$", part, re.I
             )  # table-level PK

@@ -23,6 +23,7 @@ import re
 from decimal import Decimal
 from typing import Any, Optional
 
+from .lexer import split_top, tokens
 from .schema import TableSchema, value_from_json, value_to_json
 
 # Types whose min/max ordering matches Python's (-> safe to prune on).
@@ -119,9 +120,19 @@ def _parse_literal(tok: str) -> Optional[Any]:
         return int(tok)
     if re.fullmatch(r"-?\d*\.\d+([eE][+-]?\d+)?", tok):
         return float(tok)
-    m = re.fullmatch(r"'(.*)'", tok, re.S)
-    if m:
-        s = m.group(1).replace("''", "'")
+    toks, q, body = tokens(tok), tok[:1], tok[1:-1]
+    if (
+        len(toks) == 1
+        and toks[0].kind == "str"
+        and q in ("'", '"')
+        and len(tok) > 1
+        and tok[-1] == q
+        and q not in body.replace(q + q, "")
+        and "\\" not in body
+    ):
+        # one terminated, non-raw string literal; one with backslash
+        # escapes stays unparsed rather than decoded by a second rule set
+        s = body.replace(q + q, q)
         for parse in (_dt.date.fromisoformat, _dt.datetime.fromisoformat):
             try:
                 if re.fullmatch(r"\d{4}-\d{2}-\d{2}([ T].*)?", s):
@@ -138,9 +149,9 @@ def parse_conjuncts(pred_sql: str) -> Optional[list]:
     """Split a WHERE-style predicate into [(col, op, value)] conjuncts.
     Returns None if any conjunct is unparseable (=> no pruning)."""
     out = []
-    # split on top-level AND only (no paren tracking needed for our shapes;
-    # any parenthesized/OR predicate fails _parse_literal and disables pruning)
-    for part in re.split(r"\bAND\b", pred_sql, flags=re.I):
+    # split on top-level AND: a parenthesized/OR predicate, or the AND of
+    # a BETWEEN, leaves a conjunct that fails to parse and disables pruning
+    for part in split_top(pred_sql, "AND"):
         part = part.strip()
         m = _NULL.match(part)
         if m:
@@ -148,7 +159,7 @@ def parse_conjuncts(pred_sql: str) -> Optional[list]:
             continue
         m = _IN.match(part)
         if m:
-            vals = [_parse_literal(v) for v in _split_csv(m.group(2))]
+            vals = [_parse_literal(v) for v in split_top(m.group(2))]
             if any(v is None for v in vals):
                 return None
             out.append((m.group(1), "in", vals))
@@ -162,25 +173,6 @@ def parse_conjuncts(pred_sql: str) -> Optional[list]:
             continue
         return None
     return out
-
-
-def _split_csv(s: str) -> list:
-    parts, depth, cur = [], 0, []
-    in_str = False
-    for ch in s:
-        if ch == "'" :
-            in_str = not in_str
-        if ch == "," and depth == 0 and not in_str:
-            parts.append("".join(cur))
-            cur = []
-            continue
-        if ch == "(" and not in_str:
-            depth += 1
-        if ch == ")" and not in_str:
-            depth -= 1
-        cur.append(ch)
-    parts.append("".join(cur))
-    return parts
 
 
 def file_may_match(

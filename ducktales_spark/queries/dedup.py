@@ -377,7 +377,9 @@ def d02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _d03_oracle_sql() -> str:
     """DuckDB SQL for the ENTIRE d03 sketch pipeline — possible because every
     step is deterministic arithmetic over a hash both engines share (md5
-    first-15-hex-digits as BIGINT; see hashed_shingles). Same _HASH_AB
+    first-15-hex-digits as BIGINT of each word 3-gram; see
+    _minhash_bands_sql — shingle_hash_table enumerates the same 3-grams
+    but keys them with xxhash64). Same _HASH_AB
     constants inlined; band keys are the same exact string encodings; the
     first-matching-band dedup is equivalently a DISTINCT over (method, pair).
     """

@@ -1,6 +1,8 @@
 """SparkSession factory tuned for the test harness (local[N]) while keeping
 settings that scale to a real cluster (AQE, adaptive coalesce/skew-join,
-Arrow transfers).
+Arrow transfers). Locally it sizes itself from the host: every core the
+process may run on and a quarter of RAM as driver heap, unless
+``$SPARK_GRAFT_CPUS`` / ``$SPARK_DRIVER_MEM`` say otherwise.
 
 On a 1000-executor cluster the same builder applies — only ``master`` and the
 memory sizing change; every query in this repo is declarative DataFrame/SQL so
@@ -14,8 +16,33 @@ import os
 from pyspark.sql import SparkSession
 
 
+MEMINFO = "/proc/meminfo"
+# the directory holding the ducktales_spark package
+PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
+
+def session_size() -> tuple:
+    """(cores, driver heap) for the local session: ``$SPARK_GRAFT_CPUS``
+    and ``$SPARK_DRIVER_MEM`` when set, else every core this process may
+    run on and a quarter of the host's RAM."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        with open(MEMINFO) as f:
+            kib = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+        mem = f"{max(1, kib * 1024 // 4 >> 30)}g"
+    return cpus, mem
+
+
 def get_spark(app_name: str = "ducktales-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, mem = session_size()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -28,7 +55,10 @@ def get_spark(app_name: str = "ducktales-spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
+        # Python workers import the package (mapInPandas / mapInArrow
+        # kernels) whatever the driver's working directory
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # The default 100-entry generated-class cache thrashes on a mixed

@@ -16,7 +16,6 @@ SF_DIR = os.environ.get("DUCKTALES_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from ducktales_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # faster session for tests
     spark = get_spark("ducktales-tests")
     yield spark
 

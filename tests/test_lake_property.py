@@ -182,10 +182,11 @@ def test_random_dml_matches_model(spark, prop_tmp, ops, seed, clustered):
 )
 @settings(max_examples=200, deadline=None)
 def test_split_script_roundtrip(parts):
-    """_split_script is the exact inverse of joining statements with ';'
-    for any statement set whose literals use SQL '' escaping — semicolons
-    and newlines INSIDE literals never split, every real boundary does."""
-    from ducktales_spark.lake.sql import SQLExecutor
+    """lexer.statements is the exact inverse of joining statements with
+    ';' for any statement set whose literals use SQL '' escaping —
+    semicolons and newlines INSIDE literals never split, every real
+    boundary does."""
+    from ducktales_spark.lake.lexer import statements
 
     stmts = []
     for head, lits in parts:
@@ -194,7 +195,7 @@ def test_split_script_roundtrip(parts):
             s += " '" + lit.replace("'", "''") + "'"
         stmts.append(s)
     script = ";\n".join(stmts) + ";"
-    got = SQLExecutor._split_script(script)
+    got = statements(script)
     # joining is whitespace-normalizing at the boundary only: compare
     # stripped statements
     assert got == [s.strip() for s in stmts]
@@ -214,7 +215,7 @@ def test_exclude_rewrite_only_after_star(q):
     'exclude' being mangled into EXCEPT)."""
     import re
 
-    from ducktales_spark.lake.rollup import map_sql_nonliteral
+    from ducktales_spark.lake.lexer import map_code
 
     def _sugar(seg):
         seg = re.sub(
@@ -225,8 +226,30 @@ def test_exclude_rewrite_only_after_star(q):
         )
         return re.sub(r"(\*\s*)EXCLUDE\s*\(", r"\1EXCEPT (", seg, flags=re.I)
 
-    out = map_sql_nonliteral(q, _sugar)
+    out = map_code(q, _sugar)
     # every EXCEPT the rewrite introduced must trace back to a star form
     for m in re.finditer(r"EXCEPT \(", out):
         pre = out[: m.start()].rstrip()
         assert pre.endswith("*") or "EXCEPT (" in q, (q, out)
+
+
+@given(st.text(alphabet="ab_1 ,;()[]{}'\"`\\-/*+Rr=.\n", max_size=80))
+@settings(max_examples=400, deadline=None)
+def test_lexer_tokens_tile_input_and_comma_split_rejoins(text):
+    """The lexer's token spans tile any input exactly, unterminated
+    literals, identifiers and comments included, and a top-level comma
+    split joins back to the input; no piece holds a top-level comma of
+    its own."""
+    from ducktales_spark.lake.lexer import split_top, tokens
+
+    toks = tokens(text)
+    assert "".join(t.text for t in toks) == text
+    assert [t.start for t in toks] == [0, *(t.end for t in toks)][:-1]
+    assert all(text[t.start:t.end] == t.text for t in toks)
+    pieces = split_top(text)
+    assert ",".join(pieces) == text
+    for p in pieces:
+        assert not any(
+            t.depth == 0 and t.kind == "op" and t.text == ","
+            for t in tokens(p)
+        ), (text, p)

@@ -3874,7 +3874,8 @@ def test_review_r13_regressions(lake, spark, tmp_path):
 def test_export_csv_columns_struct_edge_types(lake, spark, tmp_path):
     """The r13 load.sql COLUMNS struct survives types whose DDL carries
     commas/parens (decimal(12,2)) and column names needing quote-escaping
-    — the _split_top brace/paren awareness end to end through IMPORT."""
+    — the lexer's top-level split (brackets and braces nest) end to end
+    through IMPORT."""
     from ducktales_spark.lake import LakeCatalog
 
     lake.sql(
@@ -4124,3 +4125,125 @@ def test_checkpoint_after_alter_column_type_reads_back_equal(lake):
     assert dict(lake.read("w").dtypes)["x"] == "double"
     info = {t["table_name"]: t for t in lake.table_info()}["w"]
     assert info["inlined_rows"] == 0 and info["file_count"] == 1
+
+
+# -- Spark's quoting rules end to end ---------------------------------------
+
+
+def test_double_quoted_literal_in_update_set(lake):
+    """``"…"`` is a string literal in Spark, and an apostrophe inside it
+    does not open another literal that hides the WHERE."""
+    lake.sql("CREATE TABLE t (id INT, a STRING, b INT)")
+    lake.sql("INSERT INTO t VALUES (1, 'x', 0), (2, 'y', 0)")
+    lake.sql("UPDATE t SET a = \"it's\", b = 5 WHERE id = 1")
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [
+        (1, "it's", 5), (2, "y", 0),
+    ]
+
+
+def test_double_quoted_literal_in_merge_set(lake):
+    """A MERGE SET value ``"wh'en"`` holds neither a clause boundary nor an
+    unterminated literal."""
+    lake.sql("CREATE TABLE t (id INT, a STRING, b INT)")
+    lake.sql("INSERT INTO t VALUES (1, 'x', 0), (2, 'y', 0)")
+    lake.sql("CREATE TABLE s (id INT, b INT)")
+    lake.sql("INSERT INTO s VALUES (1, 7)")
+    lake.sql(
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET a = \"wh'en\", b = s.b"
+    )
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [
+        (1, "wh'en", 7), (2, "y", 0),
+    ]
+
+
+def test_comment_marker_inside_backticked_alias(lake):
+    """``--`` inside a backticked identifier is part of the name, not a
+    comment that cuts the statement."""
+    lake.sql("CREATE TABLE t (a INT)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    df = lake.sql("SELECT `a` AS `x--y` FROM t -- a real comment")
+    assert df.columns == ["x--y"] and df.collect()[0][0] == 1
+
+
+def test_comma_inside_backticked_identifier_in_set_list(lake):
+    """A comma inside a backticked column name does not split the SET
+    list."""
+    lake.sql("CREATE TABLE t AS SELECT 1 AS id, 5 AS `x,y`, 0 AS a, 0 AS b")
+    lake.sql("UPDATE t SET a = `x,y`, b = 2 WHERE id = 1")
+    assert tuple(lake.read("t").collect()[0]) == (1, 5, 5, 2)
+
+
+def test_backslash_escaped_quote_in_set_list(lake):
+    """``'it\\'s'`` is one literal: the SET list still splits after it."""
+    lake.sql("CREATE TABLE t (id INT, a STRING, b INT)")
+    lake.sql("INSERT INTO t VALUES (1, 'x', 0), (2, 'y', 0)")
+    lake.sql(r"UPDATE t SET a = 'it\'s', b = 2 WHERE id = 1")
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [
+        (1, "it's", 2), (2, "y", 0),
+    ]
+
+
+def test_backslash_escaped_quote_in_insert_select(lake):
+    """After ``'it\\'s`` the literal goes on, so the ``--`` in it is data."""
+    lake.sql("CREATE TABLE t (id INT, s STRING)")
+    lake.sql(r"INSERT INTO t (id, s) SELECT 1, 'it\'s -- not a comment'")
+    assert tuple(lake.read("t").collect()[0]) == (
+        1, "it's -- not a comment",
+    )
+
+
+def test_export_import_view_with_semicolon_in_double_quoted_literal(
+    lake, spark, tmp_path
+):
+    """IMPORT DATABASE splits schema.sql into statements with the lexer: the
+    ``;`` inside ``"a;b"`` stays in the view."""
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    lake.sql("CREATE VIEW v AS SELECT id, \"a;b\" AS s FROM t")
+    exp = str(tmp_path / "exp")
+    lake.sql(f"EXPORT DATABASE '{exp}'")
+    dst = LakeCatalog(str(tmp_path / "dst"), spark)
+    dst.sql(f"IMPORT DATABASE '{exp}'")
+    assert [tuple(r) for r in dst.sql("SELECT * FROM v").collect()] == [
+        (1, "a;b"),
+    ]
+
+
+def test_backticked_where_column_in_update(lake):
+    """A column named ``where`` can be assigned and filtered on in backticks;
+    neither is the statement's WHERE."""
+    lake.sql("CREATE TABLE t AS SELECT 1 AS id, 'a' AS `where`, 0 AS v")
+    lake.sql("INSERT INTO t VALUES (2, 'where', 0)")
+    lake.sql("UPDATE t SET `where` = 'b', v = 1 WHERE `where` = 'a'")
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [
+        (1, "b", 1), (2, "where", 0),
+    ]
+
+
+def test_metadata_function_name_inside_literal_is_data(lake):
+    """The ducklake_* metadata functions are rewritten only where they are
+    SQL: the same text inside a string literal stays as written."""
+    lake.sql("CREATE TABLE t (id INT)")
+    row = lake.sql(
+        "SELECT 'ducklake_snapshots(lake)' AS s, count(*) AS n "
+        "FROM ducklake_snapshots('lake')"
+    ).collect()[0]
+    assert row["s"] == "ducklake_snapshots(lake)" and row["n"] >= 1
+
+
+def test_concatenated_literals_do_not_prune_files(lake):
+    """``s = 'a' || 'b'`` compares with an expression, not with the
+    literal ``a' || 'b``: file pruning must keep the file holding 'ab'."""
+    lake.sql("CREATE TABLE t (s STRING, v INT)")
+    lake.sql(
+        "INSERT INTO t VALUES ('aa', 0), ('ab', 0), ('ac', 0), ('ad', 0), "
+        "('ae', 0)"
+    )
+    lake.sql(
+        "INSERT INTO t VALUES ('za', 0), ('zb', 0), ('zc', 0), ('zd', 0), "
+        "('ze', 0)"
+    )
+    done = lake.sql("UPDATE t SET v = 1 WHERE s = 'a' || 'b'").collect()
+    assert done[0]["rows"] == 1
+    assert {r["s"] for r in lake.read("t").collect() if r["v"] == 1} == {"ab"}

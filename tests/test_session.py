@@ -1,12 +1,17 @@
-"""Session helpers: shuffle sizing from ``spark.sql.shuffle.partitions``."""
+"""Session helpers: host sizing, the workers' import path, and shuffle
+sizing from ``spark.sql.shuffle.partitions``."""
 
 from __future__ import annotations
 
+import os
 import re
+import subprocess
+import sys
 from types import SimpleNamespace
 
 from pyspark.sql.conf import RuntimeConfig
 
+from ducktales_spark import session
 from ducktales_spark.session import shuffle_partitions
 
 
@@ -70,3 +75,48 @@ def test_operators_size_shuffles_under_auto(spark, sf_dir, monkeypatch):
     for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert sized.search(plan), (name, plan[:1500])
+
+
+def test_session_size_reads_the_host_unless_the_environment_sets_it(
+    monkeypatch, tmp_path
+):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemFree:  1000 kB\nMemTotal:  16479424 kB\n")
+    monkeypatch.setattr(session, "MEMINFO", str(meminfo))
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    # a quarter of 15.7 GiB, rounded down to whole GiB
+    assert session.session_size() == ("3", "3g")
+    meminfo.write_text("MemTotal:  2000000 kB\n")
+    assert session.session_size() == ("3", "1g")  # never below 1g
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "5g")
+    assert session.session_size() == ("2", "5g")
+
+
+def test_python_kernel_imports_package_from_any_directory(tmp_path):
+    """A session started outside the repo still runs a mapInPandas kernel
+    that imports the package: the workers get its parent directory on
+    their path."""
+    script = f"""
+import sys
+sys.path.insert(0, {session.PACKAGE_PARENT!r})
+from ducktales_spark.session import get_spark
+
+def kernel(batches):
+    import ducktales_spark.session  # resolved on the Python worker
+    for b in batches:
+        yield b
+
+spark = get_spark("workers-path")
+print("rows", spark.range(3).mapInPandas(kernel, "id long").count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "rows 3" in out.stdout, out.stderr[-3000:]
