@@ -204,12 +204,27 @@ class Ref(NamedTuple):
     qual: Optional[str]
 
 
-def _name(t: Token) -> Optional[str]:
+def token_name(t: Token) -> Optional[str]:
+    """The name a word or backticked-identifier token spells, unquoted; None
+    for any other token."""
     if t.kind == "word" and not t.text[0].isdigit():
         return t.text
     if t.kind == "ident" and len(t.text) > 1 and t.text.endswith("`"):
         return t.text[1:-1].replace("``", "`")
     return None
+
+
+def names(text: str) -> Optional[list]:
+    """The unquoted names of a comma-separated name list (``a, `b c```), or
+    None when it is empty or an item is not one name."""
+    out = []
+    for item in items(text):
+        sig = [t for t in tokens(item) if t.kind not in ("ws", "comment")]
+        name = token_name(sig[0]) if len(sig) == 1 else None
+        if name is None:
+            return None
+        out.append(name)
+    return out or None
 
 
 def column_refs(text: str) -> list:
@@ -220,13 +235,13 @@ def column_refs(text: str) -> list:
     sig = [t for t in tokens(text) if t.kind not in ("ws", "comment")]
     out, k = [], 0
     while k < len(sig):
-        first, name = sig[k], _name(sig[k])
+        first, name = sig[k], token_name(sig[k])
         if name is None or (k and sig[k - 1].text == "."):
             k += 1
             continue
         last, qual = first, None
-        if k + 2 < len(sig) and sig[k + 1].text == "." and _name(sig[k + 2]):
-            last, qual, name = sig[k + 2], name, _name(sig[k + 2])
+        if k + 2 < len(sig) and sig[k + 1].text == "." and token_name(sig[k + 2]):
+            last, qual, name = sig[k + 2], name, token_name(sig[k + 2])
             k += 2
         k += 1
         if k < len(sig) and sig[k].text == "(":

@@ -7,10 +7,14 @@ same statement coverage so a reference user can port scripts verbatim:
 
 * ``BEGIN [TRANSACTION]`` / ``COMMIT`` / ``ROLLBACK``
   (demos/01_transaction_rollback/demo.py:85-104)
-* ``USE <catalog>`` (demo.py:30) — accepted, single-catalog no-op
-* ``CREATE TABLE t (col TYPE [PRIMARY KEY] [NOT NULL] [DEFAULT lit], ...)``
-  (demo.py:33-55)
-* ``CREATE [OR REPLACE] TABLE t AS <select>`` (utils/ducklake_utils.py:101-111)
+* ``USE <catalog>`` (demo.py:30) — an ATTACH'd name becomes the default
+  catalog; any other name is the bound catalog
+* ``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t (col TYPE [PRIMARY KEY]
+  [NOT NULL] [DEFAULT expr], ..., [PRIMARY KEY (cols)]) [PARTITION BY
+  (cols)]`` (demo.py:33-55); a type is one word with an optional ``(…)``
+  or ``<…>`` group (``DECIMAL(10, 2)``, ``ARRAY<FLOAT>``)
+* ``CREATE [OR REPLACE] TABLE t [PARTITION BY (cols)] AS <select>``
+  (utils/ducklake_utils.py:101-111)
 * ``CREATE [OR REPLACE] VIEW v AS <select>``
   (demos/03_schema_evolution/demo.py:273-288)
 * ``CREATE [OR REPLACE] MATERIALIZED VIEW mv AS SELECT ...`` /
@@ -34,7 +38,7 @@ same statement coverage so a reference user can port scripts verbatim:
   ``approx_distinct_<c>`` reads as the HLL estimate, never raw sketch
   bytes.
 * ``DROP TABLE / DROP VIEW``
-* ``ALTER TABLE t ADD COLUMN c TYPE [DEFAULT lit]`` / ``DROP COLUMN`` /
+* ``ALTER TABLE t ADD COLUMN <column definition>`` / ``DROP COLUMN`` /
   ``RENAME COLUMN a TO b`` / ``ALTER COLUMN c SET NOT NULL``
   (demos/03_schema_evolution/demo.py:118,195,196,221) /
   ``ALTER COLUMN c [SET DATA] TYPE t`` (widening casts only —
@@ -56,12 +60,11 @@ same statement coverage so a reference user can port scripts verbatim:
   functions (files, part-file directories, or globs; csv auto-detects
   header + types like DuckDB)
 * ``ATTACH '<path>' AS name`` / ``DETACH name`` — bind a SECOND lake
-  catalog for qualified ``name.table`` reads (the reference's
+  catalog for qualified ``name.table`` reads and writes (the reference's
   side-by-side dev/prod migration, utils/ducklake_utils.py:27,
   demos/05_catalog_portability/demo.py:194-299), and ``COPY FROM
   DATABASE a TO b`` (DuckDB's whole-catalog migration verb; ``main``
-  names the bound catalog). Attached catalogs are read-only through
-  this executor — writes name the bound catalog unqualified.
+  names the bound catalog).
 * anything else -> read query via Catalyst, with the ``AT (VERSION|TIMESTAMP
   =>)`` time-travel rewrite (README.md:216-220)
 
@@ -71,11 +74,15 @@ with backslash and doubled-quote escapes, ``R'…'`` is raw, a backticked name
 is an identifier, ``--`` and nesting ``/* */`` are comments. Clause
 boundaries (top-level commas, WHERE, WHEN, THEN, AND) are found among its
 tokens, so a keyword, comma or semicolon inside a literal, identifier or
-comment is never one. A statement's head is classified once (``_head``);
-the per-verb syntax after it is matched with regexes. Every *query body*
-(SELECT in CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is handed
-to Spark SQL — we never re-implement expression parsing, so the full
-Catalyst surface is available inside each statement. Inside an open
+comment is never one. A statement's head — its verb, the target it names
+and the text after the target — is read once (``_head``), and the verb
+picks one handler from the verb table (``_VERBS``); each handler reads only
+the text after the target. A write runs on the catalog ``_target`` picks.
+A write verb whose syntax its handler does not accept raises
+:class:`LakeSQLError`: no write reaches Spark's own DDL. Every *query
+body* (SELECT in CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is
+handed to Spark SQL — we never re-implement expression parsing, so the
+full Catalyst surface is available inside each statement. Inside an open
 transaction, reads see read-your-writes (touched tables bind to the
 transaction's staged state).
 """
@@ -96,11 +103,14 @@ from .lexer import (
     items,
     map_code,
     match_paren,
+    names,
     search_code,
     split_top,
     statements,
     strip,
     sub_code,
+    token_name,
+    tokens,
     top_words,
     unwrap_parens,
 )
@@ -117,58 +127,42 @@ class LakeSQLError(Exception):
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 
-# The verbs whose statements may stage or commit a change: execute()
-# snapshots an open transaction's staging around them, and a USE'd
-# READ_ONLY catalog refuses them unless they target another catalog.
-_WRITE_VERBS = frozenset(
-    "INSERT UPDATE DELETE TRUNCATE MERGE CREATE DROP ALTER IMPORT "
-    "CHECKPOINT CALL REFRESH COPY".split()
-)
-# the verb phrases that name a target table, optionally catalog-qualified
+# the verb phrases that name a target, optionally catalog-qualified
 _TARGET = re.compile(
     r"(INSERT(?:\s+OR\s+(?:REPLACE|IGNORE))?\s+INTO|UPDATE|DELETE\s+FROM"
-    r"|TRUNCATE(?:\s+TABLE)?"
-    r"|CREATE\s+(?:OR\s+REPLACE\s+)?TABLE(?:\s+IF\s+NOT\s+EXISTS)?"
-    r"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?|ALTER\s+TABLE"
-    r"|MERGE(?:\s+WITH\s+SCHEMA\s+EVOLUTION)?\s+INTO|CHECKPOINT)"
+    r"|TRUNCATE(?:\s+TABLE)?|MERGE(?:\s+WITH\s+SCHEMA\s+EVOLUTION)?\s+INTO"
+    r"|CREATE(?:\s+OR\s+REPLACE)?\s+(?:TABLE(?:\s+IF\s+NOT\s+EXISTS)?"
+    r"|(?:MATERIALIZED\s+)?VIEW)"
+    r"|DROP\s+(?:TABLE|(?:MATERIALIZED\s+)?VIEW)(?:\s+IF\s+EXISTS)?"
+    r"|ALTER\s+TABLE|REFRESH\s+MATERIALIZED\s+VIEW|CHECKPOINT)"
     rf"\s+({_IDENT})(?:\s*\.\s*({_IDENT}))?\b",
     re.I,
 )
-_CALL_CATALOG = re.compile(rf"\bcatalog\s*=>\s*'({_IDENT})'", re.I)
 
 
 class _Head(NamedTuple):
     verb: str  # the first word, upper case
     writes: bool
-    phrase: Optional[str]  # the target-naming verb phrase, as written
-    cat: Optional[str]  # the catalog the statement writes into, if named
-    table: Optional[str]
-    rest: str  # the text after the target
+    words: frozenset  # the words of the target-naming phrase, upper case
+    cat: Optional[str]  # the target's catalog qualifier, if any
+    table: Optional[str]  # the target the phrase names
+    rest: str  # the text after the target (after the verb, without one)
 
 
 def _head(q: str) -> _Head:
     """What a (comment-stripped) statement's head says: its verb, whether
-    it writes, and its target. A CALL names its catalog in its first
-    argument (``compact(dev.t)``) or as ``catalog => 'dev'``; only
-    ``COPY <table> FROM`` of the COPY forms writes, and
-    ``probe_vector_index`` is the one CALL that only reads."""
+    it writes (from the verb table; of the COPY forms only ``COPY <table>
+    FROM`` writes), and the target its verb phrase names."""
     verb = re.match(r"\w*", q).group().upper()
-    writes = verb in _WRITE_VERBS
-    m = _TARGET.match(q)
-    phrase = cat = table = None
-    rest = ""
-    if m:
-        phrase, rest = m.group(1), q[m.end():]
-        cat, table = m.group(2, 3) if m.group(3) else (None, m.group(2))
-    elif verb == "CALL":
-        writes = not re.match(r"CALL\s+probe_vector_index\b", q, re.I)
-        mc = re.match(
-            rf"CALL\s+{_IDENT}\s*\(\s*'?({_IDENT})\s*\.", q, re.I
-        ) or search_code(_CALL_CATALOG, q)
-        cat = mc.group(1) if mc else None
-    elif verb == "COPY":
+    writes = verb in _VERBS and _VERBS[verb][1]
+    if verb == "COPY":
         writes = bool(re.match(rf"COPY\s+{_IDENT}\s+FROM\b", q, re.I))
-    return _Head(verb, writes, phrase, cat, table, rest)
+    m = _TARGET.match(q)
+    if m is None:
+        return _Head(verb, writes, frozenset(), None, None, q[len(verb):])
+    cat, table = m.group(2, 3) if m.group(3) else (None, m.group(2))
+    words = frozenset(m.group(1).upper().split())
+    return _Head(verb, writes, words, cat, table, q[m.end():])
 
 
 # reference (DuckDB) type -> Spark DDL type string (SURVEY.md §1.2)
@@ -206,6 +200,106 @@ def _map_type(t: str) -> str:
     return t  # assume already a Spark DDL type (array<float> etc.)
 
 
+class _Column(NamedTuple):
+    name: str
+    type: str  # Spark DDL
+    nullable: bool
+    primary: bool
+    default: Optional[str]  # the DEFAULT expression's text
+
+
+_CONSTRAINTS = frozenset(("NOT", "NULL", "PRIMARY", "DEFAULT"))
+
+
+def _column_def(text: str) -> _Column:
+    """One column definition: ``name type [NOT NULL | NULL | PRIMARY KEY |
+    DEFAULT expr]...``. The name may be backticked; the type is one word
+    with an optional ``(…)`` or ``<…>`` group; a DEFAULT expression runs to
+    the next constraint keyword."""
+    sig = [t for t in tokens(text) if t.kind not in ("ws", "comment")]
+    bad = LakeSQLError(f"bad column definition: {text.strip()!r}")
+    if len(sig) < 2 or token_name(sig[0]) is None or sig[1].kind != "word":
+        raise bad
+    k = 2
+    if k < len(sig) and sig[k].text in ("(", "<"):
+        level = 0
+        for k in range(2, len(sig)):
+            level += {"(": 1, "<": 1, ")": -1, ">": -1}.get(sig[k].text, 0)
+            if level == 0:
+                break
+        if level:
+            raise bad
+        k += 1
+    typ = _map_type(text[sig[1].start:sig[k - 1].end])
+    nullable, primary, default = True, False, None
+    while k < len(sig):
+        word = sig[k].text.upper() if sig[k].kind == "word" else ""
+        nxt = sig[k + 1].text.upper() if k + 1 < len(sig) else ""
+        if word == "NOT" and nxt == "NULL":
+            nullable, k = False, k + 2
+        elif word == "NULL":
+            k += 1
+        elif word == "PRIMARY" and nxt == "KEY":
+            primary, nullable, k = True, False, k + 2
+        elif word == "DEFAULT" and nxt:
+            j = k + 2
+            while j < len(sig) and not (
+                sig[j].kind == "word"
+                and sig[j].depth == 0
+                and sig[j].text.upper() in _CONSTRAINTS
+            ):
+                j += 1
+            default, k = text[sig[k + 1].start:sig[j - 1].end], j
+        else:
+            raise bad
+    return _Column(token_name(sig[0]), typ, nullable, primary, default)
+
+
+def _column_defs(text: str) -> list:
+    """The comma-separated items of a column-definition list; a comma inside
+    a type's ``<…>`` (``MAP<STRING, INT>``) separates nothing."""
+    out = []
+    for piece in split_top(text):
+        open_angles = out and sum(
+            {"<": 1, ">": -1}.get(t.text, 0)
+            for t in tokens(out[-1])
+            if t.kind == "op" and t.depth == 0
+        )
+        if open_angles:
+            out[-1] += "," + piece
+        else:
+            out.append(piece)
+    return [p.strip() for p in out if p.strip()]
+
+
+def _name_list(text: str, what: str) -> list:
+    """The names of a parenthesized identifier list, ``(a, `b c`)``."""
+    t = text.strip()
+    cols = (
+        names(t[1:-1]) if t.startswith("(") and match_paren(t, 0) == len(t) - 1
+        else None
+    )
+    if not cols:
+        raise LakeSQLError(f"bad {what} column list: {text.strip()!r}")
+    return cols
+
+
+def _partition_by(text: str):
+    """A leading ``PARTITION BY (cols)`` -> (cols, the text after it);
+    ((), text) without one."""
+    t = text.strip()
+    m = re.match(r"PARTITION\s+BY\s*(?=\()", t, re.I)
+    if m is None:
+        return (), t
+    close = match_paren(t, m.end())
+    if close < 0:
+        raise LakeSQLError(f"unbalanced PARTITION BY list: {t!r}")
+    return (
+        _name_list(t[m.end():close + 1], "PARTITION BY"),
+        t[close + 1:].strip(),
+    )
+
+
 def _norm_sql_expr(t: str) -> str:
     """Normalize one SQL expression for TEXTUAL identity comparison:
     lowercase + collapse whitespace OUTSIDE string literals, literals
@@ -218,7 +312,13 @@ def _norm_sql_expr(t: str) -> str:
 
 class SQLExecutor:
     """Stateful statement executor bound to one LakeCatalog (the analog of a
-    DuckDB connection with the ducklake catalog attached)."""
+    DuckDB connection with the ducklake catalog attached).
+
+    The executor ``LakeCatalog.sql`` makes is the *session*: it owns the
+    attach list and the USE default. Each attached catalog gets one
+    executor of its own, made by the session (``_att_executor``), which
+    shares the session's attach list and holds that catalog's open
+    transaction and read bindings."""
 
     def __init__(self, catalog):
         self.c = catalog
@@ -229,12 +329,14 @@ class SQLExecutor:
         # long-lived executor on a busy catalog stays O(#MVs), not
         # O(#MVs x versions)
         self._mv_cols = {}
+        self._session = self  # the executor that owns the attach list
+        self._alias = None  # this catalog's ATTACH name (None: the session)
         # ATTACH'd secondary catalogs: lowercased name -> LakeCatalog.
         # Session-scoped like DuckDB's ATTACH; read via qualified
-        # name.table references, written via qualified-target DML
-        # (_attached_write), migrated via COPY FROM DATABASE.
+        # name.table references, written via qualified targets
+        # (_target), migrated via COPY FROM DATABASE.
         self._attached = {}
-        # lazily-built delegate executors for attached-catalog writes
+        # the session's executors of the attached catalogs, by name
         self._att_sql = {}
         # `USE <attached>` default-catalog selection (None = bound catalog)
         self._use = None
@@ -264,731 +366,617 @@ class SQLExecutor:
 
     # ------------------------------------------------------------------
     def execute(self, sql: str, version=None) -> DataFrame:
-        """Statement dispatch, with STATEMENT-LEVEL ATOMICITY inside an
-        explicit transaction (Postgres/DuckDB semantics): a statement that
-        raises restores the transaction's staging buffers to their
-        pre-statement state, so a later COMMIT can never persist the
-        partial effects of a failed statement (e.g. schema evolution a
-        failed MERGE WITH SCHEMA EVOLUTION had staged). Snapshot/restore
-        is pure driver-side metadata — no Spark job."""
+        """Statement dispatch: under ``USE <attached>`` the statement is
+        that catalog's executor's to run; otherwise its verb picks a handler
+        from ``_VERBS`` (no handler: a read query), and a write's handler
+        runs on the executor ``_target`` picks.
+
+        A write inside an explicit transaction is STATEMENT-ATOMIC
+        (Postgres/DuckDB semantics): a statement that raises restores the
+        transaction's staging buffers to their pre-statement state, so a
+        later COMMIT can never persist the partial effects of a failed
+        statement (e.g. schema evolution a failed MERGE WITH SCHEMA
+        EVOLUTION had staged). Snapshot/restore is pure driver-side
+        metadata — no Spark job. Reads and the transaction verbs skip it:
+        a SELECT-heavy interactive txn must not pay O(loaded file entries)
+        deepcopy per read."""
+        if self._use is not None:
+            if self._use in self._attached:
+                return self._att_executor(self._use).execute(sql, version)
+            self._use = None  # DETACH'd underneath
         q = strip(sql)
         head = _head(q)
-        tx = self._tx
-        # txn verbs manage the txn themselves and read-only statements
-        # cannot mutate staging, so they skip the snapshot — a SELECT-heavy
-        # interactive txn must not pay O(loaded file entries) deepcopy per
-        # read
+        entry = _VERBS.get(head.verb)
+        if entry is None:
+            return self._query(q, version)
+        tgt = self
+        if head.writes:
+            tgt, head = self._target(head)
+        tx = tgt._tx
         if tx is None or not head.writes:
-            return self._execute_stmt(sql, q, head, version)
-        snap = tx._snapshot_staging()
-        try:
-            return self._execute_stmt(sql, q, head, version)
-        except BaseException:
-            if self._tx is tx:  # txn still open: undo this statement only
-                tx._restore_staging(snap)
-            raise
+            out = entry[0](tgt, head, self)
+        else:
+            snap = tx._snapshot_staging()
+            try:
+                out = entry[0](tgt, head, self)
+            except BaseException:
+                if tgt._tx is tx:  # txn still open: undo this statement only
+                    tx._restore_staging(snap)
+                raise
+        return self._query(q, version) if out is None else out
 
-    def _execute_stmt(self, sql: str, q: str, head: _Head, version=None):
-        # `USE <attached>` in effect: every statement except the
-        # catalog-management verbs delegates wholesale to the default
-        # catalog's sub-executor — unqualified names, DML/DDL, and
-        # BEGIN/COMMIT all operate there, DuckDB's default-catalog
-        # semantics. USE/ATTACH/DETACH stay here; COPY FROM DATABASE
-        # too — its operands name catalogs from the attach list, which
-        # only this executor owns (the delegate would see neither side).
-        if self._use is not None and not re.match(
-            r"^(USE|ATTACH|DETACH|SHOW\s+DATABASES"
-            r"|COPY\s+FROM\s+DATABASE)\b",
-            q,
-            re.I,
+    def _catalog(self, cat: str) -> Optional["SQLExecutor"]:
+        """The executor of the catalog named ``cat``: an attached name, or
+        ``main`` for the bound catalog; None for any other name."""
+        key = cat.lower()
+        if key in self._attached:
+            return self._att_executor(key)
+        return self._session if key == "main" else None
+
+    def _target(self, head: _Head):
+        """The executor a write lands on, and its head as that executor
+        reads it (no qualifier). An unqualified target is this executor's
+        (under USE, the USE'd catalog's); ``main`` and this catalog's own
+        name qualify to their catalogs like any attached name. ``CHECKPOINT
+        <name>`` names a whole catalog when ``<name>`` is an attached name
+        or ``main`` and no local table of that name exists. A write into a
+        READ_ONLY attachment raises, and so does a write into another
+        catalog while this one has an open transaction (one write target
+        per transaction, DuckDB's cross-database rule)."""
+        cat, table = head.cat, head.table
+        if (
+            head.verb == "CHECKPOINT"
+            and cat is None
+            and table is not None
+            and not head.rest
+            and self._catalog(table) is not None
+            and not self._table_exists(table)
         ):
-            if self._use not in self._attached:  # DETACH'd underneath
-                self._use = None
-            else:
-                if self._use in self._att_readonly and head.writes:
-                    # a write whose target names a DIFFERENT catalog is
-                    # not a write into the read-only default — let it
-                    # delegate; the delegate's own dispatch enforces the
-                    # actual target's read-only flag. Self-qualified (and
-                    # unqualifiable verbs like IMPORT/REFRESH) stay
-                    # refused here. A dotless CHECKPOINT of a SIBLING
-                    # attachment (or of 'main', the writable bound
-                    # catalog) delegates too, unless the name is a table
-                    # in the read-only default (the delegate resolves that
-                    # tie to the table).
-                    cat = head.cat
-                    if (
-                        cat is None
-                        and head.verb == "CHECKPOINT"
-                        and head.table is not None
-                        and not head.rest
-                        and (
-                            head.table.lower() in self._attached
-                            or head.table.lower() == "main"
-                        )
-                        and not self._att_executor(
-                            self._use
-                        )._table_exists(head.table)
-                    ):
-                        cat = head.table
-                    if cat is None or cat.lower() == self._use:
-                        raise LakeSQLError(
-                            f"catalog {self._use!r} is attached READ_ONLY"
-                        )
-                return self._att_executor(self._use).execute(
-                    sql, version
+            cat, table = table, None
+        tgt = self
+        if cat is not None:
+            tgt = self._catalog(cat)
+            if tgt is None:
+                raise LakeSQLError(f"no attached catalog named {cat!r}")
+        if head.writes:
+            if tgt is not self:
+                self._no_txn(f"write to attached catalog {cat!r}")
+            if tgt._alias in self._att_readonly:
+                raise LakeSQLError(
+                    f"catalog {tgt._alias!r} is attached READ_ONLY"
                 )
+        return tgt, head._replace(cat=None, table=table)
 
-        if re.match(r"^BEGIN(\s+TRANSACTION)?$", q, re.I):
+    # -- statement handlers: handler(executor, head, issuer). A write's
+    # executor is its target; source queries (INSERT ... SELECT, CTAS,
+    # MERGE USING) are built by the issuing executor, so they may read any
+    # catalog the issuer can. A read handler returns None for a form it
+    # does not own, which then runs as a query. ---------------------------
+    def _txn(self, head: _Head, src) -> DataFrame:
+        """``BEGIN`` / ``COMMIT`` / ``ROLLBACK`` ``[TRANSACTION]``."""
+        if not re.fullmatch(r"(?:\s+TRANSACTION)?", head.rest, re.I):
+            raise LakeSQLError(f"bad {head.verb} statement")
+        if head.verb == "BEGIN":
             if self._tx is not None:
                 raise LakeSQLError("transaction already open")
             self._tx = self.c.transaction()
             return self._status("BEGIN", 0)
-        if re.match(r"^COMMIT$", q, re.I):
-            if self._tx is None:
-                raise LakeSQLError("no open transaction")
-            tx, self._tx = self._tx, None
-            v = tx.commit()
-            return self._status("COMMIT", v)
-        if re.match(r"^ROLLBACK$", q, re.I):
-            if self._tx is None:
-                raise LakeSQLError("no open transaction")
-            tx, self._tx = self._tx, None
-            tx.rollback()
-            return self._status("ROLLBACK", 0)
-        m = re.match(rf"^USE\s+({_IDENT})$", q, re.I)
-        if m:
-            # DuckDB's default-catalog switch, the reference migration
-            # flow's spelling (demos/05_catalog_portability/demo.py:200,
-            # 212 `USE dev` / `USE prod`): an ATTACH'd name becomes the
-            # default for subsequent unqualified statements (each
-            # delegated wholesale to that catalog's sub-executor,
-            # including its own BEGIN/COMMIT state); any other name —
-            # the bound catalog under whatever alias the user mounted it
-            # — resets to the bound catalog.
-            key = m.group(1).lower()
-            if key != self._use:
-                # switching away while the CURRENT default's sub-executor
-                # holds an open transaction would leave it dangling (a
-                # later USE back could land it; a DETACH would silently
-                # discard its staged writes) — refuse, like the main-txn
-                # guard on entering USE
-                cur = (
-                    self._att_sql.get(self._use)
-                    if self._use is not None
-                    else None
-                )
-                if cur is not None and cur._tx is not None:
-                    raise LakeSQLError(
-                        f"catalog {self._use!r} has an open transaction: "
-                        "COMMIT or ROLLBACK it before USE"
-                    )
-            if key in self._attached:
-                self._no_txn("USE <attached catalog>")
-                self._use = key
-            else:
-                self._use = None
-            return self._status("USE", 0)
+        if self._tx is None:
+            raise LakeSQLError("no open transaction")
+        tx, self._tx = self._tx, None
+        if head.verb == "COMMIT":
+            return self._status("COMMIT", tx.commit())
+        tx.rollback()
+        return self._status("ROLLBACK", 0)
 
-        m = re.match(r"^SUMMARIZE\s+(.+)$", q, re.I | re.S)
-        if m:
-            return self._summarize_stmt(m.group(1).strip())
-
-        # -- multi-catalog verbs (demos/05_catalog_portability) ----------
-        m = re.match(
-            rf"^ATTACH\s+'((?:[^']|'')*)'\s+AS\s+({_IDENT})"
-            r"\s*(?:\((.*)\))?$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            read_only, data_path = False, None
-            for item in items(m.group(3)) if m.group(3) else []:
-                mm = re.fullmatch(r"READ_ONLY", item, re.I)
-                if mm:
-                    read_only = True
-                    continue
-                mm = re.fullmatch(
-                    r"DATA_PATH\s+'((?:[^']|'')*)'", item, re.I
-                )
-                if mm:
-                    data_path = mm.group(1).replace("''", "'")
-                    continue
+    def _use_stmt(self, head: _Head, src) -> DataFrame:
+        """DuckDB's default-catalog switch, the reference migration flow's
+        spelling (demos/05_catalog_portability/demo.py:200, 212 `USE dev` /
+        `USE prod`): an ATTACH'd name becomes the default for subsequent
+        statements (each run by that catalog's executor, including its
+        own BEGIN/COMMIT state); any other name — the bound catalog under
+        whatever alias the user mounted it — resets to the bound
+        catalog."""
+        m = re.fullmatch(rf"\s+({_IDENT})", head.rest)
+        if m is None:
+            raise LakeSQLError("bad USE statement: expected USE <catalog>")
+        s, key = self._session, m.group(1).lower()
+        if key != s._use and s._use is not None:
+            # switching away while the CURRENT default's executor holds an
+            # open transaction would leave it dangling (a later USE back
+            # could land it; a DETACH would silently discard its staged
+            # writes) — refuse, like the main-txn guard on entering USE
+            cur = s._att_sql.get(s._use)
+            if cur is not None and cur._tx is not None:
                 raise LakeSQLError(
-                    f"unknown ATTACH option {item!r} "
-                    "(READ_ONLY, DATA_PATH '<dir>')"
+                    f"catalog {s._use!r} has an open transaction: "
+                    "COMMIT or ROLLBACK it before USE"
                 )
-            return self._attach_stmt(
-                m.group(1).replace("''", "'"),
-                m.group(2),
-                read_only=read_only,
-                data_path=data_path,
-            )
-        m = re.match(rf"^DETACH\s+({_IDENT})$", q, re.I)
-        if m:
-            return self._detach_stmt(m.group(1))
-        m = re.match(
-            rf"^COPY\s+FROM\s+DATABASE\s+({_IDENT})\s+TO\s+({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._copy_database_stmt(m.group(1), m.group(2))
-        m = re.match(
-            r"^EXPORT\s+DATABASE\s+'((?:[^']|'')*)'\s*"
-            r"(?:\(\s*FORMAT\s+(\w+)\s*\))?$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._export_database(
-                m.group(1).replace("''", "'"), (m.group(2) or "PARQUET")
-            )
-        m = re.match(
-            r"^IMPORT\s+DATABASE\s+'((?:[^']|'')*)'$", q, re.I
-        )
-        if m:
-            return self._import_database(m.group(1).replace("''", "'"))
-        if head.phrase and head.cat and head.verb != "CHECKPOINT":
-            qcat = head.cat.lower()
-            target_c = self._attached.get(qcat)
-            if target_c is self.c or (target_c is None and qcat == "main"):
-                # the qualifier names THIS executor's own catalog —
-                # `main` in the top-level executor (the COPY FROM
-                # DATABASE convention), or a delegate's own alias under
-                # USE. Strip it: the unqualified statement has the exact
-                # semantics, including open-transaction staging.
-                return self.execute(
-                    f"{head.phrase} {head.table}{head.rest}", version
-                )
-            if target_c is not None and head.verb == "MERGE":
-                return self._attached_merge(
-                    head.cat, head.table, head.rest,
-                    evolve="EVOLUTION" in head.phrase.upper(),
-                )
-            if target_c is not None:
-                return self._attached_write(
-                    head.phrase, head.cat, head.table, head.rest
-                )
+        if key in s._attached:
+            s._no_txn("USE <attached catalog>")
+            s._use = key
+        else:
+            s._use = None
+        return self._status("USE", 0)
 
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+({_IDENT})"
-            r"\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            return self._create_mv(
-                m.group(2), m.group(3), replace=bool(m.group(1))
-            )
-        m = re.match(
-            rf"^REFRESH\s+MATERIALIZED\s+VIEW\s+({_IDENT})$", q, re.I
-        )
-        if m:
-            return self._refresh_mv(m.group(1))
-        m = re.match(
-            rf"^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._drop_mv(m.group(2), if_exists=bool(m.group(1)))
-
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+({_IDENT})\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            replace, name, body = m.group(1), m.group(2), m.group(3)
-            if not replace and self._view_exists(name):
-                raise LakeSQLError(f"view {name!r} exists")
-            self._run(lambda tx: tx.create_view(name, body))
-            return self._status("CREATE VIEW", 0)
-
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+({_IDENT})"
-            rf"(?:\s+PARTITION\s+BY\s*\(([^()]+)\))?\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:  # CTAS (S5), optionally range-clustered (X2)
-            replace, name, pby, body = (
-                m.group(1), m.group(2), m.group(3), m.group(4),
-            )
-            partition_by = (
-                [c.strip() for c in pby.split(",")] if pby else ()
-            )
-            df = self._query(body)
-            n = [0]
-
-            def op(tx):
-                st = tx._state(name, must_exist=False)
-                if replace and st is not None and not st.dropped:
-                    tx.drop_table(name)
-                n[0] = tx.ctas(name, df, partition_by=partition_by)
-
-            self._run(op)
-            # row count comes from the write itself (tx.ctas), not a second
-            # execution of the source query
-            return self._status("CREATE TABLE AS", n[0])
-
-        # the PARTITION BY variant first: a greedy coldef group with an
-        # OPTIONAL suffix would swallow the suffix into the coldefs
-        m = re.match(
-            rf"^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*"
-            rf"\((.*)\)\s*PARTITION\s+BY\s*\(([^()]+)\)\s*$",
-            q,
-            re.I | re.S,
-        ) or re.match(
-            rf"^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*"
-            rf"\((.*)\)()?\s*$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            if_not, name, cols, pby = (
-                m.group(1), m.group(2), m.group(3), m.group(4),
-            )
-            if self._table_exists(name):
-                if if_not:
-                    return self._status("CREATE TABLE", 0)
-                raise LakeSQLError(f"table {name!r} exists")
-            schema = self._parse_coldefs(cols)
-            partition_by = (
-                [c.strip() for c in pby.split(",")] if pby else ()
-            )
-            self._run(
-                lambda tx: tx.create_table(
-                    name, schema, partition_by=partition_by
-                )
-            )
-            return self._status("CREATE TABLE", 0)
-
-        m = re.match(rf"^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?({_IDENT})$", q, re.I)
-        if m:
-            if m.group(1) and not self._table_exists(m.group(2)):
-                return self._status("DROP TABLE", 0)
-            self._run(lambda tx: tx.drop_table(m.group(2)))
-            return self._status("DROP TABLE", 0)
-        m = re.match(rf"^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})$", q, re.I)
-        if m:
-            if m.group(1) and not self._view_exists(m.group(2)):
-                return self._status("DROP VIEW", 0)
-            self._run(lambda tx: tx.drop_view(m.group(2)))
-            return self._status("DROP VIEW", 0)
-
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+COLUMN\s+({_IDENT})\s+"
-            r"([A-Za-z0-9_]+(?:\s*\([^)]*\))?)"
-            r"(?:\s+DEFAULT\s+(.+?))?$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            t, c, typ, dflt = m.groups()
-            default = self._literal(dflt) if dflt is not None else None
-            self._run(lambda tx: tx.add_column(t, c, _map_type(typ), default))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+COLUMN\s+({_IDENT})$", q, re.I
-        )
-        if m:
-            self._run(lambda tx: tx.drop_column(m.group(1), m.group(2)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.rename_column(*m.group(1, 2, 3)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ALTER\s+COLUMN\s+({_IDENT})\s+SET\s+NOT\s+NULL$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_not_null(m.group(1), m.group(2)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+SET\s+PARTITIONED\s+BY\s*"
-            rf"\(([^()]*)\)\s*$",
-            q,
-            re.I,
-        )
-        if m:
-            t = m.group(1)
-            cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
-            self._run(lambda tx: tx.set_partition_by(t, cols))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RESET\s+PARTITIONED\s+BY$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_partition_by(m.group(1), ()))
-            return self._status("ALTER TABLE", 0)
-        # SET/RESET ZORDER BY — metadata-only spec edit (see
-        # Transaction.set_zorder_by); CALL optimize applies it, compact()
-        # re-applies it
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+SET\s+ZORDER\s+BY\s*"
-            rf"\(([^()]*)\)\s*$",
-            q,
-            re.I,
-        )
-        if m:
-            t = m.group(1)
-            cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
-            self._run(lambda tx: tx.set_zorder_by(t, cols))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RESET\s+ZORDER\s+BY$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_zorder_by(m.group(1), ()))
-            return self._status("ALTER TABLE", 0)
-        # ALTER COLUMN c TYPE T / SET DATA TYPE T (widening casts only —
-        # the reference's "change data types" claim, README.md:50)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ALTER\s+COLUMN\s+({_IDENT})\s+"
-            r"(?:SET\s+DATA\s+)?TYPE\s+([A-Za-z0-9_]+(?:\s*\([^)]*\))?)$",
-            q,
-            re.I,
-        )
-        if m:
-            t, c, typ = m.groups()
-            self._run(
-                lambda tx: tx.alter_column_type(t, c, _map_type(typ))
-            )
-            return self._status("ALTER TABLE", 0)
-
-        # optionally catalog-qualified (exploration/ducklake_analysis.sh:194
-        # `DESCRIBE lake.sales_data`): a qualifier naming an ATTACH'd
-        # catalog describes THAT catalog's table (r12); any other
-        # qualifier is the bound catalog's own alias and is ignored
-        m = re.match(
-            rf"^(?:DESCRIBE|DESC)\s+(?:({_IDENT})\.)?({_IDENT})$", q, re.I
-        )
-        if m:  # demos/03_schema_evolution/demo.py:112,124
-            cat, name = m.groups()
-            if cat and cat.lower() in self._attached:
-                return self._att_executor(cat)._describe(name)
-            return self._describe(name)
-        m = re.match(
-            r"^(?:DESCRIBE|DESC)\s+((?:SELECT|WITH|FROM)\b.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            # DESCRIBE <query> (DuckDB): the query's resolved schema as
-            # rows — analysis only, nothing executes
-            df = self._query(m.group(1))
-            return local_df(
-                self.c.spark,
-                [
-                    (
-                        f.name,
-                        f.dataType.simpleString().upper(),
-                        "YES" if f.nullable else "NO",
-                        None,
-                        None,
-                        None,
-                    )
-                    for f in df.schema.fields
-                ],
-                "column_name string, column_type string, null string, "
-                "key string, default string, extra string",
-            )
-        m = re.match(
-            rf"^PRAGMA\s+table_info\s*\(\s*'?(?:({_IDENT})\.)?({_IDENT})'?"
-            r"\s*\)$",
-            q,
-            re.I,
-        )
-        if m:  # DuckDB/SQLite spelling of DESCRIBE; qualifier as above
-            cat, name = m.groups()
-            if cat and cat.lower() in self._attached:
-                return self._att_executor(cat)._describe(name)
-            return self._describe(name)
-        if re.match(r"^PRAGMA\s+show_tables$", q, re.I):
-            return self.execute("SHOW TABLES")
-        m = re.match(
-            rf"^CHECKPOINT(?:\s+({_IDENT})(?:\s*\.\s*({_IDENT}))?)?$",
-            q,
-            re.I,
-        )
-        if m:
-            # DuckDB's CHECKPOINT flushes buffered WAL state to storage;
-            # the lake analogue is flushing catalog-inlined rows into
-            # parquet files (README.md:243 inlining). One table, all
-            # tables, one attached table (`CHECKPOINT att.t`), or a whole
-            # attached catalog (`CHECKPOINT att` — DuckDB's database
-            # argument; a LOCAL table of the same name wins the tie).
-            first, tbl = m.group(1), m.group(2)
-
-            def _delegate(cat: str, stmt: str) -> DataFrame:
-                if cat.lower() in self._att_readonly:
-                    raise LakeSQLError(
-                        f"catalog {cat!r} is attached READ_ONLY"
-                    )
-                return self._att_executor(cat).execute(stmt)
-
-            if tbl is not None:
-                key = (first or "").lower()
-                target_c = self._attached.get(key)
-                if target_c is self.c or (
-                    target_c is None and key == "main"
-                ):
-                    first, tbl = tbl, None  # self-qualified: local form
-                elif target_c is None:
-                    raise LakeSQLError(
-                        f"no attached catalog named {first!r}"
-                    )
-                else:
-                    return _delegate(first, f"CHECKPOINT {tbl}")
-            if (
-                tbl is None
-                and first
-                and not self._table_exists(first)
-                and first.lower() in self._attached
-            ):
-                return _delegate(first, "CHECKPOINT")
-            if (
-                tbl is None
-                and first
-                and first.lower() == "main"
-                and not self._table_exists(first)
-            ):
-                first = None  # CHECKPOINT main = the bound catalog, whole
-            names = [first] if first else list(self.c.tables())
-
-            def op(tx):
-                for t in names:
-                    tx.flush_inlined(t)
-
-            self._run(op)
-            return self._status("CHECKPOINT", len(names))
-        if re.match(r"^SHOW\s+DATABASES$", q, re.I):
+    def _show(self, head: _Head, src):
+        what = head.rest.strip().upper()
+        if what == "DATABASES":
             # DuckDB's attach-list introspection: the bound catalog
             # (spelled 'main', its USE-reset alias) plus every ATTACH'd
             # name, with the read-only flag and the current default
-            rows = [("main", False, self._use is None)] + [
-                (n, n in self._att_readonly, n == self._use)
-                for n in sorted(self._attached)
+            s = self._session
+            rows = [("main", False, s._use is None)] + [
+                (n, n in s._att_readonly, n == s._use)
+                for n in sorted(s._attached)
             ]
             return local_df(
                 self.c.spark,
                 rows,
                 "name string, read_only boolean, is_default boolean",
             )
-        if re.match(r"^SHOW\s+TABLES$", q, re.I):
-            from .rollup import _meta_name
+        return self._show_tables() if what == "TABLES" else None
 
-            ts = set(self.c.tables())
-            # an MV's meta companion is an implementation detail: list the
-            # MV once (its meta stays directly readable/describable)
-            names = sorted(
-                n
-                for n in (ts | set(self.c.views()))
-                if not (
-                    n.endswith("__rollup_meta")
-                    and n[: -len("__rollup_meta")] in ts
-                    and _meta_name(n[: -len("__rollup_meta")]) == n
-                )
+    def _show_tables(self) -> DataFrame:
+        from .rollup import _meta_name
+
+        ts = set(self.c.tables())
+        # an MV's meta companion is an implementation detail: list the MV
+        # once (its meta stays directly readable/describable)
+        listed = sorted(
+            n
+            for n in (ts | set(self.c.views()))
+            if not (
+                n.endswith("__rollup_meta")
+                and n[: -len("__rollup_meta")] in ts
+                and _meta_name(n[: -len("__rollup_meta")]) == n
             )
-            return local_df(self.c.spark, [(n,) for n in names], "name string")
+        )
+        return local_df(self.c.spark, [(n,) for n in listed], "name string")
 
-        m = re.match(
-            rf"^INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+({_IDENT})"
-            r"\s*(.*)$",
-            q,
+    def _describe_stmt(self, head: _Head, src):
+        """``DESCRIBE [cat.]t`` (demos/03_schema_evolution/demo.py:112,124;
+        exploration/ducklake_analysis.sh:194 ``DESCRIBE lake.sales_data``):
+        a qualifier naming an ATTACH'd catalog or ``main`` describes that
+        catalog's table, any other qualifier is the bound catalog's own
+        alias. ``DESCRIBE <query>`` (DuckDB) gives the query's resolved
+        schema as rows — analysis only, nothing executes."""
+        rest = head.rest.strip()
+        m = re.fullmatch(rf"(?:({_IDENT})\s*\.\s*)?({_IDENT})", rest)
+        if m:
+            return self._reader(m.group(1))._describe(m.group(2))
+        if not re.match(r"(?:SELECT|WITH|FROM)\b", rest, re.I):
+            return None
+        df = self._query(rest)
+        return local_df(
+            self.c.spark,
+            [
+                (
+                    f.name,
+                    f.dataType.simpleString().upper(),
+                    "YES" if f.nullable else "NO",
+                    None,
+                    None,
+                    None,
+                )
+                for f in df.schema.fields
+            ],
+            "column_name string, column_type string, null string, "
+            "key string, default string, extra string",
+        )
+
+    def _reader(self, cat: Optional[str]) -> "SQLExecutor":
+        """The executor that reads a ``cat.``-qualified name: an attached
+        name or ``main`` is that catalog; no qualifier, or any other one
+        (the bound catalog's mount alias), is this executor."""
+        return (cat and self._catalog(cat)) or self
+
+    def _pragma(self, head: _Head, src):
+        # DuckDB/SQLite spellings of DESCRIBE and SHOW TABLES
+        m = re.fullmatch(
+            rf"\s+table_info\s*\(\s*'?(?:({_IDENT})\.)?({_IDENT})'?\s*\)",
+            head.rest,
+            re.I,
+        )
+        if m:
+            return self._reader(m.group(1))._describe(m.group(2))
+        if re.fullmatch(r"\s+show_tables", head.rest, re.I):
+            return self._show_tables()
+        return None
+
+    def _create(self, head: _Head, src) -> DataFrame:
+        name, rest, w = head.table, head.rest.strip(), head.words
+        if name is None:
+            raise LakeSQLError(
+                "bad CREATE statement: expected CREATE [OR REPLACE] "
+                "TABLE|VIEW|MATERIALIZED VIEW <name> ..."
+            )
+        replace = "REPLACE" in w
+        if "VIEW" in w:
+            m = re.match(r"AS\s+(.*)$", rest, re.I | re.S)
+            if m is None:
+                raise LakeSQLError(f"CREATE VIEW {name} needs AS <select>")
+            if "MATERIALIZED" in w:
+                return self._create_mv(name, m.group(1), replace=replace)
+            if not replace and self._view_exists(name):
+                raise LakeSQLError(f"view {name!r} exists")
+            self._run(lambda tx: tx.create_view(name, m.group(1)))
+            return self._status("CREATE VIEW", 0)
+        if "EXISTS" in w and self._table_exists(name):  # IF NOT EXISTS
+            return self._status("CREATE TABLE", 0)
+        if rest.startswith("("):  # the column-list form
+            bad = LakeSQLError(
+                f"bad CREATE TABLE {name}: expected (<column definitions>) "
+                "[PARTITION BY (cols)]"
+            )
+            close = match_paren(rest, 0)
+            if close < 0:
+                raise bad
+            partition_by, tail = _partition_by(rest[close + 1:])
+            if tail:
+                raise bad
+            exists = self._table_exists(name)
+            if exists and not replace:
+                raise LakeSQLError(f"table {name!r} exists")
+            schema = self._table_schema(rest[1:close])
+
+            def op(tx):
+                if exists:
+                    tx.drop_table(name)
+                tx.create_table(name, schema, partition_by=partition_by)
+
+            self._run(op)
+            return self._status("CREATE TABLE", 0)
+        # CTAS (S5), optionally range-clustered (X2)
+        partition_by, tail = _partition_by(rest)
+        m = re.match(r"AS\s+(.*)$", tail, re.I | re.S)
+        if m is None:
+            raise LakeSQLError(
+                f"bad CREATE TABLE {name}: expected (<column definitions>) "
+                "or [PARTITION BY (cols)] AS <select>"
+            )
+        df = src._query(m.group(1))
+        n = [0]
+
+        def op(tx):
+            st = tx._state(name, must_exist=False)
+            if replace and st is not None and not st.dropped:
+                tx.drop_table(name)
+            n[0] = tx.ctas(name, df, partition_by=partition_by)
+
+        self._run(op)
+        # row count comes from the write itself (tx.ctas), not a second
+        # execution of the source query
+        return self._status("CREATE TABLE AS", n[0])
+
+    def _table_schema(self, text: str) -> TableSchema:
+        """A CREATE TABLE column-definition list: column definitions and
+        an optional table-level ``PRIMARY KEY (cols)``."""
+        fields, pk = [], []
+        for part in _column_defs(text):
+            m = re.fullmatch(r"PRIMARY\s+KEY\s*(\(.*\))", part, re.I | re.S)
+            if m:
+                pk.extend(_name_list(m.group(1), "PRIMARY KEY"))
+                continue
+            col = _column_def(part)
+            if col.primary:
+                pk.append(col.name)
+            default = None if col.default is None else self._literal(col.default)
+            fields.append(
+                Field(len(fields) + 1, col.name, col.type, col.nullable, default)
+            )
+        return TableSchema(tuple(fields), tuple(pk))
+
+    def _drop(self, head: _Head, src) -> DataFrame:
+        name, w = head.table, head.words
+        if name is None or head.rest.strip():
+            raise LakeSQLError(
+                "bad DROP statement: expected DROP TABLE|VIEW|MATERIALIZED "
+                "VIEW [IF EXISTS] <name>"
+            )
+        if "MATERIALIZED" in w:
+            return self._drop_mv(name, if_exists="EXISTS" in w)
+        label, exists = (
+            ("DROP VIEW", self._view_exists) if "VIEW" in w
+            else ("DROP TABLE", self._table_exists)
+        )
+        if "EXISTS" in w and not exists(name):
+            return self._status(label, 0)
+        if "VIEW" in w:
+            self._run(lambda tx: tx.drop_view(name))
+        else:
+            self._run(lambda tx: tx.drop_table(name))
+        return self._status(label, 0)
+
+    def _alter(self, head: _Head, src) -> DataFrame:
+        t, rest = head.table, head.rest.strip()
+        if t is None:
+            raise LakeSQLError("bad ALTER statement: expected ALTER TABLE <t> ...")
+        m = re.match(r"ADD\s+COLUMN\s+", rest, re.I)
+        if m:
+            col = _column_def(rest[m.end():])
+            if not col.nullable:
+                raise LakeSQLError(
+                    "ADD COLUMN takes a type and an optional DEFAULT"
+                )
+            default = None if col.default is None else self._literal(col.default)
+            self._run(lambda tx: tx.add_column(t, col.name, col.type, default))
+            return self._status("ALTER TABLE", 0)
+        m = re.fullmatch(rf"DROP\s+COLUMN\s+({_IDENT})", rest, re.I)
+        if m:
+            self._run(lambda tx: tx.drop_column(t, m.group(1)))
+            return self._status("ALTER TABLE", 0)
+        m = re.fullmatch(
+            rf"RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})", rest, re.I
+        )
+        if m:
+            self._run(lambda tx: tx.rename_column(t, *m.group(1, 2)))
+            return self._status("ALTER TABLE", 0)
+        m = re.fullmatch(
+            rf"ALTER\s+COLUMN\s+({_IDENT})\s+SET\s+NOT\s+NULL", rest, re.I
+        )
+        if m:
+            self._run(lambda tx: tx.set_not_null(t, m.group(1)))
+            return self._status("ALTER TABLE", 0)
+        # ALTER COLUMN c TYPE T / SET DATA TYPE T (widening casts only —
+        # the reference's "change data types" claim, README.md:50)
+        m = re.fullmatch(
+            rf"ALTER\s+COLUMN\s+({_IDENT})\s+(?:SET\s+DATA\s+)?TYPE\s+(\w.*)",
+            rest,
             re.I | re.S,
         )
         if m:
-            mode, name, body = m.groups()
-            cols = None
-            # a leading "(a, b, c)" identifier list is the column list; a
-            # leading "(SELECT ..." is a parenthesized query body
-            mm = re.match(r"^\(([^)]*)\)\s*(.*)$", body, re.S)
-            if mm and all(
-                re.fullmatch(_IDENT, c.strip())
-                for c in mm.group(1).split(",")
-            ):
-                cols = [c.strip() for c in mm.group(1).split(",")]
-                body = mm.group(2)
-            if re.match(r"^VALUES\b", body, re.I):
-                df = self.c.spark.sql(f"SELECT * FROM ({body})")
-                # VALUES yields col1..colN: name them from the column list,
-                # else positionally in table order
-                schema = self._schema_of(name)
-                vals = df.columns
-                names = cols or [f.name for f in schema.fields][: len(vals)]
-                if len(vals) != len(names):
-                    raise LakeSQLError(
-                        f"INSERT INTO {name} has {len(vals)} values per row "
-                        f"for {len(names)} columns"
-                    )
-                # Cast each VALUES column to its TARGET column type before
-                # collecting: Spark types a bare `2.0` literal DECIMAL(2,1),
-                # and an un-cast Decimal stored in an inlined row would fail
-                # the read-side DataFrame build against a DOUBLE column.
-                # One projection: a Column object per cast costs a py4j
-                # round trip each.
-                types = {f.name: f.type for f in schema.fields}
-                df = df.selectExpr(
-                    *[
-                        f"CAST({bq(v)} AS {types[c]}) AS {bq(c)}"
-                        if c in types
-                        else f"{bq(v)} AS {bq(c)}"
-                        for v, c in zip(vals, names)
-                    ]
-                )
-                if mode:
-                    return self._upsert_insert(name, df, mode)
-                # a literal VALUES plan is a LocalRelation — collect() is
-                # driver-side, so tiny inserts take insert_rows' no-Spark-job
-                # inlining fast path. A one-row statement costs 25-29 ms
-                # median on a 4-core host (48-60 ms before the one-projection
-                # cast), nearly all of it Spark parsing and collecting the
-                # literal; insert_rows itself takes about 0.6 ms
-                rows = [
-                    dict(zip(names, tup)) for tup in df.collect()
-                ]
-                self._run(lambda tx: tx.insert_rows(name, rows))
-                return self._status("INSERT", len(rows))
+            col = _column_def(f"{m.group(1)} {m.group(2)}")
+            if col.default is not None or not col.nullable:
+                raise LakeSQLError(f"bad column type {m.group(2)!r}")
+            self._run(lambda tx: tx.alter_column_type(t, col.name, col.type))
+            return self._status("ALTER TABLE", 0)
+        # SET/RESET PARTITIONED BY and ZORDER BY — metadata-only spec edits
+        # (see Transaction.set_zorder_by); CALL optimize applies a
+        # z-order, compact() re-applies it
+        m = re.fullmatch(
+            r"(SET|RESET)\s+(PARTITIONED|ZORDER)\s+BY\s*(.*)", rest, re.I | re.S
+        )
+        if m and (m.group(1).upper() == "SET") == bool(m.group(3)):
+            cols = (
+                _name_list(m.group(3), m.group(2).upper() + " BY")
+                if m.group(3) else ()
+            )
+            if m.group(2).upper() == "ZORDER":
+                self._run(lambda tx: tx.set_zorder_by(t, cols))
             else:
-                df = self._query(body)
-                if cols is not None:
-                    if len(cols) != len(df.columns):
-                        raise LakeSQLError(
-                            f"column list has {len(cols)} names, query "
-                            f"produces {len(df.columns)} columns"
-                        )
-                    df = df.toDF(*cols)
-                if mode:
-                    return self._upsert_insert(name, df, mode)
+                self._run(lambda tx: tx.set_partition_by(t, cols))
+            return self._status("ALTER TABLE", 0)
+        raise LakeSQLError(f"unsupported ALTER TABLE action: {rest!r}")
+
+    def _insert(self, head: _Head, src) -> DataFrame:
+        name, body, cols = head.table, head.rest.strip(), None
+        if name is None or not body:
+            raise LakeSQLError(
+                "bad INSERT statement: expected INSERT [OR REPLACE|IGNORE] "
+                "INTO <table> [(cols)] VALUES ... | <query>"
+            )
+        # a leading "(a, b, c)" name list is the column list; a leading
+        # "(SELECT ..." is a parenthesized query body
+        if body.startswith("("):
+            close = match_paren(body, 0)
+            cols = names(body[1:close]) if close > 0 else None
+            if cols:
+                body = body[close + 1:].strip()
+        mode = next((m for m in ("REPLACE", "IGNORE") if m in head.words), None)
+        if re.match(r"VALUES\b", body, re.I):
+            df = self.c.spark.sql(f"SELECT * FROM ({body})")
+            # VALUES yields col1..colN: name them from the column list,
+            # else positionally in table order
+            schema = self._schema_of(name)
+            vals = df.columns
+            targets = cols or [f.name for f in schema.fields][: len(vals)]
+            if len(vals) != len(targets):
+                raise LakeSQLError(
+                    f"INSERT INTO {name} has {len(vals)} values per row "
+                    f"for {len(targets)} columns"
+                )
+            # Cast each VALUES column to its TARGET column type before
+            # collecting: Spark types a bare `2.0` literal DECIMAL(2,1),
+            # and an un-cast Decimal stored in an inlined row would fail
+            # the read-side DataFrame build against a DOUBLE column.
+            # One projection: a Column object per cast costs a py4j
+            # round trip each.
+            types = {f.name: f.type for f in schema.fields}
+            df = df.selectExpr(
+                *[
+                    f"CAST({bq(v)} AS {types[c]}) AS {bq(c)}"
+                    if c in types
+                    else f"{bq(v)} AS {bq(c)}"
+                    for v, c in zip(vals, targets)
+                ]
+            )
+            if mode:
+                return self._upsert_insert(name, df, mode)
+            # a literal VALUES plan is a LocalRelation — collect() is
+            # driver-side, so tiny inserts take insert_rows' no-Spark-job
+            # inlining fast path. A one-row statement costs 25-29 ms
+            # median on a 4-core host (48-60 ms before the one-projection
+            # cast), nearly all of it Spark parsing and collecting the
+            # literal; insert_rows itself takes about 0.6 ms
+            rows = [dict(zip(targets, tup)) for tup in df.collect()]
+            self._run(lambda tx: tx.insert_rows(name, rows))
+            return self._status("INSERT", len(rows))
+        df = src._query(body)
+        if cols is not None:
+            if len(cols) != len(df.columns):
+                raise LakeSQLError(
+                    f"column list has {len(cols)} names, query "
+                    f"produces {len(df.columns)} columns"
+                )
+            df = df.toDF(*cols)
+        if mode:
+            return self._upsert_insert(name, df, mode)
+        n = [0]
+
+        def op(tx):
+            n[0] = tx.insert(name, df)
+
+        self._run(op)
+        # count from the write itself — not a second source execution
+        return self._status("INSERT", n[0])
+
+    def _update(self, head: _Head, src) -> DataFrame:
+        name = head.table
+        m = re.match(r"\s+SET\b", head.rest, re.I)
+        if name is None or m is None:
+            raise LakeSQLError(
+                "bad UPDATE statement: expected UPDATE <table> SET c = expr "
+                "[, ...] [WHERE pred]"
+            )
+        # split at the LAST top-level WHERE: a first-match split breaks
+        # SET expressions containing subqueries or 'where' in a literal
+        setlist, where = head.rest[m.end():], None
+        wpos = top_words(setlist, "WHERE")
+        if wpos:
+            setlist, where = (
+                setlist[: wpos[-1]], setlist[wpos[-1] + len("WHERE"):].strip()
+            )
+            if not where:
+                raise LakeSQLError("UPDATE ... WHERE needs a predicate")
+        # bind table views so scalar subqueries in SET/WHERE resolve
+        # (against pre-statement state, DuckDB UPDATE semantics)
+        self._bind_tables()
+        sets = {}
+        for part in items(setlist):
+            a = assignment(part)
+            if a is None or a[0] is not None:
+                raise LakeSQLError(f"bad SET clause: {part!r}")
+            sets[a[1]] = a[2]
+        if not sets:
+            raise LakeSQLError("UPDATE needs at least one SET assignment")
+        n = [0]
+
+        def op(tx):
+            n[0] = tx.update(name, sets, where)
+
+        self._run(op)
+        return self._status("UPDATE", n[0])
+
+    def _delete(self, head: _Head, src) -> DataFrame:
+        name, rest, where = head.table, head.rest.strip(), None
+        m = re.match(r"WHERE\b", rest, re.I)
+        if name is None or (rest and m is None):
+            raise LakeSQLError(
+                "bad DELETE statement: expected DELETE FROM <table> "
+                "[WHERE pred]"
+            )
+        if m:
+            where = rest[m.end():].strip()
+            if not where:
+                raise LakeSQLError("DELETE ... WHERE needs a predicate")
+        self._bind_tables()  # subqueries in WHERE resolve pre-statement
+        n = [0]
+
+        def op(tx):
+            n[0] = tx.delete(name, where)
+
+        self._run(op)
+        return self._status("DELETE", n[0])
+
+    def _truncate(self, head: _Head, src) -> DataFrame:
+        # DuckDB's TRUNCATE spelling of the full-table DELETE: the engine's
+        # no-WHERE delete is metadata-only (files marked removed, no
+        # rewrite), so this is O(metadata) at any scale
+        name = head.table
+        if name is None or head.rest.strip():
+            raise LakeSQLError(
+                "bad TRUNCATE statement: expected TRUNCATE [TABLE] <table>"
+            )
+        n = [0]
+
+        def op(tx):
+            n[0] = tx.delete(name, None)
+
+        self._run(op)
+        return self._status("TRUNCATE", n[0])
+
+    def _checkpoint(self, head: _Head, src) -> DataFrame:
+        """DuckDB's CHECKPOINT flushes buffered WAL state to storage; the
+        lake analogue is flushing catalog-inlined rows into parquet files
+        (README.md:243 inlining). One table, all tables, one attached table
+        (``CHECKPOINT att.t``), or a whole attached catalog (``CHECKPOINT
+        att`` — DuckDB's database argument; _target resolves it)."""
+        if head.rest.strip():
+            raise LakeSQLError(
+                "bad CHECKPOINT statement: expected CHECKPOINT [[cat.]table "
+                "| cat]"
+            )
+        flushed = [head.table] if head.table else list(self.c.tables())
+
+        def op(tx):
+            for t in flushed:
+                tx.flush_inlined(t)
+
+        self._run(op)
+        return self._status("CHECKPOINT", len(flushed))
+
+    def _copy(self, head: _Head, src) -> DataFrame:
+        m = re.fullmatch(
+            rf"\s+FROM\s+DATABASE\s+({_IDENT})\s+TO\s+({_IDENT})",
+            head.rest,
+            re.I,
+        )
+        if m:
+            return self._session._copy_database_stmt(m.group(1), m.group(2))
+        m = re.fullmatch(
+            rf"\s*(\(.*\)|{_IDENT})\s+TO\s+'((?:[^']|'')*)'"
+            r"\s*(?:\(\s*(.*?)\s*\))?",
+            head.rest,
+            re.I | re.S,
+        )
+        if m:
+            # external file writes are not transactional — refuse
+            # inside BEGIN like the other self-committing verbs
+            self._no_txn("COPY")
+            return self._copy_stmt(
+                m.group(1), m.group(2).replace("''", "'"), m.group(3)
+            )
+        m = re.fullmatch(
+            rf"\s+({_IDENT})\s+FROM\s+'((?:[^']|'')*)'"
+            r"\s*(?:\(\s*(.*?)\s*\))?",
+            head.rest,
+            re.I | re.S,
+        )
+        if m:
+            # DuckDB's file-ingestion verb: read the external file(s) and
+            # INSERT them through the normal transactional write path
+            # (columns aligned by name, missing ones defaulted, unknown ones
+            # refused — the insert contract), so unlike COPY TO it composes
+            # with BEGIN/ROLLBACK; csv header detection as in _external_df
+            name, path = m.group(1), m.group(2).replace("''", "'")
+            o = self._copy_options(
+                m.group(3), path, "COPY FROM",
+                ("format", "header", "delimiter", "quote", "columns"),
+            )
+            df = self._external_df(
+                path, o["format"], o["header"], o.get("delimiter", ","),
+                quote=o.get("quote", '"'),
+                # mis-sniffed header/type recovery without leaving SQL:
+                # same struct grammar as read_csv's columns argument
+                columns=(
+                    self._parse_csv_columns(o["columns"])
+                    if "columns" in o else None
+                ),
+            )
             n = [0]
 
             def op(tx):
                 n[0] = tx.insert(name, df)
 
             self._run(op)
-            # count from the write itself — not a second source execution
-            return self._status("INSERT", n[0])
-
-        m = re.match(
-            rf"^UPDATE\s+({_IDENT})\s+SET\s+(.*)$",
-            q,
-            re.I | re.S,
+            return self._status("COPY", n[0])
+        raise LakeSQLError(
+            "bad COPY statement: expected COPY <table|(subquery)> "
+            "TO '<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER, "
+            "OVERWRITE, PARTITION_BY (cols))] or COPY <table> FROM "
+            "'<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER)]"
         )
-        if m:
-            name, rest = m.groups()
-            # split at the LAST top-level WHERE: a first-match split breaks
-            # SET expressions containing subqueries or 'where' in a literal
-            setlist, where = rest, None
-            wpos = top_words(rest, "WHERE")
-            if wpos:
-                setlist = rest[: wpos[-1]].rstrip()
-                where = rest[wpos[-1] + len("WHERE"):].strip()
-            # bind table views so scalar subqueries in SET/WHERE resolve
-            # (against pre-statement state, DuckDB UPDATE semantics)
-            self._bind_tables()
-            sets = {}
-            for part in items(setlist):
-                a = assignment(part)
-                if a is None or a[0] is not None:
-                    raise LakeSQLError(f"bad SET clause: {part!r}")
-                sets[a[1]] = a[2]
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.update(name, sets, where)
-
-            self._run(op)
-            return self._status("UPDATE", n[0])
-
-        m = re.match(
-            rf"^DELETE\s+FROM\s+({_IDENT})(?:\s+WHERE\s+(.*))?$", q, re.I | re.S
-        )
-        if m:
-            name, where = m.groups()
-            self._bind_tables()  # subqueries in WHERE resolve pre-statement
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.delete(name, where)
-
-            self._run(op)
-            return self._status("DELETE", n[0])
-
-        m = re.match(rf"^TRUNCATE\s+(?:TABLE\s+)?({_IDENT})$", q, re.I)
-        if m:
-            # DuckDB's TRUNCATE spelling of the full-table DELETE: the
-            # engine's no-WHERE delete is metadata-only (files marked
-            # removed, no rewrite), so this is O(metadata) at any scale
-            name = m.group(1)
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.delete(name, None)
-
-            self._run(op)
-            return self._status("TRUNCATE", n[0])
-
-        m = re.match(
-            r"^MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\b", q, re.I
-        )
-        if m:
-            return self._merge_stmt(
-                "MERGE INTO" + q[m.end():], evolve=bool(m.group(1))
-            )
-
-        m = re.match(rf"^CALL\s+({_IDENT})\s*\((.*)\)$", q, re.I | re.S)
-        if m:
-            return self._call_stmt(m.group(1), m.group(2))
-
-        if re.match(r"^COPY\b", q, re.I):
-            m = re.match(
-                rf"^COPY\s+(\(.*\)|{_IDENT})\s+TO\s+'((?:[^']|'')*)'"
-                r"\s*(?:\(\s*(.*?)\s*\))?$",
-                q,
-                re.I | re.S,
-            )
-            if m:
-                # external file writes are not transactional — refuse
-                # inside BEGIN like the other self-committing verbs
-                self._no_txn("COPY")
-                return self._copy_stmt(
-                    m.group(1), m.group(2).replace("''", "'"), m.group(3)
-                )
-            m = re.match(
-                rf"^COPY\s+({_IDENT})\s+FROM\s+'((?:[^']|'')*)'"
-                r"\s*(?:\(\s*(.*?)\s*\))?$",
-                q,
-                re.I | re.S,
-            )
-            if m:
-                # ingestion is an INSERT through the normal write path —
-                # transactional, composes with BEGIN
-                return self._copy_from_stmt(
-                    m.group(1), m.group(2).replace("''", "'"), m.group(3)
-                )
-            # a malformed COPY must fail IN-BAND, not fall through to
-            # _query and surface as an unrelated Catalyst parse error
-            raise LakeSQLError(
-                "bad COPY statement: expected COPY <table|(subquery)> "
-                "TO '<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER, "
-                "OVERWRITE, PARTITION_BY (cols))] or COPY <table> FROM "
-                "'<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER)]"
-            )
-
-        return self._query(q, version)
 
     # -- materialized views (continuous aggregates behind SQL) ----------
     _MV_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
@@ -1041,7 +1029,7 @@ class SQLExecutor:
             raise LakeSQLError("bad MERGE USING clause")
         return None, mm.group(1), rest[mm.end() :]
 
-    def _merge_stmt(self, q: str, evolve: bool = False) -> DataFrame:
+    def _merge(self, head: _Head, src) -> DataFrame:
         """``MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a] USING
         (<query>|table) [AS b] ON <equi-cond>
         [SEQUENCE BY <source col>]
@@ -1067,15 +1055,15 @@ class SQLExecutor:
         itself ships MERGE as SQL surface; the reference's demos reach the
         same state via UPDATE+INSERT pairs
         (demos/01_transaction_rollback/demo.py:58-102)."""
+        target, evolve = head.table, "EVOLUTION" in head.words
         m = re.match(
-            rf"^MERGE\s+INTO\s+({_IDENT})(?:\s+(?:AS\s+)?(?!USING\b)"
-            rf"({_IDENT}))?\s+USING\s+(.*)$",
-            q,
+            rf"(?:\s+(?:AS\s+)?(?!USING\b)({_IDENT}))?\s+USING\s+(.*)$",
+            head.rest,
             re.I | re.S,
         )
-        if not m:
+        if target is None or m is None:
             raise LakeSQLError("bad MERGE INTO syntax")
-        target, t_alias, rest = m.group(1), m.group(2), m.group(3)
+        t_alias, rest = m.group(1), m.group(2)
         if not self._table_exists(target):
             raise LakeSQLError(f"no such table: {target!r}")
         src_sql, src_name, rest = self._scan_merge_source(rest)
@@ -1110,8 +1098,9 @@ class SQLExecutor:
         clauses_text = rest[wpos[0] :]
 
         # source DataFrame binds pre-statement state (read-your-writes
-        # inside an open txn), exactly like UPDATE/DELETE subqueries
-        src_df = self._query(
+        # inside an open txn), exactly like UPDATE/DELETE subqueries; the
+        # issuing executor builds it, so it may read any catalog
+        src_df = src._query(
             src_sql if src_sql is not None else f"SELECT * FROM {src_name}"
         )
         sch = self._schema_of(target)
@@ -1284,16 +1273,17 @@ class SQLExecutor:
         def _parse_insert_sets(body):
             if body in ("", "*"):
                 return {}  # same-named source cols, then defaults
-            ms = re.match(
-                r"^\(([^)]*)\)\s*VALUES\s*\((.*)\)$", body, re.I | re.S
+            close = match_paren(body, 0) if body.startswith("(") else -1
+            ms = re.fullmatch(
+                r"\s*VALUES\s*\((.*)\)", body[close + 1:], re.I | re.S
             )
-            if not ms:
+            cols = names(body[1:close]) if close > 0 else None
+            if not ms or not cols:
                 raise LakeSQLError(
                     "INSERT clause must be *, empty, or "
                     "(cols) VALUES (exprs)"
                 )
-            cols = [c.strip() for c in ms.group(1).split(",")]
-            exprs = items(ms.group(2))
+            exprs = items(ms.group(1))
             if len(cols) != len(exprs):
                 raise LakeSQLError(
                     f"INSERT column list has {len(cols)} names, "
@@ -1644,54 +1634,31 @@ class SQLExecutor:
         )
         return True
 
-    def _copy_from_stmt(
-        self, name: str, path: str, opts_text: str
-    ) -> DataFrame:
-        """``COPY t FROM '<path>' [(FORMAT PARQUET|CSV [, HEADER
-        true|false] [, DELIMITER 'c'])]`` — DuckDB's file-ingestion verb:
-        read the external file(s) and INSERT them through the normal
-        transactional write path (columns aligned by name, missing ones
-        defaulted, unknown ones refused — the insert contract). Unlike
-        COPY TO, this IS transactional (it's an insert), so it composes
-        with BEGIN/ROLLBACK; csv header auto-detection as in
-        :meth:`_external_df`."""
-        fmt, header, delim, quote, columns = None, None, ",", '"', None
-        for item in items(opts_text) if opts_text else []:
-            mm = re.match(r"^([A-Za-z_]+)\s*(.*)$", item.strip(), re.S)
+    @staticmethod
+    def _copy_options(opts_text, path: str, what: str, keys) -> dict:
+        """COPY's ``(KEY value, ...)`` options as {key: value text without
+        outer quotes}; DELIM/SEP spell ``delimiter`` and TYPES ``columns``.
+        ``format`` comes from the path's suffix when absent, and
+        ``header`` is True/False, or None when absent."""
+        opts = {}
+        for item in items(opts_text or ""):
+            mm = re.match(r"([A-Za-z_]+)\s*(.*)$", item, re.S)
             if not mm:
                 raise LakeSQLError(f"bad COPY option {item!r}")
-            k, raw = mm.group(1).lower(), mm.group(2).strip()
-            v = raw.strip("'")
-            if k == "format":
-                fmt = v.lower()
-                if fmt not in ("parquet", "csv"):
-                    raise LakeSQLError(
-                        f"unsupported COPY format {v!r} (parquet/csv)"
-                    )
-            elif k == "header":
-                header = v.lower() != "false"
-            elif k in ("delimiter", "delim", "sep"):
-                delim = v
-            elif k == "quote":
-                quote = v
-            elif k in ("columns", "types"):
-                # mis-sniffed header/type recovery without leaving SQL:
-                # same struct grammar as read_csv's columns argument
-                columns = self._parse_csv_columns(raw)
-            else:
-                raise LakeSQLError(f"unknown COPY FROM option {k!r}")
-        if fmt is None:
-            fmt = "csv" if path.lower().endswith(".csv") else "parquet"
-        df = self._external_df(
-            path, fmt, header, delim, quote=quote, columns=columns
+            k = mm.group(1).lower()
+            k = {"delim": "delimiter", "sep": "delimiter", "types": "columns"}.get(k, k)
+            if k not in keys:
+                raise LakeSQLError(f"unknown {what} option {k!r}")
+            opts[k] = mm.group(2).strip().strip("'")
+        fmt = opts.get("format") or (
+            "csv" if path.lower().endswith(".csv") else "parquet"
         )
-        n = [0]
-
-        def op(tx):
-            n[0] = tx.insert(name, df)
-
-        self._run(op)
-        return self._status("COPY", n[0])
+        if fmt.lower() not in ("parquet", "csv"):
+            raise LakeSQLError(f"unsupported COPY format {fmt!r} (parquet/csv)")
+        opts["format"] = fmt.lower()
+        header = opts.get("header")
+        opts["header"] = None if header is None else header.lower() != "false"
+        return opts
 
     def _copy_stmt(self, srctok: str, path: str, opts_text: str) -> DataFrame:
         """``COPY <table|(subquery)> TO '<path>' [(FORMAT PARQUET|CSV
@@ -1714,51 +1681,26 @@ class SQLExecutor:
         """
         import glob as _glob
         import os
-        import shutil
-        import uuid as _uuid
 
         df = self._rows_arg(srctok, "COPY source")
-        fmt, header, delim, overwrite = None, None, ",", False
-        partition_by = []
-        for item in items(opts_text) if opts_text else []:
-            mm = re.match(
-                r"^([A-Za-z_]+)\s*(.*)$", item.strip(), re.S
+        o = self._copy_options(
+            opts_text, path, "COPY",
+            ("format", "header", "delimiter", "overwrite", "partition_by"),
+        )
+        fmt, header, delim = o["format"], o["header"], o.get("delimiter", ",")
+        overwrite = o.get("overwrite", "false").lower() != "false"
+        # DuckDB's hive-partitioned export: one value-directory tree, each
+        # partition written by its own tasks — the native distributed
+        # layout for downstream pruning
+        partition_by = [
+            c.strip("'\"") for c in items(unwrap_parens(o.get("partition_by", "")))
+        ]
+        missing = [c for c in partition_by if c not in df.columns]
+        if missing:
+            raise LakeSQLError(
+                f"PARTITION_BY column(s) {missing} not in the COPY source"
             )
-            if not mm:
-                raise LakeSQLError(f"bad COPY option {item!r}")
-            k, v = mm.group(1).lower(), mm.group(2).strip().strip("'")
-            if k == "partition_by":
-                # DuckDB's hive-partitioned export: one value-directory
-                # tree, each partition written by its own tasks — the
-                # native distributed layout for downstream pruning
-                partition_by = [
-                    c.strip().strip("'\"")
-                    for c in items(unwrap_parens(v.strip()))
-                ]
-                missing = [c for c in partition_by if c not in df.columns]
-                if missing:
-                    raise LakeSQLError(
-                        f"PARTITION_BY column(s) {missing} not in the "
-                        "COPY source"
-                    )
-                continue
-            if k == "format":
-                fmt = v.lower()
-                if fmt not in ("parquet", "csv"):
-                    raise LakeSQLError(
-                        f"unsupported COPY format {v!r} (parquet/csv)"
-                    )
-            elif k == "header":
-                header = v.lower() != "false"
-            elif k == "delimiter" or k == "delim" or k == "sep":
-                delim = v
-            elif k == "overwrite":
-                overwrite = v == "" or v.lower() != "false"
-            else:
-                raise LakeSQLError(f"unknown COPY option {k!r}")
         low = path.lower()
-        if fmt is None:
-            fmt = "csv" if low.endswith(".csv") else "parquet"
         single = low.endswith(".parquet") or low.endswith(".csv")
         if partition_by and single:
             raise LakeSQLError(
@@ -1834,21 +1776,8 @@ class SQLExecutor:
             return total
 
         if single:
-            parent = os.path.dirname(os.path.abspath(path)) or "."
-            tmp = os.path.join(
-                parent, f".__copy_tmp_{_uuid.uuid4().hex[:12]}"
-            )
-            try:
-                _write(tmp, df.coalesce(1))
-                parts = sorted(_glob.glob(os.path.join(tmp, "part-*")))
-                if len(parts) != 1:
-                    raise LakeSQLError(
-                        f"single-file COPY produced {len(parts)} parts"
-                    )
-                n = _rows_written(parts)
-                shutil.move(parts[0], path)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            self._write_single_file(path, lambda d: _write(d, df.coalesce(1)))
+            n = _rows_written([path])
         else:
             _write(path, df)
             pattern = (
@@ -1861,14 +1790,29 @@ class SQLExecutor:
             )
         return self._status("COPY", n)
 
-    def _call_stmt(self, fn: str, argstext: str) -> DataFrame:
+    def _call(self, head: _Head, src) -> DataFrame:
         """``CALL expire_snapshots(...)`` / ``CALL compact(t [, bytes])`` /
         ``CALL flush_inlined(t)`` / ``CALL gc([min_age_seconds])`` —
         SQL verbs over the existing maintenance engines (catalog.py), so a
         SQL-first maintenance job never needs the Python API. DuckLake
         spellings accepted: ducklake_expire_snapshots,
         ducklake_merge_adjacent_files (-> compact),
-        ducklake_cleanup_old_files (-> gc)."""
+        ducklake_cleanup_old_files (-> gc).
+
+        A CALL names its target catalog inside its arguments — a
+        qualified first argument of a table-level verb (``compact(att.t)``,
+        ``'att.t'``) or ``catalog => 'att'`` — so it is routed here, once
+        they are read, through _target; probe_vector_index is the one verb
+        that only reads. A QUOTED dotted argument only splits when its
+        prefix names an attached catalog (or 'main'): ``CALL
+        compact('a.b')`` on a table literally named ``a.b`` is a table
+        lookup, not a routing error."""
+        m = re.fullmatch(rf"\s*({_IDENT})\s*\((.*)\)", head.rest, re.S)
+        if m is None:
+            raise LakeSQLError(
+                "bad CALL statement: expected CALL <procedure>(<args>)"
+            )
+        fn, argstext = m.groups()
         self._no_txn("CALL")
         f = fn.lower()
         if f.startswith("ducklake_"):
@@ -1883,82 +1827,41 @@ class SQLExecutor:
                 named[mm.group(1).lower()] = mm.group(2).strip()
             else:
                 pos.append(a.strip())
-
-        def _val(tok):
-            t = tok.strip()
-            if t.startswith("'") and t.endswith("'"):
-                return t[1:-1].replace("''", "'")
-            if t.lower() in ("true", "false"):
-                return t.lower() == "true"
-            if re.fullmatch(_IDENT, t):
-                return t  # bare identifier = table name
-            try:
-                return int(t)
-            except ValueError:
-                try:
-                    return float(t)
-                except ValueError:
-                    raise LakeSQLError(f"bad CALL argument {tok!r}")
-
-        _df_arg = self._rows_arg
-
-        def _qual(tok):
-            """``att.t`` (bare or quoted) -> (catalog_key, table);
-            (None, None) when the token is undotted. A QUOTED dotted token
-            only splits when its prefix names an attached catalog (or
-            'main'): ``CALL compact('a.b')`` on a table literally named
-            ``a.b`` is a table lookup, not a routing error (r14 ADVICE —
-            bare ``att.t`` is unambiguous SQL qualification and always
-            splits)."""
-            t = tok.strip()
+        cat = None
+        if "catalog" in named and f in _CALL_CATALOG_VERBS:
+            cat = str(self._call_value(named.pop("catalog")))
+        elif pos and f in _CALL_TABLE_VERBS:
+            t = pos[0]
             quoted = t.startswith("'") and t.endswith("'")
             if quoted:
                 t = t[1:-1].replace("''", "'")
             mm = re.fullmatch(rf"({_IDENT})\s*\.\s*({_IDENT})", t)
-            if mm is None:
-                return (None, None)
-            cat = mm.group(1).lower()
-            if quoted and cat != "main" and cat not in self._attached:
-                return (None, None)
-            return (cat, mm.group(2))
+            if mm and (not quoted or self._catalog(mm.group(1))):
+                cat, pos[0] = mm.group(1), mm.group(2)
+        tgt, _ = self._target(
+            head._replace(cat=cat, writes=f != "probe_vector_index")
+        )
+        return tgt._run_call(fn, f, pos, named)
 
-        def _route(
-            cat: str, args: list, allow_readonly: bool = False
-        ) -> DataFrame:
-            """Re-issue this CALL against catalog ``cat``'s own engine —
-            the _attached_write dispatch pattern: self/'main'-qualified
-            strips the qualifier, READ_ONLY targets are refused (unless
-            the verb is a pure read — probe), unknown names error.
-            SQL-first maintenance of an attached catalog no longer needs
-            USE round trips (r13 verdict task 4)."""
-            stmt = f"CALL {f}({', '.join(args)})"
-            target_c = self._attached.get(cat)
-            if target_c is self.c or (target_c is None and cat == "main"):
-                return self.execute(stmt)
-            if target_c is None:
-                raise LakeSQLError(f"no attached catalog named {cat!r}")
-            if cat in self._att_readonly and not allow_readonly:
-                raise LakeSQLError(f"catalog {cat!r} is attached READ_ONLY")
-            return self._att_executor(cat).execute(stmt)
+    @staticmethod
+    def _call_value(tok):
+        t = tok.strip()
+        if t.startswith("'") and t.endswith("'"):
+            return t[1:-1].replace("''", "'")
+        if t.lower() in ("true", "false"):
+            return t.lower() == "true"
+        if re.fullmatch(_IDENT, t):
+            return t  # bare identifier = table name
+        try:
+            return int(t)
+        except ValueError:
+            try:
+                return float(t)
+            except ValueError:
+                raise LakeSQLError(f"bad CALL argument {tok!r}")
 
-        # table-level maintenance verbs accept a qualified <att>.<t> target
-        if f in ("compact", "optimize", "flush_inlined") and pos:
-            cat, qtbl = _qual(pos[0])
-            if cat is not None:
-                esc = qtbl.replace("'", "''")
-                return _route(
-                    cat,
-                    [f"'{esc}'"]
-                    + pos[1:]
-                    + [f"{k} => {v}" for k, v in named.items()],
-                )
-        # catalog-level verbs take the target as catalog => 'att'
-        if f in ("expire_snapshots", "gc") and "catalog" in named:
-            cat = str(_val(named.pop("catalog"))).lower()
-            return _route(
-                cat, pos + [f"{k} => {v}" for k, v in named.items()]
-            )
-
+    def _run_call(self, fn: str, f: str, pos: list, named: dict) -> DataFrame:
+        _val, _df_arg = self._call_value, self._rows_arg
         if f == "expire_snapshots":
             kw = {}
             for k, v in named.items():
@@ -2043,32 +1946,6 @@ class SQLExecutor:
             "build_vector_index", "extend_vector_index",
             "remove_vectors", "probe_vector_index",
         ):
-            # qualified routing, like the table/catalog maintenance verbs
-            # (r14 verdict task 3): CALL build_vector_index('att.idx', ...)
-            # or ... catalog => 'att' re-issues against the attachment's
-            # own engine, where the source/ids/queries operand resolves in
-            # THAT catalog. probe is a pure read — allowed against
-            # READ_ONLY attachments; the three mutating verbs are refused
-            # there like compact/optimize.
-            ro_ok = f == "probe_vector_index"
-            if "catalog" in named:
-                cat = str(_val(named.pop("catalog"))).lower()
-                return _route(
-                    cat,
-                    pos + [f"{k} => {v}" for k, v in named.items()],
-                    allow_readonly=ro_ok,
-                )
-            if pos:
-                cat, qidx = _qual(pos[0])
-                if cat is not None:
-                    esc = qidx.replace("'", "''")
-                    return _route(
-                        cat,
-                        [f"'{esc}'"]
-                        + pos[1:]
-                        + [f"{k} => {v}" for k, v in named.items()],
-                        allow_readonly=ro_ok,
-                    )
             # X15 lifecycle as SQL verbs — same engines as the Python API
             # (ducktales_spark/vector_index.py); probe returns its result
             # set like a table function
@@ -2739,9 +2616,15 @@ class SQLExecutor:
         )
         return self._status("CREATE MATERIALIZED VIEW", 0)
 
-    def _refresh_mv(self, name: str) -> DataFrame:
+    def _refresh(self, head: _Head, src) -> DataFrame:
         from .rollup import refresh_rollup
 
+        name = head.table
+        if name is None or head.rest.strip():
+            raise LakeSQLError(
+                "bad REFRESH statement: expected REFRESH MATERIALIZED VIEW "
+                "<name>"
+            )
         self._no_txn("REFRESH MATERIALIZED VIEW")
         if not self._mv_exists(name):
             raise LakeSQLError(f"no such materialized view: {name!r}")
@@ -2850,7 +2733,7 @@ class SQLExecutor:
             return "'" + v.replace("'", "''") + "'"
         return str(v)
 
-    def _export_database(self, path: str, fmt: str) -> DataFrame:
+    def _export(self, head: _Head, src) -> DataFrame:
         """``EXPORT DATABASE '<dir>' [(FORMAT PARQUET|CSV)]`` — DuckDB's
         file-based portability verb: ``schema.sql`` (CREATE TABLE with
         NOT NULL / DEFAULT / PRIMARY KEY / PARTITION BY, then CREATE VIEW),
@@ -2863,9 +2746,19 @@ class SQLExecutor:
         state (``hll_*`` MV companions) or nested array/map/struct
         columns fails with a pointed error naming it — those types do
         not round-trip CSV losslessly, use PARQUET."""
+        m = re.fullmatch(
+            r"\s+DATABASE\s+'((?:[^']|'')*)'\s*(?:\(\s*FORMAT\s+(\w+)\s*\))?",
+            head.rest,
+            re.I,
+        )
+        if m is None:
+            raise LakeSQLError(
+                "bad EXPORT statement: expected EXPORT DATABASE '<dir>' "
+                "[(FORMAT PARQUET|CSV)]"
+            )
         import os as _os
 
-        fmt = fmt.upper()
+        path, fmt = m.group(1).replace("''", "'"), (m.group(2) or "PARQUET").upper()
         if fmt not in ("PARQUET", "CSV"):
             raise LakeSQLError(
                 f"EXPORT DATABASE format {fmt!r} not supported "
@@ -2934,18 +2827,15 @@ class SQLExecutor:
                     f"COPY {t} FROM '{esc}/{t}.csv' "
                     f"(FORMAT CSV, HEADER true, COLUMNS {{{cols_struct}}});"
                 )
-                self._write_single_file(
-                    self.c.read(t),
-                    _os.path.join(path, f"{t}.csv"),
-                    "csv",
-                )
             else:
                 load_lines.append(f"COPY {t} FROM '{esc}/{t}.parquet';")
-                self._write_single_file(
-                    self.c.read(t),
-                    _os.path.join(path, f"{t}.parquet"),
-                    "parquet",
-                )
+            # CSV carries a header so the import aligns columns by name
+            w = self.c.read(t).coalesce(1).write.mode("overwrite")
+            self._write_single_file(
+                _os.path.join(path, f"{t}.{fmt.lower()}"),
+                lambda d: w.option("header", True).csv(d)
+                if fmt == "CSV" else w.parquet(d),
+            )
         for vname, vsql in self.c.views().items():
             schema_lines.append(f"CREATE VIEW {vname} AS {vsql};")
         with open(_os.path.join(path, "schema.sql"), "w") as fh:
@@ -2954,15 +2844,21 @@ class SQLExecutor:
             fh.write("\n".join(load_lines) + "\n")
         return self._status("EXPORT DATABASE", len(tables))
 
-    def _import_database(self, path: str) -> DataFrame:
+    def _import(self, head: _Head, src) -> DataFrame:
         """``IMPORT DATABASE '<dir>'`` — executes the exported
         ``schema.sql`` then ``load.sql`` (quote-aware statement split,
-        the shape _export_database writes), then restamps ONLY the
+        the shape _export writes), then restamps ONLY the
         rollup meta companions this import created at this catalog's
         HEAD (source-version stamps are meaningless here — same rule as
         catalog.export_to). Pre-existing MVs in the destination keep
         their stamps: advancing them would skip their unfolded base
         deltas on the next REFRESH."""
+        m = re.fullmatch(r"\s+DATABASE\s+'((?:[^']|'')*)'", head.rest, re.I)
+        if m is None:
+            raise LakeSQLError(
+                "bad IMPORT statement: expected IMPORT DATABASE '<dir>'"
+            )
+        path = m.group(1).replace("''", "'")
         import os as _os
 
         self._no_txn("IMPORT DATABASE")
@@ -2976,41 +2872,33 @@ class SQLExecutor:
                 )
             with open(p) as fh:
                 for stmt in statements(fh.read()):
-                    m = re.match(
-                        r"CREATE\s+TABLE\s+([A-Za-z_][A-Za-z0-9_]*)",
-                        stmt,
-                        re.I,
-                    )
-                    if m:
-                        created.add(m.group(1))
+                    h = _head(strip(stmt))
+                    if h.verb == "CREATE" and "TABLE" in h.words:
+                        created.add(h.table)
                     self.execute(stmt)
                     n += 1
         self.c.restamp_rollup_metas(only=created)
         return self._status("IMPORT DATABASE", n)
 
-    def _write_single_file(
-        self, df: DataFrame, target: str, fmt: str = "parquet"
-    ) -> None:
-        """One parquet/csv FILE at ``target`` (atomic temp-dir + move),
-        the COPY TO single-file pattern. CSV is written with a header so
-        the IMPORT side aligns columns by name."""
+    @staticmethod
+    def _write_single_file(target: str, write) -> None:
+        """One FILE at ``target``: ``write(dir)`` writes a one-partition
+        frame into a temp dir next to the target, and its one part file
+        is moved into place, so a crash never leaves a half-written
+        target."""
         import glob as _glob
         import os as _os
         import shutil as _shutil
         import uuid as _uuid
 
         parent = _os.path.dirname(_os.path.abspath(target)) or "."
-        tmp = _os.path.join(parent, f".__exp_tmp_{_uuid.uuid4().hex[:12]}")
+        tmp = _os.path.join(parent, f".__tmp_{_uuid.uuid4().hex[:12]}")
         try:
-            w = df.coalesce(1).write.mode("overwrite")
-            if fmt == "csv":
-                w.option("header", True).csv(tmp)
-            else:
-                w.parquet(tmp)
+            write(tmp)
             parts = sorted(_glob.glob(_os.path.join(tmp, "part-*")))
             if len(parts) != 1:
                 raise LakeSQLError(
-                    f"single-file export produced {len(parts)} parts"
+                    f"single-file write produced {len(parts)} parts"
                 )
             _shutil.move(parts[0], target)
         finally:
@@ -3057,7 +2945,7 @@ class SQLExecutor:
         "q50 string, q75 string, count bigint, null_percentage decimal(5,2)"
     )
 
-    def _summarize_stmt(self, target: str) -> DataFrame:
+    def _summarize(self, head: _Head, src) -> DataFrame:
         """``SUMMARIZE <table>`` / ``SUMMARIZE <select>`` — DuckDB's
         per-column profile (min/max/approx_unique/avg/std/quartiles/count/
         null%), same column layout. ONE global aggregation over one scan
@@ -3069,6 +2957,7 @@ class SQLExecutor:
         the same approximations DuckDB's SUMMARIZE makes. min/max/avg ride
         only on types where they are defined (DuckDB's behavior: string
         columns profile min/max but not avg; complex types neither)."""
+        target = head.rest.strip()
         from decimal import Decimal
 
         from pyspark.sql import functions as F, types as T
@@ -3268,48 +3157,21 @@ class SQLExecutor:
 
     # -- attached catalogs (ATTACH 'path' AS name) -----------------------
     def _att_executor(self, cat: str) -> "SQLExecutor":
-        """The lazily-built per-attached-catalog delegate executor.
-
-        The delegate sees the SAME attach list as this executor (minus
-        itself, plus ``main`` for the bound catalog), refreshed on every
-        delegation so ATTACH/DETACH changes propagate: under ``USE prod``,
-        ``SELECT ... FROM dev.t`` and ``INSERT INTO main.t ...`` keep
-        resolving — DuckDB's attach list stays usable regardless of the
-        default catalog."""
-        key = cat.lower()
-        dex = self._att_sql.get(key)
+        """The executor of the attached catalog ``cat``: one per
+        attachment, made and kept by the session. It shares the session's
+        attach list, so under ``USE prod`` a qualified ``dev.t`` or
+        ``main.t`` resolves as it does outside USE — DuckDB's attach list
+        stays usable whatever the default catalog is."""
+        s, key = self._session, cat.lower()
+        dex = s._att_sql.get(key)
         if dex is None:
-            dex = self._att_sql[key] = SQLExecutor(self._attached[key])
-        # the delegate's OWN alias stays in the list: self-qualified
-        # statements (`USE prod; INSERT INTO prod.t ...`) resolve via the
-        # is-self identity check in the dispatch, which strips the
-        # qualifier instead of spawning a second executor
-        shared = dict(self._attached)
-        # setdefault, not assignment: in a DELEGATE executor the inherited
-        # 'main' already names the top-level bound catalog — rebinding it
-        # to this (USE'd) catalog would make main.* mean different things
-        # at different delegation depths
-        shared.setdefault("main", self.c)
-        dex._attached = shared
-        dex._att_readonly = {
-            k for k in self._att_readonly if k != key
-        }
-        # drop delegate sub-executors whose name was re-bound to a
-        # different catalog (DETACH + ATTACH same alias, new path)
-        dex._att_sql = {
-            k: v
-            for k, v in dex._att_sql.items()
-            if shared.get(k) is v.c
-        }
+            dex = s._att_sql[key] = SQLExecutor(s._attached[key])
+            dex._session, dex._alias = s, key
+            dex._attached, dex._att_readonly = s._attached, s._att_readonly
+            dex._att_sql = s._att_sql
         return dex
 
-    def _attach_stmt(
-        self,
-        path: str,
-        name: str,
-        read_only: bool = False,
-        data_path: Optional[str] = None,
-    ) -> DataFrame:
+    def _attach(self, head: _Head, src) -> DataFrame:
         """``ATTACH '<path>' AS <name> [(READ_ONLY | DATA_PATH '<dir>',
         ...)]`` — bind a SECOND lake catalog for qualified reads and
         writes, the reference's side-by-side dev/prod migration flow
@@ -3325,181 +3187,77 @@ class SQLExecutor:
         where a default derives from the catalog location. The
         ``ducklake:`` / ``lake:`` URL prefixes are accepted and
         stripped."""
-        self._no_txn("ATTACH")
-        key = name.lower()
+        m = re.fullmatch(
+            rf"\s*'((?:[^']|'')*)'\s+AS\s+({_IDENT})\s*(?:\((.*)\))?",
+            head.rest,
+            re.I | re.S,
+        )
+        if m is None:
+            raise LakeSQLError(
+                "bad ATTACH statement: expected ATTACH '<path>' AS <name> "
+                "[(READ_ONLY, DATA_PATH '<dir>')]"
+            )
+        path, key = m.group(1).replace("''", "'"), m.group(2).lower()
+        read_only, data_path = False, None
+        for item in items(m.group(3)) if m.group(3) else []:
+            if re.fullmatch(r"READ_ONLY", item, re.I):
+                read_only = True
+                continue
+            mm = re.fullmatch(r"DATA_PATH\s+'((?:[^']|'')*)'", item, re.I)
+            if mm is None:
+                raise LakeSQLError(
+                    f"unknown ATTACH option {item!r} "
+                    "(READ_ONLY, DATA_PATH '<dir>')"
+                )
+            data_path = mm.group(1).replace("''", "'")
+        s = self._session
+        s._no_txn("ATTACH")
         if key == "main":
             # 'main' names the BOUND catalog everywhere (qualified
-            # reads/writes, COPY FROM DATABASE, delegate attach lists) —
-            # letting an attachment shadow it would make the same
-            # spelling target two different catalogs depending on verb
+            # reads/writes, COPY FROM DATABASE) — letting an attachment
+            # shadow it would make the same spelling target two different
+            # catalogs depending on verb
             raise LakeSQLError(
                 "'main' is reserved for the bound catalog; "
                 "pick another alias"
             )
-        if key in self._attached:
-            raise LakeSQLError(f"catalog {name!r} is already attached")
+        if key in s._attached:
+            raise LakeSQLError(f"catalog {m.group(2)!r} is already attached")
         for pref in ("ducklake:", "lake:"):
             if path.startswith(pref):
                 path = path[len(pref):]
         from .catalog import LakeCatalog, LakeError
 
         try:
-            self._attached[key] = LakeCatalog(
+            s._attached[key] = LakeCatalog(
                 path, self.c.spark, data_dir=data_path
             )
         except LakeError as e:
             raise LakeSQLError(str(e)) from e
         if read_only:
-            self._att_readonly.add(key)
+            s._att_readonly.add(key)
         return self._status("ATTACH", 0)
 
-    def _detach_stmt(self, name: str) -> DataFrame:
-        self._no_txn("DETACH")
-        dex = self._att_sql.get(name.lower())
+    def _detach(self, head: _Head, src) -> DataFrame:
+        m = re.fullmatch(rf"\s+({_IDENT})", head.rest)
+        if m is None:
+            raise LakeSQLError("bad DETACH statement: expected DETACH <name>")
+        s, key = self._session, m.group(1).lower()
+        s._no_txn("DETACH")
+        dex = s._att_sql.get(key)
         if dex is not None and dex._tx is not None:
             # detaching would silently discard the staged writes
             raise LakeSQLError(
-                f"catalog {name!r} has an open transaction: COMMIT or "
-                "ROLLBACK it before DETACH"
+                f"catalog {m.group(1)!r} has an open transaction: COMMIT "
+                "or ROLLBACK it before DETACH"
             )
-        if self._attached.pop(name.lower(), None) is None:
-            raise LakeSQLError(f"no attached catalog named {name!r}")
-        self._att_sql.pop(name.lower(), None)
-        self._att_readonly.discard(name.lower())
-        if self._use == name.lower():
-            self._use = None  # default falls back to the bound catalog
+        if s._attached.pop(key, None) is None:
+            raise LakeSQLError(f"no attached catalog named {m.group(1)!r}")
+        s._att_sql.pop(key, None)
+        s._att_readonly.discard(key)
+        if s._use == key:
+            s._use = None  # default falls back to the bound catalog
         return self._status("DETACH", 0)
-
-    def _attached_write(
-        self, verb: str, cat: str, tbl: str, rest: str
-    ) -> DataFrame:
-        """Qualified-target DML/DDL into an ATTACH'd catalog — the
-        reference's migration demo creates tables in and inserts into the
-        attached prod catalog (demos/05_catalog_portability/demo.py:
-        199-280). Statements whose whole scope is the attached catalog
-        (VALUES inserts, UPDATE/DELETE/TRUNCATE, column-def CREATE, DROP,
-        ALTER) delegate to a per-catalog sub-executor with the qualifier
-        stripped; SELECT-sourced INSERT and CTAS evaluate the source in
-        THIS executor's scope (main tables + qualified attached reads)
-        and write the result through the attached catalog's transaction —
-        that is what makes cross-catalog ``CREATE TABLE prod.t AS SELECT
-        ... FROM main_table`` work in both directions. Writes autocommit
-        in the attached catalog and are refused inside an open main
-        transaction (one write target per transaction, DuckDB's
-        cross-database rule)."""
-        self._no_txn(f"write to attached catalog {cat!r}")
-        key = cat.lower()
-        if key in self._att_readonly:
-            raise LakeSQLError(
-                f"catalog {cat!r} is attached READ_ONLY"
-            )
-        dex = self._att_executor(cat)
-        vu = re.sub(r"\s+", " ", verb.upper())
-        if vu.startswith("INSERT"):
-            body, cols = rest, None
-            mm = re.match(r"^\s*\(([^)]*)\)\s*(.*)$", body, re.S)
-            if mm and all(
-                re.fullmatch(_IDENT, c.strip())
-                for c in mm.group(1).split(",")
-            ):
-                cols = [c.strip() for c in mm.group(1).split(",")]
-                body = mm.group(2)
-            if re.match(r"^\s*VALUES\b", body, re.I):
-                # self-contained: the sub-executor handles typing,
-                # inlining fast path, and OR REPLACE/IGNORE identically
-                return dex.execute(f"{verb} {tbl}{rest}")
-            df = self._query(body)  # MAIN scope: cross-catalog source
-            if cols is not None:
-                if len(cols) != len(df.columns):
-                    raise LakeSQLError(
-                        f"column list has {len(cols)} names, query "
-                        f"produces {len(df.columns)} columns"
-                    )
-                df = df.toDF(*cols)
-            mmode = re.match(r"^INSERT OR (REPLACE|IGNORE)\b", vu)
-            if mmode:
-                return dex._upsert_insert(tbl, df, mmode.group(1))
-            n = [0]
-            dex._run(lambda tx: n.__setitem__(0, tx.insert(tbl, df)))
-            return self._status("INSERT", n[0])
-        if vu.startswith("CREATE"):
-            mm = re.match(
-                r"^\s*(?:PARTITION\s+BY\s*\(([^()]+)\)\s*)?AS\s+(.*)$",
-                rest,
-                re.I | re.S,
-            )
-            if mm:  # CTAS with a main-scope source query
-                pby, body = mm.groups()
-                partition_by = (
-                    [c.strip() for c in pby.split(",")] if pby else ()
-                )
-                df = self._query(body)
-                replace = "OR REPLACE" in vu
-                n = [0]
-
-                def op(tx):
-                    st = tx._state(tbl, must_exist=False)
-                    if replace and st is not None and not st.dropped:
-                        tx.drop_table(tbl)
-                    n[0] = tx.ctas(tbl, df, partition_by=partition_by)
-
-                dex._run(op)
-                return self._status("CREATE TABLE AS", n[0])
-            return dex.execute(f"{verb} {tbl}{rest}")  # column-def form
-        # UPDATE / DELETE / TRUNCATE / DROP / ALTER: scope is the
-        # attached table alone — delegate with the qualifier stripped
-        return dex.execute(f"{verb} {tbl}{rest}")
-
-    def _attached_merge(
-        self, cat: str, tbl: str, rest: str, evolve: bool
-    ) -> DataFrame:
-        """``MERGE [WITH SCHEMA EVOLUTION] INTO <att>.<t> USING ...`` —
-        the last qualified write verb (r12 refused it). Same split as
-        _attached_write's INSERT/CTAS: the USING payload evaluates in
-        THIS executor's scope (main tables + qualified attached reads),
-        lands as a temp view, and the delegate executor runs the MERGE
-        against it through the attached catalog's transaction — cross-
-        catalog upserts (``MERGE INTO prod.t USING dev_changes ...``)
-        work in both directions."""
-        import uuid as _uuid
-
-        self._no_txn(f"write to attached catalog {cat!r}")
-        if cat.lower() in self._att_readonly:
-            raise LakeSQLError(
-                f"catalog {cat!r} is attached READ_ONLY"
-            )
-        dex = self._att_executor(cat)
-        m = re.match(
-            rf"^(\s+(?:AS\s+)?(?!USING\b){_IDENT})?\s+USING\s+(.*)$",
-            rest,
-            re.I | re.S,
-        )
-        if not m:
-            raise LakeSQLError("bad MERGE INTO syntax")
-        t_alias_txt = m.group(1) or ""
-        src_sql, src_name, tail = self._scan_merge_source(m.group(2))
-        df = self._query(  # MAIN scope: cross-catalog source
-            src_sql if src_sql is not None else f"SELECT * FROM {src_name}"
-        )
-        view = f"__merge_src_{_uuid.uuid4().hex[:12]}"
-        # keep the original alias; an unaliased table source keeps its
-        # name as the alias so qualified references still resolve
-        mm = re.match(rf"^\s*(?:AS\s+)?(?!ON\b)({_IDENT})", tail, re.I)
-        if mm:
-            alias_txt, tail = f" AS {mm.group(1)}", tail[mm.end():]
-        elif src_name is not None:
-            alias_txt = f" AS {src_name.rsplit('.', 1)[-1].strip()}"
-        else:
-            alias_txt = ""
-        df.createOrReplaceTempView(view)
-        try:
-            return dex._merge_stmt(
-                f"MERGE INTO {tbl}{t_alias_txt} USING {view}{alias_txt}"
-                f"{tail}",
-                evolve=evolve,
-            )
-        finally:
-            self.c.spark.catalog.dropTempView(view)
 
     def _copy_database_stmt(self, src: str, dst: str) -> DataFrame:
         """``COPY FROM DATABASE a TO b`` — DuckDB's whole-catalog
@@ -3565,7 +3323,7 @@ class SQLExecutor:
             everywhere."""
             ac = self._attached.get(cat.lower())
             if ac is None and cat.lower() == "main":
-                ac = self.c
+                ac = self._session.c
             if ac is None:
                 return None
             if ac is self.c and version is None:
@@ -3594,7 +3352,7 @@ class SQLExecutor:
             )
             ac = self._attached.get(cat.lower())
             if ac is None and cat.lower() == "main":
-                ac = self.c
+                ac = self._session.c
             if ac is None:
                 return m.group(0)
             if kind.upper() == "VERSION":
@@ -3802,7 +3560,9 @@ class SQLExecutor:
             catalog's own mount alias — is the bound catalog."""
             key = dbarg.strip().strip("'\"").lower()
             got = self._attached.get(key)
-            return (got, key) if got is not None else (self.c, "main")
+            if got is not None:
+                return got, key
+            return (self._session.c if key == "main" else self.c), "main"
 
         def _snaps(m: "re.Match") -> str:
             cat, key = _cat_for(m.group(1))
@@ -3960,34 +3720,6 @@ class SQLExecutor:
         schemas = self.c._schemas_at(tid, v)
         return schemas[max(schemas)]
 
-    def _parse_coldefs(self, cols: str) -> TableSchema:
-        fields, pk = [], []
-        for i, part in enumerate(items(cols)):
-            mm = re.match(
-                r"^PRIMARY\s+KEY\s*\(([^)]*)\)$", part, re.I
-            )  # table-level PK
-            if mm:
-                pk.extend(c.strip() for c in mm.group(1).split(","))
-                continue
-            mm = re.match(
-                rf"^({_IDENT})\s+([A-Za-z0-9_]+(?:\s*\([^)]*\))?)(.*)$",
-                part,
-                re.S,
-            )
-            if not mm:
-                raise LakeSQLError(f"bad column definition: {part!r}")
-            name, typ, rest = mm.group(1), _map_type(mm.group(2)), mm.group(3)
-            nullable = not re.search(r"\bNOT\s+NULL\b", rest, re.I)
-            if re.search(r"\bPRIMARY\s+KEY\b", rest, re.I):
-                pk.append(name)
-                nullable = False
-            md = re.search(r"\bDEFAULT\s+('[^']*'|\S+)", rest, re.I)
-            default = self._literal(md.group(1)) if md else None
-            fields.append(
-                Field(len(fields) + 1, name, typ, nullable, default)
-            )
-        return TableSchema(tuple(fields), tuple(pk))
-
     _EXPR_DEFAULTS = re.compile(
         r"^(CURRENT_TIMESTAMP|CURRENT_DATE|LOCALTIMESTAMP|"
         r"NOW\(\)|RANDOM\(\)|RAND\(\)|UUID\(\))$",
@@ -4014,3 +3746,44 @@ class SQLExecutor:
         return self.c.spark.sql(
             f"SELECT * FROM VALUES ('{op}', {int(rows)}L) AS t(op, rows)"
         )
+
+
+# verb -> (handler, writes). A writing verb's handler runs on the executor
+# _target picks. CALL names its target inside its arguments, so _call routes
+# it through _target itself once they are read. A verb without an
+# entry is a read query.
+_VERBS = {
+    "BEGIN": (SQLExecutor._txn, False),
+    "COMMIT": (SQLExecutor._txn, False),
+    "ROLLBACK": (SQLExecutor._txn, False),
+    "USE": (SQLExecutor._use_stmt, False),
+    "ATTACH": (SQLExecutor._attach, False),
+    "DETACH": (SQLExecutor._detach, False),
+    "SHOW": (SQLExecutor._show, False),
+    "DESCRIBE": (SQLExecutor._describe_stmt, False),
+    "DESC": (SQLExecutor._describe_stmt, False),
+    "PRAGMA": (SQLExecutor._pragma, False),
+    "SUMMARIZE": (SQLExecutor._summarize, False),
+    "EXPORT": (SQLExecutor._export, False),
+    "CALL": (SQLExecutor._call, False),
+    "IMPORT": (SQLExecutor._import, True),
+    "CREATE": (SQLExecutor._create, True),
+    "DROP": (SQLExecutor._drop, True),
+    "ALTER": (SQLExecutor._alter, True),
+    "INSERT": (SQLExecutor._insert, True),
+    "UPDATE": (SQLExecutor._update, True),
+    "DELETE": (SQLExecutor._delete, True),
+    "TRUNCATE": (SQLExecutor._truncate, True),
+    "MERGE": (SQLExecutor._merge, True),
+    "REFRESH": (SQLExecutor._refresh, True),
+    "CHECKPOINT": (SQLExecutor._checkpoint, True),
+    "COPY": (SQLExecutor._copy, True),
+}
+_VECTOR_VERBS = (
+    "build_vector_index", "extend_vector_index", "remove_vectors",
+    "probe_vector_index",
+)
+# CALL verbs whose first argument may be catalog-qualified, and those that
+# take their catalog as catalog => 'name'
+_CALL_TABLE_VERBS = frozenset(("compact", "optimize", "flush_inlined") + _VECTOR_VERBS)
+_CALL_CATALOG_VERBS = frozenset(("expire_snapshots", "gc") + _VECTOR_VERBS)

@@ -4247,3 +4247,156 @@ def test_concatenated_literals_do_not_prune_files(lake):
     done = lake.sql("UPDATE t SET v = 1 WHERE s = 'a' || 'b'").collect()
     assert done[0]["rows"] == 1
     assert {r["s"] for r in lake.read("t").collect() if r["v"] == 1} == {"ab"}
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "CREATE TABLE x USING parquet AS SELECT 1 AS a",
+        "CREATE TABLE y (a INT) USING parquet",
+    ],
+)
+def test_write_verb_never_reaches_spark_ddl(lake, spark, stmt):
+    """A write verb whose syntax the lake does not accept raises in-band:
+    handed to Spark, these made warehouse tables outside the lake (no
+    snapshot, absent from SHOW TABLES) and reported success."""
+    import os
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    before = set(os.listdir(wh)) if os.path.isdir(wh) else set()
+    n_snapshots = len(lake.snapshots())
+    with pytest.raises(LakeSQLError):
+        lake.sql(stmt)
+    after = set(os.listdir(wh)) if os.path.isdir(wh) else set()
+    assert after == before and not {"x", "y"} & after
+    assert not [
+        t for t in spark.catalog.listTables() if not t.isTemporary
+    ]
+    assert lake.tables() == [] and len(lake.snapshots()) == n_snapshots
+
+
+def test_update_with_empty_where_is_refused(lake):
+    """``UPDATE t SET v = 0 WHERE`` with nothing after WHERE is an error,
+    not an update of every row."""
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)")
+    with pytest.raises(LakeSQLError, match="WHERE"):
+        lake.sql("UPDATE t SET v = 0 WHERE")
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [
+        (1, 1), (2, 2), (3, 3)
+    ]
+
+
+def test_delete_with_empty_where_is_refused(lake):
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)")
+    with pytest.raises(LakeSQLError, match="WHERE"):
+        lake.sql("DELETE FROM t WHERE ")
+    assert lake.count("t") == 3
+
+
+def test_create_table_array_column_keeps_its_element_type(lake):
+    """``ARRAY<FLOAT>`` is stored as ``array<float>``; read as ``array``,
+    every later INSERT failed."""
+    lake.sql("CREATE TABLE a (id INT, v ARRAY<FLOAT>, m MAP<STRING, INT>)")
+    lake.sql("INSERT INTO a VALUES (1, array(1.5, 2.5), map('k', 3))")
+    desc = {
+        r["column_name"]: r["column_type"]
+        for r in lake.sql("DESCRIBE a").collect()
+    }
+    assert desc == {"id": "INT", "v": "ARRAY<FLOAT>", "m": "MAP<STRING, INT>"}
+    row = lake.read("a").collect()[0]
+    assert (row["v"], row["m"]) == ([1.5, 2.5], {"k": 3})
+
+
+def test_add_column_with_array_type(lake):
+    lake.sql("CREATE TABLE b (id INT)")
+    lake.sql("ALTER TABLE b ADD COLUMN v ARRAY<INT>")
+    lake.sql("INSERT INTO b VALUES (1, array(1, 2))")
+    assert lake.read("b").collect()[0]["v"] == [1, 2]
+
+
+@pytest.mark.parametrize(
+    "literal, value",
+    [("'it''s here'", "it's here"), ('"x y"', "x y")],
+)
+def test_column_default_is_one_whole_literal(lake, literal, value):
+    """A DEFAULT literal is read whole: a doubled quote inside it, and a
+    double-quoted literal with a space in it."""
+    lake.sql(f"CREATE TABLE d (id INT, s STRING DEFAULT {literal} NOT NULL)")
+    lake.sql("INSERT INTO d (id) VALUES (1)")
+    lake.sql("ALTER TABLE d ADD COLUMN s2 STRING DEFAULT " + literal)
+    lake.sql("INSERT INTO d (id) VALUES (2)")
+    got = sorted(tuple(r) for r in lake.read("d").collect())
+    assert got == [(1, value, value), (2, value, value)]
+
+
+@pytest.fixture(params=["", "dev."], ids=["bound", "attached"])
+def qual(request, lake, spark, tmp_path):
+    """A table-name prefix naming the bound catalog or an attached one,
+    and the catalog it names."""
+    dev_path = str(tmp_path / "dev")
+    dev = LakeCatalog(dev_path, spark, inline_threshold=4)
+    lake.sql(f"ATTACH '{dev_path}' AS dev")
+    return request.param, (dev if request.param else lake)
+
+
+def _schema(cat, name):
+    v = cat.current_version()
+    tid, _ = cat._table_at(name, v)
+    schemas = cat._schemas_at(tid, v)
+    return schemas[max(schemas)]
+
+
+def test_insert_column_list_with_backticked_names(lake, qual):
+    p, cat = qual
+    lake.sql(f"CREATE TABLE {p}t (a INT, b STRING)")
+    lake.sql(f"INSERT INTO {p}t (`b`, a) VALUES ('x', 1)")
+    lake.sql(f"INSERT INTO {p}t (`b`, `a`) SELECT 'y', 2")
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == [
+        (1, "x"), (2, "y")
+    ]
+
+
+def test_create_table_backticked_keyword_column(lake, qual):
+    p, cat = qual
+    lake.sql(f"CREATE TABLE {p}w (`where` STRING, id INT)")
+    lake.sql(f"INSERT INTO {p}w VALUES ('b', 2)")
+    assert [f.name for f in _schema(cat, "w").fields] == ["where", "id"]
+    assert [tuple(r) for r in cat.read("w").collect()] == [("b", 2)]
+
+
+def test_primary_key_list_with_backticked_name(lake, qual):
+    p, cat = qual
+    lake.sql(f"CREATE TABLE {p}k (id INT, v STRING, PRIMARY KEY (`id`))")
+    assert _schema(cat, "k").primary_key == ("id",)
+    lake.sql(f"INSERT INTO {p}k VALUES (1, 'a')")
+    lake.sql(f"INSERT OR REPLACE INTO {p}k VALUES (1, 'b')")
+    assert [tuple(r) for r in cat.read("k").collect()] == [(1, "b")]
+
+
+def test_merge_insert_column_list_with_backticked_names(lake, qual):
+    p, cat = qual
+    lake.sql(f"CREATE TABLE {p}m (id INT, v INT)")
+    lake.sql(f"INSERT INTO {p}m VALUES (1, 10)")
+    lake.sql(
+        f"MERGE INTO {p}m t USING (SELECT 1 AS id, 11 AS v UNION ALL "
+        "SELECT 2, 20) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (`id`, `v`) VALUES (s.id, s.v)"
+    )
+    assert sorted(tuple(r) for r in cat.read("m").collect()) == [
+        (1, 11), (2, 20)
+    ]
+
+
+def test_partition_and_zorder_lists_with_backticked_names(lake, qual):
+    p, cat = qual
+    lake.sql(f"CREATE TABLE {p}pt (a INT, b INT) PARTITION BY (`a`)")
+    assert tuple(_schema(cat, "pt").partition_by) == ("a",)
+    lake.sql(f"CREATE TABLE {p}pc PARTITION BY (`b`) AS SELECT 1 AS a, 2 AS b")
+    assert tuple(_schema(cat, "pc").partition_by) == ("b",)
+    lake.sql(f"ALTER TABLE {p}pt SET ZORDER BY (`a`, b)")
+    assert tuple(_schema(cat, "pt").zorder_by) == ("a", "b")
+    lake.sql(f"ALTER TABLE {p}pt SET PARTITIONED BY (`b`)")
+    assert tuple(_schema(cat, "pt").partition_by) == ("b",)
