@@ -14,11 +14,13 @@ Architecture (mirrors the reference's, re-expressed for Spark — SURVEY.md §3)
   with per-file-schema-version projection, unioned with inlined rows.
 
 Scale design: the commit path is O(#files touched) metadata rows, independent
-of data volume; UPDATE/DELETE are copy-on-write rewrites of ONLY the files
-whose min/max stats can match the predicate (stats.py), so point mutations on
-a 100 TB table rewrite a few files, not the table. Constraint checks (PK /
-NOT NULL) are distributed Spark jobs (anti-join / null-scan), never driver
-loops.
+of data volume. UPDATE, DELETE and MERGE are merge-on-read, as DuckLake's
+delete files are: one scan of the files whose min/max stats can match
+(stats.py) finds the matched rows' (file, row position) pairs, only the new
+row versions are written, and each touched data file gets a positional
+delete file. Reads drop the deleted positions; compaction folds them away.
+Constraint checks (PK / NOT NULL) are distributed Spark jobs (anti-join /
+null-scan), never driver loops.
 """
 
 from __future__ import annotations
@@ -35,7 +37,14 @@ from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import DecimalType, StructType, TimestampType
+from pyspark.sql.types import (
+    DecimalType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from .metastore import ConflictError, Metastore, open_metastore
 from .schema import (
@@ -69,6 +78,18 @@ class ConstraintViolation(LakeError):
 
 
 @dataclass
+class DeleteEntry:
+    """One positional delete file: the sorted row positions (``pos``) of
+    its data file that one statement deleted."""
+
+    delete_file_id: Optional[int]
+    path: str
+    delete_count: int
+    file_bytes: int
+    staged: bool = False
+
+
+@dataclass
 class FileEntry:
     file_id: Optional[int]
     path: str
@@ -77,6 +98,20 @@ class FileEntry:
     schema_version: int
     col_stats: Optional[str]
     staged: bool = False
+    deletes: list = _dcfield(default_factory=list)  # live DeleteEntry
+
+    @property
+    def live_rows(self) -> int:
+        return self.row_count - sum(d.delete_count for d in self.deletes)
+
+
+# the live-at-version predicate every versioned catalog table shares
+_LIVE = (
+    "table_id=? AND added_snapshot<=? AND (removed_snapshot IS NULL OR "
+    "removed_snapshot>?)"
+)
+# the row-identity columns of a positions scan (see LakeCatalog._build_df)
+_POS = ("__fp", "__pos")
 
 
 @dataclass
@@ -107,10 +142,11 @@ class TableState:
     changes: set = _dcfield(default_factory=set)  # change-kind markers
     # Fine-grained conflict metadata (Delta-style WriteSerializable): one
     # entry per row-level mutation this txn ran on the table —
-    # {"conjuncts": [(col, op, val), ...]} describing the region it READ:
-    # a MERGE's source key range, or a predicate UPDATE/DELETE's WHERE
-    # conjuncts (None = unparseable predicate = whole table, still sound,
-    # just coarse). Commit uses it to let two mutations on DISJOINT
+    # {"conjuncts": [(col, op, val), ...], "seen": {file_id: positions}}:
+    # the region it READ (a MERGE's source key range, or a predicate
+    # UPDATE/DELETE's WHERE conjuncts; None = unparseable predicate =
+    # whole table, still sound, just coarse) and the rows it matched in
+    # each committed file it scanned. Commit uses it to let two mutations on DISJOINT
     # regions both commit without retry. Any mutation without a
     # recordable read set (schema change, whole-table write, a WHEN NOT
     # MATCHED BY SOURCE leg) sets coarse_write, falling back to
@@ -249,6 +285,8 @@ class LakeCatalog:
         from collections import OrderedDict
 
         self._read_cache: "OrderedDict" = OrderedDict()
+        # delete-file path -> its positions (a delete file never changes)
+        self._pos_cache: "OrderedDict" = OrderedDict()
         # retention horizon (MIN snapshot_id) observed at the last cache
         # validation — a cross-process expire_snapshots raises it, which
         # is the signal to evict entries below the new horizon (see read)
@@ -474,25 +512,8 @@ class LakeCatalog:
         table_id, _ = self._table_at(name, v)
         schemas = self._schemas_at(table_id, v)
         current = schemas[max(schemas)]
-        files = [
-            FileEntry(*r)
-            for r in self.ms.q(
-                "SELECT file_id, path, row_count, file_bytes, schema_version, "
-                "col_stats FROM lake_data_file WHERE table_id=? AND "
-                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-                "removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
-        inlined = [
-            InlinedEntry(*r)
-            for r in self.ms.q(
-                "SELECT row_id, schema_version, row_json FROM lake_inlined "
-                "WHERE table_id=? AND added_snapshot<=? AND "
-                "(removed_snapshot IS NULL OR removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
+        files = self._files_at(table_id, v)
+        inlined = self._inlined_at(table_id, v)
         if where is not None:
             conjuncts = parse_conjuncts(where)
             # pruning resolves predicate names against the CURRENT schema:
@@ -516,38 +537,107 @@ class LakeCatalog:
     def count(self, name: str, version=None) -> int:
         """Metadata-only COUNT(*) (SURVEY.md §4 'metadata queries very
         fast', exploration/benchmark_ducklake.sh:155-172): answered from
-        catalog row counts without launching a Spark job."""
+        catalog row counts, net of delete files, without a Spark job."""
         v = self._resolve_version(version)
         table_id, _ = self._table_at(name, v)
-        rc = self.ms.one(
-            "SELECT COALESCE(SUM(row_count),0) FROM lake_data_file WHERE "
-            "table_id=? AND added_snapshot<=? AND (removed_snapshot IS NULL "
-            "OR removed_snapshot>?)",
-            (table_id, v, v),
-        )[0]
-        ic = self.ms.one(
-            "SELECT COUNT(*) FROM lake_inlined WHERE table_id=? AND "
-            "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-            "removed_snapshot>?)",
-            (table_id, v, v),
-        )[0]
-        return rc + ic
+        return self._live_counts(table_id, v)[0]
 
-    def _build_df(self, files, inlined, schemas, current: TableSchema) -> DataFrame:
+    def _live_counts(self, table_id: int, v: int) -> tuple:
+        """(rows net of deletes, data files, data-file bytes, inlined rows,
+        delete files, delete-file bytes) live at ``v``: one catalog query."""
+        rc, fc, fb, ic, dr, dc, db = self.ms.one(
+            "SELECT "
+            "(SELECT COALESCE(SUM(row_count),0) FROM lake_data_file WHERE "
+            f"{_LIVE}), (SELECT COUNT(*) FROM lake_data_file WHERE {_LIVE}), "
+            "(SELECT COALESCE(SUM(file_bytes),0) FROM lake_data_file WHERE "
+            f"{_LIVE}), (SELECT COUNT(*) FROM lake_inlined WHERE {_LIVE}), "
+            "(SELECT COALESCE(SUM(delete_count),0) FROM lake_delete_file "
+            f"WHERE {_LIVE}), (SELECT COUNT(*) FROM lake_delete_file WHERE "
+            f"{_LIVE}), (SELECT COALESCE(SUM(file_bytes),0) FROM "
+            f"lake_delete_file WHERE {_LIVE})",
+            (table_id, v, v) * 7,
+        )
+        return rc - dr + ic, fc, fb, ic, dc, db
+
+    def _files_at(self, table_id: int, v: int) -> list:
+        """The data files live at ``v``, each carrying its live delete
+        files: delete files resolve by snapshot exactly as data files do,
+        so time travel reads the deletes of its own version."""
+        files = [
+            FileEntry(*r)
+            for r in self.ms.q(
+                "SELECT file_id, path, row_count, file_bytes, schema_version, "
+                f"col_stats FROM lake_data_file WHERE {_LIVE}",
+                (table_id, v, v),
+            )
+        ]
+        if files:
+            by_id = {fe.file_id: fe for fe in files}
+            for fid, *d in self.ms.q(
+                "SELECT data_file_id, delete_file_id, path, delete_count, "
+                f"file_bytes FROM lake_delete_file WHERE {_LIVE}",
+                (table_id, v, v),
+            ):
+                if fid in by_id:
+                    by_id[fid].deletes.append(DeleteEntry(*d))
+        return files
+
+    def _inlined_at(self, table_id: int, v: int) -> list:
+        return [
+            InlinedEntry(*r)
+            for r in self.ms.q(
+                "SELECT row_id, schema_version, row_json FROM lake_inlined "
+                f"WHERE {_LIVE}",
+                (table_id, v, v),
+            )
+        ]
+
+    def _build_df(
+        self, files, inlined, schemas, current: TableSchema, positions=False
+    ) -> DataFrame:
         """file list (+ inlined rows) -> one DataFrame in the current schema.
 
         Files are grouped by the schema_version they were written under; each
         group is read with that version's StructType (no footer inference) and
         projected to the current schema by FIELD ID — renames and drops are
-        metadata-only, adds fill the default (SURVEY.md §1.3)."""
+        metadata-only, adds fill the default (SURVEY.md §1.3).
+
+        Every reader of data files comes through here, so every reader
+        drops deleted rows. A schema version's files are one scan: with no
+        live delete file it is planned exactly as a plain scan; otherwise
+        it carries each row's ``_metadata`` file name and row index and
+        left-anti-joins a broadcast frame of the deleted positions.
+
+        ``positions=True`` (the row-level writes) keeps two columns on every
+        row: ``__fp``, the scan's file URI (NULL for an inlined row), and
+        ``__pos``, the row's index in its file (in ``inlined`` for an
+        inlined row)."""
         parts = []
-        by_sv: dict = {}
+        groups: dict = {}
         for fe in files:
-            by_sv.setdefault(fe.schema_version, []).append(fe.path)
-        for sv, paths in sorted(by_sv.items()):
+            groups.setdefault(fe.schema_version, []).append(fe)
+        for sv, group in sorted(groups.items()):
             stored = schemas[sv]
-            df = self.spark.read.schema(stored.to_struct()).parquet(*paths)
-            parts.append(_project(df, stored, current))
+            df = self.spark.read.schema(stored.to_struct()).parquet(
+                *[fe.path for fe in group]
+            )
+            tagged = positions or any(fe.deletes for fe in group)
+            if tagged:
+                df = df.selectExpr(
+                    "*",
+                    "_metadata.file_path AS __fp",
+                    "_metadata.file_name AS __fn",
+                    "_metadata.row_index AS __pos",
+                )
+                dead = self._deleted_df(group)
+                if dead is not None:
+                    df = df.join(
+                        F.broadcast(dead), ["__fn", "__pos"], "left_anti"
+                    )
+                df = df.drop("__fn") if positions else df.drop("__fn", *_POS)
+            parts.append(
+                _project(df, stored, current, keep=_POS if positions else ())
+            )
         if inlined or not parts:
             # coerce each value to the CURRENT column type: after a
             # cross-family ALTER COLUMN TYPE (int -> double/decimal) a row
@@ -562,8 +652,56 @@ class LakeCatalog:
                 )
                 for e in inlined
             ]
-            parts.append(local_df(self.spark, rows, current.to_struct()))
+            struct = current.to_struct()
+            if positions:
+                rows = [r + (None, i) for i, r in enumerate(rows)]
+                struct = StructType(struct.fields + [
+                    StructField("__fp", StringType()),
+                    StructField("__pos", LongType(), False),
+                ])
+            parts.append(local_df(self.spark, rows, struct))
         return reduce(DataFrame.unionByName, parts)
+
+    def _deleted_df(self, files) -> Optional[DataFrame]:
+        """(__fn, __pos) of every deleted row of ``files`` as a driver-built
+        frame, or None when none has a delete file. A file is named by its
+        base name, as the scan's ``_metadata.file_name`` spells it: every
+        data file is a Spark part file named after its write job's UUID,
+        so base names are unique, and unlike the file URI they have one
+        spelling. The columns are NOT NULL, so the frame stays one local
+        relation that broadcasts without a Spark job."""
+        import numpy as np
+        import pyarrow as pa
+
+        dead = [fe for fe in files if fe.deletes]
+        if not dead:
+            return None
+        names = [os.path.basename(fe.path) for fe in dead]
+        if len(set(names)) != len(names):
+            raise LakeError(f"two data files share a base name: {names}")
+        fns, poss = [], []
+        for fe, name in zip(dead, names):
+            pos = np.concatenate([self._positions(d.path) for d in fe.deletes])
+            fns.append(pa.array([name] * len(pos), pa.string()))
+            poss.append(pa.array(pos, pa.int64()))
+        table = pa.table(
+            {"__fn": pa.concat_arrays(fns), "__pos": pa.concat_arrays(poss)}
+        )
+        return self.spark.createDataFrame(
+            table, "__fn string not null, __pos bigint not null"
+        )
+
+    def _positions(self, path: str):
+        """The sorted positions a delete file holds (read once per path)."""
+        import pyarrow.parquet as pq
+
+        hit = self._pos_cache.get(path)
+        if hit is None:
+            hit = pq.read_table(path, columns=["pos"]).column(0).to_numpy()
+            self._pos_cache[path] = hit
+            if len(self._pos_cache) > 1024:
+                self._pos_cache.popitem(last=False)
+        return hit
 
     # ------------------------------------------------------------------
     # introspection (T3/T6/S7/S8)
@@ -621,9 +759,11 @@ class LakeCatalog:
 
     def file_stats(self, name: str, version=None) -> list:
         """Per-data-file catalog metadata: [{path, row_count, file_bytes,
-        columns: {col: {min, max, nulls}}}] — the reader-side face of the
-        footer stats that drive file pruning (SURVEY §4). Metadata-only
-        (one catalog query, no Spark job): operators can size or route
+        delete_count, columns: {col: {min, max, nulls}}}] — ``row_count``
+        is the rows written, ``delete_count`` how many of them live delete
+        files remove. The reader-side face of the footer stats that drive
+        file pruning (SURVEY §4). Metadata-only (catalog queries, no Spark
+        job): operators can size or route
         work from it — e.g. the vector near-dup screen derives per-bucket
         populations here instead of scanning the index — the same way the
         pruned read path consumes the identical rows. Inlined rows have no
@@ -636,14 +776,9 @@ class LakeCatalog:
         current = schemas[max(schemas)]
         fid_to_name = {f.field_id: f.name for f in current.fields}
         out = []
-        for path, rc, fb, cs in self.ms.q(
-            "SELECT path, row_count, file_bytes, col_stats FROM "
-            "lake_data_file WHERE table_id=? AND added_snapshot<=? AND "
-            "(removed_snapshot IS NULL OR removed_snapshot>?)",
-            (table_id, v, v),
-        ):
+        for fe in self._files_at(table_id, v):
             cols = {}
-            for fid, st in (json.loads(cs) if cs else {}).items():
+            for fid, st in json.loads(fe.col_stats or "{}").items():
                 col = fid_to_name.get(int(fid))
                 if col is not None:
                     cols[col] = {
@@ -653,40 +788,33 @@ class LakeCatalog:
                     }
             out.append(
                 {
-                    "path": path,
-                    "row_count": rc,
-                    "file_bytes": fb,
+                    "path": fe.path,
+                    "row_count": fe.row_count,
+                    "file_bytes": fe.file_bytes,
+                    "delete_count": fe.row_count - fe.live_rows,
                     "columns": cols,
                 }
             )
         return out
 
     def table_info(self) -> list:
-        """``ducklake_table_info``-style per-table file/row stats (T6)."""
+        """``ducklake_table_info``-style per-table stats (T6): data files,
+        rows net of deletes, bytes, inlined rows, and the live delete
+        files' count and bytes."""
         v = self.current_version()
         out = []
         for name in self.tables():
             table_id, _ = self._table_at(name, v)
-            fc, rc, fb = self.ms.one(
-                "SELECT COUNT(*), COALESCE(SUM(row_count),0), "
-                "COALESCE(SUM(file_bytes),0) FROM lake_data_file WHERE "
-                "table_id=? AND added_snapshot<=? AND (removed_snapshot IS "
-                "NULL OR removed_snapshot>?)",
-                (table_id, v, v),
-            )
-            ic = self.ms.one(
-                "SELECT COUNT(*) FROM lake_inlined WHERE table_id=? AND "
-                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-                "removed_snapshot>?)",
-                (table_id, v, v),
-            )[0]
+            rows, fc, fb, ic, dc, db = self._live_counts(table_id, v)
             out.append(
                 {
                     "table_name": name,
                     "file_count": fc,
-                    "row_count": rc + ic,
+                    "row_count": rows,
                     "file_bytes": fb,
                     "inlined_rows": ic,
+                    "delete_file_count": dc,
+                    "delete_file_bytes": db,
                 }
             )
         return out
@@ -867,7 +995,8 @@ class LakeCatalog:
         Expires every snapshot strictly below the cutoff: those versions are
         no longer time-travelable, and data files / inlined rows visible
         ONLY to expired versions (``removed_snapshot <= cutoff``) are purged
-        from the catalog and disk. Files live at the cutoff or later are
+        from the catalog and disk, and so are delete files retired by then
+        (their data file was compacted or removed). Files live at the cutoff or later are
         untouched, as is everything needed to read any retained version.
         Metadata changes commit in one catalog transaction; physical file
         deletion happens after (a crash in between leaves unreferenced
@@ -883,19 +1012,23 @@ class LakeCatalog:
                 "pass before_version, before_timestamp, or keep_last"
             )
         cutoff = min(cutoff, self.current_version())  # never expire HEAD
+        retired = (
+            "FROM {} WHERE removed_snapshot IS NOT NULL AND "
+            "removed_snapshot <= ?"
+        )
         doomed = self.ms.q(
-            "SELECT path, file_bytes FROM lake_data_file WHERE "
-            "removed_snapshot IS NOT NULL AND removed_snapshot <= ?",
+            "SELECT path, file_bytes " + retired.format("lake_data_file"),
+            (cutoff,),
+        )
+        doomed_del = self.ms.q(
+            "SELECT path, file_bytes " + retired.format("lake_delete_file"),
             (cutoff,),
         )
         with self.ms.tx() as t:
-            t.exec(
-                self.ms._ph(
-                    "DELETE FROM lake_data_file WHERE removed_snapshot IS "
-                    "NOT NULL AND removed_snapshot <= ?"
-                ),
-                (cutoff,),
-            )
+            for tbl in ("lake_data_file", "lake_delete_file"):
+                t.exec(
+                    self.ms._ph("DELETE " + retired.format(tbl)), (cutoff,)
+                )
             inl = t.exec(
                 self.ms._ph(
                     "DELETE FROM lake_inlined WHERE removed_snapshot IS "
@@ -931,10 +1064,20 @@ class LakeCatalog:
                         (tid,),
                     ).fetchall()
                 )
-                t.exec(
-                    self.ms._ph("DELETE FROM lake_data_file WHERE table_id=?"),
-                    (tid,),
+                doomed_del.extend(
+                    t.exec(
+                        self.ms._ph(
+                            "SELECT path, file_bytes FROM lake_delete_file "
+                            "WHERE table_id=?"
+                        ),
+                        (tid,),
+                    ).fetchall()
                 )
+                for tbl in ("lake_data_file", "lake_delete_file"):
+                    t.exec(
+                        self.ms._ph(f"DELETE FROM {tbl} WHERE table_id=?"),
+                        (tid,),
+                    )
                 inl += t.exec(
                     self.ms._ph("DELETE FROM lake_inlined WHERE table_id=?"),
                     (tid,),
@@ -955,7 +1098,7 @@ class LakeCatalog:
             ).rowcount
         self._read_cache.clear()  # expired versions' plans point at doomed files
         removed_bytes = 0
-        for path, nbytes in doomed:
+        for path, nbytes in doomed + doomed_del:
             try:
                 os.remove(path)
                 removed_bytes += nbytes or 0
@@ -965,13 +1108,16 @@ class LakeCatalog:
             "cutoff_version": cutoff,
             "snapshots_expired": ns,
             "files_deleted": len(doomed),
+            "delete_files_deleted": len(doomed_del),
             "bytes_reclaimed": removed_bytes,
             "inlined_rows_purged": inl,
         }
 
     def gc(self, min_age_seconds: float = 3600.0) -> list:
         """Delete parquet files on disk that no catalog row references
-        (staged-but-never-committed leftovers after a crash).
+        (staged-but-never-committed leftovers after a crash). Data files
+        and delete files both count as referenced: collecting a live
+        delete file would bring its deleted rows back.
 
         Only files older than ``min_age_seconds`` are removed: a file staged
         by an IN-FLIGHT transaction in another process is also unreferenced
@@ -982,7 +1128,9 @@ class LakeCatalog:
         self._read_cache.clear()  # plans must not outlive unreferenced files
         cutoff = _time.time() - min_age_seconds
         referenced = {
-            r[0] for r in self.ms.q("SELECT path FROM lake_data_file")
+            r[0]
+            for tbl in ("lake_data_file", "lake_delete_file")
+            for r in self.ms.q(f"SELECT path FROM {tbl}")
         }
         removed = []
         for p in _glob.glob(os.path.join(self.root, "**", "*.parquet"),
@@ -1046,33 +1194,14 @@ class Transaction:
                 raise
             return None  # type: ignore[return-value]
         schemas = self.c._schemas_at(table_id, v)
-        files = [
-            FileEntry(*r)
-            for r in self.c.ms.q(
-                "SELECT file_id, path, row_count, file_bytes, schema_version, "
-                "col_stats FROM lake_data_file WHERE table_id=? AND "
-                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-                "removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
-        inlined = [
-            InlinedEntry(*r)
-            for r in self.c.ms.q(
-                "SELECT row_id, schema_version, row_json FROM lake_inlined "
-                "WHERE table_id=? AND added_snapshot<=? AND "
-                "(removed_snapshot IS NULL OR removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
         st = TableState(
             name=name,
             table_id=table_id,
             data_dir=data_dir,
             schemas=schemas,
             schema_version=max(schemas),
-            files=files,
-            inlined=inlined,
+            files=self.c._files_at(table_id, v),
+            inlined=self.c._inlined_at(table_id, v),
         )
         self._states[name] = st
         return st
@@ -1849,119 +1978,135 @@ class Transaction:
             return
         self.insert(name, local_df(self.c.spark, data, st.schema.to_struct()))
 
-    def _rewrite(
-        self,
-        st: TableState,
-        where: Optional[str],
-        transform,
-        deleting: bool = False,
-    ) -> int:
-        """Copy-on-write core for UPDATE/DELETE: pick candidate files by
-        min/max stats pruning, include live inlined rows, rewrite candidates
-        with ``transform(df, pred)``, swap in metadata. Non-matching files are
-        untouched — the 100 TB point-mutation path."""
-        conjuncts = parse_conjuncts(where) if where else []
-        sch = st.schema
-        candidates = [
-            fe
-            for fe in st.files
-            if where is None
-            or file_may_match(fe.col_stats, conjuncts, sch)
+    def _candidates(self, st: TableState, conjuncts) -> list:
+        """The live files whose min/max stats may hold a row in the region
+        ``conjuncts`` describes (every file when there are none)."""
+        return [
+            fe for fe in st.files
+            if not conjuncts or file_may_match(fe.col_stats, conjuncts, st.schema)
         ]
-        touched_inlined = list(st.inlined)
-        if not candidates and not touched_inlined:
-            return 0
-        src = self.c._build_df(candidates, touched_inlined, st.schemas, sch)
-        pred = F.expr(where) if where else F.lit(True)
-        # The matched count piggybacks on the rewrite pass — candidates are
-        # read ONCE, not twice (a separate count() is a full second scan of
-        # every candidate file at 100 TB). Trade-off: when stats pruning
-        # admits candidate files that turn out to contain NO matching row,
-        # this writes (then discards) a copy of those files where the old
-        # pre-count returned after a read; matched DML saves a full read.
-        # True no-ops with non-overlapping stats still return above without
-        # touching data.
-        # * deleting=True: matched = rows-before (pure metadata: file
-        #   row_counts + inlined) minus rows actually written.
-        # * update, unclustered: an Observation on the write job.
-        # * update, clustered: repartitionByRange's sampling pass would
-        #   double-fire the observed metrics (verified), so only this path
-        #   keeps the separate pre-count.
-        clustered = bool(st.schemas[st.schema_version].partition_by)
-        obs = None
-        if deleting:
-            out = transform(src, pred)
-        elif clustered:
-            matched = src.filter(pred).count()
-            if matched == 0:
-                return 0
-            out = transform(src, pred)
-        else:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            out = transform(
-                src.observe(
-                    obs, F.sum(F.when(pred, 1).otherwise(0)).alias("matched")
-                ),
-                pred,
-            )
-        staged = self._write_staged(st, out)
-        if deleting:
-            before = sum(fe.row_count for fe in candidates) + len(touched_inlined)
-            matched = before - sum(e.row_count for e in staged)
-        elif obs is not None:
-            matched = int(obs.get["matched"] or 0)
-        if matched == 0:
-            # nothing actually matched (stats pruning false positives):
-            # discard the identical rewrite, keep the original files live
-            d = self._staged_dirs.pop()
-            shutil.rmtree(d, ignore_errors=True)
-            return 0
-        # swap: remove candidates + all inlined, add rewritten files
-        for fe in candidates:
-            if fe.staged:
-                st.files.remove(fe)  # staged-in-this-txn file simply dropped
+    def _delete_rows(self, st: TableState, hits) -> None:
+        """Delete the rows ``hits`` names — (``__fp``, ``__pos``) pairs from
+        a ``positions=True`` scan of ``st.files`` and ``st.inlined``. A
+        matched inlined row leaves the catalog. Each touched data file gets
+        one delete file holding this statement's sorted positions, written
+        on the driver; a file left with no live row leaves the table
+        instead. The positions are disjoint from the file's earlier delete
+        files, because the scan already dropped those rows."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        per_file: dict = {}
+        gone = set()
+        for fp, pos in hits:
+            if fp is None:
+                gone.add(id(st.inlined[pos]))
             else:
-                st.files.remove(fe)
-                st.removed_file_ids.append(fe.file_id)
-        for ie in touched_inlined:
-            st.inlined.remove(ie)
-            if not ie.staged:
+                per_file.setdefault(fp, []).append(pos)
+        for ie in st.inlined:
+            if id(ie) in gone and not ie.staged:
                 st.removed_inlined_ids.append(ie.row_id)
-        st.files.extend(staged)
-        return matched
+        st.inlined = [ie for ie in st.inlined if id(ie) not in gone]
+        by_uri = {_norm_file_uri(fe.path): fe for fe in st.files}
+        stagedir = None
+        for fp, pos in per_file.items():
+            fe = by_uri.get(_norm_file_uri(fp))
+            if fe is None:
+                raise LakeError(
+                    f"internal error: matched rows in {fp!r}, which is not "
+                    "a live file of the table"
+                )
+            if len(pos) >= fe.live_rows:
+                st.files = [f for f in st.files if f is not fe]
+                if not fe.staged:
+                    st.removed_file_ids.append(fe.file_id)
+                continue
+            if stagedir is None:
+                stagedir = os.path.join(
+                    st.data_dir, f"stage-{uuid.uuid4().hex[:12]}"
+                )
+                os.makedirs(stagedir)
+                self._staged_dirs.append(stagedir)
+            path = os.path.join(stagedir, f"delete-{uuid.uuid4().hex}.parquet")
+            pq.write_table(
+                pa.table({"pos": pa.array(np.sort(pos), pa.int64())}), path
+            )
+            fe.deletes.append(
+                DeleteEntry(None, path, len(pos), os.path.getsize(path), True)
+            )
+
+    def _seen(self, candidates, hits) -> dict:
+        """{file_id: sorted positions} of the matched rows ``hits`` in every
+        committed candidate file (empty for a file without a match): the
+        rows a concurrent delete file must miss for this statement to
+        commute with it (see _read_range_conflict)."""
+        import numpy as np
+
+        per_uri: dict = {}
+        for fp, pos in hits:
+            if fp is not None:
+                per_uri.setdefault(_norm_file_uri(fp), []).append(pos)
+        return {
+            fe.file_id: np.sort(
+                np.asarray(per_uri.get(_norm_file_uri(fe.path), []), np.int64)
+            )
+            for fe in candidates
+            if not fe.staged
+        }
 
     def update(self, name: str, set_exprs: dict, where: Optional[str] = None) -> int:
-        """D3: UPDATE ... SET ... [WHERE] as a distributed copy-on-write
-        rewrite (demos/01_transaction_rollback/demo.py:96-102). ``set_exprs``
-        maps column -> SQL expression (may reference any column; CASE WHEN
-        works, demos/03_schema_evolution/demo.py:146-156)."""
+        """D3: UPDATE ... SET ... [WHERE], merge-on-read
+        (demos/01_transaction_rollback/demo.py:96-102). ``set_exprs`` maps
+        column -> SQL expression (may reference any column; CASE WHEN works,
+        demos/03_schema_evolution/demo.py:146-156). One scan of the
+        stats-matching files and the inlined rows finds the matched rows;
+        they are kept for the statement, their positions go to the driver,
+        and only their new versions are written."""
         st = self._state(name)
         for c in set_exprs:
             st.schema.field_by_name(c)  # KeyError -> unknown column
-
-        def xform(df: DataFrame, pred):
-            return df.withColumns(
-                {
-                    c: F.when(pred, F.expr(e).cast(st.schema.field_by_name(c).type))
-                    .otherwise(F.col(c))
-                    for c, e in set_exprs.items()
-                }
+        conjuncts = parse_conjuncts(where) if where else []
+        candidates = self._candidates(st, conjuncts)
+        hits = []
+        if candidates or st.inlined:
+            pred = F.expr(where) if where else F.lit(True)
+            hit = (
+                self.c._build_df(
+                    candidates, st.inlined, st.schemas, st.schema,
+                    positions=True,
+                )
+                .filter(pred)
+                .persist()
             )
-
-        n = self._rewrite(st, where, xform)
+            try:
+                hits = [tuple(r) for r in hit.select(*_POS).collect()]
+                if hits:
+                    new = hit.select(*[
+                        (
+                            F.expr(set_exprs[f.name]).cast(f.type)
+                            if f.name in set_exprs else F.col(f.name)
+                        ).alias(f.name)
+                        for f in st.schema.fields
+                    ])
+                    staged = self._write_staged(st, new)
+                    self._delete_rows(st, hits)
+                    st.files.extend(staged)
+            finally:
+                hit.unpersist()
+        self._record_row_read(st, where, self._seen(candidates, hits))
         st.changes.add("tables_updated")
-        self._record_row_read(st, where)
-        return n
+        return len(hits)
 
     def delete(self, name: str, where: Optional[str] = None) -> int:
         """D4: DELETE FROM [WHERE]. Full-table delete is metadata-only (mark
-        every live file removed — no rewrite, demos/02_time_travel/demo.py:112);
-        predicate delete rewrites only stats-matching files."""
+        every live file removed, demos/02_time_travel/demo.py:112); a
+        predicate delete collects the matched rows' positions in one scan
+        of the stats-matching files and writes delete files for them."""
         st = self._state(name)
         if where is None:
-            n = sum(fe.row_count for fe in st.files) + len(st.inlined)
+            n = sum(fe.live_rows for fe in st.files) + len(st.inlined)
             for fe in st.files:
                 if not fe.staged:
                     st.removed_file_ids.append(fe.file_id)
@@ -1970,33 +2115,43 @@ class Transaction:
                 if not ie.staged:
                     st.removed_inlined_ids.append(ie.row_id)
             st.inlined.clear()
+            self._record_row_read(st, None, {})
         else:
-            n = self._rewrite(
-                st,
-                where,
-                lambda df, pred: df.filter(~pred | pred.isNull()),
-                deleting=True,
-            )
+            candidates = self._candidates(st, parse_conjuncts(where))
+            hits = []
+            if candidates or st.inlined:
+                hits = [
+                    tuple(r)
+                    for r in self.c._build_df(
+                        candidates, st.inlined, st.schemas, st.schema,
+                        positions=True,
+                    )
+                    .filter(F.expr(where))
+                    .select(*_POS)
+                    .collect()
+                ]
+                self._delete_rows(st, hits)
+            n = len(hits)
+            self._record_row_read(st, where, self._seen(candidates, hits))
         st.changes.add("tables_deleted_from")
-        self._record_row_read(st, where)
         return n
 
-    def _record_row_read(self, st: TableState, where: Optional[str]) -> None:
+    def _record_row_read(self, st: TableState, where: Optional[str], seen) -> None:
         """Record a predicate UPDATE/DELETE's read region for fine-grained
         commit-time conflict resolution (the MERGE read-range mechanism):
-        the statement read exactly the rows matching ``where`` plus the
-        full content of the candidate files it rewrote — and every
-        rewritten candidate matches the WHERE conjuncts by construction
-        (_rewrite selects candidates with the same file_may_match), so
-        the conjunct region covers both. A concurrent snapshot commutes
-        iff none of its added/removed files may hold rows in this region.
+        the rows matching ``where``, by their WHERE conjuncts, and the
+        positions ``seen`` it matched in each file it scanned. A concurrent
+        snapshot commutes iff none of its added/removed files may hold rows
+        in this region and none of its delete files removes a seen row.
         ``where=None`` (whole-table) and unparseable predicates stay
         sound: None conjuncts make file_may_match return True for every
         file, degrading to table-level first-committer-wins."""
         if where is None:
             st.coarse_write = True
         else:
-            st.read_ranges.append({"conjuncts": parse_conjuncts(where)})
+            st.read_ranges.append(
+                {"conjuncts": parse_conjuncts(where), "seen": seen}
+            )
 
     def merge(
         self,
@@ -2048,7 +2203,7 @@ class Transaction:
         Only the LAST clause in each list may omit its condition.
         Mutually exclusive with the flat when_matched/update_sets form.
         ``matched`` in the result stays the raw matched-target-row count
-        (clause conditions don't change which files rewrite);
+        (clause conditions don't change which rows match);
         ``inserted`` is the count of rows actually appended.
 
         ``not_matched_by_source_clauses`` (the standard tri-clause MERGE's
@@ -2082,14 +2237,15 @@ class Transaction:
         Off by default: an unexpected feed column is a schema error, not
         a silent DDL.
 
-        Scale path: the source's per-key min/max bounds prune the candidate
-        file list exactly like UPDATE/DELETE (stats.py), then a key-column
-        semi-join tagged with input_file_name() shrinks the rewrite to the
-        files that actually CONTAIN a matched key — so merging into a table
-        clustered on a different column than the merge key (where min/max
-        ranges prune nothing) still rewrites only the truly hit files. One
-        shuffle join over hit candidates + source; untouched files never
-        rewritten."""
+        Scale path (merge-on-read): the source's per-key min/max bounds
+        prune the candidate file list exactly like UPDATE/DELETE
+        (stats.py) and filter the target scan's rows. One join of that
+        scan with the source finds the matched rows with their (file, row
+        position); the positions reach the driver in one action, only new
+        row versions and inserts are written, and each data file holding
+        an acted-on row gets a delete file — so no data file is ever
+        copied, on a table clustered on a different column than the merge
+        key (where min/max ranges prune nothing) too."""
         if when_matched not in ("update", "delete", "skip"):
             raise LakeError(f"bad when_matched {when_matched!r}")
         if when_not_matched not in ("insert", "skip"):
@@ -2134,7 +2290,7 @@ class Transaction:
             bsc = [dict(cl) for cl in (not_matched_by_source_clauses or [])]
             for cl in mc + nmc + bsc:
                 # '' and None both mean "no condition" — normalize so the
-                # ordering check below and _clause_chain can never disagree
+                # ordering check below and _clause_chain_expr can never disagree
                 # (a falsy cond compiles to lit(True))
                 cl["cond"] = cl.get("cond") or None
             for i, cl in enumerate(mc):
@@ -2313,7 +2469,6 @@ class Transaction:
                 # forms keep it: expressions may reference __s_<seq>)
                 source = source.drop(sequence_col)
         custom = clausal or update_sets is not None or insert_sets is not None
-        nmc_conditional = any(cl.get("cond") for cl in nmc)
         if custom:
             all_sets = [cl.get("sets") or {} for cl in mc + nmc + bsc]
             for sets in all_sets:
@@ -2361,372 +2516,139 @@ class Transaction:
             src = self._align(source, sch).persist()
         persisted = [src]  # every persist in this merge unpersists in finally
         try:
+            # one action over the source: the key bounds that prune the
+            # target, the row count, and the distinct-key count that
+            # exposes a duplicate merge key (NULL keys group together)
             bounds = src.agg(
                 *[F.min(k).alias(f"mn_{k}") for k in on],
                 *[F.max(k).alias(f"mx_{k}") for k in on],
+                F.count(F.lit(1)).alias("_n"),
+                F.count_distinct(F.struct(*on)).alias("_keys"),
             ).first()
-            conjuncts = []
+            if bounds["_n"] != bounds["_keys"]:
+                raise ConstraintViolation(
+                    f"duplicate merge keys {list(on)} in source"
+                )
+            conjuncts, in_bounds = [], []
             for k in on:
                 mn, mx = bounds[f"mn_{k}"], bounds[f"mx_{k}"]
                 if mn is not None and mx is not None:
                     conjuncts.extend([(k, ">=", mn), (k, "<=", mx)])
-            candidates = [
-                fe
-                for fe in st.files
-                if not conjuncts
-                or file_may_match(fe.col_stats, conjuncts, sch)
-            ]
-            touched_inlined = list(st.inlined)
-            # fine-grained conflict metadata: this merge READ exactly the
-            # key-range region described by conjuncts (plus all inlined
-            # rows — commit conflicts on any concurrent inlined change).
+                    in_bounds.append(F.col(k).between(F.lit(mn), F.lit(mx)))
+            candidates = self._candidates(st, conjuncts)
             # A WHEN NOT MATCHED BY SOURCE leg reads the whole table (the
-            # complement of the source keys), so it poisons the fine path.
+            # complement of the source keys), so it poisons the fine
+            # conflict path; otherwise this merge read the key-range region
+            # (recorded below with the rows it matched)
             if bsc:
                 st.coarse_write = True
-            else:
-                st.read_ranges.append({"conjuncts": list(conjuncts)})
-            target = self.c._build_df(candidates, touched_inlined, st.schemas, sch)
-            # One action answers dup-key check + matched + unmatched: src keys
-            # left-join per-key target counts, then a global aggregate.
-            # `matched` counts TARGET rows hit (PK-less targets may hold
-            # duplicate keys); `inserted` is the anti-join count, NOT
-            # src.count()-matched, which goes negative on duplicate targets.
-            stats = (
-                src.groupBy(*on).agg(F.count(F.lit(1)).alias("_sc"))
-                .join(
-                    target.groupBy(*on).agg(F.count(F.lit(1)).alias("_tc")),
-                    on, "left",
-                )
-                .agg(
-                    F.max("_sc").alias("_dup"),
-                    F.sum("_tc").alias("_matched"),
-                    F.count(F.when(F.col("_tc").isNull(), 1)).alias("_unmatched"),
-                )
-                .first()
+            tgt = self.c._build_df(
+                candidates, st.inlined, st.schemas, sch, positions=True
             )
-            if (stats["_dup"] or 0) > 1:
-                raise ConstraintViolation(
-                    f"duplicate merge keys {list(on)} in source"
-                )
-            matched = int(stats["_matched"] or 0)
-            # nmc is the normalized not-matched clause list for BOTH forms
-            # (the flat form maps when_not_matched onto it), so it — not
-            # the flat flag, which clausal callers never set — decides
-            # whether unmatched source rows can insert
-            inserted = int(stats["_unmatched"] or 0) if nmc else 0
-            # Custom-expression scaffolding: source columns ride the join
-            # under reserved __s_<col> names so expressions can reference
-            # both rows without ambiguous-attribute resolution (the merge
-            # keys join by explicit target-col == __s_col equality).
+            if in_bounds:
+                tgt = tgt.filter(reduce(lambda a, b: a & b, in_bounds))
+            # Source columns ride the join under reserved __s_<col> names so
+            # expressions can reference both rows without ambiguous-
+            # attribute resolution (the merge keys join by explicit
+            # target-col == __s_col equality).
             srcR = src.select(
                 *[F.col(c).alias(f"__s_{c}") for c in src.columns]
             )
+            skeys = [f"__s_{k}" for k in on]
             jcond = reduce(
                 lambda a, b: a & b,
                 [F.col(k) == F.col(f"__s_{k}") for k in on],
             )
-            # WHEN NOT MATCHED BY SOURCE scans the WHOLE table (its rows
-            # are the complement of the source keys — range pruning cannot
-            # bound them), tagged by file, anti-joined on the keys, and
-            # filtered by the clause chain: only files actually HOLDING a
-            # firing row rewrite (a mirror-sync of an already-synced
-            # table rewrites nothing)
-            bs_files, bs_inlined, bs_acted = [], [], 0
-            if bsc:
-                bs_files, bs_inlined, bs_acted = self._miss_subset(
-                    st, sch, src, on, bsc
-                )
-            bs_fire = bs_acted > 0
-
-            _clause_chain = _clause_chain_expr
-
-            def _ins_frame(tgt):
-                """Unmatched source rows -> target-schema rows through the
-                not-matched clause list: the first clause whose condition
-                holds supplies the row. A star-form clause (``sets`` empty
-                or None) fills every field from the same-named source
-                column, then the column default (exactly _align's fill);
-                a clause with an EXPLICIT sets dict fills unlisted fields
-                with the column DEFAULT only — standard SQL/Delta
-                ``INSERT (cols) VALUES`` semantics (unlisted columns never
-                silently inherit same-named source values). Rows matching
-                no clause are dropped."""
-                ib = (
-                    srcR.join(tgt, jcond, "left_anti")
-                    .withColumn("__clause", _clause_chain(nmc))
-                    .filter(F.col("__clause") > 0)
-                )
-                cols = []
-                for f in sch.fields:
-                    expr = default_expr(f)
-                    dflt = (
-                        F.expr(expr) if expr else F.lit(default_fill(f))
-                    )
-                    samenamed = (
-                        F.col(f"__s_{f.name}")
-                        if f"__s_{f.name}" in srcR.columns
-                        else dflt
-                    )
-                    chain = None
-                    for i, cl in enumerate(nmc, 1):
-                        sets = cl.get("sets") or {}
-                        if f.name in sets:
-                            v = F.expr(sets[f.name])
-                        elif sets:
-                            v = dflt  # explicit column list: default fill
-                        else:
-                            v = samenamed  # star form
-                        chain = (
-                            F.when(F.col("__clause") == i, v)
-                            if chain is None
-                            else chain.when(F.col("__clause") == i, v)
+            # matched pairs, each routed to its first-match clause (0 = no
+            # clause holds, the row stays as it is); one action returns
+            # every pair's position, clause and source key
+            joined = (
+                tgt.join(srcR, jcond, "inner")
+                .withColumn("__clause", _clause_chain_expr(mc))
+                .persist()
+            )
+            persisted.append(joined)
+            rows = joined.select(*_POS, "__clause", *skeys).collect()
+            matched = len(rows)
+            hits = [(r[0], r[1]) for r in rows if r[2] > 0]
+            acted = len(hits)
+            hit_src = bounds["_n"] - len({_hashable(r[3:]) for r in rows})
+            if not bsc:
+                st.read_ranges.append({
+                    "conjuncts": conjuncts,
+                    "seen": self._seen(candidates, [r[:2] for r in rows]),
+                })
+            hit_keys = joined.select(*skeys)
+            parts, n_versions = [], 0
+            if custom:
+                upd = [
+                    i for i, cl in enumerate(mc, 1) if cl["action"] == "update"
+                ]
+                n_versions = sum(1 for r in rows if r[2] in upd)
+                if n_versions:
+                    parts.append(
+                        joined.filter(F.col("__clause").isin(upd)).select(
+                            *_update_cols(sch, mc, "__clause", srcR, on)
                         )
-                    col = chain.otherwise(dflt) if chain is not None else dflt
-                    cols.append(col.cast(f.type).alias(f.name))
-                return ib.select(*cols)
-
-            if (
-                (custom and not mc) or (not custom and when_matched == "skip")
-            ) and not bs_fire:
-                # target rows untouched: no COW rewrite — append unmatched
-                # source rows as new files and leave every candidate in place.
-                if inserted == 0:
-                    res = {"matched": matched, "inserted": 0}
-                    if clausal:
-                        res["acted"] = 0
-                        res["acted_by_source"] = 0
-                    return res
-                if custom:
-                    new_rows = _ins_frame(target)
-                    if nmc_conditional:
-                        new_rows = new_rows.persist()
-                        persisted.append(new_rows)
-                        inserted = new_rows.count()
-                        if inserted == 0:
-                            res = {"matched": matched, "inserted": 0}
-                            if clausal:
-                                res["acted"] = 0
-                                res["acted_by_source"] = 0
-                            return res
-                else:
-                    new_rows = src.join(target, on, "left_anti")
-                st.files.extend(self._write_staged(st, new_rows))
-                st.changes.add("tables_inserted_into")
-                res = {"matched": matched, "inserted": inserted}
-                if clausal:
-                    res["acted"] = 0
-                    res["acted_by_source"] = 0
-                return res
-            effective = matched
-            if effective == 0 and inserted == 0 and not bs_fire:
-                res = {"matched": matched, "inserted": 0}
-                if clausal:
-                    res["acted"] = 0
-                    res["acted_by_source"] = 0
-                return res
-
-            # Shrink the copy-on-write set to files that actually CONTAIN a
-            # matched key. Range-based candidate pruning keeps every file
-            # whose key min/max spans the source bounds — on a table
-            # clustered on a DIFFERENT column than the merge key (e.g. the
-            # vector index, clustered on centroid_id, merged on vec_id)
-            # that is ~every file, and rewriting a no-hit file just copies
-            # it. One extra key-column-pruned scan (semi-join tagged with
-            # input_file_name) is cheap next to rewriting the table; files
-            # and inlined rows without a hit stay EXACTLY in place. Also
-            # covers matched == 0 inserts: nothing rewrites, the new rows
-            # append.
-            candidates, touched_inlined = self._hit_subset(
-                st, sch, candidates, touched_inlined, src, on, matched
-            )
-            if bs_fire:
-                # union the by-source hit set into the rewrite set (a file
-                # can hold both matched and by-source-firing rows; both
-                # subsets filter st.files / st.inlined, so object identity
-                # dedupes)
-                have = {id(fe) for fe in candidates}
-                candidates = candidates + [
-                    fe for fe in bs_files if id(fe) not in have
-                ]
-                have_i = {id(ie) for ie in touched_inlined}
-                touched_inlined = touched_inlined + [
-                    ie for ie in bs_inlined if id(ie) not in have_i
-                ]
-            target = self.c._build_df(
-                candidates, touched_inlined, st.schemas, sch
-            )
-            ins_df = None
-            # matched rows a clause actually fires on: zero when NO matched
-            # clause exists (a by-source-only merge must not count — or
-            # byte-identically rewrite — matched rows it never touches)
-            acted = matched if mc else 0
-            if custom:
-                # matched rows route through the first-match clause index:
-                # update clauses override assigned columns, delete clauses
-                # drop the row, index 0 (no clause held) keeps it verbatim
-                joined = target.join(srcR, jcond, "inner").withColumn(
-                    "__clause", _clause_chain(mc)
-                )
-                mc_conditional = any(cl.get("cond") for cl in mc)
-                if mc_conditional and matched:
-                    joined = joined.persist()
-                    persisted.append(joined)
-                    acted = joined.filter(F.col("__clause") > 0).count()
-                if nmc:
-                    ins_df = _ins_frame(target)
-                    if nmc_conditional:
-                        # conditions shrink the insert set below the raw
-                        # unmatched count: report what actually lands
-                        ins_df = ins_df.persist()
-                        persisted.append(ins_df)
-                        inserted = ins_df.count()
-                if acted == 0 and not bs_fire:
-                    # no matched clause fired (or nothing matched): the
-                    # matched side is a no-op — never rewrite hit files
-                    # byte-identical; unmatched inserts append as new files
-                    if inserted:
-                        st.files.extend(self._write_staged(st, ins_df))
-                        st.changes.add("tables_inserted_into")
-                    res = {"matched": matched, "inserted": inserted}
-                    if clausal:
-                        res["acted"] = 0
-                        res["acted_by_source"] = 0
-                    return res
-                keep_matched_verbatim = acted == 0  # bs_fire holds here
-                if keep_matched_verbatim:
-                    # matched side is a no-op: shrink the rewrite to the
-                    # by-source hit files only (ins_df above was built
-                    # against the matched-superset target, so the insert
-                    # set stays correct; matched rows living in by-source
-                    # files carry through verbatim below)
-                    candidates = list(bs_files)
-                    touched_inlined = list(bs_inlined)
-                    target = self.c._build_df(
-                        candidates, touched_inlined, st.schemas, sch
                     )
-                anti = target.join(srcR, jcond, "left_anti")
-                if bs_fire:
-                    # route unmatched target rows through the by-source
-                    # clause chain: delete clauses drop the row, update
-                    # clauses override assigned columns, index 0 keeps it
-                    anti = anti.withColumn("__bs", _clause_chain(bsc))
-                    bs_del = [
-                        i for i, cl in enumerate(bsc, 1)
-                        if cl["action"] == "delete"
-                    ]
-                    if bs_del:
-                        anti = anti.filter(~F.col("__bs").isin(bs_del))
-                    bs_cols = []
-                    for f in sch.fields:
-                        col = F.col(f.name)
-                        for i, cl in enumerate(bsc, 1):
-                            if cl["action"] != "update":
-                                continue
-                            if f.name in cl["sets"]:
-                                col = F.when(
-                                    F.col("__bs") == i,
-                                    F.expr(cl["sets"][f.name]).cast(f.type),
-                                ).otherwise(col)
-                        bs_cols.append(col.cast(f.type).alias(f.name))
-                    anti = anti.select(*bs_cols)
-                if keep_matched_verbatim:
-                    parts = [anti, target.join(srcR, jcond, "left_semi")]
-                    if ins_df is not None:
-                        parts.append(ins_df)
-                    out = reduce(DataFrame.unionByName, parts)
-                    for fe in candidates:
-                        st.files.remove(fe)
-                        if not fe.staged:
-                            st.removed_file_ids.append(fe.file_id)
-                    for ie in touched_inlined:
-                        st.inlined.remove(ie)
-                        if not ie.staged:
-                            st.removed_inlined_ids.append(ie.row_id)
-                    st.files.extend(self._write_staged(st, out))
-                    if any(cl["action"] == "update" for cl in bsc):
-                        st.changes.add("tables_updated")
-                    if any(cl["action"] == "delete" for cl in bsc):
-                        st.changes.add("tables_deleted_from")
-                    if inserted:
-                        st.changes.add("tables_inserted_into")
-                    return {
-                        "matched": matched,
-                        "inserted": inserted,
-                        "acted": 0,
-                        "acted_by_source": bs_acted,
-                    }
-                parts = [anti]
-                m = joined
-                delete_idx = [
-                    i for i, cl in enumerate(mc, 1)
-                    if cl["action"] == "delete"
-                ]
-                if delete_idx:
-                    m = m.filter(~F.col("__clause").isin(delete_idx))
-                upd_cols = []
-                for f in sch.fields:
-                    col = F.col(f.name)
-                    for i, cl in enumerate(mc, 1):
-                        if cl["action"] != "update":
-                            continue
-                        sets = cl["sets"]
-                        if sets is None:
-                            # full-row replace: same-named source columns
-                            if (
-                                f"__s_{f.name}" in srcR.columns
-                                and f.name not in on
-                            ):
-                                rep = F.col(f"__s_{f.name}")
-                            else:
-                                continue
-                        elif f.name in sets:
-                            rep = F.expr(sets[f.name])
-                        else:
-                            continue
-                        col = F.when(
-                            F.col("__clause") == i, rep.cast(f.type)
-                        ).otherwise(col)
-                    upd_cols.append(col.cast(f.type).alias(f.name))
-                parts.append(m.select(*upd_cols))
-                if ins_df is not None:
-                    parts.append(ins_df)
+                if nmc and hit_src < bounds["_n"]:
+                    parts.append(_insert_frame(sch, srcR, hit_keys, skeys, nmc))
             else:
-                keep = target.join(src, on, "left_anti")
-                parts = [keep]
-                if when_matched == "update" and when_not_matched == "insert":
-                    parts.append(src)  # all source rows land
-                elif when_matched == "update":
-                    parts.append(src.join(target, on, "left_semi"))
-                elif when_not_matched == "insert":
-                    parts.append(src.join(target, on, "left_anti"))
-            out = reduce(DataFrame.unionByName, parts)
-
-            for fe in candidates:
-                st.files.remove(fe)
-                if not fe.staged:
-                    st.removed_file_ids.append(fe.file_id)
-            for ie in touched_inlined:
-                st.inlined.remove(ie)
-                if not ie.staged:
-                    st.removed_inlined_ids.append(ie.row_id)
-            st.files.extend(self._write_staged(st, out))
-            if custom:
-                if acted:
-                    if any(cl["action"] == "update" for cl in mc):
-                        st.changes.add("tables_updated")
-                    if any(cl["action"] == "delete" for cl in mc):
-                        st.changes.add("tables_deleted_from")
-                if bs_acted:
-                    if any(cl["action"] == "update" for cl in bsc):
-                        st.changes.add("tables_updated")
-                    if any(cl["action"] == "delete" for cl in bsc):
-                        st.changes.add("tables_deleted_from")
-            elif effective:
-                st.changes.add(
-                    "tables_deleted_from" if when_matched == "delete"
-                    else "tables_updated"
+                # the flat form lands whole source rows: a matched key's
+                # target rows (several, in a PK-less table) collapse into
+                # its one source row
+                hit_keys = hit_keys.toDF(*on)
+                if when_matched == "update":
+                    n_versions = bounds["_n"] - hit_src
+                    if nmc:
+                        parts.append(src)
+                    elif n_versions:
+                        parts.append(src.join(hit_keys, on, "left_semi"))
+                elif nmc and hit_src < bounds["_n"]:
+                    parts.append(src.join(hit_keys, on, "left_anti"))
+            bs_acted = 0
+            if bsc:
+                # every target row whose key matches no source row, routed
+                # to its first firing by-source clause
+                bs = (
+                    self.c._build_df(
+                        st.files, st.inlined, st.schemas, sch, positions=True
+                    )
+                    .join(src.select(*on), on, "left_anti")
+                    .withColumn("__bs", _clause_chain_expr(bsc))
+                    .filter(F.col("__bs") > 0)
+                    .persist()
                 )
+                persisted.append(bs)
+                bs_rows = bs.select(*_POS, "__bs").collect()
+                bs_acted = len(bs_rows)
+                hits += [(r[0], r[1]) for r in bs_rows]
+                upd = [
+                    i for i, cl in enumerate(bsc, 1) if cl["action"] == "update"
+                ]
+                n_bs = sum(1 for r in bs_rows if r[2] in upd)
+                if n_bs:
+                    n_versions += n_bs
+                    parts.append(
+                        bs.filter(F.col("__bs").isin(upd)).select(
+                            *_update_cols(sch, bsc, "__bs", srcR, on)
+                        )
+                    )
+            inserted = 0
+            staged = []
+            if parts:
+                staged = self._write_staged(
+                    st, reduce(DataFrame.unionByName, parts)
+                )
+                inserted = sum(e.row_count for e in staged) - n_versions
+            self._delete_rows(st, hits)
+            st.files.extend(staged)
+            for n_acted, cls in ((acted, mc), (bs_acted, bsc)):
+                if n_acted:
+                    if any(cl["action"] == "update" for cl in cls):
+                        st.changes.add("tables_updated")
+                    if any(cl["action"] == "delete" for cl in cls):
+                        st.changes.add("tables_deleted_from")
             if inserted:
                 st.changes.add("tables_inserted_into")
             res = {"matched": matched, "inserted": inserted}
@@ -2737,110 +2659,6 @@ class Transaction:
         finally:
             for df_ in persisted:
                 df_.unpersist()
-
-    def _hit_subset(
-        self, st, sch, candidates, touched_inlined, src, on, matched
-    ):
-        """Files / inlined entries among the range-pruned candidates that
-        actually hold a row matching a source key (see merge). Key columns
-        only cross the scan; file identity rides ``input_file_name()``."""
-        if not matched:
-            return [], []  # pure-insert merge: rewrite nothing
-        hit_files = candidates
-        if candidates:
-            tagged = self._tagged_scan(st, sch, candidates, cols=on)
-            hit_files = _files_by_uri(candidates, (
-                r["__f"]
-                for r in tagged.join(src.select(*on), on, "left_semi")
-                .select("__f")
-                .distinct()
-                .collect()
-            ))
-        hit_inlined = touched_inlined
-        if touched_inlined:
-            inl = self.c._build_df([], touched_inlined, st.schemas, sch)
-            if (
-                inl.select(*on)
-                .join(src.select(*on), on, "left_semi")
-                .limit(1)
-                .count()
-                == 0
-            ):
-                hit_inlined = []
-        if matched > 0 and not hit_files and not hit_inlined:
-            # Invariant: matched target rows LIVE somewhere. An empty hit
-            # set here means file-identity normalization diverged between
-            # the catalog path and input_file_name() — proceeding would
-            # duplicate every matched row (update) or silently no-op
-            # (delete) while reporting matched=N. Fail loudly instead.
-            raise LakeError(
-                "merge internal error: matched rows found but no hit "
-                "file/inlined entry (file URI normalization mismatch?)"
-            )
-        return hit_files, hit_inlined
-
-    def _tagged_scan(self, st, sch, files, cols=None):
-        """Union-of-schema-versions scan of ``files`` projected to the
-        current schema (optionally to ``cols`` only) and tagged with
-        ``input_file_name()`` as ``__f`` — the shared base of the merge
-        legs' hit-/miss-subset scans (one URI-normalization contract)."""
-        by_sv: dict = {}
-        for fe in files:
-            by_sv.setdefault(fe.schema_version, []).append(fe.path)
-        parts = []
-        for sv, paths in sorted(by_sv.items()):
-            stored = st.schemas[sv]
-            sdf = self.c.spark.read.schema(stored.to_struct()).parquet(
-                *paths
-            )
-            p = _project(sdf, stored, sch)
-            if cols is not None:
-                p = p.select(*cols)
-            parts.append(p.withColumn("__f", F.input_file_name()))
-        return reduce(DataFrame.unionByName, parts)
-
-    def _miss_subset(self, st, sch, src, on, bsc):
-        """Files / inlined entries holding >=1 target row whose key matches
-        NO source row AND on which a by-source clause fires (see merge,
-        WHEN NOT MATCHED BY SOURCE). The complement of the source keys is
-        unboundable by min/max stats, so this scans the whole table — but
-        only the key columns plus the clause-condition columns cross the
-        scan (Catalyst prunes the rest), and ONE action returns both the
-        firing-row count and the distinct hit-file set, so an
-        already-synced mirror rewrites nothing."""
-        chain = _clause_chain_expr(bsc)
-        n_rows, hit_files = 0, []
-        if st.files:
-            tagged = self._tagged_scan(st, sch, st.files)
-            row = (
-                tagged.join(src.select(*on), on, "left_anti")
-                .withColumn("__bs", chain)
-                .filter(F.col("__bs") > 0)
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.collect_set("__f").alias("_fs"),
-                )
-                .first()
-            )
-            n_rows = int(row["_n"] or 0)
-            hit_files = _files_by_uri(st.files, row["_fs"] or [])
-            if n_rows > 0 and not hit_files:
-                raise LakeError(
-                    "merge internal error: by-source rows fired but no "
-                    "hit file (file URI normalization mismatch?)"
-                )
-        hit_inlined, n_inl = [], 0
-        if st.inlined:
-            inl = self.c._build_df([], list(st.inlined), st.schemas, sch)
-            n_inl = (
-                inl.join(src.select(*on), on, "left_anti")
-                .withColumn("__bs", chain)
-                .filter(F.col("__bs") > 0)
-                .count()
-            )
-            if n_inl:
-                hit_inlined = list(st.inlined)
-        return hit_files, hit_inlined, n_rows + n_inl
 
     # -- maintenance (M1/M2) --------------------------------------------
     def flush_inlined(self, name: str) -> None:
@@ -2896,7 +2714,11 @@ class Transaction:
         and leaving them on disk orphans them until gc (r13 ADVICE). The
         deletes happen AFTER the write executes (the rewrite's scan reads
         the old files)."""
-        staged_paths = [fe.path for fe in st.files if fe.staged]
+        # the rewrite folds every delete file in; committed ones retire
+        # with their data files at commit
+        staged_paths = [fe.path for fe in st.files if fe.staged] + [
+            d.path for fe in st.files for d in fe.deletes if d.staged
+        ]
         for fe in st.files:
             if not fe.staged:
                 st.removed_file_ids.append(fe.file_id)
@@ -2975,9 +2797,9 @@ class Transaction:
         like the stats the pruner compares — see _zvalue; Delta's
         truncated-prefix approach), so string point AND range predicates
         both prune.
-        Copy-on-write through the normal staged-commit path: time travel
-        to pre-optimize versions is unaffected, and the rewrite is
-        all-or-nothing on commit.
+        A full rewrite through the normal staged-commit path that folds
+        the delete files in: time travel to pre-optimize versions is
+        unaffected, and the rewrite is all-or-nothing on commit.
 
         The spec PERSISTS: explicit ``zorder_by`` columns are recorded in
         the table schema (one metadata-only evolution, same machinery as
@@ -3016,14 +2838,19 @@ class Transaction:
 
     def _read_range_conflict(self, t, st: TableState, sid: int) -> bool:
         """Does concurrent snapshot ``sid`` intersect any of this txn's
-        recorded MERGE read ranges on ``st``? Sound via file min/max
-        stats: a file ADDED by sid may hold rows my merge would have
-        matched; a file REMOVED by sid may have held rows whose content
-        my rewrite/insert decisions depended on — either overlapping the
-        read range is a conflict. Missing stats conservatively conflict
-        (file_may_match returns True). Inlined-row changes always
-        conflict: their key values live inside row_json, not in
-        range-checkable stats."""
+        recorded read ranges on ``st``? Sound via file min/max stats: a
+        file ADDED by sid may hold rows my statement would have matched; a
+        file REMOVED by sid may have held rows my decisions depended on —
+        either overlapping the read range is a conflict. A delete file
+        added by sid writes its data file's region: it conflicts when that
+        file's stats overlap the range and it removes a row the statement
+        matched there (a statement that did not scan the file conflicts
+        outright). So two deletes of disjoint rows of one file commute.
+        Missing stats conservatively conflict (file_may_match returns
+        True). Inlined-row changes always conflict: their key values live
+        inside row_json, not in range-checkable stats."""
+        import numpy as np
+
         ms = self.c.ms
         n = t.exec(
             ms._ph(
@@ -3042,11 +2869,30 @@ class Transaction:
             (st.table_id, sid, sid),
         ).fetchall()
         sch = st.schema
-        return any(
+        if any(
             file_may_match(cs, mr["conjuncts"], sch)
             for (cs,) in rows
             for mr in st.read_ranges
-        )
+        ):
+            return True
+        for fid, path, cs in t.exec(
+            ms._ph(
+                "SELECT d.data_file_id, d.path, f.col_stats FROM "
+                "lake_delete_file d JOIN lake_data_file f ON "
+                "f.file_id = d.data_file_id WHERE d.table_id=? AND "
+                "d.added_snapshot=?"
+            ),
+            (st.table_id, sid),
+        ).fetchall():
+            for mr in st.read_ranges:
+                if not file_may_match(cs, mr["conjuncts"], sch):
+                    continue
+                seen = mr["seen"].get(fid)
+                if seen is None or np.intersect1d(
+                    seen, self.c._positions(path)
+                ).size:
+                    return True
+        return False
 
     # -- commit / rollback ----------------------------------------------
     def commit(self) -> int:
@@ -3151,9 +2997,26 @@ class Transaction:
                             " created_snapshot, schema_json) VALUES (?,?,?,?)",
                             (st.table_id, sv, new_v, st.schemas[sv].to_json()),
                         )
+                    # a delete staged against a committed data file that
+                    # a concurrent snapshot removed would delete nothing
+                    # (or rows of a file no longer read): retry instead
+                    hit = [
+                        fe.file_id for fe in st.files
+                        if not fe.staged and any(d.staged for d in fe.deletes)
+                    ]
+                    if hit and t.exec(
+                        "SELECT COUNT(*) FROM lake_data_file WHERE "
+                        "removed_snapshot IS NOT NULL AND file_id IN "
+                        f"({','.join('?' * len(hit))})",
+                        tuple(hit),
+                    ).fetchone()[0]:
+                        raise ConflictError(
+                            f"a concurrent snapshot removed a data file of "
+                            f"{nm!r} this transaction deletes rows from"
+                        )
                     for fe in st.files:
                         if fe.staged:
-                            t.exec(
+                            fid = t.insert(
                                 "INSERT INTO lake_data_file (table_id, path, "
                                 "row_count, file_bytes, schema_version, "
                                 "added_snapshot, col_stats) VALUES "
@@ -3162,10 +3025,34 @@ class Transaction:
                                  fe.file_bytes, fe.schema_version, new_v,
                                  fe.col_stats),
                             )
+                            if fe.deletes and fid is None:
+                                fid = t.exec(
+                                    "SELECT file_id FROM lake_data_file "
+                                    "WHERE path=?", (fe.path,),
+                                ).fetchone()[0]
+                            fe.file_id = fid
+                        for d in fe.deletes:
+                            if d.staged:
+                                t.exec(
+                                    "INSERT INTO lake_delete_file (table_id, "
+                                    "data_file_id, path, delete_count, "
+                                    "file_bytes, added_snapshot) VALUES "
+                                    "(?,?,?,?,?,?)",
+                                    (st.table_id, fe.file_id, d.path,
+                                     d.delete_count, d.file_bytes, new_v),
+                                )
                     if st.removed_file_ids:
+                        marks = ",".join("?" * len(st.removed_file_ids))
                         t.exec(
                             "UPDATE lake_data_file SET removed_snapshot=? "
-                            f"WHERE file_id IN ({','.join('?' * len(st.removed_file_ids))})",
+                            f"WHERE file_id IN ({marks})",
+                            (new_v, *st.removed_file_ids),
+                        )
+                        # a removed data file's delete files retire with it
+                        t.exec(
+                            "UPDATE lake_delete_file SET removed_snapshot=? "
+                            "WHERE removed_snapshot IS NULL AND data_file_id "
+                            f"IN ({marks})",
                             (new_v, *st.removed_file_ids),
                         )
                     for ie in st.inlined:
@@ -3273,16 +3160,86 @@ def _clause_chain_expr(clauses):
     return chain.otherwise(F.lit(0)) if chain is not None else F.lit(0)
 
 
-def _files_by_uri(files, uris):
-    """File entries among ``files`` whose normalized path matches one of
-    the input_file_name() URIs."""
-    hits = {_norm_file_uri(u) for u in uris}
-    return [fe for fe in files if _norm_file_uri(fe.path) in hits]
+def _hashable(v):
+    """``v`` with every list (an ARRAY key) and dict (a MAP key) turned
+    into a tuple, so equal keys hash alike."""
+    if isinstance(v, dict):
+        v = sorted(v.items(), key=repr)
+    if isinstance(v, (list, tuple)):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
+def _update_cols(sch: TableSchema, clauses, idx: str, srcR, on) -> list:
+    """The new version of a MERGE row routed (by clause index column
+    ``idx``) to an update clause: the clause's ``sets`` override their
+    columns; ``sets=None`` replaces every non-key column from the
+    same-named source column ``__s_<col>``."""
+    cols = []
+    for f in sch.fields:
+        col = F.col(f.name)
+        for i, cl in enumerate(clauses, 1):
+            if cl["action"] != "update":
+                continue
+            sets = cl["sets"]
+            if sets is None:
+                if f"__s_{f.name}" not in srcR.columns or f.name in on:
+                    continue
+                rep = F.col(f"__s_{f.name}")
+            elif f.name in sets:
+                rep = F.expr(sets[f.name])
+            else:
+                continue
+            col = F.when(F.col(idx) == i, rep.cast(f.type)).otherwise(col)
+        cols.append(col.cast(f.type).alias(f.name))
+    return cols
+
+
+def _insert_frame(sch: TableSchema, srcR, hit_keys, skeys, nmc) -> DataFrame:
+    """Unmatched source rows (``srcR`` rows whose keys ``skeys`` are not in
+    ``hit_keys``) -> target-schema rows through the not-matched clause
+    list: the first clause whose condition holds supplies the row. A
+    star-form clause (``sets`` empty or None) fills every field from the
+    same-named source column, then the column default (exactly _align's
+    fill); a clause with an EXPLICIT sets dict fills unlisted fields with
+    the column DEFAULT only — standard SQL/Delta ``INSERT (cols) VALUES``
+    semantics (unlisted columns never silently inherit same-named source
+    values). Rows matching no clause are dropped."""
+    ib = (
+        srcR.join(hit_keys, skeys, "left_anti")
+        .withColumn("__clause", _clause_chain_expr(nmc))
+        .filter(F.col("__clause") > 0)
+    )
+    cols = []
+    for f in sch.fields:
+        expr = default_expr(f)
+        dflt = F.expr(expr) if expr else F.lit(default_fill(f))
+        samenamed = (
+            F.col(f"__s_{f.name}") if f"__s_{f.name}" in srcR.columns else dflt
+        )
+        chain = None
+        for i, cl in enumerate(nmc, 1):
+            sets = cl.get("sets") or {}
+            if f.name in sets:
+                v = F.expr(sets[f.name])
+            elif sets:
+                v = dflt  # explicit column list: default fill
+            else:
+                v = samenamed  # star form
+            chain = (
+                F.when(F.col("__clause") == i, v)
+                if chain is None
+                else chain.when(F.col("__clause") == i, v)
+            )
+        col = chain.otherwise(dflt) if chain is not None else dflt
+        cols.append(col.cast(f.type).alias(f.name))
+    return ib.select(*cols)
 
 
 def _norm_file_uri(p: str) -> str:
     """Normalize a file path / URI for identity comparison between catalog
-    FileEntry paths and Spark's ``input_file_name()`` output.
+    FileEntry paths and the file URIs Spark reports (a scan's
+    ``_metadata.file_path`` and ``inputFiles()``).
 
     Handles BOTH slash conventions for scheme URIs — Hadoop's
     ``Path.toString`` commonly emits single-slash ``file:/x/y`` while
@@ -3295,7 +3252,7 @@ def _norm_file_uri(p: str) -> str:
 
     # scheme must be >= 2 chars: a single-letter prefix is a Windows drive
     # path ('C:/x'), not a URI — misparsing it would make every FileEntry
-    # path mismatch input_file_name() and trip the merge hit-subset guard
+    # path mismatch the scan's file URIs
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]+):", p)
     if m:
         u = urlsplit(p)
@@ -3397,7 +3354,11 @@ def _coerce_read(v, t: str):
     return v
 
 
-def _project(df: DataFrame, stored: TableSchema, current: TableSchema) -> DataFrame:
+def _project(
+    df: DataFrame, stored: TableSchema, current: TableSchema, keep=()
+) -> DataFrame:
+    """``df`` (written under ``stored``) in the ``current`` schema, plus
+    the ``keep`` columns as they are."""
     # identity projection (no evolution between the file's schema and the
     # read schema) — skip the per-column cast/alias select outright: the
     # column ops cost ~45 ms of py4j per read, which the no-evolution
@@ -3423,7 +3384,7 @@ def _project(df: DataFrame, stored: TableSchema, current: TableSchema) -> DataFr
             # rows predating the field get the DDL-time frozen value, never a
             # per-read re-evaluation (a read must not change the data)
             cols.append(F.lit(default_fill(f)).cast(f.type).alias(f.name))
-    return df.select(*cols)
+    return df.select(*cols, *keep)
 
 
 def _now_iso() -> str:

@@ -2,15 +2,24 @@
 
 The reference's core design point is that ALL lakehouse metadata lives in an
 ordinary SQL database and a commit touches it in ONE SQL transaction
-(``README.md:200-209``): ``ducklake_data_file``, ``ducklake_table_stats``,
-``ducklake_snapshot``. We mirror that with a small dialect layer so the same
-catalog runs on SQLite (driver-local, default) or PostgreSQL/MySQL via DB-API
-(``README.md:225-236``, ``demos/05_catalog_portability/demo.py:294-299``) —
-connection-string dispatch lives in :func:`open_metastore`.
+(``README.md:200-209``). The tables:
 
-Reads at version V select data files where ``added_snapshot <= V AND
-(removed_snapshot IS NULL OR removed_snapshot > V)`` — one SQL query replaces
-Iceberg-style manifest walking (``exploration/schema_analysis.sh:244-252``).
+* ``lake_snapshot``, ``lake_table``, ``lake_schema`` and ``lake_view``;
+* ``lake_data_file`` (DuckLake's ``ducklake_data_file``) with per-file
+  column stats;
+* ``lake_delete_file`` (``ducklake_delete_file``): a positional delete file
+  of one data file — its path, delete count and begin/end snapshots;
+* ``lake_inlined``: small inserts held as rows in the catalog.
+
+We mirror that with a small dialect layer so the same catalog runs on SQLite
+(driver-local, default) or PostgreSQL/MySQL via DB-API (``README.md:225-236``,
+``demos/05_catalog_portability/demo.py:294-299``) — connection-string
+dispatch lives in :func:`open_metastore`.
+
+Reads at version V select data and delete files where ``added_snapshot <= V
+AND (removed_snapshot IS NULL OR removed_snapshot > V)`` — one SQL query
+replaces Iceberg-style manifest walking
+(``exploration/schema_analysis.sh:244-252``).
 
 Scale note: metadata volume is O(#files + #snapshots), not O(rows). At 100 TB
 with ~1 GB files that is ~1e5 rows per table — trivial for any SQL store; the
@@ -53,6 +62,15 @@ _DDL = [
         added_snapshot BIGINT NOT NULL,
         removed_snapshot BIGINT,
         col_stats TEXT)""",
+    """CREATE TABLE IF NOT EXISTS lake_delete_file (
+        delete_file_id {auto_pk},
+        table_id BIGINT NOT NULL,
+        data_file_id BIGINT NOT NULL,
+        path TEXT NOT NULL,
+        delete_count BIGINT NOT NULL,
+        file_bytes BIGINT NOT NULL,
+        added_snapshot BIGINT NOT NULL,
+        removed_snapshot BIGINT)""",
     """CREATE TABLE IF NOT EXISTS lake_inlined (
         row_id {auto_pk},
         table_id BIGINT NOT NULL,
@@ -67,6 +85,8 @@ _DDL = [
         dropped_snapshot BIGINT)""",
     """CREATE INDEX IF NOT EXISTS idx_file_live
         ON lake_data_file (table_id, added_snapshot, removed_snapshot)""",
+    """CREATE INDEX IF NOT EXISTS idx_del_live
+        ON lake_delete_file (table_id, added_snapshot, removed_snapshot)""",
     """CREATE INDEX IF NOT EXISTS idx_inl_live
         ON lake_inlined (table_id, added_snapshot, removed_snapshot)""",
 ]

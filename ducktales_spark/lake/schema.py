@@ -26,6 +26,7 @@ from decimal import Decimal
 from functools import lru_cache
 from typing import Any
 
+from pyspark.sql import Row
 from pyspark.sql.types import DataType, StructField, StructType
 
 
@@ -299,6 +300,10 @@ def value_to_json(v: Any) -> Any:
         return {"$dec": str(v)}
     if isinstance(v, (bytes, bytearray)):
         return {"$b64": base64.b64encode(bytes(v)).decode()}
+    if isinstance(v, Row):  # a STRUCT value: an object keyed by field
+        return {k: value_to_json(x) for k, x in v.asDict().items()}
+    if isinstance(v, dict):  # a MAP value
+        return {k: value_to_json(x) for k, x in v.items()}
     if isinstance(v, (list, tuple)):
         return [value_to_json(x) for x in v]
     return v
@@ -314,6 +319,7 @@ def value_from_json(v: Any) -> Any:
             return Decimal(v["$dec"])
         if "$b64" in v:
             return base64.b64decode(v["$b64"])
+        return {k: value_from_json(x) for k, x in v.items()}
     if isinstance(v, list):
         return [value_from_json(x) for x in v]
     return v

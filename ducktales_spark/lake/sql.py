@@ -187,8 +187,22 @@ _TYPE_MAP = {
 }
 
 
+_NESTED_TYPE = re.compile(r"(array|map|struct)\s*<(.*)>", re.I | re.S)
+
+
 def _map_type(t: str) -> str:
-    t = t.strip().lower()
+    """A DuckDB type spelling -> Spark DDL, the element, key, value and
+    field types inside ``ARRAY<…>``, ``MAP<…>`` and ``STRUCT<…>`` too."""
+    t = t.strip()
+    m = _NESTED_TYPE.fullmatch(t)
+    if m:
+        kind, args = m.group(1).lower(), _type_args(m.group(2))
+        mapped = (
+            [_struct_field(a) for a in args] if kind == "struct"
+            else [_map_type(a) for a in args]
+        )
+        return f"{kind}<{', '.join(mapped)}>"
+    t = t.lower()
     m = re.fullmatch(r"(varchar|char)\s*\(\s*\d+\s*\)", t)
     if m:
         return "string"  # length is a hint, unenforced (SURVEY §1.2)
@@ -197,7 +211,38 @@ def _map_type(t: str) -> str:
         return f"decimal({m.group(2)},{m.group(3)})"
     if t in _TYPE_MAP:
         return _TYPE_MAP[t]
-    return t  # assume already a Spark DDL type (array<float> etc.)
+    return t  # assume already a Spark DDL type
+
+
+def _type_args(text: str) -> list:
+    """The comma-separated arguments of a type's ``<…>``; a comma nested in
+    ``<…>``, ``(…)`` or a backticked name separates nothing."""
+    out, level, start = [], 0, 0
+    for t in tokens(text):
+        if t.kind != "op" or t.depth:
+            continue
+        if t.text == "<":
+            level += 1
+        elif t.text == ">":
+            level -= 1
+        elif t.text == "," and level == 0:
+            out.append(text[start:t.start])
+            start = t.end
+    out.append(text[start:])
+    return [a.strip() for a in out]
+
+
+def _struct_field(text: str) -> str:
+    """One ``STRUCT<…>`` field, ``name [:] type`` -> ``name: <Spark type>``."""
+    sig = [t for t in tokens(text) if t.kind not in ("ws", "comment")]
+    name = token_name(sig[0]) if sig else None
+    rest = text[sig[1].start:] if len(sig) > 1 else ""
+    rest = rest[1:] if rest.startswith(":") else rest
+    if name is None or not rest.strip():
+        raise LakeSQLError(f"bad STRUCT field: {text.strip()!r}")
+    if not re.fullmatch(r"[A-Za-z_]\w*", name):
+        name = bq(name)
+    return f"{name}: {_map_type(rest)}"
 
 
 class _Column(NamedTuple):
@@ -2909,7 +2954,7 @@ class SQLExecutor:
         """``INSERT OR REPLACE INTO`` (upsert by primary key) and ``INSERT
         OR IGNORE INTO`` (insert only non-conflicting rows) — DuckDB's ON
         CONFLICT shorthands, lowered onto the MERGE machinery (stats-pruned
-        copy-on-write; only files containing a hit key rewrite). Like
+        merge-on-read; only files containing a hit key get a delete file). Like
         DuckDB, both forms require a PRIMARY KEY on the target. A source
         batch carrying duplicate keys raises ConstraintViolation in BOTH
         modes — DuckDB's row-at-a-time executor lets the first duplicate

@@ -11,8 +11,9 @@ built-in skipping layer inside the scan.
 Scale note: footer reads are O(#staged files) per commit and happen where the
 files were just written; at cluster scale the same stats arrive from executor
 write-task metrics instead — the catalog schema doesn't change. Pruning keeps
-UPDATE/DELETE copy-on-write touching only matching files, which is what makes
-point-updates on a 100 TB table feasible (rewrite a few files, not the table).
+UPDATE/DELETE/MERGE scanning only matching files, and merge-on-read writes a
+delete file for each file holding a matched row instead of copying it, which
+is what makes point-updates on a 100 TB table feasible.
 """
 
 from __future__ import annotations

@@ -83,9 +83,9 @@ def l01_lake_ctas_inlined(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ids=("D3", "D4"),
 )
 def l02_lake_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE ... SET ... WHERE as a copy-on-write rewrite
-    (demos/01_transaction_rollback/demo.py:96-102) followed by a predicate
-    DELETE that rewrites only stats-matching files
+    """UPDATE ... SET ... WHERE, merge-on-read
+    (demos/01_transaction_rollback/demo.py:96-102), followed by a predicate
+    DELETE that scans only stats-matching files
     (exploration/ducklake_analysis.sh:144-145); the oracle recomputes the
     final state relationally over the source table."""
     lake = _fresh_lake(spark)

@@ -334,13 +334,13 @@ def remove_vectors(lake: LakeCatalog, name: str, ids) -> int:
     ``ids`` is a DataFrame holding a ``vec_id`` column (the scale path: a
     takedown list is a table, not a driver list) or a small iterable of
     ints. The delete is one MERGE under the FROZEN centroid set, committed
-    as one snapshot: copy-on-write rewrites only index files that contain
-    a removed row, and rewritten files re-cluster on ``centroid_id`` (the
-    table's partition spec), so probe-side ``centroid_id IN`` file pruning
-    and the screening path's stats-derived bucket counts
-    (_bucket_counts_from_stats) stay valid afterwards — the per-bucket
-    counts self-correct because they are derived from file stats, not a
-    stored meta row. Time travel still serves the pre-delete index at
+    as one snapshot: only index files that hold a removed row get a delete
+    file, and no file changes its ``centroid_id`` range, so probe-side
+    ``centroid_id IN`` file pruning and the screening path's stats-derived
+    bucket counts (_bucket_counts_from_stats, net of each file's delete
+    count) stay valid afterwards — the per-bucket counts self-correct
+    because they are derived from catalog metadata, not a stored meta
+    row. Time travel still serves the pre-delete index at
     earlier versions, like any lake table.
 
     Centroids are reference points, not corpus members: removing a vector
@@ -427,7 +427,8 @@ def _bucket_counts_from_stats(
         if not st or st["min"] is None or st["min"] != st["max"]:
             return None  # multi-bucket or stat-less file: scan instead
         cid = int(st["min"])
-        counts[cid] = counts.get(cid, 0) + int(f["row_count"])
+        live = int(f["row_count"]) - int(f["delete_count"])
+        counts[cid] = counts.get(cid, 0) + live
     return counts
 
 

@@ -7,6 +7,7 @@ the demos' printed narratives (SURVEY.md §5: scenario-driven end-to-end demos
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 
@@ -40,6 +41,25 @@ INV_SCHEMA = StructType(
 @pytest.fixture()
 def lake(spark, tmp_path) -> LakeCatalog:
     return LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=8)
+
+
+@contextlib.contextmanager
+def _shuffle_layout(spark, partitions: int):
+    """Writes inside the block make ``partitions`` shuffle partitions, none
+    coalesced away, whatever the session's core count: a test that needs a
+    multi-file layout sets it instead of inheriting it from the host."""
+    keys = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def _inventory(lake, rows=None):
@@ -308,7 +328,8 @@ def test_compaction(lake, spark):
 
 def test_cow_file_pruning(lake, spark):
     """D3 at scale: an UPDATE whose predicate excludes a file's min/max range
-    must NOT rewrite that file (stats-based pruning, SURVEY.md §4)."""
+    must not touch that file (stats-based pruning, SURVEY.md §4), and
+    merge-on-read touches the matching one only with a delete file."""
     lake.create_table(
         "big", StructType([StructField("id", IntegerType(), True),
                            StructField("v", IntegerType(), True)])
@@ -335,9 +356,18 @@ def test_cow_file_pruning(lake, spark):
             "IS NULL"
         )
     }
-    # the 0-999 file survived untouched (same file_id still live)
-    survivors = set(paths_before) & set(paths_after)
-    assert len(survivors) == 1
+    # no data file is removed: the pruned 0-999 file has no delete file,
+    # the hit 5000-5999 file one holding exactly the 100 matched rows
+    assert set(paths_before) <= set(paths_after)
+    deletes = dict(
+        lake.ms.q(
+            "SELECT data_file_id, delete_count FROM lake_delete_file "
+            "WHERE removed_snapshot IS NULL"
+        )
+    )
+    pruned, hit = sorted(paths_before)
+    assert pruned not in deletes
+    assert deletes == {hit: 100}
     assert lake.read("big").filter("v >= 100").count() == 100
     assert lake.read("big").count() == 2000
 
@@ -923,22 +953,15 @@ def test_merge_rewrites_only_files_containing_matches(lake, spark):
     (range pruning keeps all of them) — but only files actually HOLDING a
     matched key may rewrite. The others must keep their exact paths, and a
     pure-insert merge must rewrite nothing at all."""
-    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        with lake.transaction() as tx:
-            tx.ctas(
-                "idx",
-                spark.range(2000).select(
-                    F.col("id").alias("k"),
-                    (F.col("id") % 8).cast("int").alias("c"),
-                    F.concat(F.lit("v"), F.col("id")).alias("v"),
-                ),
-                partition_by=("c",),
-            )
-    finally:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", prev
+    with _shuffle_layout(spark, 8), lake.transaction() as tx:
+        tx.ctas(
+            "idx",
+            spark.range(2000).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 8).cast("int").alias("c"),
+                F.concat(F.lit("v"), F.col("id")).alias("v"),
+            ),
+            partition_by=("c",),
         )
     files_before = set(lake.read("idx").inputFiles())
     assert len(files_before) > 2, "need a multi-file clustered layout"
@@ -1960,14 +1983,16 @@ def test_optimize_zorder_clustering(spark, tmp_path):
     pl.sql(
         "CREATE TABLE pt (p INT, a INT, b INT) PARTITION BY (p)"
     )
-    pl.insert(
-        "pt",
-        spark.range(60000).select(
-            (F.col("id") % 4).cast("int").alias("p"),
-            (F.col("id") * 2654435761 % 500).cast("int").alias("a"),
-            (F.col("id") * 40503 % 499).cast("int").alias("b"),
-        ),
+    rows = spark.range(60000).select(
+        (F.col("id") % 4).cast("int").alias("p"),
+        (F.col("id") * 2654435761 % 500).cast("int").alias("a"),
+        (F.col("id") * 40503 % 499).cast("int").alias("b"),
     )
+    # one input file per p value, whatever the host's core count: a range
+    # split of the four values would sit where its sample put it
+    with _shuffle_layout(spark, 1):
+        for p in range(4):
+            pl.insert("pt", rows.filter(F.col("p") == p))
     pl.sql("CALL optimize('pt', zorder_by => 'a,b', target_file_bytes => 8192)")
 
     def pt_prune(pred):
@@ -1996,7 +2021,7 @@ def test_optimize_zorder_clustering(spark, tmp_path):
     # (thousands of files per partition) the straddle share is ~0; at
     # 12 files / 4 groups it is visible and bounded here.
     assert np_ >= 4 and mp <= -(-np_ // 4) + 2
-    # with ~3 z-files per partition the split depth is ~1.6 bits, which
+    # with ~2 z-files per partition the split depth is ~0.8 bits, which
     # lands on the MSB dimension first — that dimension must skip files
     mb, _ = pt_prune("b = 400")
     assert mb < np_
@@ -2235,3 +2260,157 @@ def test_pk_writes_carry_parquet_bloom_filters(spark, tmp_path):
     )
     assert lake.sql("SELECT v FROM t WHERE pk = 4321").collect()[0]["v"] == 7
     assert lake.count("t") == 100000
+
+
+# -- merge-on-read row deletes ------------------------------------------
+
+
+def _one_file_table(lake, spark, name="m", n=100):
+    """``name`` (id int, v int) holding ids 0..n-1 in one data file."""
+    lake.ctas(
+        name,
+        spark.range(n).select(
+            F.col("id").cast("int").alias("id"),
+            (F.col("id") % 7).cast("int").alias("v"),
+        ).coalesce(1),
+    )
+
+
+def _live_deletes(lake) -> list:
+    return lake.ms.q(
+        "SELECT path, delete_count FROM lake_delete_file "
+        "WHERE removed_snapshot IS NULL"
+    )
+
+
+def test_mor_time_travel_across_delete_files(lake, spark):
+    """A delete file resolves by snapshot as a data file does: each version
+    reads exactly its own deletes, and count() agrees with the scan at
+    every version."""
+    _one_file_table(lake, spark)
+    v0 = lake.current_version()
+    assert lake.delete("m", "id < 10") == 10
+    v1 = lake.current_version()
+    assert lake.update("m", {"v": "v + 100"}, "id >= 20 AND id < 30") == 10
+    v2 = lake.current_version()
+    assert lake.table_info()[0]["file_count"] == 2  # the original + versions
+    assert len(_live_deletes(lake)) == 2  # one per statement, same file
+
+    def ids(v):
+        return sorted(r.id for r in lake.read("m", version=v).collect())
+
+    assert ids(v0) == list(range(100))
+    assert ids(v1) == list(range(10, 100))
+    assert ids(v2) == list(range(10, 100))
+    for v, n in ((v0, 100), (v1, 90), (v2, 90)):
+        assert lake.count("m", version=v) == n
+    updated = lake.read("m", version=v2).filter("v >= 100")
+    assert sorted(r.id for r in updated.collect()) == list(range(20, 30))
+    assert lake.read("m", version=v1).filter("v >= 100").count() == 0
+    assert lake.sql(
+        f"SELECT count(*) AS n FROM m AT (VERSION => {v1})"
+    ).collect()[0]["n"] == 90
+
+
+def test_mor_delete_of_every_row_removes_the_file(lake, spark):
+    """A data file left with no live row leaves the table instead of
+    getting a delete file; the other file is untouched."""
+    _one_file_table(lake, spark)
+    lake.insert("m", spark.range(1000, 1010).select(
+        F.col("id").cast("int").alias("id"), F.lit(0).alias("v")
+    ).coalesce(1))
+    assert lake.delete("m", "id >= 1000") == 10
+    assert _live_deletes(lake) == []
+    assert lake.table_info()[0]["file_count"] == 1
+    assert lake.count("m") == lake.read("m").count() == 100
+
+
+def test_mor_checkpoint_and_merge_adjacent_fold_deletes(lake, spark):
+    """CHECKPOINT flushes the inlined rows and merge_adjacent_files rewrites
+    the files through the read path: the deleted rows stay gone, and the
+    folded data files' delete files retire with them."""
+    _one_file_table(lake, spark)
+    lake.sql("INSERT INTO m VALUES (500, 1), (501, 2)")
+    lake.sql("DELETE FROM m WHERE id < 5 OR id = 500")
+    lake.sql("UPDATE m SET v = -1 WHERE id BETWEEN 50 AND 59")
+    want = sorted(tuple(r) for r in lake.read("m").collect())
+    assert len(want) == 96 and lake.table_info()[0]["delete_file_count"] == 2
+    lake.sql("CHECKPOINT m")
+    lake.sql("CALL ducklake_merge_adjacent_files('m')")
+    info = lake.table_info()[0]
+    assert info["delete_file_count"] == 0 and info["delete_file_bytes"] == 0
+    assert info["row_count"] == 96 and info["inlined_rows"] == 0
+    assert _live_deletes(lake) == []
+    assert lake.ms.q(
+        "SELECT COUNT(*) FROM lake_delete_file WHERE removed_snapshot = ?",
+        (lake.current_version(),),
+    ) == [(2,)]
+    assert sorted(tuple(r) for r in lake.read("m").collect()) == want
+
+
+def test_mor_gc_keeps_live_delete_files(lake, spark):
+    """gc counts catalogued delete files as referenced: collecting one would
+    bring its deleted rows back."""
+    _one_file_table(lake, spark)
+    lake.delete("m", "id < 30")
+    (path, n), = _live_deletes(lake)
+    assert n == 30
+    lake.gc(min_age_seconds=0)
+    assert os.path.exists(path)
+    lake._read_cache.clear()
+    assert lake.read("m").count() == lake.count("m") == 70
+    assert lake.read("m").filter("id < 30").count() == 0
+
+
+def test_mor_expire_snapshots_purges_retired_delete_files(lake, spark):
+    """A delete file retired by compaction is purged from the catalog and
+    from disk by expire_snapshots, like a retired data file."""
+    _one_file_table(lake, spark)
+    lake.delete("m", "id < 30")
+    (path, _), = _live_deletes(lake)
+    lake.compact("m")
+    assert _live_deletes(lake) == []
+    res = lake.expire_snapshots(keep_last=1)
+    assert res["delete_files_deleted"] == 1
+    assert lake.ms.q("SELECT COUNT(*) FROM lake_delete_file") == [(0,)]
+    assert not os.path.exists(path)
+    assert lake.read("m").count() == lake.count("m") == 70
+
+
+def test_mor_count_changes_and_export_agree_with_reads(lake, spark, tmp_path):
+    """After UPDATE and DELETE through delete files: count(), table_info,
+    table_changes and export_to all agree with a full read."""
+    _one_file_table(lake, spark)
+    v0 = lake.current_version()
+    lake.update("m", {"v": "v + 10"}, "id BETWEEN 40 AND 44")
+    lake.delete("m", "id >= 90")
+    v2 = lake.current_version()
+    rows = sorted(tuple(r) for r in lake.read("m").collect())
+    assert len(rows) == 90
+    assert lake.count("m") == lake.table_info()[0]["row_count"] == 90
+    ch = lake.table_changes("m", v0, v2).collect()
+    ins = sorted((r.id, r.v) for r in ch if r.change_type == "insert")
+    dele = sorted((r.id, r.v) for r in ch if r.change_type == "delete")
+    assert ins == [(i, i % 7 + 10) for i in range(40, 45)]
+    assert dele == [(i, i % 7) for i in list(range(40, 45)) + list(range(90, 100))]
+    other = LakeCatalog(str(tmp_path / "copy"), spark)
+    lake.export_to(other)
+    assert sorted(tuple(r) for r in other.read("m").collect()) == rows
+    assert other.count("m") == 90
+
+
+def test_mor_introspection_reports_delete_files(lake, spark):
+    """table_info() reports delete_file_count / delete_file_bytes and rows
+    net of deletes; file_stats() reports each data file's delete_count."""
+    _one_file_table(lake, spark)
+    lake.delete("m", "id < 3")
+    lake.delete("m", "id BETWEEN 10 AND 14")
+    info = lake.table_info()[0]
+    paths = [p for p, _ in _live_deletes(lake)]
+    assert info["delete_file_count"] == 2
+    assert info["delete_file_bytes"] == sum(os.path.getsize(p) for p in paths)
+    assert info["row_count"] == 92 and info["file_count"] == 1
+    (fs,) = lake.file_stats("m")
+    assert fs["row_count"] == 100 and fs["delete_count"] == 8
+    (fs0,) = lake.file_stats("m", version=lake.current_version() - 2)
+    assert fs0["delete_count"] == 0

@@ -379,3 +379,39 @@ def test_attached_merge_fine_grained_conflicts(spark, tmp_path):
     main.sql("BEGIN")
     main.sql("ROLLBACK")
     main.sql("USE main")
+
+
+def test_concurrent_deletes_of_one_file(spark, tmp_path):
+    """Merge-on-read: two DELETEs of DISJOINT rows of ONE data file both
+    commit without retry and both apply — each adds its own delete file,
+    and the second finds none of the rows it matched among the first's
+    positions, though the file's min/max covers both predicates. Two
+    DELETEs of overlapping rows conflict."""
+    lake = LakeCatalog(str(tmp_path / "lk"), spark, inline_threshold=0)
+    lake.ctas(
+        "t",
+        spark.createDataFrame(
+            [(i, 0) for i in range(20)], "id int, v int"
+        ).coalesce(1),
+    )
+    tx1, tx2 = lake.transaction(), lake.transaction()
+    assert tx1.delete("t", "id >= 2 AND id <= 4") == 3
+    assert tx2.delete("t", "id >= 10 AND id <= 12") == 3
+    v1 = tx1.commit()
+    assert tx2.commit() == v1 + 1
+    gone = {2, 3, 4, 10, 11, 12}
+    assert sorted(r["id"] for r in lake.read("t").collect()) == [
+        i for i in range(20) if i not in gone
+    ]
+    info = lake.table_info()[0]
+    assert info["file_count"] == 1 and info["delete_file_count"] == 2
+    assert lake.count("t") == 14
+
+    # overlapping rows (id 8 in both): the second committer conflicts
+    tx3, tx4 = lake.transaction(), lake.transaction()
+    tx3.delete("t", "id >= 6 AND id <= 8")
+    tx4.delete("t", "id >= 8 AND id <= 9")
+    tx3.commit()
+    with pytest.raises(ConflictError):
+        tx4.commit()
+    assert lake.count("t") == lake.read("t").count() == 11

@@ -4309,6 +4309,27 @@ def test_create_table_array_column_keeps_its_element_type(lake):
     assert (row["v"], row["m"]) == ([1.5, 2.5], {"k": 3})
 
 
+def test_create_table_maps_nested_duckdb_types(lake):
+    """DuckDB type names inside ``ARRAY<…>``, ``MAP<…>`` and ``STRUCT<…>``
+    map to Spark's like top-level ones: ``array<varchar>`` was stored as
+    written and every later INSERT failed to parse it."""
+    lake.sql(
+        "CREATE TABLE av (id INT, v ARRAY<VARCHAR>, m MAP<VARCHAR, INTEGER>, "
+        "s STRUCT<a VARCHAR, b ARRAY<INT8>>)"
+    )
+    assert [c[1] for c in lake.columns("av")] == [
+        "int", "array<string>", "map<string, int>",
+        "struct<a: string, b: array<bigint>>",
+    ]
+    lake.sql(
+        "INSERT INTO av VALUES (1, array('a', 'b'), map('k', 3), "
+        "named_struct('a', 'x', 'b', array(7)))"
+    )
+    row = lake.sql("SELECT * FROM av").collect()[0]
+    assert (row["id"], row["v"], row["m"]) == (1, ["a", "b"], {"k": 3})
+    assert (row["s"]["a"], row["s"]["b"]) == ("x", [7])
+
+
 def test_add_column_with_array_type(lake):
     lake.sql("CREATE TABLE b (id INT)")
     lake.sql("ALTER TABLE b ADD COLUMN v ARRAY<INT>")
