@@ -193,12 +193,13 @@ def l08_txn_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     except ConstraintViolation:
         pass
-    # D8: two overlapping transactions on one table — first committer wins,
-    # the loser gets ConflictError and retries against the new base.
+    # D8: two transactions updating the same row — first committer wins,
+    # the loser gets ConflictError and retries against the new base (updates
+    # of disjoint rows of one file would both commit: row-level conflicts).
     tx1 = lake.transaction()
     tx1.update("nation_l", {"n_regionkey": "n_regionkey + 1"}, "n_nationkey = 0")
     tx2 = lake.transaction()
-    tx2.update("nation_l", {"n_regionkey": "n_regionkey + 2"}, "n_nationkey = 1")
+    tx2.update("nation_l", {"n_regionkey": "n_regionkey + 2"}, "n_nationkey = 0")
     tx1.commit()
     try:
         tx2.commit()
@@ -206,7 +207,7 @@ def l08_txn_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ConflictError:
         with lake.transaction() as tx:  # retry sees tx1's committed state
             tx.update(
-                "nation_l", {"n_regionkey": "n_regionkey + 2"}, "n_nationkey = 1"
+                "nation_l", {"n_regionkey": "n_regionkey + 2"}, "n_nationkey = 0"
             )
     lake.compact("nation_l")
     return lake.snapshots_df().select(
