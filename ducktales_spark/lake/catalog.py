@@ -287,6 +287,9 @@ class LakeCatalog:
         self._read_cache: "OrderedDict" = OrderedDict()
         # delete-file path -> its positions (a delete file never changes)
         self._pos_cache: "OrderedDict" = OrderedDict()
+        # a schema version's file scan, keyed by its files and their
+        # delete files (see _cache_scan)
+        self._scan_cache: "OrderedDict" = OrderedDict()
         # retention horizon (MIN snapshot_id) observed at the last cache
         # validation — a cross-process expire_snapshots raises it, which
         # is the signal to evict entries below the new horizon (see read)
@@ -593,7 +596,8 @@ class LakeCatalog:
         ]
 
     def _build_df(
-        self, files, inlined, schemas, current: TableSchema, positions=False
+        self, files, inlined, schemas, current: TableSchema, positions=False,
+        deleted=False,
     ) -> DataFrame:
         """file list (+ inlined rows) -> one DataFrame in the current schema.
 
@@ -605,36 +609,39 @@ class LakeCatalog:
         Every reader of data files comes through here, so every reader
         drops deleted rows. A schema version's files are one scan: with no
         live delete file it is planned exactly as a plain scan; otherwise
-        it carries each row's ``_metadata`` file name and row index and
-        left-anti-joins a broadcast frame of the deleted positions.
+        it is filtered by _live_pred, a per-file bitmap of the deleted
+        positions tested against each row's ``_metadata`` file name and
+        row index (no join and no extra Spark job). A read keeps each
+        scan for the next read of the same files (see _cache_scan).
 
         ``positions=True`` (the row-level writes) keeps two columns on every
         row: ``__fp``, the scan's file URI (NULL for an inlined row), and
         ``__pos``, the row's index in its file (in ``inlined`` for an
-        inlined row)."""
+        inlined row). ``deleted=True`` (with ``positions``) keeps the rows
+        delete files remove, for a caller that drops them by position on
+        the driver (see Transaction._drop_dead)."""
         parts = []
         groups: dict = {}
         for fe in files:
             groups.setdefault(fe.schema_version, []).append(fe)
         for sv, group in sorted(groups.items()):
             stored = schemas[sv]
-            df = self.spark.read.schema(stored.to_struct()).parquet(
-                *[fe.path for fe in group]
-            )
-            tagged = positions or any(fe.deletes for fe in group)
-            if tagged:
+            plain = not (positions or deleted)
+            df = self._scan_cache.get(_scan_key(group)) if plain else None
+            if df is None:
+                df = self.spark.read.schema(stored.to_struct()).parquet(
+                    *[fe.path for fe in group]
+                )
+                if not deleted and any(fe.deletes for fe in group):
+                    df = df.filter(self._live_pred(group))
+                if plain:
+                    self._cache_scan(group, df)
+            if positions:
                 df = df.selectExpr(
                     "*",
                     "_metadata.file_path AS __fp",
-                    "_metadata.file_name AS __fn",
                     "_metadata.row_index AS __pos",
                 )
-                dead = self._deleted_df(group)
-                if dead is not None:
-                    df = df.join(
-                        F.broadcast(dead), ["__fn", "__pos"], "left_anti"
-                    )
-                df = df.drop("__fn") if positions else df.drop("__fn", *_POS)
             parts.append(
                 _project(df, stored, current, keep=_POS if positions else ())
             )
@@ -662,34 +669,54 @@ class LakeCatalog:
             parts.append(local_df(self.spark, rows, struct))
         return reduce(DataFrame.unionByName, parts)
 
-    def _deleted_df(self, files) -> Optional[DataFrame]:
-        """(__fn, __pos) of every deleted row of ``files`` as a driver-built
-        frame, or None when none has a delete file. A file is named by its
-        base name, as the scan's ``_metadata.file_name`` spells it: every
-        data file is a Spark part file named after its write job's UUID,
-        so base names are unique, and unlike the file URI they have one
-        spelling. The columns are NOT NULL, so the frame stays one local
-        relation that broadcasts without a Spark job."""
+    def _live_pred(self, files):
+        """Column that holds for the rows of ``files`` that no delete file
+        removes. Each file with deletes gets a bitmap of its deleted
+        positions (8 bytes per 64 rows, up to the highest one), keyed by
+        its base name, as the scan's ``_metadata.file_name`` spells it
+        (every data file is a Spark part file named after its write job's
+        UUID, so base names are unique, and unlike the file URI they have
+        one spelling). The map rides in a one-row local relation read as
+        a scalar subquery, which runs without a Spark job, so the filter
+        has one shape whatever the files, and its generated code compiles
+        once. Measured on a 150k-row file (4 cores): the bitmaps as plan
+        literals cost 0.17 s a read against 0.12 s as a subquery, and a
+        CASE on the file name, one arm per file, 0.34 s a read against
+        0.23 s as a map lookup when the set of files changes."""
         import numpy as np
-        import pyarrow as pa
 
-        dead = [fe for fe in files if fe.deletes]
-        if not dead:
-            return None
-        names = [os.path.basename(fe.path) for fe in dead]
-        if len(set(names)) != len(names):
-            raise LakeError(f"two data files share a base name: {names}")
-        fns, poss = [], []
-        for fe, name in zip(dead, names):
+        bitmaps = {}
+        for fe in files:
+            if not fe.deletes:
+                continue
+            name = os.path.basename(fe.path)
+            if name in bitmaps:
+                raise LakeError(f"two data files share the base name {name!r}")
             pos = np.concatenate([self._positions(d.path) for d in fe.deletes])
-            fns.append(pa.array([name] * len(pos), pa.string()))
-            poss.append(pa.array(pos, pa.int64()))
-        table = pa.table(
-            {"__fn": pa.concat_arrays(fns), "__pos": pa.concat_arrays(poss)}
+            words = np.zeros(int(pos.max()) // 64 + 1, np.uint64)
+            bit = np.left_shift(np.uint64(1), (pos & 63).astype(np.uint64))
+            np.bitwise_or.at(words, pos >> 6, bit)
+            bitmaps[name] = words.view(np.int64).tolist()
+        sub = local_df(
+            self.spark, [(bitmaps,)], "bm map<string, array<bigint>>"
+        ).scalar()
+        word = F.try_element_at(
+            F.try_element_at(sub, F.col("_metadata.file_name")),
+            F.expr("CAST(shiftright(_metadata.row_index, 6) AS INT) + 1"),
         )
-        return self.spark.createDataFrame(
-            table, "__fn string not null, __pos bigint not null"
-        )
+        hit = F.call_function(
+            "shiftright", word, F.expr("CAST(_metadata.row_index & 63 AS INT)")
+        ).bitwiseAND(F.lit(1)) == 1
+        return ~F.coalesce(hit, F.lit(False))
+
+    def _cache_scan(self, group, df: DataFrame) -> None:
+        """Keep a schema version's scan of ``group`` (its files and their
+        delete files, all immutable) for the next read of the same files:
+        versions that differ only in inlined rows or other tables share
+        it, and skip the file listing and the delete bitmaps."""
+        self._scan_cache[_scan_key(group)] = df
+        if len(self._scan_cache) > 64:
+            self._scan_cache.popitem(last=False)
 
     def _positions(self, path: str):
         """The sorted positions a delete file holds (read once per path)."""
@@ -865,14 +892,26 @@ class LakeCatalog:
     # ------------------------------------------------------------------
     # session bind + maintenance
     # ------------------------------------------------------------------
-    def bind(self, version=None) -> None:
+    def bind(self, version=None, text: Optional[str] = None) -> None:
         """Register every table (at ``version``) and view as temp views so
         queries run in plain Spark SQL (the reference's ``USE lake``,
-        demos/01_transaction_rollback/demo.py:30)."""
+        demos/01_transaction_rollback/demo.py:30).
+
+        ``text`` (the SQL about to run) binds only the tables it names as
+        a whole word, case-insensitively, and no view, unless it names a
+        view (a view may read any table): a table the text does not name
+        keeps whatever temp view it had, which the text cannot reach."""
+        from .lexer import names_word
+
+        views = self.views(version)
+        if text is not None and any(names_word(v, text) for v in views):
+            text = None
         for t in self.tables(version):
-            self.read(t, version=version).createOrReplaceTempView(t)
-        for vname, vsql in self.views(version).items():
-            self.spark.sql(vsql).createOrReplaceTempView(vname)
+            if text is None or names_word(t, text):
+                self.read(t, version=version).createOrReplaceTempView(t)
+        if text is None:
+            for vname, vsql in views.items():
+                self.spark.sql(vsql).createOrReplaceTempView(vname)
 
     def sql(self, query: str, version=None) -> DataFrame:
         """Execute ONE SQL statement against the lake — the reference's
@@ -1097,6 +1136,7 @@ class LakeCatalog:
                 (cutoff,),
             ).rowcount
         self._read_cache.clear()  # expired versions' plans point at doomed files
+        self._scan_cache.clear()
         removed_bytes = 0
         for path, nbytes in doomed + doomed_del:
             try:
@@ -1126,6 +1166,7 @@ class LakeCatalog:
         import time as _time
 
         self._read_cache.clear()  # plans must not outlive unreferenced files
+        self._scan_cache.clear()
         cutoff = _time.time() - min_age_seconds
         referenced = {
             r[0]
@@ -1786,7 +1827,9 @@ class Transaction:
                     f"primary key violation on {pk} in table {st.name!r}"
                 )
 
-    def _write_staged(self, st: TableState, df: DataFrame, cluster: bool = True) -> list:
+    def _write_staged(
+        self, st: TableState, df: DataFrame, cluster: bool = True, rows=None
+    ) -> list:
         """Write df as staged parquet; return FileEntry list (stats from
         footers — at cluster scale these arrive from write-task metrics).
 
@@ -1807,12 +1850,20 @@ class Transaction:
         the write shuffle re-reads blocks instead of recomputing; one
         local write+read of the output bytes replaces a full re-run of
         the upstream DAG. Kept conditional on a Python node so cheap
-        JVM-only writes keep the zero-copy path."""
+        JVM-only writes keep the zero-copy path.
+
+        ``rows`` (a row-level statement knows how many rows it writes)
+        sizes an unclustered write by the table's bytes per row, one file
+        per 128 MiB, instead of one small file per split of its scan."""
         pcols = st.schemas[st.schema_version].partition_by
         if cluster and pcols and all(c in df.columns for c in pcols):
             if _runs_python(df):
                 df = df.localCheckpoint(eager=False)
             df = df.repartitionByRange(*[F.col(c) for c in pcols])
+        elif rows is not None:
+            nrows = sum(fe.row_count for fe in st.files)
+            nbytes = sum(fe.file_bytes for fe in st.files)
+            df = df.coalesce(max(1, -(-rows * nbytes // (max(nrows, 1) << 27))))
         stagedir = os.path.join(st.data_dir, f"stage-{uuid.uuid4().hex[:12]}")
         w = df.write.mode("overwrite")
         # Parquet-native BLOOM FILTERS on the point-lookup columns: primary
@@ -2037,6 +2088,35 @@ class Transaction:
                 DeleteEntry(None, path, len(pos), os.path.getsize(path), True)
             )
 
+    def _drop_dead(self, files, rows):
+        """Split the collected ``rows`` of a ``deleted=True`` positions scan
+        of ``files`` (tuples led by ``__fp``, ``__pos``) by whether a delete
+        file already removes them. Returns the live rows and a predicate on
+        ``__fp``/``__pos`` that drops the dead ones from the scan, or None
+        when every row is live. A row-level write's scan skips the read
+        path's bitmap filter this way: the dead rows it matches are few
+        (the removed versions of rows it matches again)."""
+        dead = {
+            _norm_file_uri(fe.path): {
+                int(p) for d in fe.deletes for p in self.c._positions(d.path)
+            }
+            for fe in files
+            if fe.deletes
+        }
+        live, gone = [], {}
+        for r in rows:
+            fp, pos = r[0], r[1]
+            if fp is not None and pos in dead.get(_norm_file_uri(fp), ()):
+                gone.setdefault(fp, []).append(pos)
+            else:
+                live.append(r)
+        if not gone:
+            return live, None
+        return live, "NOT (" + " OR ".join(
+            f"(__fp = {_spark_str(fp)} AND __pos IN ({','.join(map(str, ps))}))"
+            for fp, ps in gone.items()
+        ) + ")"
+
     def _seen(self, candidates, hits) -> dict:
         """{file_id: sorted positions} of the matched rows ``hits`` in every
         committed candidate file (empty for a file without a match): the
@@ -2075,22 +2155,24 @@ class Transaction:
             hit = (
                 self.c._build_df(
                     candidates, st.inlined, st.schemas, st.schema,
-                    positions=True,
+                    positions=True, deleted=True,
                 )
                 .filter(pred)
                 .persist()
             )
             try:
-                hits = [tuple(r) for r in hit.select(*_POS).collect()]
+                hits, live = self._drop_dead(
+                    candidates, hit.select(*_POS).collect()
+                )
                 if hits:
-                    new = hit.select(*[
+                    new = (hit if live is None else hit.filter(live)).select(*[
                         (
                             F.expr(set_exprs[f.name]).cast(f.type)
                             if f.name in set_exprs else F.col(f.name)
                         ).alias(f.name)
                         for f in st.schema.fields
                     ])
-                    staged = self._write_staged(st, new)
+                    staged = self._write_staged(st, new, rows=len(hits))
                     self._delete_rows(st, hits)
                     st.files.extend(staged)
             finally:
@@ -2120,16 +2202,16 @@ class Transaction:
             candidates = self._candidates(st, parse_conjuncts(where))
             hits = []
             if candidates or st.inlined:
-                hits = [
-                    tuple(r)
-                    for r in self.c._build_df(
+                hits, _ = self._drop_dead(
+                    candidates,
+                    self.c._build_df(
                         candidates, st.inlined, st.schemas, st.schema,
-                        positions=True,
+                        positions=True, deleted=True,
                     )
                     .filter(F.expr(where))
                     .select(*_POS)
-                    .collect()
-                ]
+                    .collect(),
+                )
                 self._delete_rows(st, hits)
             n = len(hits)
             self._record_row_read(st, where, self._seen(candidates, hits))
@@ -2543,7 +2625,8 @@ class Transaction:
             if bsc:
                 st.coarse_write = True
             tgt = self.c._build_df(
-                candidates, st.inlined, st.schemas, sch, positions=True
+                candidates, st.inlined, st.schemas, sch, positions=True,
+                deleted=True,
             )
             if in_bounds:
                 tgt = tgt.filter(reduce(lambda a, b: a & b, in_bounds))
@@ -2568,11 +2651,16 @@ class Transaction:
                 .persist()
             )
             persisted.append(joined)
-            rows = joined.select(*_POS, "__clause", *skeys).collect()
+            rows, live = self._drop_dead(
+                candidates, joined.select(*_POS, "__clause", *skeys).collect()
+            )
+            if live is not None:
+                joined = joined.filter(live)
             matched = len(rows)
             hits = [(r[0], r[1]) for r in rows if r[2] > 0]
             acted = len(hits)
-            hit_src = bounds["_n"] - len({_hashable(r[3:]) for r in rows})
+            # source rows whose key matched no target row: the insert leg
+            n_unmatched = bounds["_n"] - len({_hashable(r[3:]) for r in rows})
             if not bsc:
                 st.read_ranges.append({
                     "conjuncts": conjuncts,
@@ -2591,7 +2679,7 @@ class Transaction:
                             *_update_cols(sch, mc, "__clause", srcR, on)
                         )
                     )
-                if nmc and hit_src < bounds["_n"]:
+                if nmc and n_unmatched:
                     parts.append(_insert_frame(sch, srcR, hit_keys, skeys, nmc))
             else:
                 # the flat form lands whole source rows: a matched key's
@@ -2599,12 +2687,12 @@ class Transaction:
                 # its one source row
                 hit_keys = hit_keys.toDF(*on)
                 if when_matched == "update":
-                    n_versions = bounds["_n"] - hit_src
+                    n_versions = bounds["_n"] - n_unmatched
                     if nmc:
                         parts.append(src)
                     elif n_versions:
                         parts.append(src.join(hit_keys, on, "left_semi"))
-                elif nmc and hit_src < bounds["_n"]:
+                elif nmc and n_unmatched:
                     parts.append(src.join(hit_keys, on, "left_anti"))
             bs_acted = 0
             if bsc:
@@ -2638,7 +2726,8 @@ class Transaction:
             staged = []
             if parts:
                 staged = self._write_staged(
-                    st, reduce(DataFrame.unionByName, parts)
+                    st, reduce(DataFrame.unionByName, parts),
+                    rows=n_versions + (n_unmatched if nmc else 0),
                 )
                 inserted = sum(e.row_count for e in staged) - n_versions
             self._delete_rows(st, hits)
@@ -3234,6 +3323,16 @@ def _insert_frame(sch: TableSchema, srcR, hit_keys, skeys, nmc) -> DataFrame:
         col = chain.otherwise(dflt) if chain is not None else dflt
         cols.append(col.cast(f.type).alias(f.name))
     return ib.select(*cols)
+
+
+def _spark_str(v: str) -> str:
+    """``v`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _scan_key(group) -> tuple:
+    """A scan's identity: each file's path with its delete files' paths."""
+    return tuple((fe.path, tuple(d.path for d in fe.deletes)) for fe in group)
 
 
 def _norm_file_uri(p: str) -> str:

@@ -104,6 +104,7 @@ from .lexer import (
     map_code,
     match_paren,
     names,
+    names_word,
     search_code,
     split_top,
     statements,
@@ -886,7 +887,7 @@ class SQLExecutor:
                 raise LakeSQLError("UPDATE ... WHERE needs a predicate")
         # bind table views so scalar subqueries in SET/WHERE resolve
         # (against pre-statement state, DuckDB UPDATE semantics)
-        self._bind_tables()
+        self._bind_tables(text=head.rest)
         sets = {}
         for part in items(setlist):
             a = assignment(part)
@@ -915,7 +916,7 @@ class SQLExecutor:
             where = rest[m.end():].strip()
             if not where:
                 raise LakeSQLError("DELETE ... WHERE needs a predicate")
-        self._bind_tables()  # subqueries in WHERE resolve pre-statement
+        self._bind_tables(text=rest)  # subqueries resolve pre-statement
         n = [0]
 
         def op(tx):
@@ -2747,22 +2748,21 @@ class SQLExecutor:
         writer's commit must not appear mid-transaction), touched tables
         bind to the staged state (read-your-writes), and tables dropped in
         the txn are unregistered so reads of them fail."""
-        self._bind_tables(version)
         self._file_views = []
         try:
-            return self.c.spark.sql(
-                self._rewrite_meta_fns(
-                    self.c._rewrite_at(
-                        self._rewrite_mv_at(
-                            self._rewrite_attached(
-                                self._rewrite_file_fns(
-                                    self._rewrite_dialect(body)
-                                )
-                            )
+            q = self._rewrite_meta_fns(
+                self.c._rewrite_at(
+                    self._rewrite_mv_at(
+                        self._rewrite_attached(
+                            self._rewrite_file_fns(self._rewrite_dialect(body))
                         )
                     )
                 )
             )
+            # bound after the rewrites: a table read only AT a version
+            # (its own versioned view) needs no current read plan
+            self._bind_tables(version, q)
+            return self.c.spark.sql(q)
         finally:
             # the plan is analyzed (views resolved) by the time spark.sql
             # returns; dropping them here keeps the session catalog clean
@@ -3566,21 +3566,28 @@ class SQLExecutor:
         )
         return sub_code(pat, _rw, q)
 
-    def _bind_tables(self, version=None) -> None:
+    def _bind_tables(self, version=None, text=None) -> None:
         """Register every table as a temp view for Catalyst resolution —
         snapshot-isolated inside an open txn (base version + staged
-        overlays, dropped tables unregistered)."""
+        overlays, dropped tables unregistered). ``text`` (the SQL about to
+        run) limits it to the tables ``text`` names, see LakeCatalog.bind:
+        a statement that names no lake table builds no read plan."""
         if self._tx is not None and version is None:
-            self.c.bind(self._tx.base_version)
+            v = self._tx.base_version
+            if text is not None and any(
+                names_word(n, text) for n in self.c.views(v)
+            ):
+                text = None  # a view may read any table
+            self.c.bind(v, text)
             for nm, st in list(self._tx._states.items()):
                 if st.dropped:
                     self.c.spark.catalog.dropTempView(nm)
-                else:
+                elif text is None or names_word(nm, text):
                     self.c._build_df(
                         st.files, st.inlined, st.schemas, st.schema
                     ).createOrReplaceTempView(nm)
         else:
-            self.c.bind(version)
+            self.c.bind(version, text)
             # materialized views read through the rollup face (avg cols);
             # inside an open txn the raw stored state binds instead (MV
             # DDL/refresh is refused in-txn, so the staged overlay can

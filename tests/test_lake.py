@@ -2325,6 +2325,62 @@ def test_mor_delete_of_every_row_removes_the_file(lake, spark):
     assert lake.count("m") == lake.read("m").count() == 100
 
 
+def test_mor_writes_skip_rows_deleted_earlier(lake, spark):
+    """An UPDATE, MERGE or DELETE whose predicate also matches rows an
+    earlier statement deleted leaves those deleted: each live row changes
+    once and no removed version comes back."""
+    _one_file_table(lake, spark)
+    assert lake.update("m", {"v": "v + 100"}, "id < 10") == 10
+    assert lake.update("m", {"v": "v + 100"}, "id < 10") == 10
+    src = spark.range(5, 15).select(
+        F.col("id").cast("int").alias("id"), F.lit(-1).alias("v"))
+    assert lake.merge("m", src, ["id"]) == {"matched": 10, "inserted": 0}
+    assert lake.delete("m", "id < 3") == 3
+    rows = dict(tuple(r) for r in lake.read("m").collect())
+    assert len(rows) == lake.count("m") == lake.read("m").count() == 97
+    assert [rows[3], rows[4]] == [3 + 200, 4 + 200]
+    assert [rows[i] for i in range(5, 15)] == [-1] * 10
+    assert [rows[i] for i in range(15, 100)] == [i % 7 for i in range(15, 100)]
+
+
+def test_mor_update_of_every_row_replaces_the_file(lake, spark):
+    """An UPDATE matching every row of a file writes the new versions and
+    removes the file, with no delete file; the other file is untouched."""
+    _one_file_table(lake, spark)
+    lake.insert("m", spark.range(1000, 1010).select(
+        F.col("id").cast("int").alias("id"), F.lit(0).alias("v")
+    ).coalesce(1))
+    before = {r[0] for r in lake.ms.q(
+        "SELECT file_id FROM lake_data_file WHERE removed_snapshot IS NULL")}
+    assert lake.update("m", {"v": "v + 1"}, "id >= 1000") == 10
+    after = {r[0] for r in lake.ms.q(
+        "SELECT file_id FROM lake_data_file WHERE removed_snapshot IS NULL")}
+    assert len(before & after) == 1 and len(after) == 2
+    assert _live_deletes(lake) == []
+    rows = sorted(tuple(r) for r in lake.read("m").collect())
+    assert rows == [(i, i % 7) for i in range(100)] + [
+        (i, 1) for i in range(1000, 1010)]
+    assert lake.count("m") == 110
+
+
+@pytest.mark.parametrize("when_matched", ["skip", "delete", "update"])
+def test_merge_inserts_when_no_source_key_matches(lake, spark, when_matched):
+    """The insert leg runs when no source key matches a target row: into
+    an empty table and into a table holding only other keys."""
+    _one_file_table(lake, spark, n=0)
+    src = spark.range(5).select(
+        F.col("id").cast("int").alias("id"), F.lit(9).alias("v"))
+    res = lake.merge("m", src, ["id"], when_matched=when_matched)
+    assert res == {"matched": 0, "inserted": 5}
+    assert sorted(tuple(r) for r in lake.read("m").collect()) == [
+        (i, 9) for i in range(5)]
+    far = spark.range(100, 103).select(
+        F.col("id").cast("int").alias("id"), F.lit(8).alias("v"))
+    assert lake.merge("m", far, ["id"], when_matched=when_matched) == {
+        "matched": 0, "inserted": 3}
+    assert lake.count("m") == lake.read("m").count() == 8
+
+
 def test_mor_checkpoint_and_merge_adjacent_fold_deletes(lake, spark):
     """CHECKPOINT flushes the inlined rows and merge_adjacent_files rewrites
     the files through the read path: the deleted rows stay gone, and the

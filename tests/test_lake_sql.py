@@ -3424,6 +3424,25 @@ def test_summarize_table_and_query(lake):
         lake.sql("SUMMARIZE 123 BAD")
 
 
+def test_insert_or_ignore_and_merge_insert_with_no_matching_key(lake):
+    """INSERT OR IGNORE and an insert-only MERGE insert their rows when
+    none of their keys is already in the table."""
+    lake.sql("CREATE TABLE t (k INT PRIMARY KEY, v INT)")
+    lake.sql("INSERT OR IGNORE INTO t VALUES (1, 10), (2, 20)")
+    lake.sql("INSERT OR IGNORE INTO t VALUES (3, 30)")
+    lake.sql(
+        "MERGE INTO t USING (SELECT 4 AS k, 40 AS v) s ON t.k = s.k "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    lake.sql(
+        "MERGE INTO t USING (SELECT 5 AS k, 50 AS v) s ON t.k = s.k "
+        "WHEN NOT MATCHED AND s.v > 0 THEN INSERT (k, v) VALUES (s.k, s.v)"
+    )
+    assert [tuple(r) for r in lake.sql(
+        "SELECT * FROM t ORDER BY k").collect()] == [
+        (1, 10), (2, 20), (3, 30), (4, 40), (5, 50)]
+
+
 def test_insert_or_replace_and_ignore(lake):
     """DuckDB's INSERT OR REPLACE / OR IGNORE: conflict resolution by
     PRIMARY KEY, lowered onto MERGE (CoW rewrites only hit files)."""

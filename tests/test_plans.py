@@ -121,8 +121,10 @@ def test_sort_limit_fuses_to_take_ordered(spark, sf_dir):
 def test_lake_read_prunes_files(spark, tmp_path):
     """The lake's stats-based file pruning: an update with a selective
     predicate must leave non-matching files untouched (asserted at the
-    metadata layer): merge-on-read removes no data file and gives only the
-    hit file a delete file, holding exactly the matched rows."""
+    metadata layer): the pruned file survives with no delete file. The
+    predicate matches every row of the other file, which merge-on-read
+    removes (new row versions replace it) instead of giving it a delete
+    file that hides all of its rows."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from ducktales_spark.lake import LakeCatalog
@@ -138,30 +140,29 @@ def test_lake_read_prunes_files(spark, tmp_path):
             "SELECT file_id FROM lake_data_file WHERE removed_snapshot IS NULL"
         )
     }
-    lake.update("t", {"id": "id + 1"}, "id >= 10050")
+    lake.update("t", {"id": "id + 1"}, "id >= 10000")
     files_after = {
         r[0] for r in lake.ms.q(
             "SELECT file_id FROM lake_data_file WHERE removed_snapshot IS NULL"
         )
     }
-    assert files_before <= files_after
-    deletes = dict(
-        lake.ms.q(
-            "SELECT data_file_id, delete_count FROM lake_delete_file "
-            "WHERE removed_snapshot IS NULL"
-        )
-    )
-    # the 0-99 file has no delete file (its max stat < 10050 -> pruned);
-    # the 10000-10099 file has one holding the 50 matched rows
+    # the 0-99 file survived (its max stat < 10000 -> pruned) with no
+    # delete file; the 10000-10099 file left the table
     pruned, hit = sorted(files_before)
-    assert deletes == {hit: 50} and pruned not in deletes
+    assert files_before & files_after == {pruned}
+    assert lake.ms.q(
+        "SELECT data_file_id FROM lake_delete_file WHERE removed_snapshot IS NULL"
+    ) == []
+    assert sorted(r.id for r in lake.read("t").collect()) == (
+        list(range(100)) + list(range(10001, 10101))
+    )
 
 
 def test_lake_read_without_deletes_is_a_plain_scan(spark, tmp_path):
     """A table with no live delete file reads exactly as a plain parquet
     scan: no join and no ``_metadata`` column in the plan. A delete file
-    adds the broadcast anti-join on (file, row index); compaction folds it
-    and the plain scan returns."""
+    adds a filter on the row's ``_metadata`` file name and row index (still
+    no join); compaction folds it and the plain scan returns."""
     from ducktales_spark.lake import LakeCatalog
 
     lake = LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=0)
@@ -174,7 +175,7 @@ def test_lake_read_without_deletes_is_a_plain_scan(spark, tmp_path):
         assert "Join" not in s and "_metadata" not in s, s
     lake.delete("t", "id < 10")
     s = plan_str(lake.read("t"))
-    assert "BroadcastHashJoin" in s and "LeftAnti" in s, s
+    assert "Join" not in s and "_metadata" in s and "row_index" in s, s
     assert lake.read("t").count() == 90
     lake.compact("t")
     for s in (plan(lake.read("t")), plan_str(lake.read("t"))):
