@@ -392,8 +392,7 @@ def shards_for(
     executor-memory contract violation at scale (corpus/64 at 100 TB is a
     ~1.5 TB group). Sizing from Catalyst's plan statistics (parquet scans
     report real file bytes; filters/projections scale them) keeps every
-    shard ~``target_shard_bytes`` regardless of corpus size, the same
-    policy ``bench.py:tune_for_input`` applies to shuffle partitions.
+    shard ~``target_shard_bytes`` regardless of corpus size.
 
     Python-created DataFrames (LogicalRDD) report unknown stats
     (``defaultSizeInBytes`` = Long.MaxValue) — and Catalyst's size-only

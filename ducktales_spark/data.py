@@ -106,8 +106,8 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
-        # re-materialized copies (tools/replicate_sf.py) store ts as a real
-        # micros timestamp — only rebuild when the reader saw nanos-as-long
+        # a copy rewritten by another engine may store ts as a real micros
+        # timestamp — only rebuild when the reader saw nanos-as-long
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
         return df

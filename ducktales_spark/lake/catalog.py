@@ -2112,8 +2112,11 @@ class Transaction:
                 live.append(r)
         if not gone:
             return live, None
+        # null-safe: an inlined row's __fp is NULL, and its __pos (an index
+        # into the inlined list) may equal a dead file position; with '='
+        # the term is NULL, NOT keeps it NULL and the filter drops the row
         return live, "NOT (" + " OR ".join(
-            f"(__fp = {_spark_str(fp)} AND __pos IN ({','.join(map(str, ps))}))"
+            f"(__fp <=> {_spark_str(fp)} AND __pos IN ({','.join(map(str, ps))}))"
             for fp, ps in gone.items()
         ) + ")"
 

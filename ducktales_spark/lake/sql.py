@@ -1467,55 +1467,23 @@ class SQLExecutor:
         if not matched_cls and not not_matched_cls and not by_source_cls:
             raise LakeSQLError("MERGE requires at least one WHEN clause")
 
-        simple = (
-            len(matched_cls) <= 1
-            and len(not_matched_cls) <= 1
-            and not by_source_cls
-            and all(
-                c["cond"] is None for c in matched_cls + not_matched_cls
-            )
-        )
         n = [0]
 
         def op(tx):
-            if simple:
-                m0 = matched_cls[0] if matched_cls else None
-                r = tx.merge(
-                    target, src_df, on=on,
-                    when_matched=m0["action"] if m0 else "skip",
-                    when_not_matched=(
-                        "insert" if not_matched_cls else "skip"
-                    ),
-                    update_sets=(
-                        m0["sets"] if m0 and m0["action"] == "update"
-                        else None
-                    ),
-                    insert_sets=(
-                        not_matched_cls[0]["sets"]
-                        if not_matched_cls else None
-                    ),
-                    sequence_col=seq_engine,
-                    auto_merge_schema=evolve,
-                )
-            else:
-                r = tx.merge(
-                    target, src_df, on=on,
-                    matched_clauses=matched_cls or None,
-                    not_matched_clauses=not_matched_cls or None,
-                    not_matched_by_source_clauses=by_source_cls or None,
-                    sequence_col=seq_engine,
-                    auto_merge_schema=evolve,
-                )
-            # matched rows only count as affected when a matched clause
-            # ACTS on them: 'acted' (clausal merges) excludes matched rows
-            # whose every clause condition was false; insert-only merges
-            # report inserts; by-source merges report the rows a by-source
-            # clause fired on
-            n[0] = (
-                (r.get("acted", r["matched"]) if matched_cls else 0)
-                + r["inserted"]
-                + r.get("acted_by_source", 0)
+            r = tx.merge(
+                target, src_df, on=on,
+                matched_clauses=matched_cls or None,
+                not_matched_clauses=not_matched_cls or None,
+                not_matched_by_source_clauses=by_source_cls or None,
+                sequence_col=seq_engine,
+                auto_merge_schema=evolve,
             )
+            # matched rows only count as affected when a matched clause
+            # ACTS on them: 'acted' excludes matched rows whose every
+            # clause condition was false; insert-only merges report
+            # inserts; by-source merges report the rows a by-source clause
+            # fired on
+            n[0] = r["acted"] + r["inserted"] + r["acted_by_source"]
 
         self._run(op)
         return self._status("MERGE", n[0])

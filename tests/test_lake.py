@@ -2343,6 +2343,27 @@ def test_mor_writes_skip_rows_deleted_earlier(lake, spark):
     assert [rows[i] for i in range(15, 100)] == [i % 7 for i in range(15, 100)]
 
 
+def test_mor_writes_keep_inlined_rows_beside_rows_deleted_earlier(lake, spark):
+    """An inlined row's position is its index among the inlined rows, so it
+    can equal a position an earlier statement deleted from a data file.
+    An UPDATE or MERGE that matches both still writes the inlined row's
+    new version: dropping the dead file rows must not drop it too."""
+    _one_file_table(lake, spark)
+    assert lake.update("m", {"v": "v + 100"}, "id < 10") == 10
+    with lake.transaction() as tx:
+        tx.insert_rows("m", [{"id": 200 + i, "v": 0} for i in range(3)])
+    assert lake.update("m", {"v": "v + 100"}, "id < 10 OR id >= 200") == 13
+    rows = dict(tuple(r) for r in lake.read("m").collect())
+    assert len(rows) == lake.count("m") == 103
+    assert [rows[200 + i] for i in range(3)] == [100] * 3
+    src = spark.createDataFrame(
+        [(i, -1) for i in [*range(10), 200, 201, 202]], "id int, v int")
+    assert lake.merge("m", src, ["id"]) == {"matched": 13, "inserted": 0}
+    rows = dict(tuple(r) for r in lake.read("m").collect())
+    assert len(rows) == lake.count("m") == 103
+    assert [rows[i] for i in [*range(10), 200, 201, 202]] == [-1] * 13
+
+
 def test_mor_update_of_every_row_replaces_the_file(lake, spark):
     """An UPDATE matching every row of a file writes the new versions and
     removes the file, with no delete file; the other file is untouched."""

@@ -225,13 +225,13 @@ def test_d03_single_join_reuses_sketch(spark, sf_dir):
 
 
 def test_d02_d03_reuse_exchanges_without_aqe(spark, sf_dir):
-    """bench.py runs the headline suite with AQE disabled (AQE's coalescing
-    sizes partitions by shuffle-READ bytes, which serializes the exploding
-    band joins — measured 2-4x at sf10). That is only sound because the
-    STATIC ReuseExchange rule already deduplicates the self-join subtrees;
-    if a code change breaks canonical-plan equality between the two join
-    sides, the 97-aggregate sketch silently computes twice under bench
-    settings. Assert reuse in the non-AQE executed plan."""
+    """With AQE disabled (its coalescing sizes partitions by shuffle-READ
+    bytes, which serialized the exploding band joins 2-4x at sf10 on 32
+    cores) only the STATIC ReuseExchange rule deduplicates the self-join
+    subtrees; if a code change breaks canonical-plan equality between the
+    two join sides, the 97-aggregate sketch silently computes twice in any
+    session that turns AQE off. Assert reuse in the non-AQE executed
+    plan."""
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

@@ -95,13 +95,14 @@ def test_session_size_reads_the_host_unless_the_environment_sets_it(
     assert session.session_size() == ("2", "5g")
 
 
-def test_python_kernel_imports_package_from_any_directory(tmp_path):
+def test_python_kernel_imports_package_from_any_directory(tmp_path, sf_dir):
     """A session started outside the repo still runs a mapInPandas kernel
-    that imports the package: the workers get its parent directory on
-    their path."""
+    that imports the package, and e01's cosine kernel: the workers get its
+    parent directory on their path."""
     script = f"""
 import sys
 sys.path.insert(0, {session.PACKAGE_PARENT!r})
+from ducktales_spark.registry import load_all
 from ducktales_spark.session import get_spark
 
 def kernel(batches):
@@ -111,6 +112,8 @@ def kernel(batches):
 
 spark = get_spark("workers-path")
 print("rows", spark.range(3).mapInPandas(kernel, "id long").count())
+e01 = load_all()["e01_cosine_topk"].fn(spark, {sf_dir!r})
+print("e01", len(e01.collect()))
 spark.stop()
 """
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -120,3 +123,4 @@ spark.stop()
         capture_output=True, text=True, timeout=300,
     )
     assert "rows 3" in out.stdout, out.stderr[-3000:]
+    assert re.search(r"^e01 [1-9]", out.stdout, re.M), out.stderr[-3000:]

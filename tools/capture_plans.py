@@ -1,29 +1,26 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for every headline query into plans/<tag>/,
-and report min-of-N plan-build times (the bench's _prepared_exec quantity)
-under the exact bench session configs (tune_for_input applied).
+under the session as ``get_spark`` ships it. Each query runs once first, so
+the file holds its final adaptive plan. Plan-build and Catalyst-phase times
+come from ``perfbench/run.py --workload analytic --trace 1``
+(``op.<name>.build_s``, ``catalyst.*``).
 
-Usage: python tools/capture_plans.py <tag> [before|after]
-Writes plans/<tag>/<query>_<suffix>.txt and prints a JSON line of
-min-of-N plan-build seconds per query.
+Usage: SPARK_GRAFT_SF_DIR=<dir> python tools/capture_plans.py <tag> [before|after]
+Writes plans/<tag>/<query>_<suffix>.txt.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
+sys.dont_write_bytecode = True  # leave no __pycache__ in perfbench/
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
-import bench  # noqa: E402
 from ducktales_spark.registry import load_all  # noqa: E402
 from ducktales_spark.session import get_spark  # noqa: E402
-
-_REPS = int(os.environ.get("SPARK_GRAFT_PLAN_REPS", "7"))
+from workloads import ANALYTIC_OPS  # noqa: E402
 
 
 def main() -> None:
@@ -35,38 +32,15 @@ def main() -> None:
 
     specs = load_all()
     spark = get_spark("ducktales-plan-capture")
-    bench.tune_for_input(spark, sf_dir)
-    # same steady-state warmup as bench.py so plan-build numbers are the
-    # rebuild cost, not first-touch metadata I/O / JIT
-    spark.range(1024).mapInPandas(lambda it: it, "id long").count()
-    for name in bench.HEADLINE:
-        specs[name].fn(spark, sf_dir).count()
-
-    builds: dict[str, float] = {}
-    for name in bench.HEADLINE:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    for name in ANALYTIC_OPS:
         df = specs[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        df.collect()  # AQE settles the final plan only when it executes
+        plan = df._jdf.queryExecution().explainString(mode)
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
-        best = None
-        for _ in range(_REPS):
-            t0 = time.perf_counter()
-            bench._prepared_exec(specs[name].fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        builds[name] = round(best, 3)
-    print(
-        json.dumps(
-            {
-                "plan_build_min": builds,
-                "plan_build_min_total": round(sum(builds.values()), 3),
-            }
-        )
-    )
 
 
 if __name__ == "__main__":

@@ -4,9 +4,8 @@ not cover: fuzzy (MinHash-LSH) decontamination and the coarse-routed
 two-level bucket assignment that the per-batch vector-ingest paths
 (extend_vector_index / neardup_against_index) dispatch to.
 
-Usage:  SPARK_GRAFT_SF_DIR=/tmp/sf1 python tools/kernel_bench.py
-Prints one JSON object; the driver-facing artifact merge appends it as a
-"kernels" section of bench_results/sf*.json.
+Usage:  SPARK_GRAFT_SF_DIR=<dir> python tools/kernel_bench.py
+Prints one JSON object. The session is ``get_spark`` as shipped.
 
 Measurement notes (memory: host noise band is +-20-25%, cold page cache
 inflates the first pass 2-7x): each timing is min-of-N of a prepared plan
@@ -48,9 +47,6 @@ def main() -> None:
     from ducktales_spark.session import get_spark
 
     spark = get_spark("kernel-bench")
-    from bench import tune_for_input
-
-    tune_for_input(spark, sf_dir)
     out = {"sf_dir": sf_dir, "reps_min_of": REPS}
 
     # -- fuzzy decontamination (c05 machinery) over the documents table --
