@@ -46,7 +46,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .lexer import column_refs, names_word, strip_sql_literals, sub_code
 from .metastore import ConflictError, Metastore, open_metastore
+from .rollup import find_rollups, read_face, restamp_rollups
 from .schema import (
     TableSchema,
     ddl_type,
@@ -901,8 +903,6 @@ class LakeCatalog:
         a whole word, case-insensitively, and no view, unless it names a
         view (a view may read any table): a table the text does not name
         keeps whatever temp view it had, which the text cannot reach."""
-        from .lexer import names_word
-
         views = self.views(version)
         if text is not None and any(names_word(v, text) for v in views):
             text = None
@@ -935,29 +935,23 @@ class LakeCatalog:
         no Catalyst parser extension needed). A clause must START outside
         a string literal: ``SELECT 't AT (VERSION => 1)'`` is data. The
         clause's own payload may hold a literal (TIMESTAMP => '...'),
-        which is consumed as part of the match."""
-        import re as _re
+        which is consumed as part of the match. A materialized view reads
+        through its read face, as it does at the current version."""
 
-        from .lexer import sub_code
-
-        def _rewrite(m: "_re.Match") -> str:
+        def _rewrite(m: "re.Match") -> str:
             tname, kind, val = m.group(1), m.group(2).upper(), m.group(3)
             if kind == "VERSION":
                 v = int(val)
-                df = self.read(tname, version=v)
-                view = f"{tname}__at_v{v}"
             else:
-                ts = val.strip("'\"")
-                v = self._resolve_version(timestamp=ts)
-                df = self.read(tname, version=v)
-                view = f"{tname}__at_v{v}"
-            df.createOrReplaceTempView(view)
+                v = self._resolve_version(timestamp=val.strip().strip("'\""))
+            view = f"{tname}__at_v{v}"
+            read_face(self, tname, v).createOrReplaceTempView(view)
             return view
 
-        pat = _re.compile(
+        pat = re.compile(
             r"\b([A-Za-z_][A-Za-z0-9_]*)\s+AT\s*\(\s*(VERSION|TIMESTAMP)"
             r"\s*=>\s*([^)]+)\)",
-            _re.I,
+            re.I,
         )
         return sub_code(pat, _rewrite, query)
 
@@ -973,51 +967,10 @@ class LakeCatalog:
                 tx.insert(name, self.read(name))
         for vname, vsql in self.views().items():
             other.create_view(vname, vsql)
-        # Rollup meta tables stamp the catalog version their rollup
-        # reflects — SOURCE version numbers, meaningless in the target's
-        # history (a later REFRESH would diff from an arbitrary mid-export
-        # snapshot and double-count). Restamp at the target's HEAD: the
-        # exported rollup state reflects the exported source state by
-        # construction.
-        other.restamp_rollup_metas()
-
-    def restamp_rollup_metas(self, only=None) -> None:
-        """Rewrite well-formed rollup meta companions' ``last_version`` to
-        THIS catalog's HEAD — the post-migration fixup export_to and SQL
-        ``IMPORT DATABASE`` share (imported stamps carry source-catalog
-        version numbers, meaningless here). ``only`` (a set of table
-        names) restricts the restamp to metas belonging to that set: an
-        IMPORT into a catalog that already holds unrelated live MVs must
-        not advance THEIR stamps past unfolded base-table deltas (that
-        would make a later REFRESH silently skip those rows)."""
-        all_names = set(self.tables())
-        names = all_names if only is None else all_names & set(only)
-        v_head = self.current_version()
-        for name in names:
-            # sibling check is against ALL tables: the MV table itself may
-            # sit outside a narrowed `only` set and the meta is still real
-            if not name.endswith("__rollup_meta") or name[: -len("__rollup_meta")] not in all_names:
-                continue
-            # Guard like _mv_overlay: a user table that merely NAMES like
-            # rollup meta (X__rollup_meta with a sibling X) must not get its
-            # rows rewritten. Real rollup meta is exactly one row carrying
-            # the rollup definition columns — check the SHAPE before
-            # collecting (schema is metadata; the row-count probe reads at
-            # most 2 rows), so a huge decoy table is never pulled to the
-            # driver during export.
-            from .rollup import META_REQUIRED_COLS
-
-            meta_df = self.read(name)
-            if not META_REQUIRED_COLS <= set(meta_df.columns):
-                continue
-            if self.count(name) != 1:  # metadata-only, no scan
-                continue
-            rows = [r.asDict() for r in meta_df.collect()]
-            for r in rows:
-                r["last_version"] = v_head
-            with self.transaction() as tx:
-                tx.delete(name)
-                tx.insert_rows(name, rows)
+        # an MV's stamp is a version of the catalog it was refreshed in;
+        # the exported state reflects the exported source, so it is
+        # stamped with the target's HEAD
+        restamp_rollups(other)
 
     def expire_snapshots(
         self,
@@ -1314,9 +1267,9 @@ class Transaction:
         # would pair UNRELATED field ids in the CDC diff). DROP the view
         # first. The guard skips rollups already dropped in this txn —
         # create_rollup(replace=True) drops the pair itself.
-        for mv, row in self._rollup_metas().items():
+        for mv, d in self._rollup_metas().items():
             mv_st = self._states.get(mv)
-            if row.get("src") == name and not (mv_st and mv_st.dropped):
+            if d.src == name and not (mv_st and mv_st.dropped):
                 raise LakeError(
                     f"table {name!r} is the source of materialized view "
                     f"{mv!r}; DROP MATERIALIZED VIEW {mv} first"
@@ -1351,7 +1304,7 @@ class Transaction:
         # a column a continuous aggregate maintains cannot silently vanish
         # from under it — dropping its state is destructive, so it must be
         # the user's explicit call (TimescaleDB blocks this the same way)
-        for mv, row, cols in self._dependent_rollups(name):
+        for mv, _d, cols in self._dependent_rollups(name):
             if col in cols:
                 raise LakeError(
                     f"column {col!r} is maintained by materialized view "
@@ -1423,79 +1376,51 @@ class Transaction:
         self._evolve(st, new_schema, "tables_altered")
         self._widen_dependent_rollups(name, col, old_type, new_type)
 
-    _ROLLUP_COL_LISTS = (
-        "keys", "sum_cols", "minmax_cols",
-        "count_cols", "approx_cols", "distinct_cols",
-    )
-
     def _rollup_metas(self) -> dict:
-        """mv_name -> meta row dict for every rollup AS THIS TRANSACTION
-        SEES IT — staged DDL included, so in a BEGIN block the second ALTER
+        """mv_name -> RollupDef for every rollup AS THIS TRANSACTION SEES
+        IT — staged DDL included, so in a BEGIN block the second ALTER
         observes the first one's follow-through (meta restamped with the
         new names), not stale committed state. Memoized per transaction:
         MV create/drop is refused inside explicit transactions and
         autocommit runs a single op, so the MV set is fixed for this
         transaction's lifetime (one enumeration pays for every DDL in the
-        block); _rename_in_dependent_rollups updates entries in place
-        after restamping. Read-only meta loads never mark their states
-        changed, so commit ignores them (no spurious conflicts)."""
+        block); the follow-through of a rename or a rebuild updates the
+        cached definitions in place. Read-only meta loads never mark
+        their states changed, so commit ignores them (no spurious
+        conflicts)."""
         if self._rollup_metas_cache is None:
-            from .rollup import _meta_name
-
             names = set(self.c.tables())
             for n, st in self._states.items():
                 (names.discard if st.dropped else names.add)(n)
-            cache = {}
-            for mv in sorted(n for n in names if _meta_name(n) in names):
-                # Guard like export_to (catalog.py export path): a USER
-                # table merely NAMED X__rollup_meta with a sibling X must
-                # never be pulled to the driver here — check the column
-                # SHAPE (staged-schema metadata, no scan) and probe at
-                # most 2 rows before collecting
-                mst = self._state(_meta_name(mv))
-                from .rollup import META_REQUIRED_COLS
-
-                if not META_REQUIRED_COLS <= {
-                    f.name for f in mst.schema.fields
-                }:
-                    continue
-                meta = self.read(_meta_name(mv)).limit(2).collect()
-                if len(meta) == 1:
-                    cache[mv] = meta[0].asDict()
-            self._rollup_metas_cache = cache
+            self._rollup_metas_cache = find_rollups(
+                self.c, tables=names, tx=self
+            )
         return self._rollup_metas_cache
 
     def _dependent_rollups(self, src_name):
-        """[(mv_name, meta_row_dict, {maintained source columns})] for every
+        """[(mv_name, RollupDef, {maintained source columns})] for every
         rollup whose source is ``src_name`` — schema evolution of the
         source must keep these consistent (widen/rename propagate, drop is
         blocked)."""
         out = []
-        for mv, row in self._rollup_metas().items():
-            if row.get("src") != src_name:
+        for mv, d in self._rollup_metas().items():
+            if d.src != src_name:
                 continue
-            ke = json.loads(row.get("key_exprs") or "{}")
-            cols = set()
-            for key in self._ROLLUP_COL_LISTS:
-                for c in json.loads(row.get(key) or "[]"):
-                    if key == "keys" and c in ke:
-                        continue  # expression-key ALIAS, not a source col
-                    cols.add(c)
-            for expr in ke.values():
+            cols = d.source_cols()
+            for expr in d.key_exprs.values():
                 cols.update(self._expr_source_cols(src_name, expr))
-            if row.get("time_col"):
-                cols.add(row["time_col"])
-            cols.update(self._predicate_cols(src_name, row))
-            out.append((mv, row, cols))
+            if d.where_sql:
+                # guarded like maintained columns: dropping one would make
+                # every refresh unresolvable
+                cols.update(self._expr_source_cols(src_name, d.where_sql))
+            out.append((mv, d, cols))
         return out
 
     def _expr_source_cols(self, src_name: str, text: str) -> set:
         """Source columns a stored SQL expression references (bare
         identifiers naming source columns; function names and literals
         excluded by the scanner) — the guard set for expression keys,
-        exactly like _predicate_cols guards a filtered MV's WHERE."""
-        from .lexer import column_refs
-
+        and a filtered MV's WHERE."""
         names = {f.name for f in self._state(src_name).schema.fields}
         lower = {n.lower(): n for n in names}
         return {
@@ -1503,15 +1428,6 @@ class Transaction:
             for r in column_refs(text)
             if r.name.lower() in lower
         }
-
-    def _predicate_cols(self, src_name: str, row: dict) -> set:
-        """Source columns a filtered MV's WHERE references: every bare
-        identifier in the stored predicate that names a source column
-        (function names and literals excluded by the scanner). These are
-        guarded like maintained columns — dropping one would make every
-        refresh unresolvable."""
-        where = row.get("where_sql")
-        return self._expr_source_cols(src_name, where) if where else set()
 
     def _widen_dependent_rollups(self, src_name, col, old_type, new_type) -> None:
         """A continuous aggregate stores state TYPED BY its source column:
@@ -1536,23 +1452,23 @@ class Transaction:
         elif t in int_family:
             sum_t = "bigint"  # sum(int family) -> bigint
         else:
-            d = _decimal(t)
+            dec = _decimal(t)
             # Spark: sum(decimal(p,s)) -> decimal(min(38, p+10), s)
-            sum_t = f"decimal({min(38, d[0] + 10)},{d[1]})" if d else None
+            sum_t = f"decimal({min(38, dec[0] + 10)},{dec[1]})" if dec else None
         probe = None  # empty source-schema frame, built once across MVs
-        for mv, row, _cols in self._dependent_rollups(src_name):
-            ke = json.loads(row.get("key_exprs") or "{}")
+        for mv, d, _cols in self._dependent_rollups(src_name):
+            ke = d.key_exprs
             targets = {}
-            if col in json.loads(row.get("keys") or "[]") and col not in ke:
+            if col in d.keys and col not in ke:
                 targets[col] = t
-            if col in json.loads(row.get("sum_cols") or "[]") and sum_t:
+            if col in d.sum_cols and sum_t:
                 targets[f"sum_{col}"] = sum_t
-            if col in json.loads(row.get("minmax_cols") or "[]"):
+            if col in d.minmax_cols:
                 targets[f"min_{col}"] = t
                 targets[f"max_{col}"] = t
-            resketch = col in json.loads(
-                row.get("approx_cols") or "[]"
-            ) and not (old_type.lower() in int_family and t in int_family)
+            resketch = col in d.approx_cols and not (
+                old_type.lower() in int_family and t in int_family
+            )
             # a widened column referenced by an EXPRESSION key can change
             # both the expr's output type and (for type-dependent exprs
             # like a string cast: int 7 -> double '7.0') its output
@@ -1603,9 +1519,9 @@ class Transaction:
                 # state from the (staged) source under the new type — the
                 # rare, explicit-DDL-time cost that keeps the pinned
                 # incremental == recompute invariant true afterwards.
-                self._recompute_rollup_state(mv, row)
+                self._recompute_rollup_state(mv, d)
 
-    def _recompute_rollup_state(self, mv: str, row: dict) -> None:
+    def _recompute_rollup_state(self, mv: str, d) -> None:
         """Rebuild a rollup's stored state inside THIS transaction, from the
         COMMITTED source snapshot at the txn's base version projected to
         the STAGED schema (the widened type is what forces the rebuild;
@@ -1615,132 +1531,40 @@ class Transaction:
         > base, so the next refresh's base->head diff folds them in
         exactly once. Reading the staged state here (read-your-writes)
         AND stamping base would bake those rows into the rebuilt state
-        and then re-apply them — silent double counting. The meta stamp
-        (base version) is mirrored into the cached row so a later DDL in
-        the same block (e.g. RENAME) restamps from the rebuilt value, not
-        a stale pre-rebuild one."""
-        from .rollup import _agg_exprs, _bucket_expr, _stamp_meta_tx
-
-        def _lst(key):
-            return tuple(json.loads(row.get(key) or "[]"))
-
-        src = row["src"]
-        staged_sch = self._state(src).schema
-        table_id, _ = self.c._table_at(src, self.base_version)
+        and then re-apply them — silent double counting. ``d`` is the
+        cached definition, so its stamp (base version) is what a later DDL
+        in the same block (e.g. RENAME) writes back, not a stale
+        pre-rebuild one."""
+        staged_sch = self._state(d.src).schema
+        table_id, _ = self.c._table_at(d.src, self.base_version)
         committed = self.c._schemas_at(table_id, self.base_version)
         committed_sch = committed[max(committed)]
-        df = self.c.read(src, version=self.base_version)
+        df = self.c.read(d.src, version=self.base_version)
         if committed_sch.to_json() != staged_sch.to_json():
             df = _project(df, committed_sch, staged_sch)
-        if row.get("where_sql"):
-            df = df.filter(F.expr(row["where_sql"]))
-        from .rollup import _key_group_cols, _key_exprs_of
-
-        df = (
-            df.groupBy(
-                _bucket_expr(
-                    row["time_col"] or None, int(row["bucket_s"])
-                ).alias("bucket_start"),
-                *_key_group_cols(_lst("keys"), _key_exprs_of(row)),
-            )
-            .agg(
-                *_agg_exprs(
-                    _lst("sum_cols"),
-                    minmax_cols=_lst("minmax_cols"),
-                    count_cols=_lst("count_cols"),
-                    approx_cols=_lst("approx_cols"),
-                    distinct_cols=_lst("distinct_cols"),
-                    var_cols=_lst("var_cols"),
-                )
-            )
-        )
         self.delete(mv)
-        self.insert(mv, df)
-        _stamp_meta_tx(self, self.c, mv, row, self.base_version)
-        row["last_version"] = self.base_version
+        self.insert(mv, d.state(df))
+        d.stamp(self, mv, self.base_version)
 
     def _rename_in_dependent_rollups(self, src_name, old, new) -> None:
         """Renaming a maintained source column follows through to every
-        dependent rollup — its meta lists/time_col and the derived stored
-        column names (sum_<old> -> sum_<new>, key columns verbatim) — in
-        the same transaction, so the next refresh's diff (which carries
-        the NEW source names) keeps resolving. Without this the MV was
-        permanently unrefreshable after a rename (AnalysisException on
-        the old name)."""
-        from .rollup import _stamp_meta_tx
-
-        prefixes = {
-            "keys": ("",),  # key column stored under the source name
-            "sum_cols": ("sum_",),
-            "minmax_cols": ("min_", "max_"),
-            "count_cols": ("count_",),
-            "approx_cols": ("hll_",),
-            "distinct_cols": ("distinct_",),
-            "var_cols": ("sumsq_",),
-        }
-        from .lexer import column_refs
-        from .rollup import rewrite_sql_identifiers
-
-        for mv, row, cols in self._dependent_rollups(src_name):
-            ke = json.loads(row.get("key_exprs") or "{}")
-            # cols is derived from the CURRENT (already-renamed) schema, so
-            # a predicate-only (or expr-key-only) reference to the old name
-            # is invisible in it — scan the stored TEXTS for `old` directly
-            in_where = bool(row.get("where_sql")) and any(
-                r.name.lower() == old.lower()
-                for r in column_refs(row["where_sql"])
-            )
-            in_key_expr = any(
-                r.name.lower() == old.lower()
-                for e in ke.values()
-                for r in column_refs(e)
-            )
-            if old not in cols and not in_where and not in_key_expr:
+        dependent rollup — its definition (RollupDef.rename) and the
+        derived stored column names (sum_<old> -> sum_<new>, key columns
+        verbatim) — in the same transaction, so the next refresh's diff
+        (which carries the NEW source names) keeps resolving. Without this
+        the MV was permanently unrefreshable after a rename
+        (AnalysisException on the old name)."""
+        for mv, d, _cols in self._dependent_rollups(src_name):
+            renames = d.rename(old, new)
+            if renames is None:
                 continue
-            renames = []
-            for key, prefs in prefixes.items():
-                lst = json.loads(row.get(key) or "[]")
-                if old in lst and not (key == "keys" and old in ke):
-                    row[key] = json.dumps(
-                        [new if c == old else c for c in lst]
-                    )
-                    renames += [(f"{p}{old}", f"{p}{new}") for p in prefs]
-            if in_key_expr:
-                row["key_exprs"] = json.dumps({
-                    a: rewrite_sql_identifiers(e, {old: new})
-                    for a, e in ke.items()
-                })
-            if row.get("time_col") == old:
-                row["time_col"] = new  # bucket expr re-derives from meta
-            if row.get("where_sql"):
-                row["where_sql"] = rewrite_sql_identifiers(
-                    row["where_sql"], {old: new}
-                )
-            if row.get("having_sql") and renames:
-                # the HAVING references STORED/read-face names, which just
-                # changed with the source rename: follow the stored pairs
-                # plus the derived read-face names (avg_<c> rides sum_<c>,
-                # approx_distinct_<c> rides hll_<c>)
-                face_map = dict(renames)
-                if (f"sum_{old}", f"sum_{new}") in renames:
-                    face_map[f"avg_{old}"] = f"avg_{new}"
-                if (f"hll_{old}", f"hll_{new}") in renames:
-                    face_map[f"approx_distinct_{old}"] = (
-                        f"approx_distinct_{new}"
-                    )
-                if (f"sumsq_{old}", f"sumsq_{new}") in renames:
-                    face_map[f"var_{old}"] = f"var_{new}"
-                    face_map[f"stddev_{old}"] = f"stddev_{new}"
-                row["having_sql"] = rewrite_sql_identifiers(
-                    row["having_sql"], face_map
-                )
             st_mv = self._state(mv)
             sch = st_mv.schema
             for a, b in renames:
                 sch = sch.rename_column(a, b)
             if renames:
                 self._evolve(st_mv, sch, "tables_altered")
-            _stamp_meta_tx(self, self.c, mv, row, int(row["last_version"]))
+            d.write(self, mv)
 
     def create_view(self, name, sql) -> None:
         self._view_ops.append((name, sql))
@@ -2425,8 +2249,6 @@ class Transaction:
                 ]:
                     # literal-stripped: a '__s_' inside a STRING LITERAL
                     # is data, not a source-column reference
-                    from .rollup import strip_sql_literals
-
                     if "__s_" in strip_sql_literals(txt):
                         raise LakeError(
                             "by-source clause expressions see only the "

@@ -167,6 +167,12 @@ def map_code(text: str, fn, literal_fn=None) -> str:
     return "".join(out)
 
 
+def strip_sql_literals(text: str) -> str:
+    """``text`` with every string literal replaced by an empty ``''``, so
+    substring and identifier scans never match a literal's content."""
+    return map_code(text, lambda s: s, literal_fn=lambda _s: "''")
+
+
 def search_code(pat, text: str, pos: int = 0):
     """The first match of ``pat`` at or after ``pos`` that starts outside
     literals, quoted identifiers and comments (it may run on into one: a
@@ -266,3 +272,19 @@ def assignment(text: str):
         return None
     m = re.match(r"\s*=(?![=>])\s*(\S.*)$", text[refs[0].end:], re.S)
     return (refs[0].qual, refs[0].name, m.group(1).rstrip()) if m else None
+
+
+def rewrite_sql_identifiers(text: str, mapping: dict) -> str:
+    """Replace column references per ``mapping`` (case-insensitive keys),
+    leaving literals, function names and qualifiers alone; a backticked
+    reference stays backticked."""
+    low = {k.lower(): v for k, v in mapping.items()}
+    out, prev = [], 0
+    for r in column_refs(text):
+        rep = low.get(r.name.lower())
+        if rep is not None:
+            quoted = text[r.end - 1] == "`"
+            out += [text[prev:r.name_start], bq(rep) if quoted else rep]
+            prev = r.end
+    out.append(text[prev:])
+    return "".join(out)

@@ -32,8 +32,12 @@ same statement coverage so a reference user can port scripts verbatim:
   predicate columns — the reference's own summary-view pattern filters
   rows, demos/03_schema_evolution/demo.py:273-288 — and the HAVING is a
   READ-TIME group filter over the maintained face, so state for a group
-  that dips below the threshold is never lost). Reads of
-  the MV go through :func:`~ducktales_spark.lake.rollup.read_rollup`, so
+  that dips below the threshold is never lost). Whether a name is an MV,
+  and its definition, come from one lookup
+  (:func:`~ducktales_spark.lake.rollup.find_rollup`): a plain table beside
+  a user table named like an MV's meta companion is not an MV. Every read of
+  an MV — current, ``AT (VERSION|TIMESTAMP =>)`` and attached — goes
+  through :func:`~ducktales_spark.lake.rollup.apply_read_face`, so
   ``SELECT avg_<c> FROM mv`` works without hand-dividing and
   ``approx_distinct_<c>`` reads as the HLL estimate, never raw sketch
   bytes.
@@ -109,13 +113,25 @@ from .lexer import (
     split_top,
     statements,
     strip,
+    strip_sql_literals,
     sub_code,
     token_name,
     tokens,
     top_words,
     unwrap_parens,
 )
-from .rollup import strip_sql_literals
+from .rollup import (
+    apply_read_face,
+    apply_retention,
+    create_rollup,
+    derived_columns,
+    find_rollup,
+    find_rollups,
+    meta_table,
+    read_face,
+    refresh_rollup,
+    restamp_rollups,
+)
 from .schema import Field, TableSchema
 
 __all__ = ["SQLExecutor", "LakeSQLError"]
@@ -369,12 +385,12 @@ class SQLExecutor:
     def __init__(self, catalog):
         self.c = catalog
         self._tx = None  # open explicit transaction, if any
-        # mv_name -> (catalog_version, meta_row_dict), so the per-query MV
-        # read overlay doesn't re-collect the one-row meta table on every
+        # mv_name -> (catalog_version, RollupDef or None), so the per-query
+        # MV read overlay doesn't re-collect the one-row meta table on every
         # bind. Keyed by name with only the latest version kept: a
         # long-lived executor on a busy catalog stays O(#MVs), not
         # O(#MVs x versions)
-        self._mv_cols = {}
+        self._mv_defs = {}
         self._session = self  # the executor that owns the attach list
         self._alias = None  # this catalog's ATTACH name (None: the session)
         # ATTACH'd secondary catalogs: lowercased name -> LakeCatalog.
@@ -564,20 +580,11 @@ class SQLExecutor:
         return self._show_tables() if what == "TABLES" else None
 
     def _show_tables(self) -> DataFrame:
-        from .rollup import _meta_name
-
         ts = set(self.c.tables())
         # an MV's meta companion is an implementation detail: list the MV
         # once (its meta stays directly readable/describable)
-        listed = sorted(
-            n
-            for n in (ts | set(self.c.views()))
-            if not (
-                n.endswith("__rollup_meta")
-                and n[: -len("__rollup_meta")] in ts
-                and _meta_name(n[: -len("__rollup_meta")]) == n
-            )
-        )
+        hidden = {meta_table(mv) for mv in find_rollups(self.c, tables=ts)}
+        listed = sorted((ts | set(self.c.views())) - hidden)
         return local_df(self.c.spark, [(n,) for n in listed], "name string")
 
     def _describe_stmt(self, head: _Head, src):
@@ -1935,20 +1942,17 @@ class SQLExecutor:
             # add_retention_policy idea as an explicit one-shot verb):
             # expire + record the horizon in ONE catalog txn; AT(VERSION)
             # reads keep the archive, refreshes can't resurrect (rollup.py)
-            from .rollup import apply_retention
-
             if len(pos) != 1 or "drop_before" not in named:
                 raise LakeSQLError(
                     "add_retention_policy(mv, drop_before => 'timestamp')"
                 )
-            if not self._mv_exists(_val(pos[0])):
+            if find_rollup(self.c, _val(pos[0])) is None:
                 raise LakeSQLError(
                     f"no materialized view named {pos[0]!r}"
                 )
             n = apply_retention(
                 self.c, _val(pos[0]), str(_val(named["drop_before"]))
             )
-            self._mv_cols.pop(_val(pos[0]), None)  # meta changed: drop cache
             return self._status("CALL add_retention_policy", n)
         if f == "gc":
             age = named.get("min_age_seconds") or (pos[0] if pos else None)
@@ -2035,12 +2039,6 @@ class SQLExecutor:
             qdf = _df_arg(pos[1], "queries").toPandas()
             return _vx.probe_vector_index(self.c, idx, qdf, **kw)
         raise LakeSQLError(f"unknown procedure {fn!r}")
-
-    def _mv_exists(self, name: str) -> bool:
-        from .rollup import _meta_name
-
-        ts = set(self.c.tables())
-        return name in ts and _meta_name(name) in ts
 
     def _no_txn(self, stmt: str) -> None:
         if self._tx is not None:
@@ -2546,8 +2544,6 @@ class SQLExecutor:
         return rewritten
 
     def _create_mv(self, name: str, body: str, replace: bool) -> DataFrame:
-        from .rollup import create_rollup
-
         self._no_txn("CREATE MATERIALIZED VIEW")
         spec = self._parse_mv_select(body)
         if not self._table_exists(spec["src"]):
@@ -2601,7 +2597,7 @@ class SQLExecutor:
                     f"invalid materialized-view WHERE predicate: {e}"
                 ) from None
         is_replace = False
-        if self._mv_exists(name):
+        if find_rollup(self.c, name) is not None:
             if not replace:
                 raise LakeSQLError(f"materialized view {name!r} exists")
             is_replace = True
@@ -2631,8 +2627,6 @@ class SQLExecutor:
         return self._status("CREATE MATERIALIZED VIEW", 0)
 
     def _refresh(self, head: _Head, src) -> DataFrame:
-        from .rollup import refresh_rollup
-
         name = head.table
         if name is None or head.rest.strip():
             raise LakeSQLError(
@@ -2640,7 +2634,7 @@ class SQLExecutor:
                 "<name>"
             )
         self._no_txn("REFRESH MATERIALIZED VIEW")
-        if not self._mv_exists(name):
+        if find_rollup(self.c, name) is None:
             raise LakeSQLError(f"no such materialized view: {name!r}")
         out = refresh_rollup(self.c, name)
         return self._status(
@@ -2648,16 +2642,14 @@ class SQLExecutor:
         )
 
     def _drop_mv(self, name: str, if_exists: bool) -> DataFrame:
-        from .rollup import _meta_name
-
-        if not self._mv_exists(name):
+        if find_rollup(self.c, name) is None:
             if if_exists:
                 return self._status("DROP MATERIALIZED VIEW", 0)
             raise LakeSQLError(f"no such materialized view: {name!r}")
 
         def op(tx):
             tx.drop_table(name)
-            tx.drop_table(_meta_name(name))
+            tx.drop_table(meta_table(name))
 
         self._run(op)
         return self._status("DROP MATERIALIZED VIEW", 0)
@@ -2667,33 +2659,13 @@ class SQLExecutor:
         SQL reads see the derived ``avg_<c>`` / ``approx_distinct_<c>``
         columns instead of the raw stored state (binary HLL sketches
         hidden) — the face itself comes from rollup.apply_read_face, the
-        single source of truth. Meta rows are cached per (mv, catalog
+        single source of truth. Definitions are cached per (mv, catalog
         version) — keyed by name, latest version only, so the cache stays
         O(#MVs); catalogs with no MVs pay nothing."""
-        from .rollup import META_REQUIRED_COLS, _meta_name, apply_read_face
-
-        ts = set(self.c.tables(version))
-        mvs = [t for t in ts if _meta_name(t) in ts]
-        if not mvs:
-            return
-        v = self.c.current_version() if version is None else version
-        for t in mvs:
-            hit = self._mv_cols.get(t)
-            meta_row = hit[1] if hit is not None and hit[0] == v else None
-            if meta_row is None:
-                # Guard like export_to: a huge USER table named
-                # X__rollup_meta with a sibling X must never be collected
-                # on a read overlay — column shape is DataFrame metadata,
-                # the row-count probe is catalog-metadata-only
-                meta_df = self.c.read(_meta_name(t), version=version)
-                if not META_REQUIRED_COLS <= set(meta_df.columns):
-                    continue  # a same-named table pair, not an MV
-                if self.c.count(_meta_name(t), version=version) != 1:
-                    continue
-                meta_row = meta_df.collect()[0].asDict()
-                self._mv_cols[t] = (v, meta_row)
+        mvs = find_rollups(self.c, version, cache=self._mv_defs)
+        for t, d in mvs.items():
             apply_read_face(
-                self.c.read(t, version=version), meta_row
+                self.c.read(t, version=version), d
             ).createOrReplaceTempView(t)
 
     # ------------------------------------------------------------------
@@ -2720,10 +2692,8 @@ class SQLExecutor:
         try:
             q = self._rewrite_meta_fns(
                 self.c._rewrite_at(
-                    self._rewrite_mv_at(
-                        self._rewrite_attached(
-                            self._rewrite_file_fns(self._rewrite_dialect(body))
-                        )
+                    self._rewrite_attached(
+                        self._rewrite_file_fns(self._rewrite_dialect(body))
                     )
                 )
             )
@@ -2890,7 +2860,7 @@ class SQLExecutor:
                         created.add(h.table)
                     self.execute(stmt)
                     n += 1
-        self.c.restamp_rollup_metas(only=created)
+        restamp_rollups(self.c, only=created)
         return self._status("IMPORT DATABASE", n)
 
     @staticmethod
@@ -3316,7 +3286,7 @@ class SQLExecutor:
         views bound from the attached catalog — lazily, only for names
         the query actually touches (an attach list of N catalogs must not
         cost N full binds per statement). MVs bind through the rollup
-        read face (same shape+count guard as the main overlay). Qualified
+        read face, at the current version and AT a version. Qualified
         names only rewrite when the prefix IS an attached catalog AND the
         suffix IS one of its tables, so ordinary ``alias.column``
         references never match. A trailing ``AT (VERSION|TIMESTAMP => v)``
@@ -3325,7 +3295,6 @@ class SQLExecutor:
         it."""
         if not self._attached:
             return q
-        from .rollup import META_REQUIRED_COLS, _meta_name, read_rollup
 
         def _bind(cat: str, tbl: str, version=None):
             """-> view name, or None when (cat, tbl) isn't an attached
@@ -3344,19 +3313,12 @@ class SQLExecutor:
                 # registered this table (txn-staged state included) —
                 # the unqualified name IS the right view
                 return tbl if self._table_exists(tbl) else None
-            ts = set(ac.tables())
+            ts = set(ac.tables(version))
             if tbl not in ts:
                 return None
             suffix = "" if version is None else f"__at_v{version}"
             view = f"__att_{cat.lower()}__{tbl}{suffix}"
-            df = ac.read(tbl, version=version)
-            if version is None and _meta_name(tbl) in ts:
-                meta_df = ac.read(_meta_name(tbl))
-                if META_REQUIRED_COLS <= set(meta_df.columns) and (
-                    ac.count(_meta_name(tbl)) == 1
-                ):
-                    df = read_rollup(ac, tbl)
-            df.createOrReplaceTempView(view)
+            read_face(ac, tbl, version, ts).createOrReplaceTempView(view)
             return view
 
         def _rw_at(m: "re.Match") -> str:
@@ -3503,37 +3465,6 @@ class SQLExecutor:
             raise LakeSQLError("columns/types struct is empty")
         return out
 
-    def _rewrite_mv_at(self, q: str) -> str:
-        """Time-travel reads of a MATERIALIZED VIEW go through the rollup
-        read face too: ``mv AT (VERSION => n)`` binds read_rollup at that
-        version (avg columns included), matching current-version reads.
-        Non-MV names are left for the catalog's generic AT rewrite."""
-        from .rollup import _meta_name, read_rollup
-
-        ts = set(self.c.tables())
-
-        def _rw(m: "re.Match") -> str:
-            tname, kind, val = m.group(1), m.group(2).upper(), m.group(3)
-            if not (tname in ts and _meta_name(tname) in ts):
-                return m.group(0)
-            if kind == "VERSION":
-                v = int(val)
-            else:
-                v = self.c._resolve_version(timestamp=val.strip().strip("'\""))
-            view = f"{tname}__at_v{v}"
-            read_rollup(self.c, tname, version=v).createOrReplaceTempView(
-                view
-            )
-            return view
-
-        # literal-aware, like catalog._rewrite_at: a clause inside a
-        # string literal is data; a real clause's payload may hold one
-        pat = re.compile(
-            rf"\b({_IDENT})\s+AT\s*\(\s*(VERSION|TIMESTAMP)\s*=>\s*([^)]+)\)",
-            re.I,
-        )
-        return sub_code(pat, _rw, q)
-
     def _bind_tables(self, version=None, text=None) -> None:
         """Register every table as a temp view for Catalyst resolution —
         snapshot-isolated inside an open txn (base version + staged
@@ -3678,30 +3609,14 @@ class SQLExecutor:
         rows = []
         derived = []
         hidden = set()
-        if self._mv_exists(name):
-            from .rollup import META_REQUIRED_COLS, _meta_name, derived_columns
-
-            # Guard like the read-overlay path above: _mv_exists checks
-            # NAMES only, so a huge USER table named X__rollup_meta with a
-            # sibling X must never be collected by DESCRIBE X — column
-            # shape is DataFrame metadata, the row-count probe is
-            # catalog-metadata-only; both run before any collect()
-            meta_df = self.c.read(_meta_name(name))
-            meta = (
-                meta_df.collect()
-                if META_REQUIRED_COLS <= set(meta_df.columns)
-                and self.c.count(_meta_name(name)) == 1
-                else []
-            )
-            if len(meta) == 1:
-                # the read face's contract (rollup.derived_columns): list
-                # every column a SELECT returns, hide raw sketch state
-                for cname, ctype, hides in derived_columns(meta[0]):
-                    derived.append(
-                        (cname, ctype, "YES", None, None, "derived")
-                    )
-                    if hides:
-                        hidden.add(hides)
+        d = find_rollup(self.c, name)
+        if d is not None:
+            # the read face's contract (rollup.derived_columns): list every
+            # column a SELECT returns, hide raw sketch state
+            for cname, ctype, hides in derived_columns(d):
+                derived.append((cname, ctype, "YES", None, None, "derived"))
+                if hides:
+                    hidden.add(hides)
         for f in schema.fields:
             if f.name in hidden:
                 continue

@@ -1073,6 +1073,56 @@ def test_export_ignores_lookalike_rollup_meta(lake, spark, tmp_path):
     assert rows == [("a", 1), ("b", 2)]
 
 
+def _lookalike_pair(lake) -> int:
+    """A plain table x beside a USER table named x__rollup_meta; returns
+    the catalog version after both are filled."""
+    lake.sql("CREATE TABLE x (k INT)")
+    lake.sql("CREATE TABLE x__rollup_meta (note VARCHAR, n INT)")
+    lake.sql("INSERT INTO x VALUES (1)")
+    lake.sql("INSERT INTO x__rollup_meta VALUES ('a', 1), ('b', 2)")
+    return lake.current_version()
+
+
+def test_lookalike_rollup_meta_is_not_a_materialized_view(lake):
+    """A plain table beside a USER table named like its rollup meta is not
+    a materialized view: every MV verb says there is no such view (CREATE:
+    the table exists) and leaves both tables alone."""
+    lake.sql("CREATE TABLE src (k INT)")
+    v = _lookalike_pair(lake)
+    for stmt in (
+        "DROP MATERIALIZED VIEW x",
+        "REFRESH MATERIALIZED VIEW x",
+        "CALL add_retention_policy(x, drop_before => '2024-01-01')",
+    ):
+        with pytest.raises(LakeSQLError, match="no (such )?materialized view"):
+            lake.sql(stmt)
+    for kw in ("", "OR REPLACE "):
+        with pytest.raises(LakeSQLError, match="table 'x' exists"):
+            lake.sql(
+                f"CREATE {kw}MATERIALIZED VIEW x AS SELECT k, COUNT(*) "
+                "FROM src GROUP BY k"
+            )
+    lake.sql("DROP MATERIALIZED VIEW IF EXISTS x")
+    assert lake.current_version() == v
+    assert [r["k"] for r in lake.sql("SELECT * FROM x").collect()] == [1]
+    assert lake.count("x__rollup_meta") == 2
+
+
+def test_lookalike_rollup_meta_reads_as_plain_tables(lake):
+    """Reads treat the lookalike pair as the plain tables they are: time
+    travel reads x as stored, and SHOW TABLES lists x__rollup_meta."""
+    v = _lookalike_pair(lake)
+    lake.sql("INSERT INTO x VALUES (2)")
+    at = lake.sql(f"SELECT * FROM x AT (VERSION => {v})").collect()
+    assert [r["k"] for r in at] == [1]
+    meta_at = lake.sql(
+        f"SELECT note FROM x__rollup_meta AT (VERSION => {v}) ORDER BY note"
+    ).collect()
+    assert [r["note"] for r in meta_at] == ["a", "b"]
+    names = [r["name"] for r in lake.sql("SHOW TABLES").collect()]
+    assert {"x", "x__rollup_meta"} <= set(names)
+
+
 def test_materialized_view_survives_catalog_export(lake, spark, tmp_path):
     """D15 x X12: export_to migrates an MV's stored state AND meta table,
     so the target catalog can read (avg columns included) and REFRESH the
@@ -1410,9 +1460,9 @@ def test_export_meta_shaped_decoy_not_collected(lake, spark, tmp_path):
 
 def test_describe_ignores_lookalike_rollup_meta(lake, spark):
     """DESCRIBE X with a huge USER table named X__rollup_meta must never
-    collect it: _mv_exists checks names only, so the meta collect is
-    gated on column shape (DataFrame metadata) + a catalog-metadata row
-    count — same guard as export_to and the read overlay."""
+    collect it: the MV lookup (rollup.find_rollup) gates the meta collect
+    on column shape (DataFrame metadata) + a catalog-metadata row count —
+    the one guard export_to and the read overlay share."""
     from pyspark.sql import DataFrame
 
     lake.sql("CREATE TABLE big (k INT)")
@@ -1765,7 +1815,7 @@ def test_rollup_meta_decoy_never_fully_collected(lake, spark):
 
     DataFrame.toPandas, DataFrame.collect = spy_topandas, spy_collect
     try:
-        # read overlay (_mv_overlay) + DDL guard enumeration (_rollup_metas)
+        # read overlay + DDL guard enumeration, both through find_rollups
         assert lake.sql("SELECT COUNT(*) AS n FROM big").first()["n"] == 1
         lake.sql("ALTER TABLE big RENAME COLUMN k TO k2")
     finally:

@@ -788,3 +788,89 @@ def test_having_python_api_read_face_filter(spark, lake):
             sum_cols=("value",), having="no_such_col > 1",
         )
     assert "mv2" not in lake.tables()
+
+
+LEGACY_META_COLS = (
+    "src", "time_col", "bucket_s", "keys", "sum_cols", "minmax_cols",
+    "last_version",
+)
+
+
+def test_legacy_meta_row_reads_refreshes_and_renames(spark, lake):
+    """A meta row written before the later meta columns existed carries
+    only the original seven. Such a rollup still reads (API and SQL),
+    describes, refreshes, and follows a source RENAME COLUMN, and its meta
+    keeps its seven columns."""
+    from ducktales_spark.lake.rollup import read_rollup
+
+    lake.ctas("ev", _mk_events(spark, BASE))
+    create_rollup(
+        lake, "ev_hourly", "ev", "ts", 3600,
+        keys=("user_id",), sum_cols=("value",),
+    )
+    legacy = lake.read("ev_hourly__rollup_meta").select(*LEGACY_META_COLS)
+    rows = legacy.collect()
+    with lake.transaction() as tx:
+        tx.drop_table("ev_hourly__rollup_meta")
+        tx.ctas(
+            "ev_hourly__rollup_meta", spark.createDataFrame(rows, legacy.schema)
+        )
+
+    assert _rows(read_rollup(lake, "ev_hourly")) == _rows(_recompute(lake))
+    avg = {
+        (r["bucket_start"], r["user_id"]): r["avg_value"]
+        for r in lake.sql("SELECT * FROM ev_hourly").collect()
+    }
+    assert avg[(min(avg)[0], 1)] == 15.0  # 00h bucket: (10 + 20) / 2
+    desc = {
+        r["column_name"]: r["extra"]
+        for r in lake.sql("DESCRIBE ev_hourly").collect()
+    }
+    assert desc["avg_value"] == "derived"
+
+    lake.insert("ev", _mk_events(spark, [(6, "2024-01-01 00:20:00", 1, 6.0)]))
+    refresh_rollup(lake, "ev_hourly")
+    assert _rows(lake.read("ev_hourly")) == _rows(_recompute(lake))
+
+    lake.sql("ALTER TABLE ev RENAME COLUMN value TO amount")
+    meta = lake.read("ev_hourly__rollup_meta")
+    assert tuple(meta.columns) == LEGACY_META_COLS
+    assert meta.collect()[0]["sum_cols"] == '["amount"]'
+    lake.insert("ev", _mk_events(spark, [
+        (7, "2024-01-01 03:30:00", 2, 4.0),
+    ]).withColumnRenamed("value", "amount"))
+    refresh_rollup(lake, "ev_hourly")
+    got = sorted(
+        (r["bucket_start"], r["user_id"], r["n_rows"], r["sum_amount"])
+        for r in read_rollup(lake, "ev_hourly").collect()
+    )
+    want = sorted(
+        (r["bucket_start"], r["user_id"], r["n_rows"], r["s"])
+        for r in lake.read("ev")
+        .groupBy(_bucket_expr("ts", 3600).alias("bucket_start"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("amount").alias("s"))
+        .collect()
+    )
+    assert got == want
+
+
+def test_widen_rebuild_keeps_retention_horizon(spark, lake):
+    """A source widening that rebuilds a rollup's state (its sketches hash
+    the value's string form, which the widening changes) keeps the
+    retention horizon: buckets a retention policy expired stay expired."""
+    import datetime as dt
+
+    from ducktales_spark.lake.rollup import apply_retention
+
+    lake.ctas("ev", _mk_events(spark, BASE).withColumn(
+        "user_id", F.col("user_id").cast("int")))
+    create_rollup(
+        lake, "hr", "ev", "ts", 3600,
+        sum_cols=("value",), approx_cols=("user_id",),
+    )
+    apply_retention(lake, "hr", "2024-01-01 01:00:00")
+    horizon = dt.datetime(2024, 1, 1, 1)
+    kept = sorted(r["bucket_start"] for r in lake.read("hr").collect())
+    assert kept and min(kept) >= horizon
+    lake.alter_column_type("ev", "user_id", "double")
+    assert sorted(r["bucket_start"] for r in lake.read("hr").collect()) == kept
