@@ -46,9 +46,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .lexer import column_refs, names_word, strip_sql_literals, sub_code
+from .lexer import column_refs, strip_sql_literals
 from .metastore import ConflictError, Metastore, open_metastore
-from .rollup import find_rollups, read_face, restamp_rollups
+from .rollup import find_rollups, restamp_rollups
 from .schema import (
     TableSchema,
     ddl_type,
@@ -769,15 +769,7 @@ class LakeCatalog:
         )
 
     def tables(self, version=None) -> list:
-        v = self._resolve_version(version)
-        return [
-            r[0]
-            for r in self.ms.q(
-                "SELECT name FROM lake_table WHERE created_snapshot<=? AND "
-                "(dropped_snapshot IS NULL OR dropped_snapshot>?) ORDER BY name",
-                (v, v),
-            )
-        ]
+        return self._names_at(self._resolve_version(version))[0]
 
     def columns(self, name: str, version=None) -> list:
         v = self._resolve_version(version)
@@ -849,14 +841,24 @@ class LakeCatalog:
         return out
 
     def views(self, version=None) -> dict:
-        v = self._resolve_version(version)
-        return dict(
-            self.ms.q(
-                "SELECT name, view_sql FROM lake_view WHERE created_snapshot<=? "
-                "AND (dropped_snapshot IS NULL OR dropped_snapshot>?)",
-                (v, v),
-            )
-        )
+        return self._names_at(self._resolve_version(version))[1]
+
+    def _names_at(self, v: int) -> tuple:
+        """The tables (sorted) and the views ({name: sql}) live at the
+        resolved version ``v``: one catalog query."""
+        tables, views = [], {}
+        for name, vsql in self.ms.q(
+            "SELECT name, NULL FROM lake_table WHERE created_snapshot<=? AND "
+            "(dropped_snapshot IS NULL OR dropped_snapshot>?) UNION ALL "
+            "SELECT name, view_sql FROM lake_view WHERE created_snapshot<=? "
+            "AND (dropped_snapshot IS NULL OR dropped_snapshot>?) ORDER BY 1",
+            (v, v, v, v),
+        ):
+            if vsql is None:
+                tables.append(name)
+            else:
+                views[name] = vsql
+        return tables, views
 
     def table_changes(self, name: str, v1: int, v2: int) -> DataFrame:
         """``ducklake_table_changes`` (T4): row-level diff between versions via
@@ -892,34 +894,15 @@ class LakeCatalog:
         return ins.unionByName(dele)
 
     # ------------------------------------------------------------------
-    # session bind + maintenance
+    # SQL surface + maintenance
     # ------------------------------------------------------------------
-    def bind(self, version=None, text: Optional[str] = None) -> None:
-        """Register every table (at ``version``) and view as temp views so
-        queries run in plain Spark SQL (the reference's ``USE lake``,
-        demos/01_transaction_rollback/demo.py:30).
-
-        ``text`` (the SQL about to run) binds only the tables it names as
-        a whole word, case-insensitively, and no view, unless it names a
-        view (a view may read any table): a table the text does not name
-        keeps whatever temp view it had, which the text cannot reach."""
-        views = self.views(version)
-        if text is not None and any(names_word(v, text) for v in views):
-            text = None
-        for t in self.tables(version):
-            if text is None or names_word(t, text):
-                self.read(t, version=version).createOrReplaceTempView(t)
-        if text is None:
-            for vname, vsql in views.items():
-                self.spark.sql(vsql).createOrReplaceTempView(vname)
-
     def sql(self, query: str, version=None) -> DataFrame:
         """Execute ONE SQL statement against the lake — the reference's
         ``conn.execute(sql)`` surface (``utils/ducklake_utils.py:53``).
 
         Reads run through Catalyst with DuckLake's time-travel syntax
         ``FROM t AT (VERSION => 3)`` / ``AT (TIMESTAMP => ...)``
-        (README.md:216-220) rewritten to versioned temp views. DDL/DML/
+        (README.md:216-220) bound to statement-scoped temp views. DDL/DML/
         transaction statements (CREATE/ALTER/DROP/INSERT/UPDATE/DELETE/
         BEGIN/COMMIT/ROLLBACK) dispatch to the transactional API — see
         :mod:`ducktales_spark.lake.sql` for the statement inventory."""
@@ -928,32 +911,6 @@ class LakeCatalog:
 
             self._sql_exec = SQLExecutor(self)
         return self._sql_exec.execute(query, version)
-
-    def _rewrite_at(self, query: str) -> str:
-        """Rewrite ``t AT (VERSION|TIMESTAMP => x)`` clauses to registered
-        versioned temp views (SURVEY.md §4 'snapshot-scoped scan binding' —
-        no Catalyst parser extension needed). A clause must START outside
-        a string literal: ``SELECT 't AT (VERSION => 1)'`` is data. The
-        clause's own payload may hold a literal (TIMESTAMP => '...'),
-        which is consumed as part of the match. A materialized view reads
-        through its read face, as it does at the current version."""
-
-        def _rewrite(m: "re.Match") -> str:
-            tname, kind, val = m.group(1), m.group(2).upper(), m.group(3)
-            if kind == "VERSION":
-                v = int(val)
-            else:
-                v = self._resolve_version(timestamp=val.strip().strip("'\""))
-            view = f"{tname}__at_v{v}"
-            read_face(self, tname, v).createOrReplaceTempView(view)
-            return view
-
-        pat = re.compile(
-            r"\b([A-Za-z_][A-Za-z0-9_]*)\s+AT\s*\(\s*(VERSION|TIMESTAMP)"
-            r"\s*=>\s*([^)]+)\)",
-            re.I,
-        )
-        return sub_code(pat, _rewrite, query)
 
     def export_to(self, other: "LakeCatalog") -> None:
         """Catalog migration (D15, demos/05_catalog_portability/demo.py:199-280):
@@ -1389,13 +1346,20 @@ class Transaction:
         their states changed, so commit ignores them (no spurious
         conflicts)."""
         if self._rollup_metas_cache is None:
-            names = set(self.c.tables())
-            for n, st in self._states.items():
-                (names.discard if st.dropped else names.add)(n)
             self._rollup_metas_cache = find_rollups(
-                self.c, tables=names, tx=self
+                self.c, tables=self.names()[0], tx=self
             )
         return self._rollup_metas_cache
+
+    def names(self) -> tuple:
+        """The tables (a set) and views ({name: sql}) this transaction
+        sees: its base version's, with its own DDL on top."""
+        tables, views = self.c._names_at(self.base_version)
+        tables = set(tables)
+        for n, st in self._states.items():
+            (tables.discard if st.dropped else tables.add)(n)
+        views.update(self._view_ops)  # in order: the last op wins
+        return tables, {n: q for n, q in views.items() if q is not None}
 
     def _dependent_rollups(self, src_name):
         """[(mv_name, RollupDef, {maintained source columns})] for every

@@ -202,13 +202,6 @@ def bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def names_word(name: str, text: str) -> bool:
-    """Does ``text`` hold ``name`` as a whole word, case-insensitively?
-    Literals and comments count too: a caller binding what a statement
-    may name over-approximates rather than misses a reference."""
-    return re.search(rf"(?<!\w){re.escape(name)}(?!\w)", text, re.I) is not None
-
-
 class Ref(NamedTuple):
     start: int  # of the qualifier, when there is one
     name_start: int

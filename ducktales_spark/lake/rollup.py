@@ -538,9 +538,9 @@ def apply_read_face(df: DataFrame, d: RollupDef) -> DataFrame:
     for every variance column, ``approx_distinct_<c>`` = the HLL estimate
     for every sketch column with the raw binary ``hll_<c>`` state dropped
     (an implementation detail, like Timescale's partials), then the
-    HAVING. SINGLE source of truth: read_rollup, the SQL executor's MV
-    overlay and every ``AT (VERSION|TIMESTAMP =>)`` read of an MV derive
-    their faces here, so they can never drift."""
+    HAVING. SINGLE source of truth: read_rollup and every SQL read of an
+    MV (the SQL executor's statement binder) derive their faces here, so
+    they can never drift."""
     for c in d.sum_cols:
         df = df.withColumn(f"avg_{c}", F.col(f"sum_{c}") / F.col("n_rows"))
     for c in d.var_cols:

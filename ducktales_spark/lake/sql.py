@@ -35,9 +35,10 @@ same statement coverage so a reference user can port scripts verbatim:
   that dips below the threshold is never lost). Whether a name is an MV,
   and its definition, come from one lookup
   (:func:`~ducktales_spark.lake.rollup.find_rollup`): a plain table beside
-  a user table named like an MV's meta companion is not an MV. Every read of
-  an MV — current, ``AT (VERSION|TIMESTAMP =>)`` and attached — goes
-  through :func:`~ducktales_spark.lake.rollup.apply_read_face`, so
+  a user table named like an MV's meta companion is not an MV. Every SQL
+  read of an MV — current, ``AT (VERSION|TIMESTAMP =>)``, attached, inside
+  a view or a transaction — goes through
+  :func:`~ducktales_spark.lake.rollup.apply_read_face`, so
   ``SELECT avg_<c> FROM mv`` works without hand-dividing and
   ``approx_distinct_<c>`` reads as the HLL estimate, never raw sketch
   bytes.
@@ -69,8 +70,8 @@ same statement coverage so a reference user can port scripts verbatim:
   demos/05_catalog_portability/demo.py:194-299), and ``COPY FROM
   DATABASE a TO b`` (DuckDB's whole-catalog migration verb; ``main``
   names the bound catalog).
-* anything else -> read query via Catalyst, with the ``AT (VERSION|TIMESTAMP
-  =>)`` time-travel rewrite (README.md:216-220)
+* anything else -> read query via Catalyst; ``t AT (VERSION|TIMESTAMP =>
+  x)`` reads ``t`` at that version (README.md:216-220)
 
 Statement text is read with one lexer (:mod:`~ducktales_spark.lake.lexer`)
 that follows Spark's lexical rules: ``'…'`` and ``"…"`` are string literals
@@ -86,15 +87,19 @@ A write verb whose syntax its handler does not accept raises
 :class:`LakeSQLError`: no write reaches Spark's own DDL. Every *query
 body* (SELECT in CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is
 handed to Spark SQL — we never re-implement expression parsing, so the
-full Catalyst surface is available inside each statement. Inside an open
-transaction, reads see read-your-writes (touched tables bind to the
-transaction's staged state).
+full Catalyst surface is available inside each statement.
+
+Every lake name a statement reads — table, view, ``AT`` version, attached
+``cat.t``, file or metadata function — is resolved by one binder
+(``SQLExecutor._bound``) in one scope, for reads, UPDATE/DELETE predicates
+and view bodies alike; what it binds lives only for the statement.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
+from contextlib import contextmanager
 from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame
@@ -108,7 +113,6 @@ from .lexer import (
     map_code,
     match_paren,
     names,
-    names_word,
     search_code,
     split_top,
     statements,
@@ -142,6 +146,14 @@ class LakeSQLError(Exception):
 
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+# a ``[cat.]name AT (VERSION|TIMESTAMP => x)`` clause: it must start outside
+# a string literal (``SELECT 't AT (VERSION => 1)'`` is data), and its
+# payload may hold one (``TIMESTAMP => '…'``)
+_AT = re.compile(
+    rf"\b(?:({_IDENT})\s*\.\s*)?({_IDENT})\s+AT\s*\(\s*(VERSION|TIMESTAMP)"
+    r"\s*=>\s*([^)]+)\)",
+    re.I,
+)
 
 
 # the verb phrases that name a target, optionally catalog-qualified
@@ -372,6 +384,26 @@ def _norm_sql_expr(t: str) -> str:
     return map_code(t, lambda s: re.sub(r"\s+", " ", s).lower()).strip()
 
 
+class _Scope:
+    """What one statement reads: its executor's catalog at one version, or
+    the open transaction's base version with its staged tables and views
+    on top (read-your-writes); and the temp views bound for it so far."""
+
+    def __init__(self, ex: "SQLExecutor", version=None):
+        tx = self.tx = ex._tx if version is None else None
+        if tx is None:
+            self.version = ex.c._resolve_version(version)
+            tables, self.views = ex.c._names_at(self.version)
+        else:
+            self.version = tx.base_version
+            tables, self.views = tx.names()
+        self.tables = set(tables)
+        # lowercased -> lake name (Spark resolves names case-insensitively)
+        self.names = {n.lower(): n for n in [*self.views, *self.tables]}
+        self.bound = set()  # temp views registered for the statement
+        self.binding = set()  # views whose SQL binding has started
+
+
 class SQLExecutor:
     """Stateful statement executor bound to one LakeCatalog (the analog of a
     DuckDB connection with the ducklake catalog attached).
@@ -385,9 +417,9 @@ class SQLExecutor:
     def __init__(self, catalog):
         self.c = catalog
         self._tx = None  # open explicit transaction, if any
-        # mv_name -> (catalog_version, RollupDef or None), so the per-query
-        # MV read overlay doesn't re-collect the one-row meta table on every
-        # bind. Keyed by name with only the latest version kept: a
+        # mv_name -> (catalog_version, RollupDef or None), so an MV read
+        # doesn't re-collect the one-row meta table on every statement.
+        # Keyed by name with only the latest version kept: a
         # long-lived executor on a busy catalog stays O(#MVs), not
         # O(#MVs x versions)
         self._mv_defs = {}
@@ -404,27 +436,14 @@ class SQLExecutor:
         self._use = None
         # names attached with (READ_ONLY): writes into them raise
         self._att_readonly = set()
-        # read_parquet/read_csv temp views registered while rewriting the
-        # CURRENT statement — dropped right after its plan is analyzed
-        # (_query), so file views never accumulate in the session catalog
-        self._file_views = []
 
-    # -- staged-aware existence (an open txn's DDL must be visible to the
-    # next statement's checks, not just committed state) -----------------
+    # -- existence as the next statement sees it (an open txn's DDL must be
+    # visible to its checks, not just committed state) -------------------
     def _table_exists(self, name: str) -> bool:
-        if self._tx is not None:
-            st = self._tx._state(name, must_exist=False)
-            if st is not None:
-                return not st.dropped
-        return name in self.c.tables()
+        return name in _Scope(self).tables
 
     def _view_exists(self, name: str) -> bool:
-        exists = name in self.c.views()
-        if self._tx is not None:
-            for vname, vsql in self._tx._view_ops:
-                if vname == name:
-                    exists = vsql is not None
-        return exists
+        return name in _Scope(self).views
 
     # ------------------------------------------------------------------
     def execute(self, sql: str, version=None) -> DataFrame:
@@ -882,33 +901,34 @@ class SQLExecutor:
                 "bad UPDATE statement: expected UPDATE <table> SET c = expr "
                 "[, ...] [WHERE pred]"
             )
-        # split at the LAST top-level WHERE: a first-match split breaks
-        # SET expressions containing subqueries or 'where' in a literal
-        setlist, where = head.rest[m.end():], None
-        wpos = top_words(setlist, "WHERE")
-        if wpos:
-            setlist, where = (
-                setlist[: wpos[-1]], setlist[wpos[-1] + len("WHERE"):].strip()
-            )
-            if not where:
-                raise LakeSQLError("UPDATE ... WHERE needs a predicate")
-        # bind table views so scalar subqueries in SET/WHERE resolve
-        # (against pre-statement state, DuckDB UPDATE semantics)
-        self._bind_tables(text=head.rest)
-        sets = {}
-        for part in items(setlist):
-            a = assignment(part)
-            if a is None or a[0] is not None:
-                raise LakeSQLError(f"bad SET clause: {part!r}")
-            sets[a[1]] = a[2]
-        if not sets:
-            raise LakeSQLError("UPDATE needs at least one SET assignment")
-        n = [0]
+        # SET and WHERE, subqueries included, read the statement's scope:
+        # pre-statement state, DuckDB UPDATE semantics
+        with self._bound(head.rest[m.end():]) as setlist:
+            # split at the LAST top-level WHERE: a first-match split breaks
+            # SET expressions containing subqueries or 'where' in a literal
+            where = None
+            wpos = top_words(setlist, "WHERE")
+            if wpos:
+                setlist, where = (
+                    setlist[: wpos[-1]],
+                    setlist[wpos[-1] + len("WHERE"):].strip(),
+                )
+                if not where:
+                    raise LakeSQLError("UPDATE ... WHERE needs a predicate")
+            sets = {}
+            for part in items(setlist):
+                a = assignment(part)
+                if a is None or a[0] is not None:
+                    raise LakeSQLError(f"bad SET clause: {part!r}")
+                sets[a[1]] = a[2]
+            if not sets:
+                raise LakeSQLError("UPDATE needs at least one SET assignment")
+            n = [0]
 
-        def op(tx):
-            n[0] = tx.update(name, sets, where)
+            def op(tx):
+                n[0] = tx.update(name, sets, where)
 
-        self._run(op)
+            self._run(op)
         return self._status("UPDATE", n[0])
 
     def _delete(self, head: _Head, src) -> DataFrame:
@@ -923,13 +943,14 @@ class SQLExecutor:
             where = rest[m.end():].strip()
             if not where:
                 raise LakeSQLError("DELETE ... WHERE needs a predicate")
-        self._bind_tables(text=rest)  # subqueries resolve pre-statement
         n = [0]
+        # subqueries read the statement's scope: pre-statement state
+        with self._bound(where or "") as bound:
 
-        def op(tx):
-            n[0] = tx.delete(name, where)
+            def op(tx):
+                n[0] = tx.delete(name, bound or None)
 
-        self._run(op)
+            self._run(op)
         return self._status("DELETE", n[0])
 
     def _truncate(self, head: _Head, src) -> DataFrame:
@@ -2654,20 +2675,6 @@ class SQLExecutor:
         self._run(op)
         return self._status("DROP MATERIALIZED VIEW", 0)
 
-    def _mv_overlay(self, version=None) -> None:
-        """Re-bind every materialized view through the rollup read face so
-        SQL reads see the derived ``avg_<c>`` / ``approx_distinct_<c>``
-        columns instead of the raw stored state (binary HLL sketches
-        hidden) — the face itself comes from rollup.apply_read_face, the
-        single source of truth. Definitions are cached per (mv, catalog
-        version) — keyed by name, latest version only, so the cache stays
-        O(#MVs); catalogs with no MVs pay nothing."""
-        mvs = find_rollups(self.c, version, cache=self._mv_defs)
-        for t, d in mvs.items():
-            apply_read_face(
-                self.c.read(t, version=version), d
-            ).createOrReplaceTempView(t)
-
     # ------------------------------------------------------------------
     def _run(self, op) -> None:
         """Run a transactional op: inside the open explicit txn, or
@@ -2679,34 +2686,123 @@ class SQLExecutor:
                 op(tx)
 
     def _query(self, body: str, version=None) -> DataFrame:
-        """Evaluate a read query through Catalyst, binding lake tables and
-        rewriting the AT (VERSION|TIMESTAMP =>) clauses plus the ducklake_*
-        metadata table functions.
+        """A read query through Catalyst, its names bound by ``_bound``.
+        ``spark.sql`` analyzes it, so the views it bound are dropped
+        before the frame returns."""
+        with self._bound(self._rewrite_dialect(body), version) as q:
+            return self.c.spark.sql(q)
 
-        Inside an open transaction the binding is snapshot-isolated:
-        untouched tables bind at the txn's BASE version (a concurrent
-        writer's commit must not appear mid-transaction), touched tables
-        bind to the staged state (read-your-writes), and tables dropped in
-        the txn are unregistered so reads of them fail."""
-        self._file_views = []
+    # -- the statement binder ----------------------------------------------
+    @contextmanager
+    def _bound(self, text: str, version=None):
+        """``text`` rewritten to temp views of the lake names it reads, for
+        a block that analyzes and runs it; the views are dropped when the
+        block ends, so nothing outlives the statement. In the statement's
+        scope (:class:`_Scope`):
+
+        * ``[cat.]t AT (VERSION|TIMESTAMP => x)`` reads table ``t`` of that
+          catalog at that version;
+        * ``cat.t``, where ``cat`` is an attached catalog or ``main`` and
+          ``t`` a table there, reads that catalog's current ``t``; a
+          qualifier naming this catalog is dropped, leaving the bare name;
+        * a bare name of a table or view of the scope binds under its own
+          name: a table its staged rows or its rows at the scope's version
+          (a materialized view through its read face), a view its SQL,
+          bound the same way first;
+        * ``read_parquet``/``read_csv`` and the ``ducklake_*`` metadata
+          functions bind their rows.
+
+        A name the scope does not hold is left to Spark, so a session temp
+        view that no lake name shadows still resolves."""
+        scope = _Scope(self, version)
         try:
-            q = self._rewrite_meta_fns(
-                self.c._rewrite_at(
-                    self._rewrite_attached(
-                        self._rewrite_file_fns(self._rewrite_dialect(body))
-                    )
+            yield self._bind(scope, text)
+        finally:
+            for view in scope.bound:
+                self.c.spark.catalog.dropTempView(view)
+
+    def _bind(self, scope: "_Scope", text: str) -> str:
+        q = self._rewrite_meta_fns(self._rewrite_file_fns(text, scope), scope)
+        q = sub_code(_AT, lambda m: self._bind_at(scope, m), q)
+        q = self._bind_qualified(scope, q)
+        named = {n.lower() for t in tokens(q) if (n := token_name(t))}
+        for key in named & scope.names.keys():
+            self._bind_name(scope, scope.names[key])
+        return q
+
+    def _register(self, scope: "_Scope", view: str, df: DataFrame) -> None:
+        df.createOrReplaceTempView(view)
+        scope.bound.add(view)
+
+    def _bind_name(self, scope: "_Scope", name: str) -> None:
+        """Bind table or view ``name`` of the scope under its own name, once
+        per statement. A view being bound is skipped: its own name used as
+        a column, or a cycle, which Spark then reports as unresolved."""
+        if name in scope.bound or name in scope.binding:
+            return
+        if name not in scope.tables:
+            scope.binding.add(name)
+            sql = self._rewrite_dialect(scope.views[name])
+            self._register(scope, name, self.c.spark.sql(self._bind(scope, sql)))
+            return
+        tx, c, meta = scope.tx, self.c, meta_table(name)
+        if tx is not None and name in tx._states:
+            df = tx.read(name)  # staged rows
+        else:
+            df = c.read(name, version=scope.version)
+        if meta in scope.tables:
+            # inside a transaction MV definitions come from its memoized
+            # lookup; outside, from the per-version cache (no meta collect
+            # while the version is unchanged)
+            mvs = (
+                tx._rollup_metas() if tx is not None
+                else find_rollups(
+                    c, scope.version, {name, meta}, cache=self._mv_defs
                 )
             )
-            # bound after the rewrites: a table read only AT a version
-            # (its own versioned view) needs no current read plan
-            self._bind_tables(version, q)
-            return self.c.spark.sql(q)
-        finally:
-            # the plan is analyzed (views resolved) by the time spark.sql
-            # returns; dropping them here keeps the session catalog clean
-            for v in self._file_views:
-                self.c.spark.catalog.dropTempView(v)
-            self._file_views = []
+            if name in mvs:
+                df = apply_read_face(df, mvs[name])
+        self._register(scope, name, df)
+
+    def _bind_at(self, scope: "_Scope", m: "re.Match") -> str:
+        """One ``[cat.]t AT (…)`` clause -> its view (see _bound)."""
+        cat, name, kind, val = m.groups()
+        ex = self if cat is None else self._catalog(cat)
+        if ex is None:
+            return m.group(0)
+        if kind.upper() == "VERSION":
+            v = int(val)
+        else:
+            v = ex.c._resolve_version(timestamp=val.strip().strip("'\""))
+        return self._bind_face(scope, ex, name, v)
+
+    def _bind_face(self, scope: "_Scope", ex, name: str, v=None, tables=None):
+        """Bind table ``name`` of ``ex``'s catalog at version ``v`` (None:
+        current) through its read face; -> the view name."""
+        view = f"__{ex._alias or 'main'}__{name}"
+        view += "" if v is None else f"__at_v{v}"
+        if view not in scope.bound:
+            self._register(scope, view, read_face(ex.c, name, v, tables))
+        return view
+
+    def _bind_qualified(self, scope: "_Scope", q: str) -> str:
+        """``cat.t`` references -> their views (see _bound); an
+        ``alias.column`` names no catalog's table and stays."""
+        out, prev = [], 0
+        for r in column_refs(q):
+            ex = self._catalog(r.qual) if r.qual else None
+            if ex is None:
+                continue
+            tables = scope.tables if ex is self else set(ex.c.tables())
+            if r.name not in tables:
+                continue
+            view = r.name if ex is self else self._bind_face(
+                scope, ex, r.name, tables=tables
+            )
+            out += [q[prev:r.start], view]
+            prev = r.end
+        out.append(q[prev:])
+        return "".join(out)
 
     # -- EXPORT / IMPORT DATABASE (DuckDB's file-based portability pair) ---
     def _sql_literal(self, v) -> str:
@@ -3249,25 +3345,15 @@ class SQLExecutor:
         target via export_to. Either side may be an attached name or
         ``main`` (the bound catalog)."""
         self._no_txn("COPY FROM DATABASE")
-
-        def _cat(n: str):
-            if n.lower() == "main":
-                return self.c
-            got = self._attached.get(n.lower())
-            if got is None:
+        exs = []
+        for side in (src, dst):
+            ex = self._catalog(side)
+            if ex is None:
                 raise LakeSQLError(
-                    f"no attached catalog named {n!r} (ATTACH it first; "
+                    f"no attached catalog named {side!r} (ATTACH it first; "
                     "'main' names the bound catalog)"
                 )
-            return got
-
-        if dst.lower() in self._att_readonly:
-            # same contract as qualified DML / USE-delegated writes:
-            # export_to creates tables, inserts rows, and restamps metas
-            raise LakeSQLError(f"catalog {dst!r} is attached READ_ONLY")
-        for side in (src, dst):
-            dex = self._att_sql.get(side.lower())
-            if dex is not None and dex._tx is not None:
+            if ex._tx is not None:
                 # migrating into (or out of) a catalog whose USE'd
                 # delegate holds staged writes would interleave with —
                 # or conflict against — that open transaction
@@ -3275,90 +3361,16 @@ class SQLExecutor:
                     f"catalog {side!r} has an open transaction: COMMIT "
                     "or ROLLBACK it before COPY FROM DATABASE"
                 )
-        src_c, dst_c = _cat(src), _cat(dst)
-        if src_c is dst_c:
+            exs.append(ex)
+        src_ex, dst_ex = exs
+        if dst_ex._alias in self._att_readonly:
+            # same contract as qualified DML / USE-delegated writes:
+            # export_to creates tables, inserts rows, and restamps metas
+            raise LakeSQLError(f"catalog {dst!r} is attached READ_ONLY")
+        if src_ex is dst_ex:
             raise LakeSQLError("COPY FROM DATABASE: source == target")
-        src_c.export_to(dst_c)
-        return self._status("COPY FROM DATABASE", len(src_c.tables()))
-
-    def _rewrite_attached(self, q: str) -> str:
-        """Rewrite ``<attached>.<table>`` qualified references to temp
-        views bound from the attached catalog — lazily, only for names
-        the query actually touches (an attach list of N catalogs must not
-        cost N full binds per statement). MVs bind through the rollup
-        read face, at the current version and AT a version. Qualified
-        names only rewrite when the prefix IS an attached catalog AND the
-        suffix IS one of its tables, so ordinary ``alias.column``
-        references never match. A trailing ``AT (VERSION|TIMESTAMP => v)``
-        clause time-travels the ATTACHED catalog's history (r12) — it is
-        consumed here so the later main-catalog AT rewrite never sees
-        it."""
-        if not self._attached:
-            return q
-
-        def _bind(cat: str, tbl: str, version=None):
-            """-> view name, or None when (cat, tbl) isn't an attached
-            table (the caller leaves the original text alone). ``main``
-            resolves to the bound catalog unless shadowed by a real
-            attachment — so qualified reads keep working from delegate
-            executors and `SELECT ... FROM main.t` means the same thing
-            everywhere."""
-            ac = self._attached.get(cat.lower())
-            if ac is None and cat.lower() == "main":
-                ac = self._session.c
-            if ac is None:
-                return None
-            if ac is self.c and version is None:
-                # self-qualification: the executor's own bind already
-                # registered this table (txn-staged state included) —
-                # the unqualified name IS the right view
-                return tbl if self._table_exists(tbl) else None
-            ts = set(ac.tables(version))
-            if tbl not in ts:
-                return None
-            suffix = "" if version is None else f"__at_v{version}"
-            view = f"__att_{cat.lower()}__{tbl}{suffix}"
-            read_face(ac, tbl, version, ts).createOrReplaceTempView(view)
-            return view
-
-        def _rw_at(m: "re.Match") -> str:
-            cat, tbl, kind, val = (
-                m.group(1), m.group(2), m.group(3), m.group(4),
-            )
-            ac = self._attached.get(cat.lower())
-            if ac is None and cat.lower() == "main":
-                ac = self._session.c
-            if ac is None:
-                return m.group(0)
-            if kind.upper() == "VERSION":
-                version = int(val)
-            else:
-                version = ac._resolve_version(
-                    timestamp=val.strip().strip("'\"")
-                )
-            return _bind(cat, tbl, version) or m.group(0)
-
-        def _rw(m: "re.Match") -> str:
-            return _bind(m.group(1), m.group(2)) or m.group(0)
-
-        # pass 1: qualified AT clauses. The match must START outside a
-        # string literal (a literal containing '<att>.<t> AT (...)' is
-        # data, not a clause), but the AT payload itself may HOLD a
-        # literal (TIMESTAMP => '...'), which pass 2's per-run mapping
-        # would split mid-clause
-        at_pat = re.compile(
-            rf"\b({_IDENT})\s*\.\s*({_IDENT})\s+AT\s*"
-            rf"\(\s*(VERSION|TIMESTAMP)\s*=>\s*([^)]+)\)",
-            re.I,
-        )
-        q = sub_code(at_pat, _rw_at, q)
-        # pass 2, literal-aware: plain qualified reads
-        return map_code(
-            q,
-            lambda seg: re.sub(
-                rf"\b({_IDENT})\s*\.\s*({_IDENT})\b", _rw, seg
-            ),
-        )
+        src_ex.c.export_to(dst_ex.c)
+        return self._status("COPY FROM DATABASE", len(src_ex.c.tables()))
 
     _FILE_FN = re.compile(r"\b(read_parquet|read_csv_auto|read_csv)\s*\(", re.I)
     # DuckDB csv type spellings -> Spark DDL (anything else passes through:
@@ -3370,7 +3382,7 @@ class SQLExecutor:
         "float8": "double", "bool": "boolean",
     }
 
-    def _rewrite_file_fns(self, q: str) -> str:
+    def _rewrite_file_fns(self, q: str, scope: "_Scope") -> str:
         """DuckDB's file table functions — ``read_parquet('path')`` and
         ``read_csv('path' [, header => true|false] [, delim => ','] [,
         quote => '\"'] [, columns => {'a': 'INT', ...}])`` /
@@ -3381,23 +3393,22 @@ class SQLExecutor:
         ingestible SQL-first: COPY's inverse. The path is a standard SQL
         string literal ('' escapes an apostrophe, same as COPY's
         grammar) and may be a file, a directory of part files, or a
-        glob. Calls inside string literals are left untouched; the
-        registered views are session-temporary and dropped after the
-        statement's plan is analyzed (see _query)."""
+        glob. Calls inside string literals are left untouched; the views
+        live for the statement (see _bound)."""
         out, i = [], 0
         while (m := search_code(self._FILE_FN, q, i)) is not None:
             close = match_paren(q, m.end() - 1)
             if close < 0:
                 raise LakeSQLError("unbalanced parentheses in read_* call")
             view = self._bind_file_fn(
-                m.group(1).lower(), q[m.end(): close]
+                m.group(1).lower(), q[m.end(): close], scope
             )
             out += [q[i: m.start()], view]
             i = close + 1
         out.append(q[i:])
         return "".join(out)
 
-    def _bind_file_fn(self, fn: str, argstext: str) -> str:
+    def _bind_file_fn(self, fn: str, argstext: str, scope: "_Scope") -> str:
         """Parse one read_parquet/read_csv argument list, bind the file
         DataFrame as a temp view, and return the view name."""
         args = items(argstext)
@@ -3438,8 +3449,7 @@ class SQLExecutor:
         view = "__file_" + hashlib.md5(
             f"{fn}:{path}:{header}:{delim}:{quote}:{columns}".encode()
         ).hexdigest()[:12]
-        df.createOrReplaceTempView(view)
-        self._file_views.append(view)
+        self._register(scope, view, df)
         return view
 
     def _parse_csv_columns(self, text: str) -> dict:
@@ -3465,35 +3475,7 @@ class SQLExecutor:
             raise LakeSQLError("columns/types struct is empty")
         return out
 
-    def _bind_tables(self, version=None, text=None) -> None:
-        """Register every table as a temp view for Catalyst resolution —
-        snapshot-isolated inside an open txn (base version + staged
-        overlays, dropped tables unregistered). ``text`` (the SQL about to
-        run) limits it to the tables ``text`` names, see LakeCatalog.bind:
-        a statement that names no lake table builds no read plan."""
-        if self._tx is not None and version is None:
-            v = self._tx.base_version
-            if text is not None and any(
-                names_word(n, text) for n in self.c.views(v)
-            ):
-                text = None  # a view may read any table
-            self.c.bind(v, text)
-            for nm, st in list(self._tx._states.items()):
-                if st.dropped:
-                    self.c.spark.catalog.dropTempView(nm)
-                elif text is None or names_word(nm, text):
-                    self.c._build_df(
-                        st.files, st.inlined, st.schemas, st.schema
-                    ).createOrReplaceTempView(nm)
-        else:
-            self.c.bind(version, text)
-            # materialized views read through the rollup face (avg cols);
-            # inside an open txn the raw stored state binds instead (MV
-            # DDL/refresh is refused in-txn, so the staged overlay can
-            # never contain MV state this would need to reflect)
-            self._mv_overlay(version)
-
-    def _rewrite_meta_fns(self, q: str) -> str:
+    def _rewrite_meta_fns(self, q: str, scope: "_Scope") -> str:
         """The reference's metadata table functions (``ducklake_snapshots(db)``
         utils/ducklake_utils.py:58-62, ``ducklake_table_info(db)``
         exploration/ducklake_analysis.sh:105, ``ducklake_table_changes(db,
@@ -3505,20 +3487,14 @@ class SQLExecutor:
             return re.compile(rf"\b{fn}\s*\(([^)]*)\)", re.I)
 
         def _cat_for(dbarg: str):
-            """The db argument of the reference's metadata functions
-            (``ducklake_snapshots('lake')``): an ATTACH'd alias resolves
-            to that catalog (r12); anything else — including the bound
-            catalog's own mount alias — is the bound catalog."""
-            key = dbarg.strip().strip("'\"").lower()
-            got = self._attached.get(key)
-            if got is not None:
-                return got, key
-            return (self._session.c if key == "main" else self.c), "main"
+            """``ducklake_snapshots('db')``'s catalog (see _reader)."""
+            ex = self._reader(dbarg.strip().strip("'\""))
+            return ex.c, ex._alias or "main"
 
         def _snaps(m: "re.Match") -> str:
             cat, key = _cat_for(m.group(1))
             view = f"__lake_snapshots_{key}"
-            cat.snapshots_df().createOrReplaceTempView(view)
+            self._register(scope, view, cat.snapshots_df())
             return view
 
         q = sub_code(_call("ducklake_snapshots"), _snaps, q)
@@ -3536,12 +3512,12 @@ class SQLExecutor:
                 for t in cat.table_info()
             ]
             view = f"__lake_table_info_{key}"
-            local_df(
+            self._register(scope, view, local_df(
                 spark,
                 rows,
                 "table_name string, file_count bigint, row_count bigint, "
                 "file_bytes bigint, inlined_rows bigint",
-            ).createOrReplaceTempView(view)
+            ))
             return view
 
         q = sub_code(_call("ducklake_table_info"), _tinfo, q)
@@ -3551,7 +3527,7 @@ class SQLExecutor:
             cat, key = _cat_for(args[0] if len(args) > 3 else "")
             tname, v1, v2 = args[-3], int(args[-2]), int(args[-1])
             view = f"__lake_changes_{key}_{tname}_{v1}_{v2}"
-            cat.table_changes(tname, v1, v2).createOrReplaceTempView(view)
+            self._register(scope, view, cat.table_changes(tname, v1, v2))
             return view
 
         q = sub_code(_call("ducklake_table_changes"), _changes, q)
@@ -3583,12 +3559,12 @@ class SQLExecutor:
             safe = re.sub(r"[^A-Za-z0-9_]", "_", tname)
             tag = hashlib.md5(tname.encode()).hexdigest()[:8]
             view = f"__lake_file_stats_{safe}_{tag}"
-            local_df(
+            self._register(scope, view, local_df(
                 spark,
                 rows,
                 "path string, row_count bigint, file_bytes bigint, "
                 "col_min string, col_max string",
-            ).createOrReplaceTempView(view)
+            ))
             return view
 
         q = sub_code(_call("ducklake_file_stats"), _file_stats, q)

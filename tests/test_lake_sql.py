@@ -4490,3 +4490,225 @@ def test_partition_and_zorder_lists_with_backticked_names(lake, qual):
     assert tuple(_schema(cat, "pt").zorder_by) == ("a", "b")
     lake.sql(f"ALTER TABLE {p}pt SET PARTITIONED BY (`b`)")
     assert tuple(_schema(cat, "pt").partition_by) == ("b",)
+
+
+# --- the statement binder: one scope per statement, nothing outlives it ---
+
+
+def _lake_temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.fixture()
+def dev(lake, spark, tmp_path):
+    """``lake`` with a second catalog attached as ``dev``, holding
+    ``w(id, v)`` with ids 1 and 3."""
+    path = str(tmp_path / "devlake")
+    cat = LakeCatalog(path, spark, inline_threshold=4)
+    cat.sql("CREATE TABLE w (id INT, v INT)")
+    cat.sql("INSERT INTO w VALUES (1, 0), (3, 0)")
+    lake.sql(f"ATTACH '{path}' AS dev")
+    return cat
+
+
+def _ids(lake, sql: str) -> list:
+    return sorted(tuple(r) for r in lake.sql(sql).collect())
+
+
+def test_update_delete_subqueries_read_attached_tables(lake, dev):
+    """UPDATE/DELETE predicates see the same lake a SELECT does: a
+    qualified table of an attached catalog resolves in a subquery."""
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
+    st = lake.sql(
+        "UPDATE t SET v = v + 1 WHERE id IN (SELECT id FROM dev.w)"
+    ).collect()[0]
+    assert st["rows"] == 2
+    assert _ids(lake, "SELECT * FROM t") == [(1, 11), (2, 20), (3, 31)]
+    st = lake.sql("DELETE FROM t WHERE id IN (SELECT id FROM dev.w)").collect()[0]
+    assert st["rows"] == 2
+    assert _ids(lake, "SELECT * FROM t") == [(2, 20)]
+
+
+def test_update_delete_subqueries_read_a_version(lake):
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
+    lake.sql("CREATE TABLE u (id INT)")
+    lake.sql("INSERT INTO u VALUES (1), (2)")
+    v1 = lake.current_version()
+    lake.sql("DELETE FROM u WHERE id = 1")
+    lake.sql(
+        f"UPDATE t SET v = v + 1 WHERE id IN (SELECT id FROM u AT (VERSION => {v1}))"
+    )
+    assert _ids(lake, "SELECT * FROM t") == [(1, 11), (2, 21), (3, 30)]
+    lake.sql(f"DELETE FROM t WHERE id IN (SELECT id FROM u AT (VERSION => {v1}))")
+    assert _ids(lake, "SELECT * FROM t") == [(3, 30)]
+
+
+def test_view_over_a_version(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    v1 = lake.current_version()
+    lake.sql("INSERT INTO t VALUES (3)")
+    lake.sql(f"CREATE VIEW old_t AS SELECT * FROM t AT (VERSION => {v1})")
+    assert _ids(lake, "SELECT * FROM old_t") == [(1,), (2,)]
+
+
+def test_view_over_an_attached_table(lake, dev):
+    lake.sql("CREATE VIEW dev_w AS SELECT id FROM dev.w")
+    assert _ids(lake, "SELECT * FROM dev_w") == [(1,), (3,)]
+
+
+def test_view_over_a_materialized_view_reads_its_face(lake):
+    lake.sql("CREATE TABLE src (k VARCHAR, x DOUBLE)")
+    lake.sql("INSERT INTO src VALUES ('a', 1.0), ('a', 3.0), ('b', 4.0)")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT k, COUNT(*), SUM(x) "
+        "FROM src GROUP BY k"
+    )
+    lake.sql("CREATE VIEW over_mv AS SELECT * FROM mv")
+    assert _ids(lake, "SELECT k, avg_x FROM over_mv") == [("a", 2.0), ("b", 4.0)]
+
+
+def test_view_reads_the_current_definition_of_the_view_it_names(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2), (3)")
+    lake.sql("CREATE VIEW nb AS SELECT * FROM t")
+    lake.sql("CREATE VIEW na AS SELECT * FROM nb")
+    assert _ids(lake, "SELECT * FROM na") == [(1,), (2,), (3,)]
+    lake.sql("CREATE OR REPLACE VIEW nb AS SELECT * FROM t WHERE id = 2")
+    assert _ids(lake, "SELECT * FROM na") == [(2,)]
+
+
+def test_view_defined_before_the_view_it_reads(lake, spark, tmp_path):
+    """A view binds the views it reads first, whatever order the catalog
+    lists them in: a fresh catalog on the same files reads it."""
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    lake.sql("CREATE VIEW fresh_a AS SELECT * FROM fresh_b")
+    lake.sql("CREATE VIEW fresh_b AS SELECT id FROM t")
+    again = LakeCatalog(str(tmp_path / "lake"), spark)
+    assert _ids(again, "SELECT * FROM fresh_a") == [(1,), (2,)]
+
+
+def test_broken_view_breaks_only_statements_that_read_it(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    lake.sql("CREATE TABLE gone (id INT)")
+    lake.sql("CREATE VIEW good AS SELECT * FROM t")
+    lake.sql("CREATE VIEW bad AS SELECT * FROM gone")
+    lake.sql("DROP TABLE gone")
+    assert _ids(lake, "SELECT * FROM good") == [(1,)]
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM bad")
+
+
+def test_transaction_reads_its_own_view(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    lake.sql("BEGIN")
+    lake.sql("CREATE VIEW tv AS SELECT id * 10 AS id FROM t")
+    assert _ids(lake, "SELECT * FROM tv") == [(10,), (20,)]
+    lake.sql("ROLLBACK")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM tv")
+
+
+def test_transaction_view_reads_staged_rows(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    lake.sql("CREATE VIEW n_t AS SELECT count(*) AS n FROM t")
+    lake.sql("BEGIN")
+    lake.sql("INSERT INTO t VALUES (3)")
+    assert lake.sql("SELECT count(*) AS n FROM t").first()["n"] == 3
+    assert lake.sql("SELECT n FROM n_t").first()["n"] == 3
+    lake.sql("ROLLBACK")
+    assert lake.sql("SELECT n FROM n_t").first()["n"] == 2
+
+
+def test_transaction_reads_materialized_view_face(lake):
+    lake.sql("CREATE TABLE src (k VARCHAR, x DOUBLE)")
+    lake.sql("INSERT INTO src VALUES ('a', 1.0), ('a', 3.0)")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT k, COUNT(*), SUM(x) "
+        "FROM src GROUP BY k"
+    )
+    lake.sql("BEGIN")
+    assert _ids(lake, "SELECT k, avg_x FROM mv") == [("a", 2.0)]
+    lake.sql("COMMIT")
+
+
+def test_dropped_table_and_view_are_gone_for_the_next_statement(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    lake.sql("CREATE VIEW tv AS SELECT * FROM t")
+    lake.sql("CREATE VIEW tv2 AS SELECT * FROM t")
+    assert _ids(lake, "SELECT * FROM tv JOIN tv2 USING (id)") == [(1,), (2,)]
+    lake.sql("DROP VIEW tv")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM tv")
+    lake.sql("BEGIN")
+    lake.sql("DROP VIEW tv2")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM tv2")
+    lake.sql("ROLLBACK")
+    lake.sql("DROP TABLE t")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM t")
+
+
+def test_read_at_a_version_before_the_table_existed(lake):
+    v0 = lake.current_version()
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    assert lake.sql("SELECT count(*) AS n FROM t").first()["n"] == 2
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT count(*) FROM t", version=v0)
+
+
+def test_use_reads_only_the_used_catalog(lake, dev):
+    lake.sql("CREATE TABLE only_main (id INT)")
+    lake.sql("INSERT INTO only_main VALUES (1)")
+    assert _ids(lake, "SELECT * FROM only_main") == [(1,)]
+    lake.sql("USE dev")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        lake.sql("SELECT * FROM only_main")
+    assert _ids(lake, "SELECT * FROM main.only_main") == [(1,)]
+    lake.sql("USE main")
+
+
+def test_second_catalog_does_not_see_the_first_ones_tables(
+    lake, spark, tmp_path
+):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    assert _ids(lake, "SELECT * FROM t") == [(1,), (2,)]
+    other = LakeCatalog(str(tmp_path / "other"), spark)
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        other.sql("SELECT * FROM t")
+
+
+def test_statements_leave_no_temp_views(lake, dev, spark):
+    """Every temp view a statement binds is dropped when it ends: tables,
+    versions, attached tables, views, MV faces and metadata functions."""
+    before = _lake_temp_views(spark)
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 1), (2, 2)")
+    v1 = lake.current_version()
+    lake.sql("CREATE VIEW tv AS SELECT * FROM t")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT id, COUNT(*), SUM(v) "
+        "FROM t GROUP BY id"
+    )
+    for q in (
+        "SELECT * FROM t",
+        f"SELECT * FROM t AT (VERSION => {v1})",
+        f"SELECT * FROM dev.w AT (VERSION => {dev.current_version()})",
+        "SELECT * FROM tv JOIN dev.w USING (id)",
+        "SELECT avg_v FROM mv",
+        "SELECT * FROM ducklake_snapshots('lake')",
+        "UPDATE t SET v = 0 WHERE id IN (SELECT id FROM tv)",
+        "DELETE FROM t WHERE id IN (SELECT id FROM dev.w)",
+    ):
+        lake.sql(q).collect()
+        assert _lake_temp_views(spark) == before, q

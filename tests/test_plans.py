@@ -369,9 +369,9 @@ def test_repetition_signals_plan_shape(spark, sf_dir):
 
 
 def test_mv_read_face_stays_metadata_cheap(spark, tmp_path):
-    """X4/X12: binding a catalog with no materialized views adds NO extra
-    work to _bind_tables (the overlay exits on the cheap name-set check),
-    and an MV read face is the stored scan + a codegen projection — no
+    """X4/X12: a table with no meta companion binds with NO extra MV work
+    (the statement binder checks the name set first), and an MV read
+    face is the stored scan + a codegen projection — no
     join, no shuffle introduced by the avg derivation."""
     from ducktales_spark.lake import LakeCatalog
 
