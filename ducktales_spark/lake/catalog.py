@@ -33,6 +33,7 @@ import re
 import shutil
 import uuid
 from dataclasses import dataclass, field as _dcfield
+from decimal import Decimal
 from functools import reduce
 from typing import Optional
 
@@ -46,7 +47,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .lexer import column_refs, strip_sql_literals
+from .lexer import bq, column_refs, strip_sql_literals
 from .metastore import ConflictError, Metastore, open_metastore
 from .rollup import find_rollups, restamp_rollups
 from .schema import (
@@ -159,6 +160,12 @@ class TableState:
     @property
     def schema(self) -> TableSchema:
         return self.schemas[self.schema_version]
+
+    @property
+    def live_rows(self) -> int:
+        """Rows the table holds as this transaction sees it: its files'
+        rows net of their delete files, plus its inlined rows."""
+        return sum(fe.live_rows for fe in self.files) + len(self.inlined)
 
 
 def _zvalue(df: DataFrame, cols: list, schema: TableSchema):
@@ -1979,7 +1986,7 @@ class Transaction:
         of the stats-matching files and writes delete files for them."""
         st = self._state(name)
         if where is None:
-            n = sum(fe.live_rows for fe in st.files) + len(st.inlined)
+            n = st.live_rows
             for fe in st.files:
                 if not fe.staged:
                     st.removed_file_ids.append(fe.file_id)
@@ -2360,10 +2367,10 @@ class Transaction:
             # keys still CAST to the target type (a string-typed id feed
             # must match an int key column the way _align would make it)
             key_types = {k: sch.field_by_name(k).type for k in on}
-            src = source.select(
+            src = source.selectExpr(
                 *[
-                    F.col(c).cast(key_types[c]).alias(c) if c in key_types
-                    else F.col(c)
+                    f"CAST({bq(c)} AS {key_types[c]}) AS {bq(c)}"
+                    if c in key_types else bq(c)
                     for c in source.columns
                 ]
             ).persist()
@@ -2423,8 +2430,9 @@ class Transaction:
             # expressions can reference both rows without ambiguous-
             # attribute resolution (the merge keys join by explicit
             # target-col == __s_col equality).
-            srcR = src.select(
-                *[F.col(c).alias(f"__s_{c}") for c in src.columns]
+            scols = {f"__s_{c}" for c in src.columns}
+            srcR = src.selectExpr(
+                *[f"{bq(c)} AS {bq('__s_' + c)}" for c in src.columns]
             )
             skeys = [f"__s_{k}" for k in on]
             jcond = reduce(
@@ -2464,12 +2472,14 @@ class Transaction:
                 n_versions = sum(1 for r in rows if r[2] in upd)
                 if n_versions:
                     parts.append(
-                        joined.filter(F.col("__clause").isin(upd)).select(
-                            *_update_cols(sch, mc, "__clause", srcR, on)
+                        joined.filter(F.col("__clause").isin(upd)).selectExpr(
+                            *_update_cols(sch, mc, "__clause", scols, on)
                         )
                     )
                 if nmc and n_unmatched:
-                    parts.append(_insert_frame(sch, srcR, hit_keys, skeys, nmc))
+                    parts.append(
+                        _insert_frame(sch, srcR, scols, hit_keys, skeys, nmc)
+                    )
             else:
                 # the flat form lands whole source rows: a matched key's
                 # target rows (several, in a PK-less table) collapse into
@@ -2507,8 +2517,8 @@ class Transaction:
                 if n_bs:
                     n_versions += n_bs
                     parts.append(
-                        bs.filter(F.col("__bs").isin(upd)).select(
-                            *_update_cols(sch, bsc, "__bs", srcR, on)
+                        bs.filter(F.col("__bs").isin(upd)).selectExpr(
+                            *_update_cols(sch, bsc, "__bs", scols, on)
                         )
                     )
             inserted = 0
@@ -3027,15 +3037,13 @@ class Transaction:
 
 def _clause_chain_expr(clauses):
     """First-match-wins clause index for MERGE clause lists (1-based;
-    0 = no clause condition held). A falsy/absent cond compiles to
-    lit(True), so only the last clause may omit it (validated in merge)."""
-    chain = None
-    for i, cl in enumerate(clauses, 1):
-        c = F.expr(cl["cond"]) if cl.get("cond") else F.lit(True)
-        chain = (
-            F.when(c, F.lit(i)) if chain is None else chain.when(c, F.lit(i))
-        )
-    return chain.otherwise(F.lit(0)) if chain is not None else F.lit(0)
+    0 = no clause condition held), as one SQL CASE. An absent cond always
+    holds, so only the last clause may omit it (validated in merge)."""
+    arms = "".join(
+        f" WHEN ({cl.get('cond') or 'true'}) THEN {i}"
+        for i, cl in enumerate(clauses, 1)
+    )
+    return F.expr(f"CASE{arms} ELSE 0 END" if arms else "0")
 
 
 def _hashable(v):
@@ -3048,70 +3056,92 @@ def _hashable(v):
     return v
 
 
-def _update_cols(sch: TableSchema, clauses, idx: str, srcR, on) -> list:
+def _update_cols(sch: TableSchema, clauses, idx: str, scols, on) -> list:
     """The new version of a MERGE row routed (by clause index column
-    ``idx``) to an update clause: the clause's ``sets`` override their
-    columns; ``sets=None`` replaces every non-key column from the
-    same-named source column ``__s_<col>``."""
+    ``idx``) to an update clause, as ``selectExpr`` SQL: the clause's
+    ``sets`` override their columns; ``sets=None`` replaces every non-key
+    column from the same-named source column ``__s_<col>`` (``scols``
+    holds the source columns)."""
     cols = []
     for f in sch.fields:
-        col = F.col(f.name)
+        arms = []
         for i, cl in enumerate(clauses, 1):
             if cl["action"] != "update":
                 continue
             sets = cl["sets"]
             if sets is None:
-                if f"__s_{f.name}" not in srcR.columns or f.name in on:
+                if f"__s_{f.name}" not in scols or f.name in on:
                     continue
-                rep = F.col(f"__s_{f.name}")
+                rep = bq(f"__s_{f.name}")
             elif f.name in sets:
-                rep = F.expr(sets[f.name])
+                rep = f"({sets[f.name]})"
             else:
                 continue
-            col = F.when(F.col(idx) == i, rep.cast(f.type)).otherwise(col)
-        cols.append(col.cast(f.type).alias(f.name))
+            arms.append(f" WHEN {bq(idx)} = {i} THEN CAST({rep} AS {f.type})")
+        col = f"CASE{''.join(arms)} ELSE {bq(f.name)} END" if arms else bq(f.name)
+        cols.append(f"CAST({col} AS {f.type}) AS {bq(f.name)}")
     return cols
 
 
-def _insert_frame(sch: TableSchema, srcR, hit_keys, skeys, nmc) -> DataFrame:
+def _insert_frame(sch: TableSchema, srcR, scols, hit_keys, skeys, nmc) -> DataFrame:
     """Unmatched source rows (``srcR`` rows whose keys ``skeys`` are not in
     ``hit_keys``) -> target-schema rows through the not-matched clause
     list: the first clause whose condition holds supplies the row. A
     star-form clause (``sets`` empty or None) fills every field from the
-    same-named source column, then the column default (exactly _align's
-    fill); a clause with an EXPLICIT sets dict fills unlisted fields with
-    the column DEFAULT only — standard SQL/Delta ``INSERT (cols) VALUES``
-    semantics (unlisted columns never silently inherit same-named source
-    values). Rows matching no clause are dropped."""
+    same-named source column (``scols`` holds them), then the column
+    default (exactly _align's fill); a clause with an EXPLICIT sets dict
+    fills unlisted fields with the column DEFAULT only — standard
+    SQL/Delta ``INSERT (cols) VALUES`` semantics (unlisted columns never
+    silently inherit same-named source values). Rows matching no clause
+    are dropped. The projection is one ``selectExpr``."""
     ib = (
         srcR.join(hit_keys, skeys, "left_anti")
         .withColumn("__clause", _clause_chain_expr(nmc))
-        .filter(F.col("__clause") > 0)
+        .filter("__clause > 0")
     )
     cols = []
     for f in sch.fields:
         expr = default_expr(f)
-        dflt = F.expr(expr) if expr else F.lit(default_fill(f))
-        samenamed = (
-            F.col(f"__s_{f.name}") if f"__s_{f.name}" in srcR.columns else dflt
-        )
-        chain = None
+        dflt = f"({expr})" if expr else _sql_value(default_fill(f))
+        same = bq(f"__s_{f.name}") if f"__s_{f.name}" in scols else dflt
+        arms = []
         for i, cl in enumerate(nmc, 1):
             sets = cl.get("sets") or {}
             if f.name in sets:
-                v = F.expr(sets[f.name])
-            elif sets:
-                v = dflt  # explicit column list: default fill
+                v = f"({sets[f.name]})"
             else:
-                v = samenamed  # star form
-            chain = (
-                F.when(F.col("__clause") == i, v)
-                if chain is None
-                else chain.when(F.col("__clause") == i, v)
-            )
-        col = chain.otherwise(dflt) if chain is not None else dflt
-        cols.append(col.cast(f.type).alias(f.name))
-    return ib.select(*cols)
+                v = dflt if sets else same  # explicit list: default fill
+            arms.append(f" WHEN __clause = {i} THEN {v}")
+        col = f"CASE{''.join(arms)} ELSE {dflt} END" if arms else dflt
+        cols.append(f"CAST({col} AS {f.type}) AS {bq(f.name)}")
+    return ib.selectExpr(*cols)
+
+
+def _sql_value(v) -> str:
+    """A column default's value (``default_fill``) as SQL text of the
+    literal ``F.lit(v)`` builds: same type, same value."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, Decimal):
+        return f"{v}BD"
+    if isinstance(v, str):
+        return _spark_str(v)
+    if isinstance(v, _dt.datetime):
+        # F.lit reads a naive datetime in the driver's local time zone
+        return f"timestamp_micros({TimestampType().toInternal(v)})"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(v, dict):
+        return f"map({', '.join(_sql_value(x) for kv in v.items() for x in kv)})"
+    return f"array({', '.join(_sql_value(x) for x in v)})"
 
 
 def _spark_str(v: str) -> str:

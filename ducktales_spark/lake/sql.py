@@ -72,6 +72,17 @@ same statement coverage so a reference user can port scripts verbatim:
   names the bound catalog).
 * anything else -> read query via Catalyst; ``t AT (VERSION|TIMESTAMP =>
   x)`` reads ``t`` at that version (README.md:216-220)
+* ``SELECT count(*)|count(1) [[AS] alias] FROM <name> [AT (VERSION|
+  TIMESTAMP => x)]``, where the binder would read ``<name>`` as a lake
+  table (bare, ``main.``/attached-qualified, under USE, at the
+  ``version=`` argument or inside a transaction), is answered from the
+  catalog like ``LakeCatalog.count`` (staged tables from their
+  transaction state): one local row with Spark's column name and type,
+  no scan and no Spark job: 11-14 ms against 0.10-0.15 s for the scan
+  (sf0.1 ``orders`` with a delete file, 4 cores).
+  A view, a materialized view, a session temp view, ``count(col)``, a
+  WHERE, GROUP BY or join, and a table absent at that version run as
+  queries
 
 Statement text is read with one lexer (:mod:`~ducktales_spark.lake.lexer`)
 that follows Spark's lexical rules: ``'…'`` and ``"…"`` are string literals
@@ -192,6 +203,43 @@ def _head(q: str) -> _Head:
     cat, table = m.group(2, 3) if m.group(3) else (None, m.group(2))
     words = frozenset(m.group(1).upper().split())
     return _Head(verb, writes, words, cat, table, q[m.end():])
+
+
+class _Count(NamedTuple):
+    alias: str  # the result column's name, Spark's own when unaliased
+    cat: Optional[str]  # the table's catalog qualifier, if any
+    table: Optional[str]  # None when an AT clause names it
+    at: Optional["re.Match"]  # the ``_AT`` clause, if any
+
+
+def _count_stmt(q: str) -> Optional[_Count]:
+    """What ``SELECT count(*)|count(1) [[AS] alias] FROM <name> [AT
+    (VERSION|TIMESTAMP => x)]`` names, read from its tokens; None for any
+    other statement."""
+    sig = [t for t in tokens(q) if t.kind not in ("ws", "comment")]
+    head = [t.text.upper() for t in sig[:6]]
+    if head[:3] != ["SELECT", "COUNT", "("] or head[4:5] != [")"] or (
+        head[3] not in ("*", "1")
+    ):
+        return None
+    k, alias = 5, "count(1)"
+    if head[5:] != ["FROM"]:
+        if k < len(sig) and sig[k].text.upper() == "AS":
+            k += 1
+        alias = token_name(sig[k]) if k < len(sig) else None
+        k += 1
+        if alias is None or k >= len(sig) or sig[k].text.upper() != "FROM":
+            return None
+    rest, sig = q[sig[k].end:].strip(), sig[k + 1:]
+    at = _AT.fullmatch(rest)
+    if at is not None:
+        return _Count(alias, None, None, at)
+    names = [token_name(t) for t in sig[::2]]
+    if None in names or any(t.text != "." for t in sig[1::2]):
+        return None
+    if len(sig) == 1:
+        return _Count(alias, None, names[0], None)
+    return _Count(alias, *names, None) if len(sig) == 3 else None
 
 
 # reference (DuckDB) type -> Spark DDL type string (SURVEY.md §1.2)
@@ -599,11 +647,17 @@ class SQLExecutor:
         return self._show_tables() if what == "TABLES" else None
 
     def _show_tables(self) -> DataFrame:
-        ts = set(self.c.tables())
+        """The tables and views a statement reads (``_Scope``): inside a
+        transaction, with its own DDL."""
+        scope = _Scope(self)
         # an MV's meta companion is an implementation detail: list the MV
         # once (its meta stays directly readable/describable)
-        hidden = {meta_table(mv) for mv in find_rollups(self.c, tables=ts)}
-        listed = sorted((ts | set(self.c.views())) - hidden)
+        mvs = (
+            scope.tx._rollup_metas() if scope.tx is not None
+            else find_rollups(self.c, scope.version, scope.tables)
+        )
+        hidden = {meta_table(mv) for mv in mvs}
+        listed = sorted((scope.tables | set(scope.views)) - hidden)
         return local_df(self.c.spark, [(n,) for n in listed], "name string")
 
     def _describe_stmt(self, head: _Head, src):
@@ -2688,13 +2742,54 @@ class SQLExecutor:
     def _query(self, body: str, version=None) -> DataFrame:
         """A read query through Catalyst, its names bound by ``_bound``.
         ``spark.sql`` analyzes it, so the views it bound are dropped
-        before the frame returns."""
-        with self._bound(self._rewrite_dialect(body), version) as q:
+        before the frame returns. A row count of one lake table is the
+        catalog's answer instead (``_row_count``): no scan, no Spark job."""
+        stmt, scope = _count_stmt(body), None
+        if stmt is not None:
+            if stmt.at is None:
+                scope = _Scope(self, version)
+            n = self._row_count(stmt, scope)
+            if n is not None:
+                # Spark's own result: a LocalRelation, collected with no job
+                return self.c.spark.sql(
+                    f"SELECT * FROM VALUES ({n}L) AS t({bq(stmt.alias)})"
+                )
+        scope = scope or _Scope(self, version)
+        with self._bound(self._rewrite_dialect(body), scope) as q:
             return self.c.spark.sql(q)
+
+    def _row_count(self, stmt: _Count, scope) -> Optional[int]:
+        """The rows of the table ``stmt`` counts, from the catalog, when
+        ``_bound`` would bind its name to a lake table; None when it would
+        bind a view, a materialized view's face or nothing at all (those
+        run as queries). ``scope`` is the statement's, for a name without
+        an AT clause."""
+        ex, name, v = self, stmt.table, None
+        if stmt.at is not None:
+            at = self._at(stmt.at)
+            if at is None:
+                return None
+            ex, name, v = at
+        elif stmt.cat is not None:
+            ex = self._catalog(stmt.cat)
+            if ex is None or (ex is self and name not in scope.tables):
+                return None
+        if ex is self and stmt.at is None:
+            name = scope.names.get(name.lower())
+            if name not in scope.tables or meta_table(name) in scope.tables:
+                return None
+            tx = scope.tx
+            if tx is not None and name in tx._states:
+                return tx._states[name].live_rows  # staged
+            return self.c.count(name, scope.version)
+        tables = set(ex.c.tables(v))
+        if name not in tables or meta_table(name) in tables:
+            return None
+        return ex.c.count(name, v)
 
     # -- the statement binder ----------------------------------------------
     @contextmanager
-    def _bound(self, text: str, version=None):
+    def _bound(self, text: str, scope: Optional["_Scope"] = None):
         """``text`` rewritten to temp views of the lake names it reads, for
         a block that analyzes and runs it; the views are dropped when the
         block ends, so nothing outlives the statement. In the statement's
@@ -2713,8 +2808,9 @@ class SQLExecutor:
           functions bind their rows.
 
         A name the scope does not hold is left to Spark, so a session temp
-        view that no lake name shadows still resolves."""
-        scope = _Scope(self, version)
+        view that no lake name shadows still resolves. ``scope`` defaults
+        to this executor's current one."""
+        scope = scope or _Scope(self)
         try:
             yield self._bind(scope, text)
         finally:
@@ -2766,15 +2862,21 @@ class SQLExecutor:
 
     def _bind_at(self, scope: "_Scope", m: "re.Match") -> str:
         """One ``[cat.]t AT (…)`` clause -> its view (see _bound)."""
+        at = self._at(m)
+        return m.group(0) if at is None else self._bind_face(scope, *at)
+
+    def _at(self, m: "re.Match"):
+        """One ``[cat.]t AT (…)`` clause -> (the executor of its catalog,
+        the table, the version it reads); None when ``cat`` names no
+        catalog."""
         cat, name, kind, val = m.groups()
         ex = self if cat is None else self._catalog(cat)
         if ex is None:
-            return m.group(0)
+            return None
         if kind.upper() == "VERSION":
-            v = int(val)
-        else:
-            v = ex.c._resolve_version(timestamp=val.strip().strip("'\""))
-        return self._bind_face(scope, ex, name, v)
+            return ex, name, int(val)
+        ts = val.strip().strip("'\"")
+        return ex, name, ex.c._resolve_version(timestamp=ts)
 
     def _bind_face(self, scope: "_Scope", ex, name: str, v=None, tables=None):
         """Bind table ``name`` of ``ex``'s catalog at version ``v`` (None:

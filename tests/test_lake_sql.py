@@ -4712,3 +4712,180 @@ def test_statements_leave_no_temp_views(lake, dev, spark):
     ):
         lake.sql(q).collect()
         assert _lake_temp_views(spark) == before, q
+
+
+# -- row counts answered from the catalog --------------------------------
+def _jobs(spark) -> int:
+    """Spark jobs the session has run so far (the DAGScheduler's count)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _count_jobs(lake, spark, sql: str) -> tuple:
+    """(the count ``sql`` answers, the Spark jobs ``collect()`` ran)."""
+    df = lake.sql(sql)
+    j0 = _jobs(spark)
+    rows = df.collect()
+    return rows[0][0], _jobs(spark) - j0
+
+
+def test_count_runs_no_spark_job_in_every_scope(lake, dev, spark):
+    """``SELECT count(*) FROM <name>`` is the catalog's answer wherever the
+    name binds a lake table: head, a version, a timestamp, an attached or
+    ``main.`` qualifier, under USE, and inside a transaction with staged
+    rows and staged deletes."""
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t SELECT id, id AS v FROM range(10)")
+    v1 = lake.current_version()
+    ts1 = lake.snapshots()[-1]["snapshot_time"]
+    lake.sql("INSERT INTO t VALUES (10, 10), (11, 11)")
+    lake.sql("DELETE FROM t WHERE id < 3")
+    cases = [
+        ("SELECT count(*) FROM t", 9),
+        (f"SELECT count(*) FROM t AT (VERSION => {v1})", 10),
+        (f"SELECT count(*) FROM t AT (TIMESTAMP => '{ts1}')", 10),
+        ("SELECT count(*) FROM dev.w", 2),
+        (f"SELECT count(*) FROM dev.w AT (VERSION => {dev.current_version()})", 2),
+        ("SELECT count(*) FROM main.t", 9),
+    ]
+    for sql, n in cases:
+        assert _count_jobs(lake, spark, sql) == (n, 0), sql
+    lake.sql("USE dev")
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM w") == (2, 0)
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM main.t") == (9, 0)
+    lake.sql("USE main")
+    lake.sql("BEGIN")
+    lake.sql("INSERT INTO t VALUES (20, 20)")
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM t") == (10, 0)
+    lake.sql("DELETE FROM t WHERE id >= 10")
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM t") == (7, 0)
+    lake.sql("CREATE TABLE staged_only (id INT)")
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM staged_only") == (0, 0)
+    # a version read inside the transaction reads the committed version
+    sql = f"SELECT count(*) FROM t AT (VERSION => {v1})"
+    assert _count_jobs(lake, spark, sql) == (10, 0)
+    lake.sql("ROLLBACK")
+    assert _count_jobs(lake, spark, "SELECT count(*) FROM t") == (9, 0)
+    assert lake.sql("SELECT count(*) FROM t", version=v1).first()[0] == 10
+
+
+def test_count_has_sparks_column_name_and_type(lake):
+    """The catalog's answer has the column Spark's own count would have:
+    ``count(1)`` unaliased, the alias otherwise, BIGINT NOT NULL."""
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2), (3)")
+    for sql in (
+        "SELECT count(*) FROM t",
+        "SELECT COUNT(1) FROM t",
+        "SELECT count(*) n FROM t",
+        "select Count ( * ) AS `the n` from T",
+    ):
+        got, spark_own = lake.sql(sql), lake.sql(sql + " WHERE true")
+        (f,), (g,) = got.schema.fields, spark_own.schema.fields
+        assert (f.name, f.dataType, f.nullable) == (
+            g.name, g.dataType, g.nullable
+        ), sql
+        assert (f.dataType.simpleString(), f.nullable) == ("bigint", False)
+        assert got.collect() == spark_own.collect() == [(3,)], sql
+    assert lake.sql("SELECT count(*) FROM t").columns == ["count(1)"]
+    assert lake.sql("SELECT count(*) n FROM t").columns == ["n"]
+
+
+def test_count_equals_the_scanned_count_at_every_version(lake):
+    """A seeded stream of every kind of write on one table: after each
+    statement, at every live version, the catalog's count equals the same
+    count forced through a Spark scan."""
+    import random
+
+    rng = random.Random(15)
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t SELECT id, id % 7 AS v FROM range(40)")
+
+    def check():
+        for s in lake.snapshots():
+            v = s["snapshot_id"]
+            at = f"FROM t AT (VERSION => {v})"
+            try:
+                want = lake.sql(f"SELECT count(*) {at} WHERE true").first()[0]
+            except Exception:
+                continue  # t does not exist at v
+            assert lake.sql(f"SELECT count(*) {at}").first()[0] == want, v
+        want = lake.sql("SELECT count(*) FROM t WHERE true").first()[0]
+        assert lake.sql("SELECT count(*) FROM t").first()[0] == want
+        assert lake.count("t") == want
+
+    key = [1000]
+
+    def values():
+        key[0] += 1
+        return f"INSERT INTO t (id, v) VALUES ({key[0]}, {rng.randrange(7)})"
+
+    stream = [
+        values, values,
+        lambda: f"INSERT INTO t SELECT id + {rng.randrange(100, 200)} AS id, "
+        "1 AS v FROM range(5)",
+        lambda: f"UPDATE t SET v = v + 1 WHERE v = {rng.randrange(7)}",
+        lambda: f"DELETE FROM t WHERE id % 5 = {rng.randrange(5)}",
+        values,
+        lambda: "MERGE INTO t USING (SELECT id * 3 AS id, 9 AS v FROM "
+        f"range({rng.randrange(5, 20)})) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *",
+        lambda: "CHECKPOINT t",
+        values,
+        lambda: "CALL ducklake_merge_adjacent_files('t')",
+        lambda: "ALTER TABLE t ADD COLUMN w INT",
+        values,
+        lambda: "CALL expire_snapshots(keep_last => 4)",
+        lambda: f"DELETE FROM t WHERE v = {rng.randrange(7)}",
+    ]
+    check()
+    for make in stream:
+        lake.sql(make())
+        check()
+
+
+def test_count_of_names_that_are_not_plain_tables_still_scans(lake, spark):
+    """Views, materialized views (their face applies HAVING), session temp
+    views, counts of a column, a WHERE clause and a join run as queries."""
+    lake.sql("CREATE TABLE t (id INT, g INT)")
+    lake.sql("INSERT INTO t SELECT id, id % 3 AS g FROM range(10)")
+    lake.sql("INSERT INTO t VALUES (10, NULL)")
+    lake.sql("CREATE TABLE u (id INT)")
+    lake.sql("INSERT INTO u VALUES (1), (2)")
+    lake.sql("CREATE VIEW tv AS SELECT * FROM t WHERE id < 4")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT g, COUNT(*) FROM t "
+        "GROUP BY g HAVING COUNT(*) > 3"
+    )
+    spark.range(5).createOrReplaceTempView("count_tmp")
+    try:
+        cases = [
+            ("SELECT count(*) FROM tv", 4),
+            ("SELECT count(*) FROM mv", 1),  # the catalog holds 4 groups
+            ("SELECT count(*) FROM count_tmp", 5),
+            ("SELECT count(g) FROM t", 10),
+            ("SELECT count(*) FROM t WHERE g = 0", 4),
+            ("SELECT count(*) FROM t, u", 22),
+        ]
+        for sql, n in cases:
+            got, jobs = _count_jobs(lake, spark, sql)
+            assert got == n and jobs > 0, sql
+    finally:
+        spark.catalog.dropTempView("count_tmp")
+
+
+def test_show_tables_lists_the_transactions_tables_and_views(lake):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("CREATE TABLE gone (id INT)")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT id, COUNT(*) FROM t GROUP BY id"
+    )
+    lake.sql("BEGIN")
+    lake.sql("CREATE TABLE staged_only (id INT)")
+    lake.sql("CREATE VIEW staged_view AS SELECT * FROM t")
+    lake.sql("DROP TABLE gone")
+    listed = [r[0] for r in lake.sql("SHOW TABLES").collect()]
+    assert listed == ["mv", "staged_only", "staged_view", "t"]
+    assert lake.sql("SELECT count(*) FROM staged_only").first()[0] == 0
+    lake.sql("ROLLBACK")
+    listed = [r[0] for r in lake.sql("SHOW TABLES").collect()]
+    assert listed == ["gone", "mv", "t"]

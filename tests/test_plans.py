@@ -183,6 +183,27 @@ def test_lake_read_without_deletes_is_a_plain_scan(spark, tmp_path):
     assert lake.read("t").count() == 90
 
 
+def test_lake_count_plans_one_local_row(spark, tmp_path):
+    """A lake SQL row count of a table plans one local row, at head and at
+    a version; a count the catalog does not answer (here: with a WHERE, or
+    of a view) plans the table's parquet scan with the delete filter, as
+    before."""
+    from ducktales_spark.lake import LakeCatalog
+
+    lake = LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=0)
+    lake.ctas("t", spark.range(100).selectExpr("CAST(id AS INT) AS id").coalesce(1))
+    v = lake.current_version()
+    lake.delete("t", "id < 10")
+    lake.sql("CREATE VIEW tv AS SELECT * FROM t")
+    for sql in ("SELECT count(*) FROM t", f"SELECT count(*) FROM t AT (VERSION => {v})"):
+        s = plan_str(lake.sql(sql))
+        assert s.strip().startswith("LocalTableScan") and "\n" not in s.strip(), s
+    for sql in ("SELECT count(*) FROM t WHERE true", "SELECT count(*) FROM tv"):
+        s = plan_str(lake.sql(sql))
+        assert "FileScan parquet" in s and "row_index" in s, s
+        assert lake.sql(sql).first()[0] == 90
+
+
 def test_d02_no_cache_barriers_single_selfjoin_exchange(spark, sf_dir):
     """d02's round-2 shape: no InMemoryRelation (cache barriers forced
     re-exchanges), no sort-merge join, and a bounded exchange count — the
