@@ -103,16 +103,21 @@ full Catalyst surface is available inside each statement.
 Every lake name a statement reads — table, view, ``AT`` version, attached
 ``cat.t``, file or metadata function — is resolved by one binder
 (``SQLExecutor._bound``) in one scope, for reads, UPDATE/DELETE predicates
-and view bodies alike; what it binds lives only for the statement.
+and view bodies alike. It takes the tables a statement reads from Catalyst's
+parse tree and binds each under a view name unique to the statement, which
+lives only for the statement.
 """
 
 from __future__ import annotations
 
-import hashlib
+import functools
+import json
 import re
+import uuid
 from contextlib import contextmanager
 from typing import NamedTuple, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from .catalog import local_df
@@ -203,6 +208,15 @@ def _head(q: str) -> _Head:
     cat, table = m.group(2, 3) if m.group(3) else (None, m.group(2))
     words = frozenset(m.group(1).upper().split())
     return _Head(verb, writes, words, cat, table, q[m.end():])
+
+
+def _seq(s) -> list:  # a Scala Seq reached over py4j, as a list
+    return [s.apply(i) for i in range(s.size())]
+
+
+@functools.cache  # a class lookup over py4j costs ~1 ms
+def _cte_substitution(jvm):
+    return jvm.org.apache.spark.sql.catalyst.analysis.CTESubstitution
 
 
 class _Count(NamedTuple):
@@ -448,8 +462,8 @@ class _Scope:
         self.tables = set(tables)
         # lowercased -> lake name (Spark resolves names case-insensitively)
         self.names = {n.lower(): n for n in [*self.views, *self.tables]}
-        self.bound = set()  # temp views registered for the statement
-        self.binding = set()  # views whose SQL binding has started
+        self.bound = {}  # binding key -> temp view registered for it
+        self.binding = set()  # names whose binding has started
 
 
 class SQLExecutor:
@@ -957,7 +971,7 @@ class SQLExecutor:
             )
         # SET and WHERE, subqueries included, read the statement's scope:
         # pre-statement state, DuckDB UPDATE semantics
-        with self._bound(head.rest[m.end():]) as setlist:
+        with self._bound(head.rest[m.end():], carrier="SELECT ") as setlist:
             # split at the LAST top-level WHERE: a first-match split breaks
             # SET expressions containing subqueries or 'where' in a literal
             where = None
@@ -999,7 +1013,7 @@ class SQLExecutor:
                 raise LakeSQLError("DELETE ... WHERE needs a predicate")
         n = [0]
         # subqueries read the statement's scope: pre-statement state
-        with self._bound(where or "") as bound:
+        with self._bound(where or "", carrier="SELECT 1 WHERE ") as bound:
 
             def op(tx):
                 n[0] = tx.delete(name, bound or None)
@@ -2789,58 +2803,105 @@ class SQLExecutor:
 
     # -- the statement binder ----------------------------------------------
     @contextmanager
-    def _bound(self, text: str, scope: Optional["_Scope"] = None):
-        """``text`` rewritten to temp views of the lake names it reads, for
-        a block that analyzes and runs it; the views are dropped when the
-        block ends, so nothing outlives the statement. In the statement's
-        scope (:class:`_Scope`):
-
-        * ``[cat.]t AT (VERSION|TIMESTAMP => x)`` reads table ``t`` of that
-          catalog at that version;
-        * ``cat.t``, where ``cat`` is an attached catalog or ``main`` and
-          ``t`` a table there, reads that catalog's current ``t``; a
-          qualifier naming this catalog is dropped, leaving the bare name;
-        * a bare name of a table or view of the scope binds under its own
-          name: a table its staged rows or its rows at the scope's version
-          (a materialized view through its read face), a view its SQL,
-          bound the same way first;
-        * ``read_parquet``/``read_csv`` and the ``ducklake_*`` metadata
-          functions bind their rows.
-
-        A name the scope does not hold is left to Spark, so a session temp
-        view that no lake name shadows still resolves. ``scope`` defaults
-        to this executor's current one."""
+    def _bound(self, text: str, scope: Optional["_Scope"] = None, carrier=""):
+        """``text`` with each lake relation it reads replaced by a view of
+        the statement's own, for a block that analyzes and runs it; the
+        views are dropped when the block ends. A relation is an
+        ``UnresolvedRelation`` leaf of Catalyst's parse of ``carrier + text``
+        (a SET list or predicate parses in a carrier SELECT) after its CTE
+        substitution, so a WITH name stays the CTE and a column is never a
+        table. In the statement's scope (:class:`_Scope`) a bare table reads
+        its staged rows or its rows at the scope's version (an MV its read
+        face), a bare view its SQL, bound first the same way, and ``cat.t``
+        (``cat`` attached or ``main``, ``t`` a table there) that catalog's
+        current ``t``. ``[cat.]t AT (…)``, ``read_parquet``/``read_csv`` and
+        the ``ducklake_*`` calls, which Spark cannot parse, are rewritten
+        ahead. Each binds once, under a name ``_register`` mints, and reads
+        as ``(<view> AS <name>)``: no session temp view and no other
+        statement's view is touched. Any other name, and a text Spark cannot
+        parse, is left to Spark."""
         scope = scope or _Scope(self)
         try:
-            yield self._bind(scope, text)
+            yield self._bind(scope, text, carrier)
         finally:
-            for view in scope.bound:
+            for view in scope.bound.values():
                 self.c.spark.catalog.dropTempView(view)
 
-    def _bind(self, scope: "_Scope", text: str) -> str:
+    def _bind(self, scope: "_Scope", text: str, carrier: str = "") -> str:
         q = self._rewrite_meta_fns(self._rewrite_file_fns(text, scope), scope)
         q = sub_code(_AT, lambda m: self._bind_at(scope, m), q)
-        q = self._bind_qualified(scope, q)
-        named = {n.lower() for t in tokens(q) if (n := token_name(t))}
-        for key in named & scope.names.keys():
-            self._bind_name(scope, scope.names[key])
-        return q
+        out, prev = [], 0
+        for start, stop, parts in self._relations(carrier, q):
+            view = self._bind_relation(scope, parts)
+            if view is not None:
+                # ``TABLE t`` takes a bare name, a FROM item an aliased one
+                if not re.search(r"\bTABLE\s*$", q[prev:start], re.I):
+                    view = f"({view} AS {bq(parts[-1])})"
+                out += [q[prev:start], view]
+                prev = stop + 1
+        return "".join(out) + q[prev:]
 
-    def _register(self, scope: "_Scope", view: str, df: DataFrame) -> None:
-        df.createOrReplaceTempView(view)
-        scope.bound.add(view)
+    def _relations(self, carrier: str, q: str) -> list:
+        """(start, stop, name parts) of each table reference in Catalyst's
+        parse of ``carrier + q``, inclusive offsets into ``q``, in text
+        order; none when it does not parse."""
+        spark, k, out = self.c.spark, len(carrier), set()
+        if not q.strip():  # DELETE without WHERE
+            return []
+        try:
+            plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(
+                carrier + q
+            )
+            if plan.nodeName() == "ExplainCommand":  # its query is no child
+                plan = plan.logicalPlan()
+            plan = _cte_substitution(spark._jvm).apply(plan)
+        except AnalysisException:  # a ParseException is one
+            return []
+        for p in [plan, *_seq(plan.subqueriesAll())]:
+            for r in _seq(p.collectLeaves()):
+                if r.nodeName() == "UnresolvedRelation":
+                    at, parts = r.origin().context(), r.multipartIdentifier()
+                    out.add((at.startIndex() - k, at.stopIndex() - k,
+                             tuple(_seq(parts))))
+        return sorted(out)
 
-    def _bind_name(self, scope: "_Scope", name: str) -> None:
-        """Bind table or view ``name`` of the scope under its own name, once
-        per statement. A view being bound is skipped: its own name used as
-        a column, or a cycle, which Spark then reports as unresolved."""
-        if name in scope.bound or name in scope.binding:
-            return
+    def _bind_relation(self, scope: "_Scope", parts: tuple) -> Optional[str]:
+        """A table reference's view (see _bound); None: left to Spark."""
+        if len(parts) == 1:
+            name = scope.names.get(parts[0].lower())
+            return name and self._bind_name(scope, name)
+        ex = self._catalog(parts[0]) if len(parts) == 2 else None
+        if ex is self:
+            name = scope.names.get(parts[1].lower())
+            return self._bind_name(scope, name) if name in scope.tables else None
+        tables = set() if ex is None else set(ex.c.tables())
+        if parts[1] in tables:
+            return self._bind_face(scope, ex, parts[1], tables=tables)
+
+    def _register(self, scope: "_Scope", key, df) -> str:
+        """The statement's view of ``key``: ``df()``, built the first time
+        the statement binds ``key``, under a name of its own (``__lake_<uuid4
+        hex>``, as PySpark's SQL formatter names its ``_pyspark_<uuid>``)."""
+        view = scope.bound.get(key)
+        if view is None:
+            frame = df()
+            view = scope.bound[key] = f"__lake_{uuid.uuid4().hex}"
+            frame.createOrReplaceTempView(view)
+        return view
+
+    def _bind_name(self, scope: "_Scope", name: str) -> Optional[str]:
+        """Table or view ``name`` of the scope -> its view, or None for a
+        view whose binding is under way (a cycle, left to Spark to report
+        as unresolved)."""
+        if name in scope.binding:
+            return scope.bound.get(name)
+        scope.binding.add(name)
+        return self._register(scope, name, lambda: self._name_df(scope, name))
+
+    def _name_df(self, scope: "_Scope", name: str) -> DataFrame:
         if name not in scope.tables:
-            scope.binding.add(name)
-            sql = self._rewrite_dialect(scope.views[name])
-            self._register(scope, name, self.c.spark.sql(self._bind(scope, sql)))
-            return
+            sql = self._bind(scope, self._rewrite_dialect(scope.views[name]))
+            return self.c.spark.sql(sql)
         tx, c, meta = scope.tx, self.c, meta_table(name)
         if tx is not None and name in tx._states:
             df = tx.read(name)  # staged rows
@@ -2850,20 +2911,19 @@ class SQLExecutor:
             # inside a transaction MV definitions come from its memoized
             # lookup; outside, from the per-version cache (no meta collect
             # while the version is unchanged)
-            mvs = (
-                tx._rollup_metas() if tx is not None
-                else find_rollups(
-                    c, scope.version, {name, meta}, cache=self._mv_defs
-                )
+            mvs = tx._rollup_metas() if tx is not None else find_rollups(
+                c, scope.version, {name, meta}, cache=self._mv_defs
             )
             if name in mvs:
                 df = apply_read_face(df, mvs[name])
-        self._register(scope, name, df)
+        return df
 
     def _bind_at(self, scope: "_Scope", m: "re.Match") -> str:
-        """One ``[cat.]t AT (…)`` clause -> its view (see _bound)."""
+        """One ``[cat.]t AT (…)`` clause -> its relation (see _bound)."""
         at = self._at(m)
-        return m.group(0) if at is None else self._bind_face(scope, *at)
+        return m.group(0) if at is None else (
+            f"({self._bind_face(scope, *at)} AS {bq(at[1])})"
+        )
 
     def _at(self, m: "re.Match"):
         """One ``[cat.]t AT (…)`` clause -> (the executor of its catalog,
@@ -2881,30 +2941,10 @@ class SQLExecutor:
     def _bind_face(self, scope: "_Scope", ex, name: str, v=None, tables=None):
         """Bind table ``name`` of ``ex``'s catalog at version ``v`` (None:
         current) through its read face; -> the view name."""
-        view = f"__{ex._alias or 'main'}__{name}"
-        view += "" if v is None else f"__at_v{v}"
-        if view not in scope.bound:
-            self._register(scope, view, read_face(ex.c, name, v, tables))
-        return view
-
-    def _bind_qualified(self, scope: "_Scope", q: str) -> str:
-        """``cat.t`` references -> their views (see _bound); an
-        ``alias.column`` names no catalog's table and stays."""
-        out, prev = [], 0
-        for r in column_refs(q):
-            ex = self._catalog(r.qual) if r.qual else None
-            if ex is None:
-                continue
-            tables = scope.tables if ex is self else set(ex.c.tables())
-            if r.name not in tables:
-                continue
-            view = r.name if ex is self else self._bind_face(
-                scope, ex, r.name, tables=tables
-            )
-            out += [q[prev:r.start], view]
-            prev = r.end
-        out.append(q[prev:])
-        return "".join(out)
+        return self._register(
+            scope, ("face", ex._alias, name, v),
+            lambda: read_face(ex.c, name, v, tables),
+        )
 
     # -- EXPORT / IMPORT DATABASE (DuckDB's file-based portability pair) ---
     def _sql_literal(self, v) -> str:
@@ -3512,7 +3552,7 @@ class SQLExecutor:
 
     def _bind_file_fn(self, fn: str, argstext: str, scope: "_Scope") -> str:
         """Parse one read_parquet/read_csv argument list, bind the file
-        DataFrame as a temp view, and return the view name."""
+        DataFrame (see _bound), and return the view name."""
         args = items(argstext)
         if not args or not re.fullmatch(
             r"'(?:[^']|'')*'", args[0].strip(), re.S
@@ -3545,14 +3585,12 @@ class SQLExecutor:
                     "columns/types)"
                 )
         fmt = "parquet" if fn == "read_parquet" else "csv"
-        df = self._external_df(
-            path, fmt, header, delim, quote=quote, columns=columns
+        return self._register(
+            scope, (fn, path, header, delim, quote, str(columns)),
+            lambda: self._external_df(
+                path, fmt, header, delim, quote=quote, columns=columns
+            ),
         )
-        view = "__file_" + hashlib.md5(
-            f"{fn}:{path}:{header}:{delim}:{quote}:{columns}".encode()
-        ).hexdigest()[:12]
-        self._register(scope, view, df)
-        return view
 
     def _parse_csv_columns(self, text: str) -> dict:
         """``{'name': 'TYPE', ...}`` (DuckDB's read_csv columns/types
@@ -3577,100 +3615,56 @@ class SQLExecutor:
             raise LakeSQLError("columns/types struct is empty")
         return out
 
+    _META_FN = re.compile(r"\b(ducklake_(?:snapshots|table_info|table_changes"
+                          r"|file_stats))\s*\(([^)]*)\)", re.I)
+
     def _rewrite_meta_fns(self, q: str, scope: "_Scope") -> str:
         """The reference's metadata table functions (``ducklake_snapshots(db)``
         utils/ducklake_utils.py:58-62, ``ducklake_table_info(db)``
         exploration/ducklake_analysis.sh:105, ``ducklake_table_changes(db,
-        schema, t, v1, v2)`` utils/ducklake_utils.py:65-78) -> temp views
-        materialized from the catalog DB (driver-side metadata, no scan)."""
+        schema, t, v1, v2)`` utils/ducklake_utils.py:65-78, and
+        ``ducklake_file_stats(t)``) -> views of rows materialized from the
+        catalog DB (driver-side metadata, no scan; see _bound)."""
+
+        def view(m: "re.Match") -> str:
+            fn = m.group(1).lower()
+            args = [a.strip().strip("'\"") for a in m.group(2).split(",")]
+            return self._register(
+                scope, (fn, *args), lambda: self._meta_df(fn, args)
+            )
+
+        return sub_code(self._META_FN, view, q)
+
+    def _meta_df(self, fn: str, args: list) -> DataFrame:
+        """One metadata function's rows; a ``db`` argument names the
+        catalog as ``_reader`` reads a qualifier."""
         spark = self.c.spark
-
-        def _call(fn: str) -> "re.Pattern":
-            return re.compile(rf"\b{fn}\s*\(([^)]*)\)", re.I)
-
-        def _cat_for(dbarg: str):
-            """``ducklake_snapshots('db')``'s catalog (see _reader)."""
-            ex = self._reader(dbarg.strip().strip("'\""))
-            return ex.c, ex._alias or "main"
-
-        def _snaps(m: "re.Match") -> str:
-            cat, key = _cat_for(m.group(1))
-            view = f"__lake_snapshots_{key}"
-            self._register(scope, view, cat.snapshots_df())
-            return view
-
-        q = sub_code(_call("ducklake_snapshots"), _snaps, q)
-
-        def _tinfo(m: "re.Match") -> str:
-            cat, key = _cat_for(m.group(1))
-            rows = [
-                (
-                    t["table_name"],
-                    t["file_count"],
-                    t["row_count"],
-                    t["file_bytes"],
-                    t["inlined_rows"],
-                )
-                for t in cat.table_info()
-            ]
-            view = f"__lake_table_info_{key}"
-            self._register(scope, view, local_df(
-                spark,
-                rows,
-                "table_name string, file_count bigint, row_count bigint, "
-                "file_bytes bigint, inlined_rows bigint",
-            ))
-            return view
-
-        q = sub_code(_call("ducklake_table_info"), _tinfo, q)
-
-        def _changes(m: "re.Match") -> str:
-            args = [a.strip().strip("'\"") for a in m.group(1).split(",")]
-            cat, key = _cat_for(args[0] if len(args) > 3 else "")
-            tname, v1, v2 = args[-3], int(args[-2]), int(args[-1])
-            view = f"__lake_changes_{key}_{tname}_{v1}_{v2}"
-            self._register(scope, view, cat.table_changes(tname, v1, v2))
-            return view
-
-        q = sub_code(_call("ducklake_table_changes"), _changes, q)
-
-        def _file_stats(m: "re.Match") -> str:
+        if fn == "ducklake_file_stats":
             # per-file pruning stats, min/max flattened to JSON strings so
             # the row shape is SQL-stable across schemas
-            import json as _json
-
-            tname = m.group(1).strip().strip("'\"")
             rows = [
-                (
-                    f["path"],
-                    int(f["row_count"]),
-                    int(f["file_bytes"]),
-                    _json.dumps(
-                        {c: s["min"] for c, s in f["columns"].items()}
-                    ),
-                    _json.dumps(
-                        {c: s["max"] for c, s in f["columns"].items()}
-                    ),
-                )
-                for f in self.c.file_stats(tname)
+                (f["path"], int(f["row_count"]), int(f["file_bytes"]), *(
+                    json.dumps({c: s[k] for c, s in f["columns"].items()})
+                    for k in ("min", "max")
+                ))
+                for f in self.c.file_stats(args[0])
             ]
-            # table names are user-supplied and may contain characters
-            # that are not legal in a temp-view identifier (dots, dashes,
-            # quoted names); sanitize, and suffix with a hash of the raw
-            # name so distinct tables never collide post-sanitization
-            safe = re.sub(r"[^A-Za-z0-9_]", "_", tname)
-            tag = hashlib.md5(tname.encode()).hexdigest()[:8]
-            view = f"__lake_file_stats_{safe}_{tag}"
-            self._register(scope, view, local_df(
-                spark,
-                rows,
-                "path string, row_count bigint, file_bytes bigint, "
-                "col_min string, col_max string",
-            ))
-            return view
-
-        q = sub_code(_call("ducklake_file_stats"), _file_stats, q)
-        return q
+            return local_df(
+                spark, rows, "path string, row_count bigint, "
+                "file_bytes bigint, col_min string, col_max string",
+            )
+        if fn == "ducklake_table_changes":
+            cat = self._reader(args[0] if len(args) > 3 else "").c
+            return cat.table_changes(args[-3], int(args[-2]), int(args[-1]))
+        cat = self._reader(args[0]).c
+        if fn == "ducklake_snapshots":
+            return cat.snapshots_df()
+        cols = "table_name file_count row_count file_bytes inlined_rows"
+        return local_df(
+            spark, [tuple(t[c] for c in cols.split()) for t in cat.table_info()],
+            "table_name string, file_count bigint, row_count bigint, "
+            "file_bytes bigint, inlined_rows bigint",
+        )
 
     def _describe(self, name: str) -> DataFrame:
         """DuckDB-shaped DESCRIBE: (column_name, column_type, null YES/NO,

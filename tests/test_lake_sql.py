@@ -3214,7 +3214,8 @@ def test_read_csv_option_breadth(lake, spark, tmp_path):
     """read_csv named options (delim/quote/columns/types) + the same
     overrides on COPY FROM: a mis-sniffed header or type is recoverable
     without leaving SQL, '' path escapes match COPY's grammar, and the
-    rewrite leaves no __file_* temp views behind."""
+    rewrite leaves no temp views behind."""
+    before = _lake_temp_views(spark)
     # headerless, semicolon-delimited, declared types (the round trip the
     # sniffer cannot get right alone: all-text columns)
     f = tmp_path / "raw.csv"
@@ -3246,12 +3247,8 @@ def test_read_csv_option_breadth(lake, spark, tmp_path):
     assert lake.sql(
         f"SELECT x FROM read_csv('{esc}')"
     ).collect()[0]["x"] == 7
-    # no lingering __file_* temp views after the statements above
-    leftovers = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("__file_")
-    ]
-    assert leftovers == []
+    # no lingering temp views after the statements above
+    assert _lake_temp_views(spark) == before
     # a read_csv spelled inside a string LITERAL is data, not a call
     lit = lake.sql("SELECT 'read_csv(''x'')' AS s").collect()[0]["s"]
     assert lit == "read_csv('x')"
@@ -4712,6 +4709,191 @@ def test_statements_leave_no_temp_views(lake, dev, spark):
     ):
         lake.sql(q).collect()
         assert _lake_temp_views(spark) == before, q
+
+
+# -- relations bound from the parse tree, under per-statement names ------
+def _two_catalogs(spark, tmp_path) -> list:
+    """Two catalogs holding the same names with different rows: ``t`` (3
+    and 5 rows, ids 0..n-1, then row 0 deleted), ``u`` (ids 1 and 2, in
+    both), view ``tv`` over ``t``. -> [(catalog, version before the
+    delete)]."""
+    out = []
+    for k, n in (("a", 3), ("b", 5)):
+        c = LakeCatalog(str(tmp_path / k), spark, inline_threshold=4)
+        c.sql("CREATE TABLE t (id BIGINT)")
+        c.sql("INSERT INTO t SELECT id FROM range(%d)" % n)
+        c.sql("CREATE TABLE u (id BIGINT)")
+        c.sql("INSERT INTO u VALUES (1), (2)")
+        c.sql("CREATE VIEW tv AS SELECT id * 10 AS id FROM t")
+        v = c.current_version()
+        c.sql("DELETE FROM t WHERE id = 0")
+        out.append((c, v))
+    return out
+
+
+def test_concurrent_statements_on_two_catalogs(spark, tmp_path):
+    """Threads on one Spark session, two per catalog, each reading its own
+    catalog's ``t``: a name one statement binds is invisible to the
+    others."""
+    import sys
+    import threading
+
+    cats = _two_catalogs(spark, tmp_path)
+
+    def stmts(v):
+        return [
+            "SELECT sum(id) FROM t",
+            f"SELECT sum(id) FROM t AT (VERSION => {v})",
+            "SELECT sum(id) FROM tv",
+            "SELECT sum(t.id) FROM t JOIN u ON t.id = u.id",
+            "SELECT count(*) + 0 FROM ducklake_snapshots('main')",
+        ]
+
+    want = {
+        id(c): [c.sql(q).first()[0] for q in stmts(v)] for c, v in cats
+    }
+    assert want[id(cats[0][0])] != want[id(cats[1][0])]
+    errors, wrong = [], []
+
+    def run(c, v):
+        for _ in range(5):
+            for q, w in zip(stmts(v), want[id(c)]):
+                try:
+                    got = c.sql(q).first()[0]
+                except Exception as e:  # noqa: BLE001 - every failure counts
+                    errors.append((q, str(e)[:120]))
+                    continue
+                if got != w:
+                    wrong.append((q, got, w))
+
+    threads = [threading.Thread(target=run, args=cv) for cv in cats * 2]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and wrong == []
+
+
+def test_lake_read_keeps_a_user_temp_view(lake, spark):
+    """A lake read of table ``t`` neither replaces nor drops the session's
+    own temp view ``t``."""
+    lake.sql("CREATE TABLE t (id BIGINT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    spark.range(5).createOrReplaceTempView("t")
+    try:
+        assert lake.sql("SELECT sum(id) FROM t").first()[0] == 3
+        assert spark.sql("SELECT count(*) FROM t").first()[0] == 5
+    finally:
+        spark.catalog.dropTempView("t")
+
+
+def test_column_named_like_a_table_reads_only_the_relation(lake, monkeypatch):
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("CREATE TABLE u (t INT)")
+    lake.sql("INSERT INTO u VALUES (7)")
+    read, names = lake.read, []
+
+    def spy(name, *a, **kw):
+        names.append(name)
+        return read(name, *a, **kw)
+
+    monkeypatch.setattr(lake, "read", spy)
+    assert lake.sql("SELECT t FROM u").first()[0] == 7
+    assert names == ["u"]
+
+
+def test_statement_views_never_carry_lake_names(lake, dev, spark, monkeypatch):
+    """Every temp view a statement registers has a name of its own, never
+    the name of a lake table or view (which a user's view or another
+    statement may hold)."""
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t VALUES (1, 1), (2, 2)")
+    v1 = lake.current_version()
+    lake.sql("CREATE VIEW tv AS SELECT * FROM t")
+    lake.sql(
+        "CREATE MATERIALIZED VIEW mv AS SELECT id, COUNT(*), SUM(v) "
+        "FROM t GROUP BY id"
+    )
+    frame = type(spark.range(1))
+    registered, create = [], frame.createOrReplaceTempView
+
+    def spy(df, name):
+        registered.append(name)
+        return create(df, name)
+
+    monkeypatch.setattr(frame, "createOrReplaceTempView", spy)
+    for q in (
+        "SELECT * FROM t",
+        f"SELECT * FROM t AT (VERSION => {v1})",
+        "SELECT * FROM tv JOIN dev.w USING (id)",
+        "SELECT avg_v FROM mv",
+        "SELECT * FROM main.t",
+        "SELECT * FROM ducklake_snapshots('lake')",
+        "UPDATE t SET v = 0 WHERE id IN (SELECT id FROM tv)",
+        "DELETE FROM t WHERE id IN (SELECT id FROM dev.w)",
+    ):
+        lake.sql(q).collect()
+    lake_names = {"t", "tv", "mv", "mv__rollup_meta", "w"}
+    assert registered and not {n.lower() for n in registered} & lake_names
+
+
+def test_cte_names_shadow_lake_tables(lake):
+    """A name a WITH defines is the CTE, not the lake table; a CTE body
+    reads the lake."""
+    lake.sql("CREATE TABLE t (id INT)")
+    lake.sql("INSERT INTO t VALUES (1), (2)")
+    assert _ids(lake, "WITH t AS (SELECT 42 AS id) SELECT * FROM t") == [(42,)]
+    assert _ids(lake, "WITH o AS (SELECT * FROM t) SELECT * FROM o") == [
+        (1,), (2,)
+    ]
+
+
+def test_explain_reads_lake_tables(lake):
+    """EXPLAIN holds its query outside the plan's children: its lake
+    names bind all the same."""
+    lake.sql("CREATE TABLE t (id INT)")
+    plan = lake.sql("EXPLAIN SELECT * FROM t WHERE id > 1").first()[0]
+    assert "Physical Plan" in plan and "Error" not in plan
+
+
+def test_catalog_queries_per_statement(lake, monkeypatch):
+    """Catalog round trips (``Metastore.q`` calls) per statement, after a
+    warm-up: binding adds none beyond the statement's scope and reads."""
+    lake.sql("CREATE TABLE t (id INT, v INT)")
+    lake.sql("INSERT INTO t SELECT id, id FROM range(1000)")
+    lake.sql("CREATE TABLE u (id INT)")
+    lake.sql("INSERT INTO u VALUES (1), (2), (3)")
+    v = lake.current_version()
+    reads = {
+        "SELECT sum(v) FROM t": 3,
+        f"SELECT sum(v) FROM t AT (VERSION => {v})": 5,
+        "SELECT sum(v) FROM t WHERE id IN (SELECT id FROM u)": 4,
+    }
+    for q in reads:
+        lake.sql(q).collect()
+    q, calls = lake.ms.q, [0]
+
+    def counted(*a, **kw):
+        calls[0] += 1
+        return q(*a, **kw)
+
+    monkeypatch.setattr(lake.ms, "q", counted)
+
+    def cost(sql: str) -> int:
+        calls[0] = 0
+        lake.sql(sql).collect()
+        return calls[0]
+
+    for sql, most in reads.items():
+        assert cost(sql) <= most, sql
+    assert cost("UPDATE t SET v = v + 1 WHERE id = 5") <= 8
+    assert cost("DELETE FROM t WHERE id = 6") <= 8
 
 
 # -- row counts answered from the catalog --------------------------------
